@@ -177,6 +177,31 @@ object Bench {
     else None
   }
 
+  /** Runs every query once untimed on `warmDir`, then times it on `dir`.
+    * The warm-up pays JIT compilation outside the timed section: the forked
+    * protocol leaves the parent JVM cold (the crawl levels warmed their own
+    * children), and the first queries alphabetically would otherwise absorb
+    * it (measured: c1 0.2s warm vs 38s cold on a throttled host). A query
+    * that throws in either pass is reported with its message and gets no
+    * timing — a broken query never reads as a fast one.
+    * @return (name, seconds) per timed query, (name, message) per failure
+    */
+  private[graft] def timeQueries(queries: Seq[(String, String => Long)],
+      warmDir: String, dir: String): (Seq[(String, Double)], Seq[(String, String)]) = {
+    val failed = mutable.LinkedHashMap.empty[String, String]
+    def ok(name: String, run: => Long): Boolean =
+      try { run; true } catch { case e: Throwable =>
+        failed(name) = s"${e.getClass.getName}: ${e.getMessage}"
+        false
+      }
+    val warmed = queries.filter { case (name, q) => ok(name, q(warmDir)) }
+    val timed = warmed.flatMap { case (name, q) =>
+      val t0 = System.nanoTime()
+      if (ok(name, q(dir))) Some(name -> (System.nanoTime() - t0) / 1e9) else None
+    }
+    (timed, failed.toSeq)
+  }
+
   /** Greedy disjoint core-range allocator: the scaling pair's workers sit on
     * different physical cores so an idle worker's background threads never
     * share a core with the active one's tasks. Wraps to [0, cpus) when the
@@ -428,26 +453,19 @@ object Bench {
     val effMulti2 = if (multi2_4 > 0) (multi2_16 / multi2_4) / 4.0 else 0.0
 
     // part 2: per-query timings (skippable for crawl-bench iteration)
-    val results: Seq[(String, Double)] =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_SKIP_QUERIES")) Seq.empty
+    val (results, failedQueries) =
+      if (sys.env.contains("SPARK_GRAFT_BENCH_SKIP_QUERIES"))
+        (Seq.empty[(String, Double)], Seq.empty[(String, String)])
       else {
         val spark = session(cpus)
         spark.sparkContext.setLogLevel("WARN")
-        // JIT warmup at sf0.001: the forked protocol leaves this parent JVM
-        // cold (the crawl levels warmed their own children), so the sweep
-        // always pays compilation outside the timed section — or the first
-        // queries alphabetically absorb it (measured: c1 0.2s warm vs 38s
-        // cold on a throttled host)
-        SparkEntry.queries.toSeq.sortBy(_._1)
-          .foreach { case (_, fn) =>
-            try { fn(spark, "/root/testdata/sf0.001").count() }
-            catch { case _: Throwable => () }
-          }
-        val r = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          name -> (System.nanoTime() - t0) / 1e9
-        }
+        val r = timeQueries(
+          SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+            name -> ((dir: String) => fn(spark, dir).count())
+          },
+          // warm on the smallest scale factor, kept beside the timed one
+          warmDir = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString,
+          dir = sfDir)
         spark.stop()
         r
       }
@@ -461,8 +479,10 @@ object Bench {
       wantPair = levelSet.contains(4) && levelSet.contains(16),
       wantMulti = sys.env.getOrElse("SPARK_GRAFT_BENCH_MULTI", "true").toBoolean,
       thr4, thr16, multi4, multi16)
-    err.foreach(e => System.err.println(s"[bench] ERROR: $e"))
-    val errField = err.map(e => s""","error":"$e"""").getOrElse("")
+    val errors = err.toSeq ++ failedQueries.map { case (q, m) => s"query $q failed: $m" }
+    errors.foreach(e => System.err.println(s"[bench] ERROR: $e"))
+    val errField =
+      if (errors.isEmpty) "" else s""","error":${graft.api.RequestStore.jsonStr(errors.mkString("; "))}"""
     println(
       s"""{"metric":"frontier_drain_extract_urls_per_sec","value":${f"$thr32%.1f"},"unit":"urls/sec","queries":$qs,"sf":"$sfDir","total_query_sec":${f"$total%.2f"},"bench_pages":$benchPages,"bench_mode":"$mode","urls_per_sec_4":${f"$thr4%.1f"},"urls_per_sec_16":${f"$thr16%.1f"},"urls_per_sec_32":${f"$thr32%.1f"},"scaling_efficiency":${f"$eff416%.3f"},"scaling_pair":"4cores->16cores","urls_per_sec_multi_4":${f"$multi4%.1f"},"urls_per_sec_multi_16":${f"$multi16%.1f"},"urls_per_sec_multi_32":${f"$multi32%.1f"},"scaling_efficiency_multi":${f"$effMulti%.3f"},"multi_rounds":8,"urls_per_sec_multi2_4":${f"$multi2_4%.1f"},"urls_per_sec_multi2_16":${f"$multi2_16%.1f"},"urls_per_sec_multi2_32":${f"$multi2_32%.1f"},"scaling_efficiency_multi2":${f"$effMulti2%.3f"},"multi2_rounds":2,"extracted_rows":$extracted32$errField}""")
 
@@ -573,5 +593,6 @@ object Bench {
           "this run's numbers are in the JSON line above)")
       else java.nio.file.Files.writeString(dir.resolve("BASELINE.md"), md)
     } catch { case _: Throwable => }
+    if (failedQueries.nonEmpty) sys.exit(1)
   }
 }

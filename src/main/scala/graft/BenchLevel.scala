@@ -96,7 +96,7 @@ final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
     // measures drain+extract, not multi-round scheduling latency
     val hostMax = (1 until (nHosts + 1)).map(h => cuts(h) - cuts(h - 1)).max.toInt
     cfg = CrawlConfig(numBuckets = cpus, hostBudgetPerRound = hostMax,
-      roundSize = nPages, maxRounds = 1, lineageDetail = false)
+      roundSize = nPages, maxRounds = 1)
     // JIT warmup: an untimed crawl through the same code path — 10k pages,
     // or the first timed trial pays residual compilation (observed ~7%).
     if (!skipWarm) {

@@ -350,7 +350,7 @@ object RequestStore {
     sb.result()
   }
 
-  private def jsonStr(s: String): String =
+  private[graft] def jsonStr(s: String): String =
     if (s == null) "null"
     else "\"" + s.flatMap {
       case '"' => "\\\""

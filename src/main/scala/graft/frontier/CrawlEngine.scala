@@ -68,9 +68,6 @@ final case class CrawlConfig(
     // table: broadcast it so the fetch join never shuffles html bytes.
     // Above this limit fall back to a shuffled join (AQE skew handling).
     broadcastDrainLimit: Int = 2_000_000,
-    // detailed per-stage counters cost extra count() jobs per round; turn off
-    // for throughput benchmarks (fetched/extracted/new are always recorded)
-    lineageDetail: Boolean = true,
     // P14 (web_spider.py:68-69): in test mode, seed urls containing
     // 'example' are skipped at injection time
     isTest: Boolean = false,
@@ -87,28 +84,14 @@ final case class CrawlConfig(
     // the stash stays empty at any seen-set size).
     foldMinKeys: Long = 4096,
     foldFrac: Double = 0.2,
-    // seen-probe strategy: when the filter blobs (estimated from the seen
-    // count, upper bound) fit under this budget they are collected once per
-    // fold epoch and BROADCAST, and the probe becomes a codegen'd per-row
-    // lookup fused into the candidate chain — no bucket exchange, no typed
-    // cogroup sort per consumer. Above it (10^10-url frontiers: ~4 B/key of
-    // blobs) the probe stays the co-partitioned cogroup where each task
-    // holds only its bucket's blob. 0 forces the cogroup path everywhere.
+    // seen-probe strategy: when the committed filter blobs (the manifest's
+    // exact `filter_blob_bytes`) fit under this budget they are collected
+    // once per fold epoch and BROADCAST, and the probe becomes a codegen'd
+    // per-row lookup fused into the candidate chain — no bucket exchange, no
+    // typed cogroup sort per consumer. Above it (10^10-url frontiers: ~4
+    // B/key of blobs) the probe stays the co-partitioned cogroup where each
+    // task holds only its bucket's blob. 0 forces the cogroup path everywhere.
     broadcastFilterLimitBytes: Long = 256L << 20,
-    // seen-table round cache: when the committed seen dirs are UNCHANGED
-    // from the previous round (zero-new steady state — a frontier draining
-    // to exhaustion) and the estimated table size fits this budget, the
-    // exact-backstop anti-join reads a persisted dataset instead of
-    // re-reading the parquet dirs every round. A 10^10-key seen set
-    // (~16 B/key) never qualifies. 0 disables.
-    seenCacheLimitBytes: Long = 4L << 30,
-    // when the PREVIOUS round discovered nothing new, materialize the probe
-    // chain with a count and write the seen delta only if keys actually
-    // appeared — the write-first shape pays a full dynamic-partition parquet
-    // commit per round just to learn the count is zero. Discovery-phase
-    // rounds (nonzero last round) keep write-first: count and delta write in
-    // one job barrier.
-    idleCountFirst: Boolean = true,
     // logical duration of one fetch-schedule round: a host with robots
     // Crawl-delay D is re-drained no sooner than ceil(D / roundTimeMs)
     // rounds after its last drain (C5 host_next_ok state; within a round,
@@ -118,7 +101,12 @@ final case class CrawlConfig(
     userAgent: String = "graftbot")
 
 final case class CrawlStats(rounds: Int, fetched: Long, extractedRows: Long, seenSize: Long)
-final case class RoundStats(drained: Long, fetched: Long, extracted: Long, newUrls: Long)
+/** A round's counters known once its first job has run: drained, fetched
+  * and extracted rows, raw link candidates, and unique candidates after the
+  * in-round dedup.
+  */
+final case class RoundStats(drained: Long, fetched: Long, extracted: Long,
+    candidates: Long, unique: Long)
 
 /** Exactly-once per-partition tallies for counters that ride an existing
   * job instead of costing their own. Each fully-consumed partition registers
@@ -175,17 +163,24 @@ private[frontier] final class PartitionTallies
   *   commit (C8).
   *
   * Scale design: every stage is expressed on Datasets/DataFrames so Catalyst
-  * plans it; the seen set is bucket-partitioned (pmod(url_hash, P)) so probes
-  * and updates are co-partitioned cogroups, never a broadcast of the filter;
-  * the fetch join relies on AQE skew handling for Zipf hosts; the politeness
-  * rank is a two-phase bounded-heap top-k (partial per-partition, then
-  * per-host final), so a Zipf-hot host never funnels 30% of a 10^10-row
-  * frontier through one sort task the way a row_number window would. All
-  * frontier/seen/lineage state is committed as APPEND-ONLY deltas — a round
-  * writes O(drained + new) rows, never the 10^10-row frontier — with
-  * periodic compaction bounding read amplification.
+  * plans it; the seen set is bucket-partitioned (pmod(url_hash, P)). While
+  * the filter blobs fit `broadcastFilterLimitBytes` (the default at any
+  * single-box scale) the probe is a codegen'd lookup against a broadcast of
+  * the blobs; above it probes are co-partitioned cogroups, so no task holds
+  * more than its bucket's blob. The fetch join relies on AQE skew handling
+  * for Zipf hosts; the politeness rank is a two-phase bounded-heap top-k
+  * (partial per-partition, then per-host final), so a Zipf-hot host never
+  * funnels 30% of a 10^10-row frontier through one sort task the way a
+  * row_number window would. All frontier/seen/lineage state is committed
+  * as APPEND-ONLY deltas — a round writes O(drained + new) rows, never the
+  * 10^10-row frontier — with periodic compaction bounding read
+  * amplification.
   */
 object CrawlEngine {
+
+  // budget for the seen-table round cache in run() (~16 B/key): a 10^10-key
+  // seen set never qualifies
+  private val SeenCacheBudgetBytes = 4L << 30
 
   private val debugTiming = sys.env.contains("GRAFT_DEBUG_TIMING")
   private def timed[A](label: String)(f: => A): A =
@@ -382,6 +377,7 @@ object CrawlEngine {
   /** Everything one round hands back to the commit path. */
   final case class RoundResult(
       adds: Dataset[FrontierEntry],
+      drained: Dataset[FrontierEntry],
       drainedKeys: DataFrame,
       // this round's full robots table (prev ∪ delta, persisted) — carried
       // into the next round in place of a parquet re-read, which also frees
@@ -392,14 +388,15 @@ object CrawlEngine {
       nNewHosts: Long,
       delayDelta: Option[DataFrame], // (host, next_ok_round)
       outputs: Dataset[PageOutput],
-      lineage: Dataset[LineageRow],
       stats: RoundStats,
       caches: Seq[Dataset[_]],
-      // Some = the new-url count was NOT materialized inside round() (no
-      // counters job ran): the caller's first action over `seenDelta` — the
-      // commit's seen-delta write — materializes the probe chain, and the
-      // tally then carries the count. stats.newUrls is -1 in that case.
-      newTallies: Option[PartitionTallies] = None)
+      // tallies inside the `adds` cache: no round() job materializes it, so
+      // they are valid only after the caller's first action over `adds` /
+      // `seenDelta` (run()'s seen-delta write or count)
+      newTallies: PartitionTallies,
+      allowedTallies: Seq[PartitionTallies]) {
+    def newUrls: Long = newTallies.totals._1
+  }
 
   /** One fetch-schedule round.
     *
@@ -451,29 +448,28 @@ object CrawlEngine {
       cfg.hostBudgetPerRound >= frontierSize && delayBlockedHosts.isEmpty
     // The drained count is known driver-side on most paths — frontierSize
     // (whole-frontier), the collected key array's length (broadcast top-k),
-    // the drain-bounds agg (over-limit) — so the counters job only carries a
-    // drained branch on the politeness-limited path. NOT Dataset.observe:
-    // this plan references its shared subtrees (outputs, the dedup exchange,
-    // robots) from several branches, and Catalyst's checkCollectedMetrics
-    // re-compares every duplicated CollectMetrics instance against its
-    // canonicalized subtree — analysis time explodes combinatorially
-    // (measured: minutes for one round's plan).
+    // the drain-bounds agg (over-limit). On the politeness-limited path it is
+    // a tally on the drained cache, which job 1 materializes. Counters are
+    // tallies, NOT Dataset.observe: this plan references its shared subtrees
+    // (outputs, the dedup exchange, robots) from several branches, and
+    // Catalyst's checkCollectedMetrics re-compares every duplicated
+    // CollectMetrics instance against its canonicalized subtree — analysis
+    // time explodes combinatorially (measured: minutes for one round's plan).
+    val drainedTallies = new PartitionTallies
+    spark.sparkContext.register(drainedTallies, s"r$roundNo-drained-tallies")
     var knownDrained: Option[Long] = None
     var drainBounds: Option[(String, String)] = None
     var collectedKeys: Option[DataFrame] = None
-    // On the no-op paths (whole-frontier, or budget >= roundSize with the
-    // frontier fitting the round) `drained` IS the caller's frontier, which
-    // the round loop already persisted — re-persisting the same plan only
-    // emits CacheManager's "already cached" WARN and does nothing, so guard
-    // on the current storage level (double-unpersist later is a no-op).
-    def persistOnce[T](ds: Dataset[T]): Dataset[T] =
-      if (ds.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        ds.persist()
-      else ds
     val drained: Dataset[FrontierEntry] =
       if (wholeFrontier) {
         knownDrained = Some(frontierSize)
-        persistOnce(frontierEligible)
+        // `drained` IS the caller's frontier, which the round loop already
+        // persisted — re-persisting the same plan only emits CacheManager's
+        // "already cached" WARN and does nothing, so guard on the current
+        // storage level (double-unpersist later is a no-op)
+        if (frontierEligible.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+          frontierEligible.persist()
+        else frontierEligible
       }
       else {
         val eligible =
@@ -482,7 +478,7 @@ object CrawlEngine {
         if (frontierSize <= cfg.roundSize)
           // |eligible| <= frontierSize <= roundSize: the global top-k is the
           // identity — everything politeness admitted drains this round
-          persistOnce(eligible)
+          tallied(eligible, drainedTallies)(_ => 0L).persist()
         else if (cfg.roundSize <= cfg.broadcastDrainLimit) {
           // Exact top-k via ONE narrow TakeOrdered job collected to the
           // driver — Spark would collect these keys for the semi-join
@@ -630,14 +626,20 @@ object CrawlEngine {
     // link volume per round (measured in the bench stage profile).
     // Dedup runs BEFORE the robots gate so the robots host-join sees the
     // smaller unique-url set.
-    // `dups` carries each group's raw multiplicity so detail mode can read
-    // the raw-candidate count off the deduped set without a second pass.
-    val dedupedWithDups = rawCands.toDF()
+    // `dups` carries each group's raw multiplicity; a tally inside the
+    // cache reads (unique, raw) candidate counts off the deduped set during
+    // job 1, without a second pass.
+    val dedupTallies = new PartitionTallies
+    spark.sparkContext.register(dedupTallies, s"r$roundNo-dedup-tallies")
+    val dedupedDf = rawCands.toDF()
       .groupBy($"url_hash", $"url", $"host", $"host_hash", $"bucket")
       .agg(min($"depth").as("depth"), count(lit(1)).as("dups"))
       .select($"url", $"url_hash", $"host", $"host_hash", $"bucket",
         (-$"depth").as("priority"), $"depth",
         lit(rn1).as("discovered_round"), $"dups")
+    val dupsIdx = dedupedDf.schema.fieldIndex("dups")
+    val dedupedWithDups = tallied(dedupedDf, dedupTallies)(_.getLong(dupsIdx))(
+      org.apache.spark.sql.Encoders.row(dedupedDf.schema))
       .persist()
     val dedupedCands = dedupedWithDups.drop("dups").as[FrontierEntry]
 
@@ -663,7 +665,7 @@ object CrawlEngine {
         // tallies: computed at cache materialization, once)
         .persist()
     // persisted: every job this round that references the rules (probe
-    // chain, detail counters, delay bookkeeping) plans against the tiny
+    // chain, delay bookkeeping) plans against the tiny
     // in-memory relation instead of re-planning the union+fetch subtree
     val robotsAll = robots.union(robotsDelta).persist()
     val allowedCands = applyRobots(dedupedCands, robotsAll)
@@ -679,36 +681,25 @@ object CrawlEngine {
           ceil($"crawl_delay_ms".cast("double") / lit(cfg.roundTimeMs.toDouble))
             .cast("long")).as("next_ok_round")))
 
-    // --- seen-set probe (C3): co-partitioned cuckoo cogroup per bucket ---
-    // NOT persisted: its two consumers below are branches of ONE cached plan
-    // (newEntries), so the cogroup's input shuffles are materialized once by
-    // ReuseExchange and only the (cheap) per-bucket probe pass runs per leg —
-    // a persist here would cost a dedicated job barrier to build race-free.
-    val (definiteNew, fpNew) = filtersBc match {
+    // --- seen-set probe (C3): broadcast lookup or per-bucket cogroup ---
+    // NOT persisted: its two legs (cuckoo miss, cuckoo hit) are branches of
+    // ONE cached plan (newEntries), so the cogroup's input shuffles are
+    // materialized once by ReuseExchange and only the (cheap) per-bucket
+    // probe pass runs per leg — a persist here would cost a dedicated job
+    // barrier to build race-free.
+    val (cuckooMiss, cuckooHit) = filtersBc match {
       case Some(bc) =>
         // broadcast fast path (CrawlConfig.broadcastFilterLimitBytes): the
         // blobs fit in executor memory, so the probe is a codegen'd per-row
         // lookup ([[graft.functions.CuckooSeen]]) fused into the candidate
-        // chain — no bucket exchange and no typed-cogroup sort. The two
-        // consumers below re-run only this cheap map over the CACHED dedup
-        // output, where the cogroup path re-ran a full object sort per leg
-        // (the dominant GC source of the per-round seen-delta job).
+        // chain — no bucket exchange and no typed-cogroup sort. The two legs
+        // re-run only this cheap map over the CACHED dedup output, where the
+        // cogroup path re-runs a full object sort per leg.
         val seenFlag =
           graft.functions.CuckooFunctions.cuckoo_seen(bc, $"bucket", $"url_hash")
         val ac = allowedCands.toDF()
-        val neg = ac.filter(!seenFlag)
-        val dn = pendingSeen match {
-          case None => neg.select(feCols: _*).as[FrontierEntry]
-          case Some(p) => neg
-            .join(p.select($"url_hash"), Seq("url_hash"), "left_anti")
-            .select(feCols: _*)
-            .as[FrontierEntry]
-        }
-        val fp = ac.filter(seenFlag)
-          .join(seen, Seq("url_hash"), "left_anti")
-          .select(feCols: _*)
-          .as[FrontierEntry]
-        (dn, fp)
+        (ac.filter(!seenFlag).select(feCols: _*).as[FrontierEntry],
+          ac.filter(seenFlag).select(feCols: _*).as[FrontierEntry])
       case None =>
         // co-partitioned cogroup (the 10^10-scale shape): each task holds
         // only its own bucket's blob, so total filter bytes are bounded by
@@ -718,33 +709,38 @@ object CrawlEngine {
             val filt = fs.nextOption().map(f => CuckooFilter.fromBytes(f.cuckoo_bytes))
             cs.map(c => (c, filt.exists(_.contains(c.url_hash))))
           }
-        // cuckoo MISS: new unless in the not-yet-folded pending seen deltas
-        // (exact, small); the filter has no false negatives for FOLDED keys
-        val cuckooNeg = probed.filter(!_._2).map(_._1)
-        val dn = pendingSeen match {
-          case None => cuckooNeg
-          case Some(p) => cuckooNeg
-            .join(p.select($"url_hash"), Seq("url_hash"), "left_anti")
-            .select(feCols: _*)
-            .as[FrontierEntry]
-        }
-        // exactness backstop (J5): anti-join ONLY the cuckoo-positive subset
-        val fp = probed.filter(_._2).map(_._1)
-          .join(seen, Seq("url_hash"), "left_anti")
-          .select(feCols: _*)
-          .as[FrontierEntry]
-        (dn, fp)
+        (probed.filter(!_._2).map(_._1), probed.filter(_._2).map(_._1))
     }
-    // new-url count rides the cache materialization as a partition tally —
-    // in throughput mode (no counter branches) NO dedicated count job runs:
-    // the commit's seen-delta write is the first consumer and materializes
-    // the probe chain, write + count in one job barrier
+    // one tally per leg (partition ids are per leg): together they count the
+    // robots-allowed candidates, so robots_blocked needs no job of its own
+    val allowedTallies = Seq.fill(2)(new PartitionTallies)
+    allowedTallies.zipWithIndex.foreach { case (t, i) =>
+      spark.sparkContext.register(t, s"r$roundNo-allowed-tallies-$i")
+    }
+    // cuckoo MISS: new unless in the not-yet-folded pending seen deltas
+    // (exact, small); the filter has no false negatives for FOLDED keys
+    val missLeg = tallied(cuckooMiss, allowedTallies(0))(_ => 0L)
+    val definiteNew = pendingSeen match {
+      case None => missLeg
+      case Some(p) => missLeg
+        .join(p.select($"url_hash"), Seq("url_hash"), "left_anti")
+        .select(feCols: _*)
+        .as[FrontierEntry]
+    }
+    // exactness backstop (J5): anti-join ONLY the cuckoo-positive subset
+    val fpNew = tallied(cuckooHit, allowedTallies(1))(_ => 0L)
+      .join(seen, Seq("url_hash"), "left_anti")
+      .select(feCols: _*)
+      .as[FrontierEntry]
+    // new-url count rides the cache materialization as a partition tally:
+    // the caller's first action over newEntries (run()'s seen-delta write,
+    // or a bare count after a zero-new round) materializes the probe chain
     val newTallies = new PartitionTallies
     spark.sparkContext.register(newTallies, s"r$roundNo-new-tallies")
     val newEntries = tallied(definiteNew.union(fpNew), newTallies)(_ => 0L)
       .persist()
 
-    // --- TWO pre-commit job barriers per round. Any cached dataset
+    // --- the round's ONE pre-commit job barrier. Any cached dataset
     // first-touched by two concurrent branches of one job is silently
     // COMPUTED TWICE (Spark's block store races, it does not block). Job 1
     // materializes the scan-heavy prefix as ONE single-reference chain —
@@ -753,71 +749,19 @@ object CrawlEngine {
     // by counting the END of the chain: building robotsAll builds every
     // persisted link upstream of it exactly once (each cache is referenced
     // once within this plan; fetchRobots left-joins its host set a single
-    // time). Splitting dedup and robots into separate jobs (the previous
-    // shape) bought nothing but an extra ~1s/round barrier: nothing in the
-    // robots chain references dedup twice.
+    // time). The probe chain (newEntries) is left to run()'s seen-delta
+    // write, which materializes it and writes the delta in one job.
     timed("detect-robots")(robotsAll.count())
     if (debugTiming && sys.env.contains("GRAFT_DEBUG_PLAN") && roundNo <= 1)
       System.err.println(newEntries.queryExecution.executedPlan.toString)
-    // Job 2: the remaining counters — new urls, (politeness-limited path
-    // only) drained, and (detail mode) raw/deduped/allowed candidates — in
-    // ONE action; every branch reads job 1's caches (the probe cogroup
-    // inside the newEntries branch is uncached but its two legs live in one
-    // cached plan — ReuseExchange materializes the cogroup's input shuffles
-    // once), so this job is the probe + anti-join/agg work plus scheduling
-    // latency only. Fetched/extracted and new-host counts DON'T ride this
-    // job any more: they were tallied during job 1's cache materialization
-    // (outputTallies/robotsTallies), so the throughput-mode round pays one
-    // bare newEntries.count() here instead of a 5-branch union that re-read
-    // the 260-partition outputs cache. The drained branch is usually
-    // absent: the count came off the drain-keys collect / bounds agg /
-    // frontier_size.
-    val counterBranches = Seq(
-      if (knownDrained.isDefined) None
-      else Some(drained.toDF().select(lit(3).as("src"), lit(0L).as("a"),
-        lit(0L).as("b"))),
-      if (!cfg.lineageDetail) None
-      else Some(dedupedWithDups
-        .join(robotsAll.toDF().select($"host", $"allow", $"disallow"),
-          Seq("host"), "left")
-        .select(lit(4).as("src"), $"dups".as("a"),
-          when(robotsAllowCol($"url", $"allow", $"disallow"), 1L)
-            .otherwise(0L).as("b")))
-    ).flatten
-    // Throughput mode runs NO job here at all: the new-url count arrives via
-    // newTallies when the commit's seen-delta write materializes the cache —
-    // one fewer job barrier per round (scheduling + a full probe-chain
-    // re-read, measured ~1s/round at 16 cores on 250k-page rounds).
-    val deferNew = counterBranches.isEmpty
-    val counters: Map[Int, (Long, Long, Long)] = timed("counters") {
-      if (deferNew) Map.empty
-      else {
-        val extra = Seq(newEntries.toDF().select(lit(1).as("src"),
-          lit(0L).as("a"), lit(0L).as("b"))) ++ counterBranches
-        extra.reduce(_.union(_))
-          .groupBy($"src")
-          .agg(count(lit(1)).as("n"), sum($"a").as("sa"), sum($"b").as("sb"))
-          .as[(Int, Long, Long, Long)].collect()
-          .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-      }
-    }
-    def counter(src: Int): (Long, Long, Long) =
-      counters.getOrElse(src, (0L, 0L, 0L))
-    // job 1 has completed (robotsAll.count above), so every partition of the
-    // outputs/robotsDelta caches has been fully consumed and its tally
+    // job 1 has completed, so every partition of the drained / outputs /
+    // dedup / robotsDelta caches has been fully consumed and its tally
     // merged — accumulator updates land with the task-completion events the
     // action waited on.
     val (fetchedTotal, extractedTotal) = outputTallies.totals
-    val nNew = if (deferNew) -1L else counter(1)._1
+    val (nUnique, nRawCands) = dedupTallies.totals
     val nNewHosts = robotsTallies.totals._1
-    val drainedTotal = knownDrained.getOrElse(counter(3)._1)
-    val politenessDeferred = frontierSize - drainedTotal
-    val (nRawCands, dedupedInRound, robotsBlocked) =
-      if (!cfg.lineageDetail) (-1L, -1L, -1L)
-      else {
-        val (deduped, raw, allowed) = counter(4)
-        (raw, raw - deduped, deduped - allowed)
-      }
+    val drainedTotal = knownDrained.getOrElse(drainedTallies.totals._1)
 
     // --- seen update: seen ∪ new (enqueue-time dedup, scrapy semantics) ---
     // append-only delta: ONLY the newly-enqueued urls (the full seen set is
@@ -826,34 +770,38 @@ object CrawlEngine {
     // triggers (run() commit path), so a round writes O(new) filter bytes.
     val seenDelta = newEntries.map(e => SeenEntry(e.bucket, e.url_hash))
 
-    // --- lineage (A-9): per-bucket counters only in detail mode; the global
-    // round counters (bucket -1) always, computed from already-known values
-    // (no extra jobs)
-    val rn = roundNo
-    val globalRow = Seq(LineageRow(rn, -1, drainedTotal, fetchedTotal,
-      extractedTotal, nRawCands, robotsBlocked, dedupedInRound, nNew,
-      politenessDeferred)).toDS()
-    val lineage =
-      if (!cfg.lineageDetail) globalRow
-      else {
-        val drainedByBucket = drained.groupBy($"bucket").agg(count("*").as("drained"))
-        val newByBucket = newEntries.groupBy($"bucket").agg(count("*").as("new_urls"))
-        drainedByBucket.join(newByBucket, Seq("bucket"), "full_outer")
-          .na.fill(0L)
-          .select($"bucket", $"drained", $"new_urls")
-          .as[(Int, Long, Long)]
-          .map { case (b, dr, nu) =>
-            LineageRow(rn, b, dr, 0L, 0L, 0L, 0L, 0L, nu, 0L)
-          }
-          .union(globalRow)
-      }
+    RoundResult(newEntries, drained, drainedKeys, robotsAll, seenDelta, robotsDelta,
+      nNewHosts, delayDelta, outputs,
+      RoundStats(drainedTotal, fetchedTotal, extractedTotal, nRawCands, nUnique),
+      Seq(drained, outputs, dedupedWithDups, newEntries, robotsDelta, robotsAll),
+      newTallies, allowedTallies)
+  }
 
-    val stats = RoundStats(drainedTotal, fetchedTotal, extractedTotal, nNew)
-    RoundResult(newEntries, drainedKeys, robotsAll, seenDelta, robotsDelta, nNewHosts,
-      delayDelta, outputs, lineage, stats,
-      Seq(drained, outputs, dedupedWithDups, newEntries, robotsDelta,
-        robotsAll),
-      newTallies = if (deferNew) Some(newTallies) else None)
+  /** The round's lineage rows (A-9): the global counters (bucket -1) and one
+    * row of drained / new-url counts per bucket. Valid once `r.adds` has
+    * materialized — the new-url and robots-allowed counts are tallies inside
+    * that cache. The per-bucket rows aggregate the round's caches and are
+    * computed by the commit that writes them. `frontierSize` is the
+    * frontier the round drained from.
+    */
+  private def lineageRows(spark: SparkSession, roundNo: Int, r: RoundResult,
+      frontierSize: Long): Dataset[LineageRow] = {
+    import spark.implicits._
+    val st = r.stats
+    val allowed = r.allowedTallies.map(_.totals._1).sum
+    val global = Seq(LineageRow(roundNo, -1, st.drained, st.fetched, st.extracted,
+      st.candidates, st.unique - allowed, st.candidates - st.unique, r.newUrls,
+      frontierSize - st.drained)).toDS()
+    // one aggregation over both caches: a bucket present in either side
+    // gets a row, zero on the other
+    r.drained.select($"bucket", lit(1L).as("d"), lit(0L).as("n"))
+      .union(r.adds.select($"bucket", lit(0L).as("d"), lit(1L).as("n")))
+      .groupBy($"bucket").agg(sum($"d"), sum($"n"))
+      .as[(Int, Long, Long)]
+      .map { case (b, dr, nu) =>
+        LineageRow(roundNo, b, dr, 0L, 0L, 0L, 0L, 0L, nu, 0L)
+      }
+      .union(global)
   }
 
   /** Fold pending seen keys into the per-bucket cuckoo filters, growing any
@@ -1016,14 +964,15 @@ object CrawlEngine {
     // robotsSrc plan into the session, and the next run's persist of the
     // same source then hits CacheManager's "already cached" WARN.
     existing.foreach { m =>
-      if (m.dataDirs.contains("frontier") || !m.counters.contains("frontier_size") ||
-          !m.dataDirs.contains("robots") || !m.counters.contains("max_delay_ms"))
+      val counters = Seq("frontier_size", "max_delay_ms", "filter_blob_bytes",
+        "filters_folded_dirs")
+      if (m.dataDirs.contains("frontier") || !m.dataDirs.contains("robots") ||
+          !counters.forall(m.counters.contains))
         throw new IllegalStateException(
           s"incompatible legacy snapshot format in $stateDir (expected the " +
-            "delta format: frontier_adds/frontier_rm/robots tables, " +
-            "frontier_size counter, and the r4 bucket-partitioned seen " +
-            "layout marked by the max_delay_ms counter — mixing flat and " +
-            "partitioned seen dirs in one read would conflict); " +
+            "delta format: frontier_adds/frontier_rm/robots tables, the " +
+            "bucket-partitioned seen layout, and the " +
+            counters.mkString("/") + " counters); " +
             "re-bootstrap into a fresh state dir")
     }
 
@@ -1105,27 +1054,25 @@ object CrawlEngine {
     var frontierSize = manifest.counters.getOrElse("frontier_size", 0L)
     var rmSize = manifest.counters.getOrElse("frontier_rm_size", 0L)
     // fold bookkeeping: how many committed seen-delta dirs the filter blobs
-    // already reflect, and how many keys are pending since the last fold.
-    // (Round-2-format snapshots folded every round: default = all dirs.)
-    var foldedDirs = manifest.counters.getOrElse("filters_folded_dirs",
-      SnapshotStore.dirsOf(manifest, "seen").length.toLong).toInt
+    // already reflect, and how many keys are pending since the last fold
+    var foldedDirs = manifest.counters("filters_folded_dirs").toInt
     var pendingKeys = manifest.counters.getOrElse("pending_keys", 0L)
     var delayRows = manifest.counters.getOrElse("delay_rows", 0L)
     // crawl-delay fast path: a manifest counter (re-checked only when new
     // robots rows land) decides whether any host can EVER be delay-blocked —
     // a corpus whose delays all fit inside one round pays zero per-round
     // cost, and resuming reads the counter instead of running an agg job
-    // (legacy snapshots without the counter fall back to the agg once)
-    var maxDelay = manifest.counters.getOrElse("max_delay_ms",
-      SnapshotStore.read(spark, manifest, "robots", robotsSchema)
-        .agg(coalesce(max($"crawl_delay_ms"), lit(0L))).as[Long].head())
+    var maxDelay = manifest.counters("max_delay_ms")
+    // ACTUAL serialized blob bytes (exact: set at bootstrap and on every
+    // fold; pending keys never touch the blobs, so between folds the
+    // broadcast payload is exactly this)
+    var filterBytes = manifest.counters("filter_blob_bytes")
 
     // seen-probe broadcast (one per FOLD EPOCH — the blobs only change when
-    // a fold commits): built lazily from the filters table when the
-    // estimated blob bytes fit cfg.broadcastFilterLimitBytes, destroyed on
-    // fold. The estimate is an upper bound (post-rebuild capacity ≤ the next
-    // power of two above 2x the keys), so a 10^10-url frontier (~4 B/key of
-    // blobs) always stays on the co-partitioned cogroup path.
+    // a fold commits): built lazily from the filters table when
+    // `filterBytes` fits cfg.broadcastFilterLimitBytes, dropped on fold. A
+    // 10^10-url frontier (~4 B/key of blobs) stays on the co-partitioned
+    // cogroup path.
     var filtersBc: Option[Broadcast[Array[CuckooFilter]]] = None
     // a dropped broadcast is RETIRED, not destroyed on the spot: the carried
     // frontier's lazy plan (see carriedFrontier below) still references the
@@ -1141,10 +1088,13 @@ object CrawlEngine {
     // discovery-optimistic at start (and on resume) so the first round keeps
     // the one-barrier write-first shape
     var lastRoundHadNew = true
-    // seen-table round cache (see CrawlConfig.seenCacheLimitBytes): keyed by
-    // the committed dir list, so any commit that adds a seen delta
-    // invalidates it; size-gated off for frontiers whose seen set could not
-    // sit in block storage
+    // seen-table round cache: when the committed seen dirs are UNCHANGED
+    // from the previous round (zero-new steady state — a frontier draining
+    // to exhaustion), the exact-backstop anti-join reads a persisted dataset
+    // instead of re-reading the parquet dirs every round. Keyed by the
+    // committed dir list, so any commit that adds a seen delta invalidates
+    // it; size-gated off (SeenCacheBudgetBytes, ~16 B/key) for frontiers
+    // whose seen set could not sit in block storage
     var seenCacheKey: Seq[String] = null
     var seenCacheDs: Dataset[SeenEntry] = null
     def dropSeenCache(): Unit = {
@@ -1153,9 +1103,7 @@ object CrawlEngine {
     }
     def cachedSeen(dirs: Seq[String],
         fresh: => Dataset[SeenEntry]): Dataset[SeenEntry] = {
-      val fits = cfg.seenCacheLimitBytes > 0 &&
-        seenTotal * 16L <= cfg.seenCacheLimitBytes
-      if (!fits) { dropSeenCache(); fresh }
+      if (seenTotal * 16L > SeenCacheBudgetBytes) { dropSeenCache(); fresh }
       else if (seenCacheKey == dirs && seenCacheDs != null) seenCacheDs
       else {
         dropSeenCache()
@@ -1164,21 +1112,6 @@ object CrawlEngine {
         seenCacheDs
       }
     }
-    // ACTUAL serialized blob bytes (manifest counter, exact — updated at
-    // bootstrap and on every fold; pending keys never touch the blobs, so
-    // between folds the broadcast payload is exactly this). -1 on a legacy
-    // snapshot without the counter → capacity-model upper bound fallback
-    // (which can undercount a skewed/stash-carrying filter set — the exact
-    // counter is the fix for that, per the r4 advice).
-    var filterBytes = manifest.counters.getOrElse("filter_blob_bytes", -1L)
-    def estimatedFilterBytes(): Long =
-      if (filterBytes >= 0L) filterBytes
-      else {
-        val perBucket = math.max(cfg.filterCapacityPerBucket,
-          2L * (seenTotal / math.max(1, cfg.numBuckets) + 1))
-        cfg.numBuckets.toLong * CuckooFilter.blobBytesForCapacity(perBucket)
-      }
-
     // In-memory frontier carry: round r+1 consumes round r's frontier
     // (prev − drained ∪ adds) straight from the persisted datasets instead
     // of re-reading the parquet round r just committed — the per-round
@@ -1262,7 +1195,7 @@ object CrawlEngine {
           (frontier, seen, filters, robots, pendingSeen, blockedHosts, delayActive, seenDirs)
         }
       if (filtersBc.isEmpty && cfg.broadcastFilterLimitBytes > 0 &&
-          estimatedFilterBytes() <= cfg.broadcastFilterLimitBytes)
+          filterBytes <= cfg.broadcastFilterLimitBytes)
         timed("filters-bc") {
           val rows = filters.collect()
           val n = rows.iterator.map(_.bucket + 1).foldLeft(cfg.numBuckets)(math.max)
@@ -1305,41 +1238,35 @@ object CrawlEngine {
         }
       }
       else {
-        // Deferred new-url count (throughput mode — round() ran no counters
-        // job): the commit's seen-delta write IS the probe chain's first
-        // consumer, so writing it here materializes the newEntries cache and
-        // the partition tally carries the count — write + count in ONE job
-        // barrier instead of two. The dir is the one commit() would have
-        // used; it is recorded via `preWritten`, or deleted again when the
-        // round discovered nothing (the old zero-delta skip).
-        // EXCEPT in the zero-new steady state (idleCountFirst + the previous
-        // round found nothing): a frontier draining to exhaustion would pay
-        // a full dynamic-partition parquet commit EVERY round just to learn
-        // the count is zero — there, materialize the cache with a bare
-        // count and write the delta (from the now-cached rows, cheap) only
-        // when keys actually appeared. One-round lag: a discovery burst
-        // after an idle stretch pays one extra job barrier, then write-first
-        // resumes.
-        val countFirst = cfg.idleCountFirst && !lastRoundHadNew
-        var preSeenDir: Option[String] = None
-        r.newTallies.foreach { _ =>
-          if (countFirst) {
-            timed("seen-count")(r.seenDelta.count())
-            if (r.newTallies.exists(_.totals._1 > 0)) {
-              val dir = SnapshotStore.deltaDirFor(stateDir, roundNo + 1, "seen")
-              timed("seen-write")(r.seenDelta.toDF().repartition(col("bucket"))
-                .write.mode("overwrite").partitionBy("bucket").parquet(dir))
-              preSeenDir = Some(dir)
-            }
-          } else {
-            val dir = SnapshotStore.deltaDirFor(stateDir, roundNo + 1, "seen")
-            timed("seen-write")(r.seenDelta.toDF().repartition(col("bucket"))
-              .write.mode("overwrite").partitionBy("bucket").parquet(dir))
-            preSeenDir = Some(dir)
-          }
+        // The seen delta is written (or counted) HERE, synchronously: it is
+        // the first action over the round's probe chain, so it materializes
+        // the newEntries cache, and the tallies inside that cache then carry
+        // the new-url and robots-allowed counts — write + count in ONE job
+        // barrier. The dir is the one commit() would have used; it is
+        // recorded via `preWritten`, or deleted again when the round
+        // discovered nothing (zero-row deltas are carried, not written).
+        // EXCEPT in the zero-new steady state (the previous round found
+        // nothing): a frontier draining to exhaustion would pay a full
+        // dynamic-partition parquet commit EVERY round just to learn the
+        // count is zero — there, materialize the cache with a bare count and
+        // write the delta (from the now-cached rows, cheap) only when keys
+        // actually appeared. One-round lag: a discovery burst after an idle
+        // stretch pays one extra job barrier, then write-first resumes.
+        val seenDir = SnapshotStore.deltaDirFor(stateDir, roundNo + 1, "seen")
+        def writeSeen(): Unit = timed("seen-write")(r.seenDelta.toDF()
+          .repartition(col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket").parquet(seenDir))
+        if (lastRoundHadNew) writeSeen()
+        else {
+          timed("seen-count")(r.adds.count())
+          if (r.newUrls > 0) writeSeen()
         }
-        val nNew = r.newTallies.map(_.totals._1).getOrElse(stats.newUrls)
-        lastRoundHadNew = nNew > 0
+        val nNew = r.newUrls
+        val newsThisRound = nNew > 0
+        if (!newsThisRound)
+          graft.util.TempDirs.deleteRecursively(java.nio.file.Paths.get(seenDir))
+        lastRoundHadNew = newsThisRound
+        val lineage = lineageRows(spark, roundNo, r, frontierSize)
         fetchedTotal += stats.fetched
         extractedTotal += stats.extracted
         seenTotal += nNew
@@ -1401,11 +1328,7 @@ object CrawlEngine {
         // zero-row deltas are SKIPPED, not written: a round that discovered
         // nothing new carries the previous adds/seen dirs forward — an empty
         // parquet write is still a full Spark job + commit protocol, and a
-        // drained-to-exhaustion crawl pays it every round otherwise. A
-        // pre-written empty seen dir is removed again here.
-        val newsThisRound = nNew > 0
-        if (!newsThisRound) preSeenDir.foreach(d =>
-          graft.util.TempDirs.deleteRecursively(java.nio.file.Paths.get(d)))
+        // drained-to-exhaustion crawl pays it every round otherwise
         val frontierDeltas =
           if (compact) Map(
             "frontier_adds" -> (frontier.join(r.drainedKeys, Seq("url_hash"), "left_anti")
@@ -1419,31 +1342,14 @@ object CrawlEngine {
                Map("frontier_adds" -> (r.adds.toDF(),
                  SnapshotStore.dirsOf(manifest, "frontier_adds")))
              else Map.empty[String, (DataFrame, Seq[String])])
-        val seenDeltas =
-          if (newsThisRound && preSeenDir.isEmpty)
-            Map("seen" -> (r.seenDelta.toDF(), SnapshotStore.dirsOf(manifest, "seen")))
-          else Map.empty[String, (DataFrame, Seq[String])]
         val seenPre: Map[String, (String, Seq[String])] =
-          preSeenDir match {
-            case Some(d) if newsThisRound =>
-              Map("seen" -> (d, SnapshotStore.dirsOf(manifest, "seen")))
-            case _ => Map.empty
-          }
-        // lineage TABLE rows only in detail mode — in throughput mode the
-        // round's global counters live in the manifest itself (fetched /
-        // extracted / seen / frontier_size), so the table write is pure
-        // per-round overhead with no extra information
-        val lineageDeltas =
-          if (cfg.lineageDetail)
-            Map("lineage" -> (r.lineage.toDF(), SnapshotStore.dirsOf(manifest, "lineage")))
-          else Map.empty[String, (DataFrame, Seq[String])]
+          if (newsThisRound) Map("seen" -> (seenDir, SnapshotStore.dirsOf(manifest, "seen")))
+          else Map.empty
         val carryDeltas =
           (if (compact || newsThisRound) Map.empty
            else Map("frontier_adds" -> SnapshotStore.dirsOf(manifest, "frontier_adds"))) ++
           (if (newsThisRound) Map.empty
-           else Map("seen" -> SnapshotStore.dirsOf(manifest, "seen"))) ++
-          (if (cfg.lineageDetail) Map.empty
-           else Map("lineage" -> SnapshotStore.dirsOf(manifest, "lineage")))
+           else Map("seen" -> SnapshotStore.dirsOf(manifest, "seen")))
         if (compact) rmSize = 0L
         val foldedDirsAfter =
           if (doFold) seenDirs.length + (if (newsThisRound) 1 else 0)
@@ -1458,9 +1364,7 @@ object CrawlEngine {
         // in the background while the NEXT round's jobs run — the next round
         // reads none of these files (frontier/robots/filters/delay carried
         // in memory; the seen delta was written synchronously above).
-        // Awaited right after the next round's jobs complete. Detail mode
-        // (newTallies empty — the seen delta rides INSIDE this commit, and
-        // the next round reads the seen dirs) stays synchronous.
+        // Awaited right after the next round's jobs complete.
         val (m2, commitDone) = timed("commit")(SnapshotStore.commitAsync(
           stateDir, roundNo + 1, tables,
           Map("round" -> roundNo.toLong, "fetched" -> fetchedTotal,
@@ -1471,13 +1375,13 @@ object CrawlEngine {
             "delay_rows" -> delayRowsAfter,
             "filter_blob_bytes" -> foldedBytes,
             "max_delay_ms" -> maxDelay),
-          deltas = frontierDeltas ++ robotsDeltas ++ seenDeltas ++ lineageDeltas,
+          deltas = frontierDeltas ++ robotsDeltas ++
+            Map("lineage" -> (lineage.toDF(), SnapshotStore.dirsOf(manifest, "lineage"))),
           carry = carry ++ carryDeltas,
           partitionCols = Map("seen" -> Seq("bucket")),
           preWritten = seenPre))
         manifest = m2
         pendingCommit = Some(commitDone)
-        if (r.newTallies.isEmpty) awaitCommit()
         foldedDirs = foldedDirsAfter
         pendingKeys = pendingAfter
         delayRows = delayRowsAfter

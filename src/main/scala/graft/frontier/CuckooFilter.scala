@@ -162,17 +162,6 @@ object CuckooFilter {
     new CuckooFilter(nb, new Array[Short](nb * SlotsPerBucket), 0L, new java.util.HashSet())
   }
 
-  /** Serialized size of `create(expectedKeys).toBytes` with an empty stash —
-    * lets the engine decide driver-side whether a filter SET fits a
-    * broadcast budget without reading any blob.
-    */
-  def blobBytesForCapacity(expectedKeys: Long): Long = {
-    val needed = math.max(16L, (expectedKeys / (SlotsPerBucket * LoadLimit)).toLong + 1)
-    var nb = 16L
-    while (nb < needed && nb < (1L << 29)) nb <<= 1
-    4L + 4L + 8L + nb * SlotsPerBucket * 2L + 4L
-  }
-
   def fromBytes(bytes: Array[Byte]): CuckooFilter = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     require(bb.getInt() == Magic, "bad cuckoo filter bytes")

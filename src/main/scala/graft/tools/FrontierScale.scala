@@ -46,8 +46,7 @@ object FrontierScale {
     pages.count()
     val seeds = spark.createDataset((0 until nHosts).map(SyntheticWeb.pageUrl(_, 0)))
     val cfg = CrawlConfig(numBuckets = 32, hostBudgetPerRound = nPages,
-      roundSize = nPages, maxRounds = rounds, lineageDetail = false,
-      foldMinKeys = 64)
+      roundSize = nPages, maxRounds = rounds, foldMinKeys = 64)
     val stateDir = graft.util.TempDirs.create(s"graft-fscale-$nPages-").toString
     CrawlEngine.run(spark, pages, seeds, cfg, stateDir, collectOutputs = false)
     val m = SnapshotStore.latestManifest(stateDir).get

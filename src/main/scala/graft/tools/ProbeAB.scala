@@ -44,16 +44,10 @@ object ProbeAB {
     }
     val hostMax = (1 until (nHosts + 1)).map(h => cuts(h) - cuts(h - 1)).max.toInt
     val base = CrawlConfig(numBuckets = cpus, hostBudgetPerRound = hostMax,
-      roundSize = (nPages + rounds - 1) / rounds, maxRounds = rounds + 2,
-      lineageDetail = false)
-    val cfgs = sys.env.getOrElse("GRAFT_AB_MODE", "probe") match {
-      case "roundcost" => Seq( // seen cache + count-first vs the old shape
-        "new" -> base,
-        "old" -> base.copy(seenCacheLimitBytes = 0L, idleCountFirst = false))
-      case _ => Seq(
-        "broadcast" -> base,
-        "cogroup" -> base.copy(broadcastFilterLimitBytes = 0L))
-    }
+      roundSize = (nPages + rounds - 1) / rounds, maxRounds = rounds + 2)
+    val cfgs = Seq(
+      "broadcast" -> base,
+      "cogroup" -> base.copy(broadcastFilterLimitBytes = 0L))
 
     // warm both code paths (JIT + codegen), untimed; state dirs deleted
     // right away — repeated A/B runs otherwise accumulate temp state

@@ -47,8 +47,7 @@ object RoundProf {
     }
     val hostMax = (1 until (nHosts + 1)).map(h => cuts(h) - cuts(h - 1)).max.toInt
     val cfg = CrawlConfig(numBuckets = cpus, hostBudgetPerRound = hostMax,
-      roundSize = (nPages + rounds - 1) / rounds, maxRounds = rounds + 2,
-      lineageDetail = false)
+      roundSize = (nPages + rounds - 1) / rounds, maxRounds = rounds + 2)
 
     // warm
     CrawlEngine.run(spark, pages, seeds.limit(5000), cfg.copy(roundSize = 5000,

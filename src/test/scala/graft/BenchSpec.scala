@@ -71,6 +71,18 @@ class BenchSpec extends AnyFunSuite {
       thr4 = 0.0, thr16 = 0.0, multi4 = 0.0, multi16 = 0.0).isEmpty)
   }
 
+  test("a throwing query is reported with its message, never timed") {
+    val queries = Seq[(String, String => Long)](
+      "ok" -> (_ => 1L),
+      "boom" -> (_ => throw new IllegalStateException("broken plan")),
+      "warm-only" -> (d => if (d == "warm") throw new RuntimeException("no warm data") else 1L),
+      "timed-only" -> (d => if (d == "sf") throw new RuntimeException("bad sf") else 1L))
+    val (timed, failed) = Bench.timeQueries(queries, warmDir = "warm", dir = "sf")
+    assert(timed.map(_._1) == Seq("ok"))
+    assert(failed.map(_._1) == Seq("boom", "warm-only", "timed-only"))
+    assert(failed.head._2 == "java.lang.IllegalStateException: broken plan")
+  }
+
   test("BenchLevel measures a tiny level in-process") {
     val lvl = new BenchLevel(cpus = 4, nPages = 2000, nHosts = 4)
     lvl.setup(skipWarm = true)

@@ -124,6 +124,12 @@ class CrawlSpec extends AnyFunSuite {
     (seen.toSet, drains.result())
   }
 
+  /** A crawl's committed global lineage rows (bucket -1), by round. */
+  def globalLineage(stateDir: String): Seq[org.apache.spark.sql.Row] =
+    SnapshotStore.read(spark, SnapshotStore.latestManifest(stateDir).get, "lineage")
+      .filter(org.apache.spark.sql.functions.col("bucket") === -1)
+      .collect().toSeq.sortBy(_.getAs[Int]("round"))
+
   test("spark crawl matches the simulator's URL-seen set and drain ordering" +
       " under every filter-fold config") {
     import spark.implicits._
@@ -149,6 +155,10 @@ class CrawlSpec extends AnyFunSuite {
       // anti-join with NON-EMPTY deltas — the combination the eager cogroup
       // config (empty pending by construction) cannot reach
       "cogroup-lazy" -> cfg.copy(broadcastFilterLimitBytes = 0L))
+    // each config's global lineage rows (bucket -1), checked identical
+    // across configs: the robots-blocked tallies ride different probe legs
+    // on the broadcast and cogroup paths
+    val lineageByConfig = mutable.LinkedHashMap.empty[String, Seq[org.apache.spark.sql.Row]]
     for ((label, fcfg) <- configs) {
       val stateDir = java.nio.file.Files.createTempDirectory(s"graft-crawlspec-$label-").toString
       val stats = CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
@@ -173,6 +183,18 @@ class CrawlSpec extends AnyFunSuite {
       }
       assert(stats.fetched == simFetchedPerRound.map(_.size).sum)
       assert(stats.rounds == simDrains.size)
+      val global = globalLineage(stateDir)
+      assert(global.map(_.getAs[Int]("round")) == (0 until stats.rounds),
+        s"[$label] want one bucket -1 lineage row per round")
+      lineageByConfig(label) = global
+      // the per-bucket rows add up to each round's global drained / new counts
+      import org.apache.spark.sql.functions.{col, sum}
+      val perBucket = SnapshotStore.read(spark, m, "lineage").filter(col("bucket") =!= -1)
+        .groupBy("round").agg(sum("drained"), sum("new_urls"))
+        .as[(Int, Long, Long)].collect().toSeq.sortBy(_._1)
+      assert(perBucket == global.map(r => (r.getAs[Int]("round"),
+          r.getAs[Long]("drained"), r.getAs[Long]("new_urls"))),
+        s"[$label] per-bucket lineage disagrees with the global rows")
 
       // filter-table health invariants per config
       import graft.frontier.{CuckooFilter, FilterState}
@@ -207,6 +229,10 @@ class CrawlSpec extends AnyFunSuite {
         assert(foldCommits >= 1)
         assert(m.counters("pending_keys") == 0L, s"[$label] eager fold left pending keys")
       }
+    }
+    val (firstLabel, firstRows) = lineageByConfig.head
+    lineageByConfig.foreach { case (label, rows) =>
+      assert(rows == firstRows, s"[$label] lineage differs from [$firstLabel]")
     }
   }
 
@@ -291,11 +317,28 @@ class CrawlSpec extends AnyFunSuite {
     df.write.parquet(s"$stateDir/data/v0/frontier")
     SnapshotStore.writeManifest(stateDir, SnapshotStore.Manifest(0,
       Map("frontier" -> s"$stateDir/data/v0/frontier"), Map("round" -> -1L)))
-    val pages = SyntheticWeb.pagesFast(spark, 8, nHosts, 2).toDF()
-    val e = intercept[IllegalStateException] {
-      CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), robots, cfg, stateDir)
+    // r4-layout manifests: the delta tables and the max_delay_ms counter,
+    // but no exact filter_blob_bytes counter — or, older still, no
+    // filters_folded_dirs fold bookkeeping
+    val r4Counters = Map("round" -> 0L, "fetched" -> 0L, "extracted" -> 0L,
+      "seen" -> 1L, "frontier_size" -> 1L, "frontier_rm_size" -> 0L,
+      "filters_folded_dirs" -> 1L, "pending_keys" -> 0L, "delay_rows" -> 0L,
+      "max_delay_ms" -> 0L, "filter_blob_bytes" -> 0L)
+    val deltaDirs = Seq("frontier_adds", "frontier_rm", "seen", "robots",
+      "filters", "lineage")
+    val stateDirs = stateDir +: Seq("filter_blob_bytes", "filters_folded_dirs").map { missing =>
+      val d = java.nio.file.Files.createTempDirectory(s"graft-legacy-no-$missing-").toString
+      SnapshotStore.writeManifest(d, SnapshotStore.Manifest(0,
+        deltaDirs.map(t => t -> s"$d/data/v0/$t").toMap, r4Counters - missing))
+      d
     }
-    assert(e.getMessage.contains("incompatible legacy snapshot format"))
+    val pages = SyntheticWeb.pagesFast(spark, 8, nHosts, 2).toDF()
+    for (d <- stateDirs) {
+      val e = intercept[IllegalStateException] {
+        CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), robots, cfg, d)
+      }
+      assert(e.getMessage.contains("incompatible legacy snapshot format"), d)
+    }
   }
 
   test("crawl is resumable from the latest snapshot with identical final state") {
@@ -307,11 +350,25 @@ class CrawlSpec extends AnyFunSuite {
     val fullStats = CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
       robots, cfg, fullDir)
 
-    // interrupted run: only 2 rounds, then resume with full budget
+    val fullLineage = globalLineage(fullDir)
+
+    // interrupted run: stops after the last round that discovered new urls
+    // (so that round pre-wrote a seen delta), then resumes with full budget
+    val lastNew = fullLineage.filter(_.getAs[Long]("new_urls") > 0)
+      .map(_.getAs[Int]("round")).max
+    assert(lastNew >= 1, s"need a discovering round after round 0: $fullLineage")
     val partDir = java.nio.file.Files.createTempDirectory("graft-part-").toString
     CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
-      robots, cfg.copy(maxRounds = 2), partDir)
-    // simulate crash: a torn uncommitted write must be invisible
+      robots, cfg.copy(maxRounds = lastNew + 1), partDir)
+    // simulate crash: a torn uncommitted write must be invisible. Dropping
+    // the last manifest leaves that round's data dirs — including the seen
+    // delta written before the commit — orphaned on disk, as a crash between
+    // the writes and the manifest rename would
+    val v = lastNew + 1
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(partDir, "data", s"v$v", "seen")),
+      s"round $lastNew must have pre-written a seen delta")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(partDir, "snapshots", s"v$v.json"))
+    assert(SnapshotStore.latestVersion(partDir).contains(v - 1))
     val resumedStats = CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
       robots, cfg, partDir)
 
@@ -325,6 +382,7 @@ class CrawlSpec extends AnyFunSuite {
         SnapshotStore.latestManifest(partDir).get, "seen"))
       .select("url_hash").as[Long].collect().toSet
     assert(fullSeen == resumedSeen)
+    assert(globalLineage(partDir) == fullLineage)
   }
 
   test("drain-to-exhaustion writes no empty seen deltas (count-first steady state)") {

@@ -2,7 +2,7 @@
 # GC-choice sweep for the multi-round crawl: interleaved variants so host
 # throttle bursts hit all variants instead of one. Output: one line per run.
 set -u
-cd /root/repo
+cd "$(dirname "$0")/.."
 OUT=/tmp/gc_sweep.txt
 : > $OUT
 run() { # cpus rounds gc young label

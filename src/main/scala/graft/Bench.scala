@@ -40,7 +40,7 @@ object Bench {
   private def session(cpus: Int, aqe: Boolean = true): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", aqe.toString)
@@ -50,30 +50,6 @@ object Bench {
       // torn-down streaming checkpoint mid-bench (stack trace pollutes stdout)
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
       .getOrCreate()
-    // stage-level breakdown for perf iteration only (GRAFT_DEBUG_STAGES=1):
-    // wall duration vs summed executor run time per stage exposes where a
-    // round is serial (scheduling, driver) vs parallel (task work)
-    if (sys.env.contains("GRAFT_DEBUG_STAGES"))
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = e.stageInfo
-            val run = i.taskMetrics.executorRunTime / 1e3
-            val wall = (for { a <- i.submissionTime; b <- i.completionTime }
-              yield (b - a) / 1e3).getOrElse(-1.0)
-            System.err.println(f"[stage] ${i.stageId}%4d tasks=${i.numTasks}%4d " +
-              f"wall=$wall%6.2fs cpu=$run%7.2fs  ${i.name.takeWhile(_ != '\n')}%s")
-          }
-          override def onTaskEnd(
-              e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (sys.env.get("GRAFT_DEBUG_STAGES").contains("2") &&
-                e.taskInfo.duration > 1000)
-              System.err.println(f"[task] stage=${e.stageId}%4d " +
-                f"dur=${e.taskInfo.duration / 1e3}%6.2fs " +
-                f"records=${Option(e.taskMetrics).map(_.inputMetrics.recordsRead).getOrElse(-1L)}%s")
-        })
-    s
   }
 
   /** single = one maximal round; multi = 8-round drain; multi2 = 2-round

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.frontier.{CrawlConfig, CrawlEngine}
 import graft.tables.SyntheticWeb
 
@@ -18,28 +19,17 @@ import graft.tables.SyntheticWeb
 final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
 
   private var spark: SparkSession = _
-  private var pages: org.apache.spark.sql.DataFrame = _
-  private var cfg: CrawlConfig = _
+  private var input: BenchLevel.Input = _
   private var bootDir: java.nio.file.Path = _
-  private var seedDs: Int => org.apache.spark.sql.Dataset[String] = _
-
-  private def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    val s = java.nio.file.Files.walk(src)
-    try s.forEach { p =>
-      val q = dst.resolve(src.relativize(p))
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
-      else java.nio.file.Files.copy(p, q,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally s.close()
-  }
 
   /** `aqe = false` for the crawl sessions: at bounded round sizes every
     * join the round runs is explicitly broadcast (drain keys, fetch keys,
     * robots) or statically planned, and AQE's per-exchange stage
     * materialization adds ~15 driver jobs per round — pure scheduling
     * latency at this scale (measured: ~25% of multi-round wall). Production
-    * rounds above `broadcastDrainLimit` want AQE back on for skew handling;
-    * the engine itself is config-neutral (specs run with AQE on).
+    * rounds above the engine's 2M-key drain broadcast limit want AQE back on
+    * for skew handling; the engine itself is config-neutral (specs run with
+    * AQE on).
     */
   /** @param bootHint reuse/populate this directory for the v0 bootstrap
     *   snapshot (the in-proc fallback caches it across interleaved passes;
@@ -51,7 +41,7 @@ final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
       skipWarm: Boolean = false): Unit = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val sp = SparkSession.builder()
+    spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled",
@@ -60,48 +50,13 @@ final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
       .getOrCreate()
-    spark = sp
-    import sp.implicits._
-    val weight = sys.env.getOrElse("SPARK_GRAFT_PAGE_WEIGHT", "4").toInt
-    // robots.txt rows live IN the pages table (the engine's default robots
-    // source) — rules are crawled data, not driver config.
-    // 256 slices, FIXED across parallelism levels (identical input layout at
-    // every level), url-range layout (the Iceberg sort_order(url) analog) so
-    // the engine's drain-range predicate prunes cached batches via min/max
-    // stats — see Bench for the full rationale.
-    pages = SyntheticWeb.pagesFast(sp, nPages.toLong, nHosts, 256,
-      weight).union(SyntheticWeb.robotsPages(spark, nHosts)).toDF()
-      .repartitionByRange(256, org.apache.spark.sql.functions.col("url"))
-      .sortWithinPartitions("url")
-      .cache()
-    pages.count() // materialize input outside the timed section
-    // seed the frontier with every page url (measures drain+extract, not
-    // graph discovery latency); host-major layout mirror of pagesFast.
-    // Seeds are a DATASET derived executor-side — nothing frontier-sized
-    // ever materializes on the driver or ships inside task closures.
-    val cuts = SyntheticWeb.fastCuts(nPages.toLong, nHosts)
-    val cutsBc = sp.sparkContext.broadcast(cuts)
-    val nh = nHosts
-    val nSlices = cpus * 2
-    seedDs = (n: Int) => sp.range(0, n.toLong, 1, nSlices).map { i =>
-      val c = cutsBc.value
-      var host = java.util.Arrays.binarySearch(c, i)
-      if (host < 0) host = -host - 2
-      if (host >= nh) host = nh - 1
-      SyntheticWeb.pageUrl(host, i - c(host))
-    }
-    // politeness budget = the largest host's frontier share (host0's 30%):
-    // small enough that the two-phase per-host top-k actually executes, large
-    // enough that one round still drains the whole frontier — the metric
-    // measures drain+extract, not multi-round scheduling latency
-    val hostMax = (1 until (nHosts + 1)).map(h => cuts(h) - cuts(h - 1)).max.toInt
-    cfg = CrawlConfig(numBuckets = cpus, hostBudgetPerRound = hostMax,
-      roundSize = nPages, maxRounds = 1)
+    input = BenchLevel.input(spark, cpus, nPages, nHosts)
     // JIT warmup: an untimed crawl through the same code path — 10k pages,
     // or the first timed trial pays residual compilation (observed ~7%).
     if (!skipWarm) {
       val warm = math.min(10000, nPages)
-      CrawlEngine.run(spark, pages, seedDs(warm), cfg.copy(roundSize = warm),
+      CrawlEngine.run(spark, input.pages, input.seeds(warm),
+        input.single.copy(roundSize = warm),
         graft.util.TempDirs.create("graft-warm-").toString,
         collectOutputs = false)
     }
@@ -117,16 +72,17 @@ final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
     }
     if (empty) {
       java.nio.file.Files.createDirectories(bootDir)
-      CrawlEngine.run(spark, pages, seedDs(nPages), cfg.copy(maxRounds = 0),
+      CrawlEngine.run(spark, input.pages, input.seeds(nPages),
+        input.single.copy(maxRounds = 0),
         bootDir.toString, collectOutputs = false)
     }
   }
 
   private def timedRun(runCfg: CrawlConfig): (Double, Long) = {
     val stateDir = graft.util.TempDirs.create(s"graft-bench-$cpus-")
-    copyTree(bootDir, stateDir)
+    graft.util.TempDirs.copyTree(bootDir, stateDir)
     val t0 = System.nanoTime()
-    val stats = CrawlEngine.run(spark, pages, seedDs(nPages), runCfg,
+    val stats = CrawlEngine.run(spark, input.pages, input.seeds(nPages), runCfg,
       stateDir.toString, collectOutputs = false)
     val sec = (System.nanoTime() - t0) / 1e9
     graft.util.TempDirs.deleteRecursively(stateDir)
@@ -134,15 +90,64 @@ final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
   }
 
   /** ONE maximal round — the drain+extract kernel. Returns (urls/sec, extracted). */
-  def runSingle(): (Double, Long) = timedRun(cfg)
+  def runSingle(): (Double, Long) = timedRun(input.single)
 
   /** The SAME pages drained over `rounds` fetch-schedule rounds — per-round
     * commit amortization, fold policy and frontier compaction inside the
     * timed window, the way a real crawl pays them.
     */
-  def runMulti(rounds: Int): Double =
-    timedRun(cfg.copy(roundSize = (nPages + rounds - 1) / rounds,
-      maxRounds = rounds + 2))._1
+  def runMulti(rounds: Int): Double = timedRun(input.multi(rounds))._1
 
   def close(): Unit = if (spark != null) spark.stop()
+}
+
+object BenchLevel {
+
+  /** The bench's crawl input. `pages`: cached, materialized pages table.
+    * `seeds(n)`: the first `n` page urls. `single`: the config that drains
+    * every page in one round.
+    */
+  final class Input(val pages: DataFrame, val seeds: Int => Dataset[String],
+      val single: CrawlConfig) {
+    /** The same pages drained over `rounds` fetch-schedule rounds. */
+    def multi(rounds: Int): CrawlConfig =
+      single.copy(roundSize = (single.roundSize + rounds - 1) / rounds,
+        maxRounds = rounds + 2)
+  }
+
+  /** Build the bench input for a local[`cpus`] session: `nPages` synthetic
+    * pages over `nHosts` hosts (page weight from SPARK_GRAFT_PAGE_WEIGHT,
+    * default 4), shared by the bench levels and the crawl profiling tools.
+    */
+  def input(spark: SparkSession, cpus: Int, nPages: Int, nHosts: Int): Input = {
+    import spark.implicits._
+    val weight = sys.env.getOrElse("SPARK_GRAFT_PAGE_WEIGHT", "4").toInt
+    // robots.txt rows live IN the pages table (the engine's default robots
+    // source) — rules are crawled data, not driver config.
+    // 256 slices, FIXED across parallelism levels (identical input layout at
+    // every level), url-range layout (the Iceberg sort_order(url) analog) so
+    // the engine's drain-range predicate prunes cached batches via min/max
+    // stats — see Bench for the full rationale.
+    val pages = SyntheticWeb.pagesFast(spark, nPages.toLong, nHosts, 256,
+      weight).union(SyntheticWeb.robotsPages(spark, nHosts)).toDF()
+      .repartitionByRange(256, col("url"))
+      .sortWithinPartitions("url")
+      .cache()
+    pages.count() // materialize input outside the timed section
+    // seed the frontier with every page url (measures drain+extract, not
+    // graph discovery latency); host-major layout mirror of pagesFast.
+    // Seeds are a DATASET derived executor-side — nothing frontier-sized
+    // ever materializes on the driver or ships inside task closures.
+    val cuts = SyntheticWeb.fastCuts(nPages.toLong, nHosts)
+    val cutsBc = spark.sparkContext.broadcast(cuts)
+    val seeds = (n: Int) => spark.range(0, n.toLong, 1, cpus * 2)
+      .map(i => SyntheticWeb.pageUrlAt(cutsBc.value, i))
+    // politeness budget = the largest host's frontier share (host0's 30%):
+    // small enough that the two-phase per-host top-k actually executes, large
+    // enough that one round still drains the whole frontier — the metric
+    // measures drain+extract, not multi-round scheduling latency
+    val hostMax = (1 until (nHosts + 1)).map(h => cuts(h) - cuts(h - 1)).max.toInt
+    new Input(pages, seeds, CrawlConfig(numBuckets = cpus,
+      hostBudgetPerRound = hostMax, roundSize = nPages, maxRounds = 1))
+  }
 }

@@ -64,17 +64,9 @@ final case class CrawlConfig(
     maxRounds: Int = 64,
     allowedHosts: Set[String] = Set.empty, // empty = all (C2/P13 allow-domains)
     filterCapacityPerBucket: Long = 1L << 16,
-    // the drained round is always <= roundSize small rows vs a huge pages
-    // table: broadcast it so the fetch join never shuffles html bytes.
-    // Above this limit fall back to a shuffled join (AQE skew handling).
-    broadcastDrainLimit: Int = 2_000_000,
     // P14 (web_spider.py:68-69): in test mode, seed urls containing
     // 'example' are skipped at injection time
     isTest: Boolean = false,
-    // frontier commits are append-only deltas (adds + drained-key tombstones);
-    // every N rounds — or when tombstones outnumber live rows — the frontier
-    // is compacted to a single rewrite so reads never degrade unboundedly
-    compactEveryRounds: Int = 8,
     // cuckoo-filter fold policy: new seen keys accumulate as PENDING deltas
     // (probed exactly, never written twice) and are folded into the filter
     // blobs only when pending >= max(foldMinKeys, foldFrac * seen) — so
@@ -181,6 +173,18 @@ object CrawlEngine {
   // budget for the seen-table round cache in run() (~16 B/key): a 10^10-key
   // seen set never qualifies
   private val SeenCacheBudgetBytes = 4L << 30
+
+  // the drained round is always <= roundSize small rows vs a huge pages
+  // table: up to this many keys it is broadcast, so the fetch join never
+  // shuffles html bytes. Above it the join shuffles the keys against a
+  // url-bucketed pages table (AQE skew handling).
+  private val BroadcastDrainLimit = 2_000_000
+
+  // frontier commits are append-only deltas (adds + drained-key tombstones);
+  // every this many rounds — or when tombstones outnumber live rows — the
+  // commit compacts the frontier to a single rewrite, so a read of the
+  // committed frontier never degrades unboundedly
+  private val CompactEveryRounds = 8
 
   private val debugTiming = sys.env.contains("GRAFT_DEBUG_TIMING")
   private def timed[A](label: String)(f: => A): A =
@@ -409,7 +413,7 @@ object CrawlEngine {
     * `delayBlockedHosts`: hosts whose host_next_ok_round exceeds this round
     * (crawl-delay politeness) — excluded from the drain entirely.
     *
-    * `robots`: the committed robots table; rules for hosts first seen this
+    * `robots`: the robots table so far; rules for hosts first seen this
     * round are fetched from `robotsSrc` inside the round and returned as
     * `robotsDelta`.
     */
@@ -479,7 +483,7 @@ object CrawlEngine {
           // |eligible| <= frontierSize <= roundSize: the global top-k is the
           // identity — everything politeness admitted drains this round
           tallied(eligible, drainedTallies)(_ => 0L).persist()
-        else if (cfg.roundSize <= cfg.broadcastDrainLimit) {
+        else if (cfg.roundSize <= BroadcastDrainLimit) {
           // Exact top-k via ONE narrow TakeOrdered job collected to the
           // driver — Spark would collect these keys for the semi-join
           // broadcast anyway, so the explicit collect is free, and the
@@ -561,7 +565,7 @@ object CrawlEngine {
           else pages.filter($"url" >= lo && $"url" <= hi)
       }
     val fetched = fetchJoin(drained.select($"url", $"depth"), fetchPages,
-      broadcastKeys = cfg.roundSize <= cfg.broadcastDrainLimit)
+      broadcastKeys = cfg.roundSize <= BroadcastDrainLimit)
       .as[(String, Int, Array[Byte])]
 
     // --- fused detect/extract map (3.1): ONE narrow map, no shuffle ---
@@ -910,6 +914,31 @@ object CrawlEngine {
       .as[FrontierEntry]
   }
 
+  /** The tables a round reads besides the seen set, and hands on to the
+    * next round: frontier, robots, filters and host_next_ok (host,
+    * next_ok_round).
+    */
+  private final case class CrawlState(frontier: Dataset[FrontierEntry],
+      robots: Dataset[RobotsEntry], filters: Dataset[FilterState],
+      delay: Option[DataFrame])
+
+  /** The committed state in `m`. The frontier is persisted: the
+    * adds-minus-tombstones anti-join would otherwise recompute from parquet
+    * in every consumer of the first round (the drain-keys collect, job 1's
+    * semi-join back, a compaction write), and the single-job drain-keys
+    * collect touches it first, so the cache populates race-free.
+    */
+  private def readState(spark: SparkSession, m: SnapshotStore.Manifest): CrawlState = {
+    import spark.implicits._
+    CrawlState(
+      readFrontier(spark, m).persist(),
+      SnapshotStore.read(spark, m, "robots", robotsSchema).as[RobotsEntry],
+      SnapshotStore.read(spark, m, "filters", filterSchema).as[FilterState],
+      if (m.dataDirs.contains("host_next_ok"))
+        Some(SnapshotStore.read(spark, m, "host_next_ok", delaySchema))
+      else None)
+  }
+
   /** Legacy bridge: pre-materialized robots rules become synthetic
     * `/robots.txt` page rows (Robots.serialize round-trips exactly), so the
     * one engine path — robots fetched from a pages source — serves both.
@@ -1075,8 +1104,8 @@ object CrawlEngine {
     // cogroup path.
     var filtersBc: Option[Broadcast[Array[CuckooFilter]]] = None
     // a dropped broadcast is RETIRED, not destroyed on the spot: the carried
-    // frontier's lazy plan (see carriedFrontier below) still references the
-    // probe expression built over it until the next round's first job
+    // frontier's lazy plan (see `state` below) still references the probe
+    // expression built over it until the next round's first job
     // materializes the carry — destroying eagerly fails that job with
     // "Attempted to use Broadcast after it was destroyed"
     var retiredFiltersBc: Seq[Broadcast[Array[CuckooFilter]]] = Nil
@@ -1112,24 +1141,26 @@ object CrawlEngine {
         seenCacheDs
       }
     }
-    // In-memory frontier carry: round r+1 consumes round r's frontier
-    // (prev − drained ∪ adds) straight from the persisted datasets instead
-    // of re-reading the parquet round r just committed — the per-round
-    // full-frontier anti-join against the GROWING tombstone dir list becomes
-    // an anti-join against only this round's drained keys (usually a
-    // broadcast). Plan lineage is CUT on compaction rounds (carried = None →
-    // next round re-reads the single compacted dir), so plan depth stays
-    // bounded by compactEveryRounds; resume always starts from parquet.
-    var carriedFrontier: Option[Dataset[FrontierEntry]] = None
-    // robots / filters / crawl-delay state carried the same way (robots is
-    // the round's persisted prev ∪ delta; filters change only on fold
-    // rounds, where the persisted folded table is carried; the delay table
-    // is the round's merged host_next_ok). Carrying them makes the commit's
-    // table writes invisible to the next round's reads — which is what lets
-    // the commit run CONCURRENTLY with the next round (see commitAsync).
-    var carriedRobots: Option[Dataset[RobotsEntry]] = None
-    var carriedFilters: Option[Dataset[FilterState]] = None
-    var carriedDelay: Option[DataFrame] = None
+    // One state path: the first round that runs (fresh or resumed) reads
+    // frontier, robots, filters and host_next_ok from the manifest; every
+    // later round takes them from the round before, in memory — frontier
+    // prev − drained ∪ adds, robots prev ∪ delta, filters the folded table,
+    // host_next_ok the merged delay table. A round's frontier update is
+    // then an anti-join against one round's drained keys (usually a
+    // broadcast), not against every committed tombstone dir, and the next
+    // round reads none of the files the commit writes, so the commit runs
+    // CONCURRENTLY with it (see commitAsync). Read lazily: a run that runs
+    // no round (a maxRounds = 0 bootstrap) lists no state files. The seen
+    // table is the exception — a 10^10-key seen set cannot be carried, so
+    // it is read from parquet every round (cachedSeen above).
+    var state: CrawlState = null
+    // persisted tables the carried filters / host_next_ok checkpoints are
+    // cut from. A checkpoint may first materialize rounds later (the
+    // cogroup probe reads the filters only in the seen write; an empty delay
+    // table is never read), so its source is released only once a fold or
+    // merge has read the checkpoint and replaced it, or when run() ends.
+    var filtersSrc: Option[Dataset[_]] = None
+    var delaySrc: Option[Dataset[_]] = None
     // the carried plans reference the PREVIOUS round's caches (frontier,
     // drained, newEntries, robotsAll), so those are unpersisted only after
     // the next round's first job has materialized the carried caches
@@ -1146,8 +1177,7 @@ object CrawlEngine {
     // none of the files being written (frontier/robots/filters/delay are
     // carried in memory; the seen delta was written synchronously as the
     // round's count barrier). Awaited before the next commit (version
-    // ordering), whenever carried state is dropped (compact lineage cut →
-    // parquet re-read), and before run() returns.
+    // ordering) and before run() returns.
     var pendingCommit: Option[scala.concurrent.Future[Unit]] = None
     def awaitCommit(): Unit = pendingCommit.foreach { f =>
       timed("commit-await")(
@@ -1156,26 +1186,11 @@ object CrawlEngine {
     }
     var continue = true
     while (continue && roundNo < cfg.maxRounds && frontierSize > 0) {
-      // compact-cut (or first) round: the next read goes to parquet — the
-      // in-flight writes it will read must be durable first
-      if (carriedFrontier.isEmpty) awaitCommit()
-      val (frontier, seen, filters, robots, pendingSeen, blockedHosts, delayActive, seenDirs) =
+      val (seen, pendingSeen, blockedHosts, delayActive, seenDirs) =
         timed("read-state") {
-          // persisted for the round: the adds-minus-tombstones anti-join
-          // (rm grows every round) otherwise recomputes from parquet in
-          // EVERY consumer — the drain-keys collect, job 1's semi-join back,
-          // and compaction rounds' rewrite. First touch is the single-job
-          // drain-keys collect, so the cache populates race-free.
-          val frontier = carriedFrontier
-            .getOrElse(readFrontier(spark, manifest).persist())
+          if (state == null) state = readState(spark, manifest)
           val seenDirs = SnapshotStore.dirsOf(manifest, "seen")
           val seen = cachedSeen(seenDirs, readSeenDirs(spark, seenDirs))
-          val filters = carriedFilters.getOrElse(
-            SnapshotStore.read(spark, manifest, "filters", filterSchema)
-              .as[FilterState])
-          val robots = carriedRobots.getOrElse(
-            SnapshotStore.read(spark, manifest, "robots", robotsSchema)
-              .as[RobotsEntry])
           val pendingDirs = seenDirs.drop(foldedDirs)
           val pendingSeen =
             if (pendingDirs.isEmpty) None
@@ -1183,17 +1198,11 @@ object CrawlEngine {
           val delayActive = maxDelay > cfg.roundTimeMs
           val blockedHosts: Option[DataFrame] =
             if (delayActive && delayRows > 0)
-              carriedDelay
-                .map(df => df.filter($"next_ok_round" > roundNo).select($"host"))
-                .orElse {
-                  if (manifest.dataDirs.contains("host_next_ok"))
-                    Some(SnapshotStore.read(spark, manifest, "host_next_ok", delaySchema)
-                      .filter($"next_ok_round" > roundNo).select($"host"))
-                  else None
-                }
+              state.delay.map(_.filter($"next_ok_round" > roundNo).select($"host"))
             else None
-          (frontier, seen, filters, robots, pendingSeen, blockedHosts, delayActive, seenDirs)
+          (seen, pendingSeen, blockedHosts, delayActive, seenDirs)
         }
+      val CrawlState(frontier, robots, filters, delay) = state
       if (filtersBc.isEmpty && cfg.broadcastFilterLimitBytes > 0 &&
           filterBytes <= cfg.broadcastFilterLimitBytes)
         timed("filters-bc") {
@@ -1215,27 +1224,12 @@ object CrawlEngine {
       // the previous round's datasets it was built from can go now
       flushUnpersist()
       if (stats.drained == 0) {
-        if (blockedHosts.isDefined && frontierSize > 0) {
-          // idle round: everything left is inside a crawl-delay window — let
-          // the logical clock tick (no commit; deterministic on resume)
-          // rather than declaring the crawl done with a non-empty frontier.
-          // Frontier and robots are unchanged — keep them cached and carried
-          // (the idle round's robotsAll is prev ∪ an empty delta).
-          carriedFrontier = Some(frontier)
-          carriedRobots = Some(r.robotsAll.localCheckpoint(false))
-          r.caches.filter(ds => (ds ne frontier) && (ds ne r.robotsAll))
-            .foreach(_.unpersist())
-          // the next round's plans reference this robotsAll — defer, like a
-          // normal round's caches (consecutive idle rounds chain correctly:
-          // each flush drops the previous one after the next materializes)
-          pendingUnpersist = pendingUnpersist :+ r.robotsAll
-          roundNo += 1
-        } else {
-          frontier.unpersist()
-          r.caches.foreach(_.unpersist())
-          carriedFrontier = None
-          continue = false
-        }
+        // nothing drained, so the state is unchanged and stays carried. With
+        // everything left inside a crawl-delay window this is an idle round:
+        // the logical clock ticks (no commit; deterministic on resume)
+        // rather than the crawl ending with a non-empty frontier
+        r.caches.filterNot(_ eq frontier).foreach(_.unpersist())
+        if (blockedHosts.isDefined) roundNo += 1 else continue = false
       }
       else {
         // The seen delta is written (or counted) HERE, synchronously: it is
@@ -1276,7 +1270,7 @@ object CrawlEngine {
         // robots are append-only deltas — a round writes O(drained + new)
         // rows. Compact the frontier when tombstones would dominate reads.
         val compact = rmSize > 0 &&
-          ((roundNo + 1) % cfg.compactEveryRounds == 0 || rmSize >= frontierSize.max(1L))
+          ((roundNo + 1) % CompactEveryRounds == 0 || rmSize >= frontierSize.max(1L))
         // filter fold policy: rewrite the blobs only when pending keys have
         // grown proportional to the seen set (amortized O(1) write per key);
         // otherwise CARRY the previous filters dir untouched.
@@ -1298,12 +1292,7 @@ object CrawlEngine {
         // (small: only hosts with multi-round delays) host_next_ok table,
         // pruning expired rows at write
         val delayTable: Option[(DataFrame, Long)] = r.delayDelta.map { dd =>
-          val oldT = carriedDelay.getOrElse {
-            if (manifest.dataDirs.contains("host_next_ok"))
-              SnapshotStore.read(spark, manifest, "host_next_ok", delaySchema)
-            else dd.limit(0)
-          }
-          val merged = oldT.union(dd)
+          val merged = delay.fold(dd)(_.union(dd))
             .groupBy($"host").agg(max($"next_ok_round").as("next_ok_round"))
             .filter($"next_ok_round" > roundNo)
             .persist()
@@ -1325,16 +1314,20 @@ object CrawlEngine {
           if (r.nNewHosts == 0) Map.empty[String, (DataFrame, Seq[String])]
           else Map("robots" -> (r.robotsDelta.toDF(),
             SnapshotStore.dirsOf(manifest, "robots")))
-        // zero-row deltas are SKIPPED, not written: a round that discovered
+        // the next round's frontier: prev − drained ∪ adds — exactly what a
+        // read of the manifest committed below returns
+        val nextFrontier = frontier.join(r.drainedKeys, Seq("url_hash"), "left_anti")
+          .select(feCols: _*).as[FrontierEntry]
+          .union(r.adds)
+        // `compact` decides only what the commit writes: the whole next
+        // frontier as one adds dir, or this round's adds + tombstone deltas.
+        // Zero-row deltas are SKIPPED, not written: a round that discovered
         // nothing new carries the previous adds/seen dirs forward — an empty
         // parquet write is still a full Spark job + commit protocol, and a
         // drained-to-exhaustion crawl pays it every round otherwise
         val frontierDeltas =
           if (compact) Map(
-            "frontier_adds" -> (frontier.join(r.drainedKeys, Seq("url_hash"), "left_anti")
-              .select($"url", $"url_hash", $"host", $"host_hash", $"bucket",
-                $"priority", $"depth", $"discovered_round")
-              .union(r.adds.toDF()), Seq.empty[String]),
+            "frontier_adds" -> (nextFrontier.toDF(), Seq.empty[String]),
             "frontier_rm" -> (r.drainedKeys.limit(0), Seq.empty[String]))
           else Map(
             "frontier_rm" -> (r.drainedKeys, SnapshotStore.dirsOf(manifest, "frontier_rm"))) ++
@@ -1388,62 +1381,34 @@ object CrawlEngine {
         filterBytes = foldedBytes
         // the committed blobs changed — next round re-collects them
         if (doFold) dropFiltersBc()
-        // next round's frontier, carried in memory: content-identical to
-        // readFrontier over the manifest just committed (prev − drained
-        // ∪ adds). localCheckpoint(lazy), NOT persist: the adds leg embeds
-        // the whole round pipeline and the anti-join leg embeds the previous
-        // carried plan, so a plain persist leaves the LOGICAL plan doubling
-        // every round — analysis cost explodes exponentially by round ~4
-        // (persist caches rows, it never truncates plans). The lazy local
-        // checkpoint cuts the plan to a LogicalRDD at no extra job: the next
-        // round's first action materializes it, same as the cache did. On
-        // compact rounds the carry is dropped instead — the next round
-        // re-reads the single compacted dir.
-        val prevCarriedFilters = carriedFilters
-        val prevCarriedDelay = carriedDelay
-        if (compact) {
-          // carry + lineage cut: the next round re-reads every table from
-          // the just-committed parquet (its loop-top awaitCommit makes the
-          // in-flight writes durable first)
-          carriedFrontier = None; carriedRobots = None
-          carriedFilters = None; carriedDelay = None
-        } else {
-          // every carried dataset is lazily localCheckpoint-ed for the same
-          // reason as the frontier: robots is referenced TWICE per round
-          // (prev ∪ delta AND the new-host anti-join), so carrying the raw
-          // plan doubles it per round — by round ~12 the plan string alone
-          // is gigabytes. A checkpoint cut keeps every carried plan flat.
-          carriedFrontier =
-            Some(frontier.join(r.drainedKeys, Seq("url_hash"), "left_anti")
-              .select(feCols: _*).as[FrontierEntry]
-              .union(r.adds)
-              .localCheckpoint(false))
-          carriedRobots = Some(r.robotsAll.localCheckpoint(false))
-          carriedFilters = Some(folded.map(_.localCheckpoint(false)).getOrElse(filters))
-          delayTable.foreach(t => carriedDelay = Some(t._1.localCheckpoint(false)))
-        }
-        timed("unpersist") {
-          // superseded carried state only — the new carried filters/delay
-          // datasets must stay cached across rounds until replaced
-          if (doFold || compact) prevCarriedFilters.foreach(_.unpersist())
-          if (delayTable.isDefined || compact) prevCarriedDelay.foreach(_.unpersist())
-          if (compact) {
-            folded.foreach(_.unpersist())
-            delayTable.foreach(_._1.unpersist())
-          }
-        }
+        // the next round's state, carried in memory. Every changed table is
+        // cut with localCheckpoint(lazy), NOT persist: the frontier's adds
+        // leg embeds the whole round pipeline and its anti-join leg the
+        // previous carried plan, and robots is referenced TWICE per round
+        // (prev ∪ delta AND the new-host anti-join), so a carried raw plan
+        // doubles every round — analysis cost explodes by round ~4 (persist
+        // caches rows, it never truncates plans). The lazy checkpoint cuts
+        // the plan to a LogicalRDD at no extra job: the next round's first
+        // action materializes it, same as a cache would.
+        state = CrawlState(
+          nextFrontier.localCheckpoint(false),
+          r.robotsAll.localCheckpoint(false),
+          folded.map(_.localCheckpoint(false)).getOrElse(filters),
+          delayTable.map(_._1.localCheckpoint(false)).orElse(delay))
         // deferred: the carried plans read these caches until their own
         // caches materialize (next round's first jobs)
         pendingUnpersist = frontier +: r.caches.filterNot(_ eq frontier)
+        folded.foreach { f => pendingUnpersist ++= filtersSrc; filtersSrc = Some(f) }
+        delayTable.foreach { t => pendingUnpersist ++= delaySrc; delaySrc = Some(t._1) }
         roundNo += 1
       }
     }
     awaitCommit() // the final round's writes must be durable before we return
     flushUnpersist()
-    carriedFrontier.foreach(_.unpersist())
-    carriedRobots.foreach(_.unpersist())
-    carriedFilters.foreach(_.unpersist())
-    carriedDelay.foreach(_.unpersist())
+    Option(state).foreach { s =>
+      (Seq(s.frontier, s.robots, s.filters) ++ s.delay).foreach(_.unpersist())
+    }
+    (filtersSrc ++ delaySrc).foreach(_.unpersist())
     robotsSrc.unpersist()
     dropFiltersBc()
     flushUnpersist() // destroy the just-retired broadcast: nothing references it now

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions.col
   * classpath carries).
   *
   * Why: the fetch join (J4, CrawlEngine) matches drained frontier keys
-  * against `pages(url, html)`. Below `broadcastDrainLimit` the drained keys
-  * broadcast and no html moves. ABOVE it (production rounds >2M urls) a
+  * against `pages(url, html)`. Below the engine's drain broadcast limit (2M
+  * keys) the drained keys broadcast and no html moves. ABOVE it a
   * plain shuffled join would ship the html payload of every matched page
   * across an exchange — at Common-Crawl row sizes that dwarfs the key
   * traffic (the reference's downloader never re-ships payloads either,

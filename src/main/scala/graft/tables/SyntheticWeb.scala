@@ -206,6 +206,19 @@ object SyntheticWeb {
     cuts
   }
 
+  /** Host of page `i` under the `fastCuts` layout `cuts`. */
+  def fastHostOf(cuts: Array[Long], i: Long): Int = {
+    var host = java.util.Arrays.binarySearch(cuts, i)
+    if (host < 0) host = -host - 2
+    math.min(host, cuts.length - 2)
+  }
+
+  /** Url of page `i` under the `fastCuts` layout `cuts`. */
+  def pageUrlAt(cuts: Array[Long], i: Long): String = {
+    val host = fastHostOf(cuts, i)
+    pageUrl(host, i - cuts(host))
+  }
+
   def pagesFast(spark: SparkSession, nPages: Long, nHosts: Int = 16,
       nPartitions: Int = 32, weight: Int = 1): Dataset[Page] = {
     import spark.implicits._
@@ -213,9 +226,7 @@ object SyntheticWeb {
     val bc = spark.sparkContext.broadcast(cuts)
     spark.range(0, nPages, 1, nPartitions).map { i =>
       val c = bc.value
-      var host = java.util.Arrays.binarySearch(c, i)
-      if (host < 0) host = -host - 2
-      if (host >= nHosts) host = nHosts - 1
+      val host = fastHostOf(c, i)
       val k = i - c(host)
       val nOnHost = c(host + 1) - c(host)
       val html = pageHtml(host, k, nOnHost, nHosts, weight)

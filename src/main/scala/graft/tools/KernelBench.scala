@@ -60,9 +60,7 @@ object KernelBench {
     val weight = 4
     val cuts = SyntheticWeb.fastCuts(nPages.toLong, nHosts)
     val htmls = Array.tabulate(nPages) { i =>
-      var host = java.util.Arrays.binarySearch(cuts, i.toLong)
-      if (host < 0) host = -host - 2
-      if (host >= nHosts) host = nHosts - 1
+      val host = SyntheticWeb.fastHostOf(cuts, i.toLong)
       val k = i - cuts(host)
       val nOnHost = cuts(host + 1) - cuts(host)
       (SyntheticWeb.pageUrl(host, k),

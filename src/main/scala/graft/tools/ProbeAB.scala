@@ -1,8 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.frontier.{CrawlConfig, CrawlEngine}
-import graft.tables.SyntheticWeb
+import graft.frontier.CrawlEngine
 
 /** Interleaved A/B of the seen-probe strategies (broadcast expression vs
   * co-partitioned cogroup) on the SAME session + input: the sandbox host
@@ -23,28 +22,11 @@ object ProbeAB {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
-    val nHosts = 16
-    val weight = sys.env.getOrElse("SPARK_GRAFT_PAGE_WEIGHT", "4").toInt
-    val pages = SyntheticWeb.pagesFast(spark, nPages.toLong, nHosts, 256,
-      weight).union(SyntheticWeb.robotsPages(spark, nHosts)).toDF()
-      .repartitionByRange(256, org.apache.spark.sql.functions.col("url"))
-      .sortWithinPartitions("url")
-      .cache()
-    pages.count()
-    val cuts = SyntheticWeb.fastCuts(nPages.toLong, nHosts)
-    val cutsBc = spark.sparkContext.broadcast(cuts)
-    val seeds = spark.range(0, nPages.toLong, 1, cpus * 2).map { i =>
-      val c = cutsBc.value
-      var host = java.util.Arrays.binarySearch(c, i)
-      if (host < 0) host = -host - 2
-      if (host >= nHosts) host = nHosts - 1
-      SyntheticWeb.pageUrl(host, i - c(host))
-    }
-    val hostMax = (1 until (nHosts + 1)).map(h => cuts(h) - cuts(h - 1)).max.toInt
-    val base = CrawlConfig(numBuckets = cpus, hostBudgetPerRound = hostMax,
-      roundSize = (nPages + rounds - 1) / rounds, maxRounds = rounds + 2)
+    val input = graft.BenchLevel.input(spark, cpus, nPages, nHosts = 16)
+    val pages = input.pages
+    val seeds = input.seeds(nPages)
+    val base = input.multi(rounds)
     val cfgs = Seq(
       "broadcast" -> base,
       "cogroup" -> base.copy(broadcastFilterLimitBytes = 0L))
@@ -64,20 +46,10 @@ object ProbeAB {
     CrawlEngine.run(spark, pages, seeds, base.copy(maxRounds = 0),
       bootDir.toString, collectOutputs = false)
 
-    def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      val s = java.nio.file.Files.walk(src)
-      try s.forEach { p =>
-        val q = dst.resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
-        else java.nio.file.Files.copy(p, q,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } finally s.close()
-    }
-
     val best = scala.collection.mutable.Map.empty[String, Double]
     for (p <- 1 to passes; (label, cfg) <- cfgs) {
       val stateDir = graft.util.TempDirs.create(s"graft-ab-$label-")
-      copyTree(bootDir, stateDir)
+      graft.util.TempDirs.copyTree(bootDir, stateDir)
       val t0 = System.nanoTime()
       CrawlEngine.run(spark, pages, seeds, cfg, stateDir.toString,
         collectOutputs = false)

@@ -3,8 +3,7 @@ package graft.tools
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
-import graft.frontier.{CrawlConfig, CrawlEngine}
-import graft.tables.SyntheticWeb
+import graft.frontier.CrawlEngine
 
 /** Per-stage profiler for the multi-round crawl: prints, for each stage,
   * wall duration, summed task time, and the RDD-scope name — to localize the
@@ -24,30 +23,13 @@ object RoundProf {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
-    val nHosts = 16
-    // mirror Bench exactly: 256 fixed slices + page weight 4, so the profiled
-    // plan sees the same cache layout / drain-range partition spread
-    val weight = sys.env.getOrElse("SPARK_GRAFT_PAGE_WEIGHT", "4").toInt
-    val pages = SyntheticWeb.pagesFast(spark, nPages.toLong, nHosts, 256,
-      weight).union(SyntheticWeb.robotsPages(spark, nHosts)).toDF()
-      .repartitionByRange(256, org.apache.spark.sql.functions.col("url"))
-      .sortWithinPartitions("url")
-      .cache()
-    pages.count()
-    val cuts = SyntheticWeb.fastCuts(nPages.toLong, nHosts)
-    val cutsBc = spark.sparkContext.broadcast(cuts)
-    val seeds = spark.range(0, nPages.toLong, 1, cpus * 2).map { i =>
-      val c = cutsBc.value
-      var host = java.util.Arrays.binarySearch(c, i)
-      if (host < 0) host = -host - 2
-      if (host >= nHosts) host = nHosts - 1
-      SyntheticWeb.pageUrl(host, i - c(host))
-    }
-    val hostMax = (1 until (nHosts + 1)).map(h => cuts(h) - cuts(h - 1)).max.toInt
-    val cfg = CrawlConfig(numBuckets = cpus, hostBudgetPerRound = hostMax,
-      roundSize = (nPages + rounds - 1) / rounds, maxRounds = rounds + 2)
+    // Bench's input exactly: 256 fixed slices + page weight 4, so the
+    // profiled plan sees the same cache layout / drain-range partition spread
+    val input = graft.BenchLevel.input(spark, cpus, nPages, nHosts = 16)
+    val pages = input.pages
+    val seeds = input.seeds(nPages)
+    val cfg = input.multi(rounds)
 
     // warm
     CrawlEngine.run(spark, pages, seeds.limit(5000), cfg.copy(roundSize = 5000,

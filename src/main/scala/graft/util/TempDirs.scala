@@ -21,6 +21,16 @@ object TempDirs {
       finally s.close()
     }
 
+  /** Copy the tree under `src` into `dst`, overwriting existing files. */
+  def copyTree(src: Path, dst: Path): Unit = {
+    val s = Files.walk(src)
+    try s.forEach { p =>
+      val q = dst.resolve(src.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else Files.copy(p, q, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally s.close()
+  }
+
   def register(p: Path): Path = {
     registered.add(p)
     if (hooked.compareAndSet(false, true))

@@ -40,6 +40,9 @@ class CrawlSpec extends AnyFunSuite {
   }
   val robots: Seq[RobotsRule] =
     SyntheticWeb.robotsRules(nHosts).map(r => RobotsRule(r._1, r._2, r._3, r._4))
+  // host0 serves Crawl-delay: 2.5s against the 1s logical round
+  val delayedRobots: Seq[RobotsRule] = robots.map(r =>
+    if (r.host == "host0.example") r.copy(crawl_delay_ms = 2500L) else r)
   val cfg: CrawlConfig = CrawlConfig(numBuckets = 8, hostBudgetPerRound = 3,
     roundSize = 16, maxRounds = 12)
 
@@ -195,6 +198,14 @@ class CrawlSpec extends AnyFunSuite {
       assert(perBucket == global.map(r => (r.getAs[Int]("round"),
           r.getAs[Long]("drained"), r.getAs[Long]("new_urls"))),
         s"[$label] per-bucket lineage disagrees with the global rows")
+      // the crawl carries its state across a compaction: a commit after
+      // round 0 compacted the frontier (no tombstones left), and a later
+      // round drained from the carried state
+      val compacted = global.map(_.getAs[Int]("round")).filter(r => r >= 1 &&
+        SnapshotStore.readManifest(stateDir, r + 1).counters("frontier_rm_size") == 0L)
+      assert(compacted.exists(c => global.exists(g =>
+          g.getAs[Int]("round") > c && g.getAs[Long]("drained") > 0)),
+        s"[$label] want a compaction after round 0 followed by a draining round")
 
       // filter-table health invariants per config
       import graft.frontier.{CuckooFilter, FilterState}
@@ -276,15 +287,12 @@ class CrawlSpec extends AnyFunSuite {
   test("C5: crawl-delay closes a host's window for ceil(D/roundTime) rounds") {
     import spark.implicits._
     val pages = pagesCached
-    // host0 serves Crawl-delay: 2.5s against the 1s logical round
-    val delayed = robots.map(r =>
-      if (r.host == "host0.example") r.copy(crawl_delay_ms = 2500L) else r)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-delay-").toString
     CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
-      delayed, cfg, stateDir)
+      delayedRobots, cfg, stateDir)
     val m = SnapshotStore.latestManifest(stateDir).get
     // engine (roundNo, fetched-set) per committed round == delay-aware sim
-    val (simSeen, simDrains) = simulate(delayed)
+    val (simSeen, simDrains) = simulate(delayedRobots)
     val simFetched = simDrains.map { case (r, us) => (r, us.filter(pageMap.contains).toSet) }
     val versions = (1 to m.version).flatMap { v =>
       scala.util.Try(SnapshotStore.readManifest(stateDir, v)).toOption
@@ -631,5 +639,22 @@ class CrawlSpec extends AnyFunSuite {
       assert(got((b, k)) == want, s"probe mismatch for bucket=$b key=$k")
     }
     bc.destroy()
+  }
+
+  // last in the suite: it clears the session's cache, the suite's cached
+  // pages table included
+  test("a crawl releases every table it persists (eager fold, crawl-delay)") {
+    // uncached pages over an emptied cache: anything still cached after a
+    // crawl is a table the crawl persisted and never released
+    spark.catalog.clearCache()
+    val pages = SyntheticWeb.pagesFast(spark, nPages, nHosts, 4).toDF()
+    val crawls = Seq(
+      ("eager-fold", robots, cfg.copy(foldMinKeys = 1, foldFrac = 0.0)),
+      ("crawl-delay", delayedRobots, cfg))
+    for ((label, rules, ccfg) <- crawls) {
+      val stateDir = java.nio.file.Files.createTempDirectory(s"graft-release-$label-").toString
+      CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), rules, ccfg, stateDir)
+      assert(spark.sharedState.cacheManager.isEmpty, s"[$label] crawl left tables cached")
+    }
   }
 }

@@ -446,7 +446,7 @@ object Bench {
         r
       }
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+    val qs = results.map { case (k, v) => graft.util.Json.str(k) + ":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val mode = if (forkMode) "forked-pinned" else "inproc"
@@ -458,9 +458,9 @@ object Bench {
     val errors = err.toSeq ++ failedQueries.map { case (q, m) => s"query $q failed: $m" }
     errors.foreach(e => System.err.println(s"[bench] ERROR: $e"))
     val errField =
-      if (errors.isEmpty) "" else s""","error":${graft.api.RequestStore.jsonStr(errors.mkString("; "))}"""
+      if (errors.isEmpty) "" else s""","error":${graft.util.Json.str(errors.mkString("; "))}"""
     println(
-      s"""{"metric":"frontier_drain_extract_urls_per_sec","value":${f"$thr32%.1f"},"unit":"urls/sec","queries":$qs,"sf":"$sfDir","total_query_sec":${f"$total%.2f"},"bench_pages":$benchPages,"bench_mode":"$mode","urls_per_sec_4":${f"$thr4%.1f"},"urls_per_sec_16":${f"$thr16%.1f"},"urls_per_sec_32":${f"$thr32%.1f"},"scaling_efficiency":${f"$eff416%.3f"},"scaling_pair":"4cores->16cores","urls_per_sec_multi_4":${f"$multi4%.1f"},"urls_per_sec_multi_16":${f"$multi16%.1f"},"urls_per_sec_multi_32":${f"$multi32%.1f"},"scaling_efficiency_multi":${f"$effMulti%.3f"},"multi_rounds":8,"urls_per_sec_multi2_4":${f"$multi2_4%.1f"},"urls_per_sec_multi2_16":${f"$multi2_16%.1f"},"urls_per_sec_multi2_32":${f"$multi2_32%.1f"},"scaling_efficiency_multi2":${f"$effMulti2%.3f"},"multi2_rounds":2,"extracted_rows":$extracted32$errField}""")
+      s"""{"metric":"frontier_drain_extract_urls_per_sec","value":${f"$thr32%.1f"},"unit":"urls/sec","queries":$qs,"sf":${graft.util.Json.str(sfDir)},"total_query_sec":${f"$total%.2f"},"bench_pages":$benchPages,"bench_mode":"$mode","urls_per_sec_4":${f"$thr4%.1f"},"urls_per_sec_16":${f"$thr16%.1f"},"urls_per_sec_32":${f"$thr32%.1f"},"scaling_efficiency":${f"$eff416%.3f"},"scaling_pair":"4cores->16cores","urls_per_sec_multi_4":${f"$multi4%.1f"},"urls_per_sec_multi_16":${f"$multi16%.1f"},"urls_per_sec_multi_32":${f"$multi32%.1f"},"scaling_efficiency_multi":${f"$effMulti%.3f"},"multi_rounds":8,"urls_per_sec_multi2_4":${f"$multi2_4%.1f"},"urls_per_sec_multi2_16":${f"$multi2_16%.1f"},"urls_per_sec_multi2_32":${f"$multi2_32%.1f"},"scaling_efficiency_multi2":${f"$effMulti2%.3f"},"multi2_rounds":2,"extracted_rows":$extracted32$errField}""")
 
     // persist the scaling evidence (BASELINE.md protocol); a queries-only
     // sweep — or a smoke run missing either scaling level — leaves the

@@ -1,12 +1,13 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.detect.{DetectOutput, Detector, Highlight, ListResultOut, PageGraph, Pagination, PlainList}
 import graft.dom.HtmlParser
 import graft.tables.SnapshotStore
 import graft.urls.UrlOps
+import graft.util.Json
 
 /** The reference's request CRUD surface
   * (/root/reference/webspot/web/routes/api/request.py) re-expressed as
@@ -128,7 +129,7 @@ object RequestStore {
       val highlighted = Highlight.highlight(doc, lists, pagination)
       val out = DetectOutput(url, g.map(_.n).getOrElse(0), lists, pagination)
       val exec = s"""{"html_requester":$msRequester,"graph_loader":$msLoader,""" +
-        s""""detectors":{${detectorMs.map { case (d, m) => s"${jsonStr(d)}:$m" }.mkString(",")}}}"""
+        s""""detectors":{${detectorMs.map { case (d, m) => s"${Json.str(d)}:$m" }.mkString(",")}}}"""
       RequestDoc(id, url, method, duration, StatusSuccess, html, highlighted,
         lists.size, resultsJson(out), valid = true, error = null,
         no_async = noAsync, detectors = detectors,
@@ -136,47 +137,26 @@ object RequestStore {
     } catch {
       case e: Exception =>
         RequestDoc(id, url, method, duration, StatusError, null, null, 0,
-          s"""{"error":${jsonStr(e.toString)}}""", valid = false,
+          s"""{"error":${Json.str(e.toString)}}""", valid = false,
           error = e.toString, no_async = noAsync, detectors = detectors,
           execution_time_json = "{}", created_at = now)
     }
   }
 
-  /** Append rows to one logical delta table of the store, carrying every
-    * other table's dirs forward unchanged.
+  /** Append rows to one logical delta table of the store; the commit
+    * carries every other table forward unchanged.
     */
   private def appendDelta(spark: SparkSession, storeDir: String, table: String,
       rows: DataFrame): Unit = {
     val prev = SnapshotStore.latestManifest(storeDir)
     val version = prev.map(_.version + 1).getOrElse(0)
-    val carried: Map[String, Seq[String]] = prev match {
-      case None => Map.empty
-      case Some(m) => m.dataDirs.keys.filterNot(_ == table).map { name =>
-        name -> SnapshotStore.dirsOf(m, name)
-      }.toMap
-    }
-    val prevDirs = prev.filter(_.dataDirs.contains(table))
-      .map(m => SnapshotStore.dirsOf(m, table)).getOrElse(Seq.empty)
     SnapshotStore.commit(storeDir, version, Map.empty,
-      Map("version" -> version.toLong),
-      deltas = Map(table -> (rows, prevDirs)),
-      carry = carried)
+      Map("version" -> version.toLong), prev, deltas = Map(table -> rows))
   }
 
-  /** Read the requests table, backfilling `rev` = 0 for delta dirs written
-    * before the column existed (a store dir carries old parquet dirs via
-    * appendDelta forever, so a schema addition must be tolerated at read —
-    * the crawl snapshot format has the same guard philosophy).
-    */
-  private def readRequests(spark: SparkSession,
-      m: SnapshotStore.Manifest): DataFrame = {
-    // mergeSchema: a mix of pre-rev and post-rev delta dirs must not drop
-    // the rev column just because the first-listed file lacks it
-    val df = spark.read.option("mergeSchema", "true")
-      .parquet(SnapshotStore.dirsOf(m, "requests"): _*)
-    if (df.columns.contains("rev")) df.withColumn("rev", coalesce(col("rev"), lit(0L)))
-    else df.withColumn("rev", lit(0L))
-  }
+  // pinned schemas: no footer read or schema-merge job per get/list
+  private val requestSchema = Encoders.product[RequestDoc].schema
+  private val nodeSchema = Encoders.product[NodeDoc].schema
 
   /** Resolve last-writer-wins over the append-only rows: one row per id, the
     * max-rev one (created_at tie-break for robustness).
@@ -196,7 +176,7 @@ object RequestStore {
     SnapshotStore.latestManifest(storeDir) match {
       case None => spark.emptyDataFrame
       case Some(m) =>
-        latestPerId(readRequests(spark, m))
+        latestPerId(SnapshotStore.read(spark, m, "requests", requestSchema))
           .orderBy(desc("created_at"), desc("id"))
           .offset(skip)
           .limit(limit)
@@ -205,7 +185,7 @@ object RequestStore {
   def get(spark: SparkSession, storeDir: String, id: String): Option[RequestDoc] = {
     import spark.implicits._
     SnapshotStore.latestManifest(storeDir).flatMap { m =>
-      readRequests(spark, m)
+      SnapshotStore.read(spark, m, "requests", requestSchema)
         .filter(col("id") === id).as[RequestDoc].collect()
         .sortBy(d => (-d.rev, -d.created_at.getTime)).headOption
     }
@@ -278,7 +258,7 @@ object RequestStore {
     import spark.implicits._
     SnapshotStore.latestManifest(storeDir) match {
       case Some(m) if m.dataDirs.contains("nodes") =>
-        SnapshotStore.read(spark, m, "nodes")
+        SnapshotStore.read(spark, m, "nodes", nodeSchema)
           .filter(col("request_id") === requestId).as[NodeDoc]
       case _ => spark.emptyDataset[NodeDoc]
     }
@@ -294,10 +274,10 @@ object RequestStore {
       if (nodeId < 0 || nodeId >= doc.size) None
       else {
         val nd = doc(nodeId)
-        val attrs = nd.attrs.map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
+        val attrs = nd.attrs.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }
           .mkString("{", ",", "}")
-        Some(s"""{"id":${nd.id},"parent":${nd.parentId},"tag":${jsonStr(nd.tag)},""" +
-          s""""attributes":$attrs,"text":${jsonStr(doc.subtreeText(nodeId).strip())}}""")
+        Some(s"""{"id":${nd.id},"parent":${nd.parentId},"tag":${Json.str(nd.tag)},""" +
+          s""""attributes":$attrs,"text":${Json.str(doc.subtreeText(nodeId).strip())}}""")
       }
     }
 
@@ -350,32 +330,22 @@ object RequestStore {
     sb.result()
   }
 
-  private[graft] def jsonStr(s: String): String =
-    if (s == null) "null"
-    else "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Compact results JSON mirroring the reference's Result model shape. */
   def resultsJson(out: DetectOutput): String = {
     def listJson(l: ListResultOut): String = {
       val fields = l.fields.map(f =>
-        s"""{"name":${jsonStr(f.name)},"selector":${jsonStr(f.selector)},"type":${jsonStr(f.fieldType)},"attribute":${jsonStr(f.attribute)}}""")
+        s"""{"name":${Json.str(f.name)},"selector":${Json.str(f.selector)},"type":${Json.str(f.fieldType)},"attribute":${Json.str(f.attribute)}}""")
         .mkString("[", ",", "]")
       val data = l.data.map(r =>
         r.values.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
+          .map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }
           .mkString("{", ",", "}")).mkString("[", ",", "]")
-      s"""{"name":${jsonStr(l.name)},"score":${l.score},"selectors":{"list":${jsonStr(l.listSelector)},"items":${jsonStr(l.itemsSelector)},"full_items":${jsonStr(l.fullItemsSelector)}},"fields":$fields,"data":$data}"""
+      s"""{"name":${Json.str(l.name)},"score":${l.score},"selectors":{"list":${Json.str(l.listSelector)},"items":${Json.str(l.itemsSelector)},"full_items":${Json.str(l.fullItemsSelector)}},"fields":$fields,"data":$data}"""
     }
     val lists = out.lists.map(listJson).mkString("[", ",", "]")
     val pag = out.pagination
-      .map(p => s"""{"next":${jsonStr(p.selector)},"next_url":${jsonStr(p.nextUrl)}}""")
+      .map(p => s"""{"next":${Json.str(p.selector)},"next_url":${Json.str(p.nextUrl)}}""")
       .getOrElse("null")
-    s"""{"url":${jsonStr(out.url)},"plain_list":$lists,"pagination":$pag}"""
+    s"""{"url":${Json.str(out.url)},"plain_list":$lists,"pagination":$pag}"""
   }
 }

@@ -814,8 +814,8 @@ object CrawlEngine {
     * so the filter never degrades into its exact stash). Returns the full
     * rewritten filters table; amortized write cost is O(1) per key because
     * folds trigger proportionally to the seen size and rebuilds double.
-    */
-  /** @return (folded filters table, total serialized blob bytes) — the byte
+    *
+    * @return (folded filters table, total serialized blob bytes) — the byte
     *   figure rides the materialization agg and feeds the manifest's
     *   `filter_blob_bytes` counter, so the broadcast-probe gate compares the
     *   ACTUAL broadcast payload against its budget instead of a uniform
@@ -922,6 +922,55 @@ object CrawlEngine {
       robots: Dataset[RobotsEntry], filters: Dataset[FilterState],
       delay: Option[DataFrame])
 
+  /** The crawl's manifest counters, committed with every snapshot; the
+    * field names are the manifest keys.
+    *   - `round`: the last committed round (-1 after the bootstrap)
+    *   - `fetched`, `extracted`, `seen`: run totals (see [[CrawlStats]])
+    *   - `frontier_size`, `frontier_rm_size`: live frontier rows, and
+    *     tombstones since the last compaction
+    *   - `filters_folded_dirs`, `pending_keys`: fold bookkeeping — how many
+    *     committed seen-delta dirs the filter blobs reflect, and how many
+    *     keys are pending since the last fold
+    *   - `delay_rows`: rows of the host_next_ok table
+    *   - `filter_blob_bytes`: the exact serialized filter blob bytes (set at
+    *     bootstrap and on every fold; pending keys never touch the blobs, so
+    *     between folds the broadcast payload is exactly this)
+    *   - `max_delay_ms`: the largest robots crawl-delay (re-checked only when
+    *     new robots rows land): a corpus whose delays all fit inside one
+    *     round pays zero per-round delay cost, and a resume reads it instead
+    *     of running an agg job
+    */
+  private final case class CrawlCounters(round: Long, fetched: Long,
+      extracted: Long, seen: Long, frontier_size: Long, frontier_rm_size: Long,
+      filters_folded_dirs: Long, pending_keys: Long, delay_rows: Long,
+      filter_blob_bytes: Long, max_delay_ms: Long) {
+    def toMap: Map[String, Long] =
+      productElementNames.zip(productIterator.map(_.asInstanceOf[Long])).toMap
+  }
+
+  private object CrawlCounters {
+    /** The counters of `m`, and the format guard (round-2 ADVICE): a
+      * snapshot of an older layout (a full `frontier` table, no robots
+      * table, or any counter missing) would otherwise resume as an empty
+      * frontier and "succeed" with zero rounds, or fail deep in the loop.
+      */
+    def of(m: SnapshotStore.Manifest, stateDir: String): CrawlCounters = {
+      def legacy(what: String) = new IllegalStateException(
+        s"incompatible legacy snapshot format in $stateDir ($what; expected " +
+          "the delta format: frontier_adds/frontier_rm/robots tables, the " +
+          "bucket-partitioned seen layout, and every crawl counter); " +
+          "re-bootstrap into a fresh state dir")
+      if (m.dataDirs.contains("frontier") || !m.dataDirs.contains("robots"))
+        throw legacy("pre-delta tables")
+      def c(name: String): Long =
+        m.counters.getOrElse(name, throw legacy(s"no $name counter"))
+      CrawlCounters(c("round"), c("fetched"), c("extracted"), c("seen"),
+        c("frontier_size"), c("frontier_rm_size"), c("filters_folded_dirs"),
+        c("pending_keys"), c("delay_rows"), c("filter_blob_bytes"),
+        c("max_delay_ms"))
+    }
+  }
+
   /** The committed state in `m`. The frontier is persisted: the
     * adds-minus-tombstones anti-join would otherwise recompute from parquet
     * in every consumer of the first round (the drain-keys collect, job 1's
@@ -985,25 +1034,12 @@ object CrawlEngine {
     // resume from the latest committed snapshot, or bootstrap a v0 snapshot
     // from the seeds (so every later commit is uniform: append-only delta for
     // frontier/seen/lineage/robots; filters rewritten only on fold rounds)
+    // CrawlCounters.of is the format guard. It runs BEFORE anything is
+    // persisted: the guard's throw would otherwise leak the cached robotsSrc
+    // plan into the session, and the next run's persist of the same source
+    // then hits CacheManager's "already cached" WARN.
     val existing = SnapshotStore.latestManifest(stateDir)
-    // format guard (round-2 ADVICE): a pre-delta-format snapshot (a full
-    // `frontier` table / no frontier_size counter) would otherwise resume as
-    // an empty frontier and "succeed" with zero rounds. Runs BEFORE anything
-    // is persisted: the guard's throw would otherwise leak the cached
-    // robotsSrc plan into the session, and the next run's persist of the
-    // same source then hits CacheManager's "already cached" WARN.
-    existing.foreach { m =>
-      val counters = Seq("frontier_size", "max_delay_ms", "filter_blob_bytes",
-        "filters_folded_dirs")
-      if (m.dataDirs.contains("frontier") || !m.dataDirs.contains("robots") ||
-          !counters.forall(m.counters.contains))
-        throw new IllegalStateException(
-          s"incompatible legacy snapshot format in $stateDir (expected the " +
-            "delta format: frontier_adds/frontier_rm/robots tables, the " +
-            "bucket-partitioned seen layout, and the " +
-            counters.mkString("/") + " counters); " +
-            "re-bootstrap into a fresh state dir")
-    }
+      .map(m => (m, CrawlCounters.of(m, stateDir)))
 
     // robots source: only `*/robots.txt` rows can match the fetch join — the
     // filter pushes to the scan, so a robots fetch never reads page html.
@@ -1014,7 +1050,7 @@ object CrawlEngine {
       .select(col("url"), col("html"))
       .filter(col("url").endsWith("/robots.txt"))
       .persist()
-    var manifest: SnapshotStore.Manifest = existing
+    var (manifest, ctr) = existing
       .getOrElse {
         // P14: test-mode seed skip (web_spider.py:68-69)
         val nb = cfg.numBuckets
@@ -1054,54 +1090,30 @@ object CrawlEngine {
           .as[Long].head()
         val maxDelay0 = robots0
           .agg(coalesce(max($"crawl_delay_ms"), lit(0L))).as[Long].head()
+        val c0 = CrawlCounters(round = -1, fetched = 0, extracted = 0,
+          seen = nSeeds, frontier_size = nSeeds, frontier_rm_size = 0,
+          filters_folded_dirs = 1, pending_keys = 0, delay_rows = 0,
+          filter_blob_bytes = filterBytes0, max_delay_ms = maxDelay0)
         val m = SnapshotStore.commit(stateDir, 0,
-          Map("filters" -> filters0.toDF()),
-          Map("round" -> -1L, "fetched" -> 0L, "extracted" -> 0L,
-            "seen" -> nSeeds,
-            "frontier_size" -> nSeeds,
-            "frontier_rm_size" -> 0L,
-            "filters_folded_dirs" -> 1L, "pending_keys" -> 0L,
-            "delay_rows" -> 0L,
-            "filter_blob_bytes" -> filterBytes0,
-            "max_delay_ms" -> maxDelay0),
-          deltas = Map(
-            "frontier_adds" -> (seedFrontier.toDF(), Seq.empty),
-            "frontier_rm" -> (spark.emptyDataset[SeenEntry].toDF()
-              .select($"url_hash"), Seq.empty),
-            "seen" -> (seedSeen.toDF(), Seq.empty),
-            "robots" -> (robots0.toDF(), Seq.empty),
-            "lineage" -> (spark.emptyDataset[LineageRow].toDF(), Seq.empty)),
+          Map("filters" -> filters0.toDF(),
+            "frontier_adds" -> seedFrontier.toDF(),
+            "frontier_rm" -> spark.emptyDataset[SeenEntry].toDF().select($"url_hash"),
+            "seen" -> seedSeen.toDF(),
+            "robots" -> robots0.toDF(),
+            "lineage" -> spark.emptyDataset[LineageRow].toDF()),
+          c0.toMap,
           partitionCols = Map("seen" -> Seq("bucket")))
         seedDeduped.unpersist(); seedFrontier.unpersist(); robots0.unpersist()
         filters0.unpersist()
-        m
+        (m, c0)
       }
-    var roundNo = manifest.counters("round").toInt + 1
-    var fetchedTotal = manifest.counters.getOrElse("fetched", 0L)
-    var extractedTotal = manifest.counters.getOrElse("extracted", 0L)
-    var seenTotal = manifest.counters.getOrElse("seen", 0L)
-    var frontierSize = manifest.counters.getOrElse("frontier_size", 0L)
-    var rmSize = manifest.counters.getOrElse("frontier_rm_size", 0L)
-    // fold bookkeeping: how many committed seen-delta dirs the filter blobs
-    // already reflect, and how many keys are pending since the last fold
-    var foldedDirs = manifest.counters("filters_folded_dirs").toInt
-    var pendingKeys = manifest.counters.getOrElse("pending_keys", 0L)
-    var delayRows = manifest.counters.getOrElse("delay_rows", 0L)
-    // crawl-delay fast path: a manifest counter (re-checked only when new
-    // robots rows land) decides whether any host can EVER be delay-blocked —
-    // a corpus whose delays all fit inside one round pays zero per-round
-    // cost, and resuming reads the counter instead of running an agg job
-    var maxDelay = manifest.counters("max_delay_ms")
-    // ACTUAL serialized blob bytes (exact: set at bootstrap and on every
-    // fold; pending keys never touch the blobs, so between folds the
-    // broadcast payload is exactly this)
-    var filterBytes = manifest.counters("filter_blob_bytes")
+    var roundNo = ctr.round.toInt + 1
 
     // seen-probe broadcast (one per FOLD EPOCH — the blobs only change when
     // a fold commits): built lazily from the filters table when
-    // `filterBytes` fits cfg.broadcastFilterLimitBytes, dropped on fold. A
-    // 10^10-url frontier (~4 B/key of blobs) stays on the co-partitioned
-    // cogroup path.
+    // `filter_blob_bytes` fits cfg.broadcastFilterLimitBytes, dropped on
+    // fold. A 10^10-url frontier (~4 B/key of blobs) stays on the
+    // co-partitioned cogroup path.
     var filtersBc: Option[Broadcast[Array[CuckooFilter]]] = None
     // a dropped broadcast is RETIRED, not destroyed on the spot: the carried
     // frontier's lazy plan (see `state` below) still references the probe
@@ -1132,7 +1144,7 @@ object CrawlEngine {
     }
     def cachedSeen(dirs: Seq[String],
         fresh: => Dataset[SeenEntry]): Dataset[SeenEntry] = {
-      if (seenTotal * 16L > SeenCacheBudgetBytes) { dropSeenCache(); fresh }
+      if (ctr.seen * 16L > SeenCacheBudgetBytes) { dropSeenCache(); fresh }
       else if (seenCacheKey == dirs && seenCacheDs != null) seenCacheDs
       else {
         dropSeenCache()
@@ -1185,26 +1197,26 @@ object CrawlEngine {
       pendingCommit = None
     }
     var continue = true
-    while (continue && roundNo < cfg.maxRounds && frontierSize > 0) {
+    while (continue && roundNo < cfg.maxRounds && ctr.frontier_size > 0) {
       val (seen, pendingSeen, blockedHosts, delayActive, seenDirs) =
         timed("read-state") {
           if (state == null) state = readState(spark, manifest)
           val seenDirs = SnapshotStore.dirsOf(manifest, "seen")
           val seen = cachedSeen(seenDirs, readSeenDirs(spark, seenDirs))
-          val pendingDirs = seenDirs.drop(foldedDirs)
+          val pendingDirs = seenDirs.drop(ctr.filters_folded_dirs.toInt)
           val pendingSeen =
             if (pendingDirs.isEmpty) None
             else Some(readSeenDirs(spark, pendingDirs).toDF())
-          val delayActive = maxDelay > cfg.roundTimeMs
+          val delayActive = ctr.max_delay_ms > cfg.roundTimeMs
           val blockedHosts: Option[DataFrame] =
-            if (delayActive && delayRows > 0)
+            if (delayActive && ctr.delay_rows > 0)
               state.delay.map(_.filter($"next_ok_round" > roundNo).select($"host"))
             else None
           (seen, pendingSeen, blockedHosts, delayActive, seenDirs)
         }
       val CrawlState(frontier, robots, filters, delay) = state
       if (filtersBc.isEmpty && cfg.broadcastFilterLimitBytes > 0 &&
-          filterBytes <= cfg.broadcastFilterLimitBytes)
+          ctr.filter_blob_bytes <= cfg.broadcastFilterLimitBytes)
         timed("filters-bc") {
           val rows = filters.collect()
           val n = rows.iterator.map(_.bucket + 1).foldLeft(cfg.numBuckets)(math.max)
@@ -1212,7 +1224,7 @@ object CrawlEngine {
           rows.foreach(fs => arr(fs.bucket) = CuckooFilter.fromBytes(fs.cuckoo_bytes))
           filtersBc = Some(spark.sparkContext.broadcast(arr))
         }
-      val r = timed("round-build")(round(spark, roundNo, frontier, frontierSize,
+      val r = timed("round-build")(round(spark, roundNo, frontier, ctr.frontier_size,
         seen, filters, pendingSeen, robots, blockedHosts, delayActive, pages,
         robotsSrc, cfg, retainOutputs = collectOutputs, filtersBc = filtersBc))
       val stats = r.stats
@@ -1260,33 +1272,29 @@ object CrawlEngine {
         if (!newsThisRound)
           graft.util.TempDirs.deleteRecursively(java.nio.file.Paths.get(seenDir))
         lastRoundHadNew = newsThisRound
-        val lineage = lineageRows(spark, roundNo, r, frontierSize)
-        fetchedTotal += stats.fetched
-        extractedTotal += stats.extracted
-        seenTotal += nNew
-        frontierSize = frontierSize - stats.drained + nNew
-        rmSize += stats.drained
+        val lineage = lineageRows(spark, roundNo, r, ctr.frontier_size)
+        val seenAfter = ctr.seen + nNew
+        val frontierAfter = ctr.frontier_size - stats.drained + nNew
+        val rmAfter = ctr.frontier_rm_size + stats.drained
         // snapshot commit (atomic manifest rename); frontier/seen/lineage/
         // robots are append-only deltas — a round writes O(drained + new)
         // rows. Compact the frontier when tombstones would dominate reads.
-        val compact = rmSize > 0 &&
-          ((roundNo + 1) % CompactEveryRounds == 0 || rmSize >= frontierSize.max(1L))
+        val compact = rmAfter > 0 &&
+          ((roundNo + 1) % CompactEveryRounds == 0 || rmAfter >= frontierAfter.max(1L))
         // filter fold policy: rewrite the blobs only when pending keys have
         // grown proportional to the seen set (amortized O(1) write per key);
-        // otherwise CARRY the previous filters dir untouched.
-        val newPending = pendingKeys + nNew
+        // otherwise the commit carries the previous filters dir untouched.
+        val newPending = ctr.pending_keys + nNew
         val doFold = newPending > 0 &&
-          newPending >= math.max(cfg.foldMinKeys, (cfg.foldFrac * seenTotal).toLong)
-        var foldedBytes = filterBytes
-        val folded: Option[Dataset[FilterState]] =
-          if (!doFold) None
+          newPending >= math.max(cfg.foldMinKeys, (cfg.foldFrac * seenAfter).toLong)
+        val (folded, blobBytes) =
+          if (!doFold) (None, ctr.filter_blob_bytes)
           else {
             val pendingAll = pendingSeen
               .map(df => df.as[SeenEntry].union(r.seenDelta)).getOrElse(r.seenDelta)
             val (f, fb) = timed("fold")(foldFilters(spark, filters, pendingAll,
               seen.union(r.seenDelta), cfg.filterCapacityPerBucket))
-            foldedBytes = fb
-            Some(f)
+            (Some(f), fb)
           }
         // crawl-delay state: merge this round's closed windows into the
         // (small: only hosts with multi-round delays) host_next_ok table,
@@ -1298,60 +1306,47 @@ object CrawlEngine {
             .persist()
           (merged, merged.count())
         }
-        val tables = folded.map(f => Map("filters" -> f.toDF())).getOrElse(Map.empty) ++
-          delayTable.map(t => Map("host_next_ok" -> t._1)).getOrElse(Map.empty) ++
-          (if (collectOutputs) Map("outputs" -> r.outputs.drop("links", "link_hosts").toDF()) else Map.empty)
-        val carry =
-          (if (doFold) Map.empty[String, Seq[String]]
-           else Map("filters" -> SnapshotStore.dirsOf(manifest, "filters"))) ++
-          (if (delayTable.isEmpty && manifest.dataDirs.contains("host_next_ok"))
-             Map("host_next_ok" -> SnapshotStore.dirsOf(manifest, "host_next_ok"))
-           else Map.empty) ++
-          (if (r.nNewHosts == 0)
-             Map("robots" -> SnapshotStore.dirsOf(manifest, "robots"))
-           else Map.empty)
-        val robotsDeltas =
-          if (r.nNewHosts == 0) Map.empty[String, (DataFrame, Seq[String])]
-          else Map("robots" -> (r.robotsDelta.toDF(),
-            SnapshotStore.dirsOf(manifest, "robots")))
+        val next = ctr.copy(round = roundNo,
+          fetched = ctr.fetched + stats.fetched,
+          extracted = ctr.extracted + stats.extracted,
+          seen = seenAfter,
+          frontier_size = frontierAfter,
+          frontier_rm_size = if (compact) 0L else rmAfter,
+          filters_folded_dirs =
+            if (doFold) seenDirs.length + (if (newsThisRound) 1 else 0)
+            else ctr.filters_folded_dirs,
+          pending_keys = if (doFold) 0L else newPending,
+          delay_rows = delayTable.map(_._2).getOrElse(ctr.delay_rows),
+          filter_blob_bytes = blobBytes,
+          max_delay_ms =
+            if (r.nNewHosts == 0) ctr.max_delay_ms
+            else math.max(ctr.max_delay_ms, r.robotsDelta
+              .agg(coalesce(max($"crawl_delay_ms"), lit(0L))).as[Long].head()))
         // the next round's frontier: prev − drained ∪ adds — exactly what a
         // read of the manifest committed below returns
         val nextFrontier = frontier.join(r.drainedKeys, Seq("url_hash"), "left_anti")
           .select(feCols: _*).as[FrontierEntry]
           .union(r.adds)
-        // `compact` decides only what the commit writes: the whole next
-        // frontier as one adds dir, or this round's adds + tombstone deltas.
-        // Zero-row deltas are SKIPPED, not written: a round that discovered
-        // nothing new carries the previous adds/seen dirs forward — an empty
-        // parquet write is still a full Spark job + commit protocol, and a
-        // drained-to-exhaustion crawl pays it every round otherwise
-        val frontierDeltas =
-          if (compact) Map(
-            "frontier_adds" -> (nextFrontier.toDF(), Seq.empty[String]),
-            "frontier_rm" -> (r.drainedKeys.limit(0), Seq.empty[String]))
-          else Map(
-            "frontier_rm" -> (r.drainedKeys, SnapshotStore.dirsOf(manifest, "frontier_rm"))) ++
-            (if (newsThisRound)
-               Map("frontier_adds" -> (r.adds.toDF(),
-                 SnapshotStore.dirsOf(manifest, "frontier_adds")))
-             else Map.empty[String, (DataFrame, Seq[String])])
-        val seenPre: Map[String, (String, Seq[String])] =
-          if (newsThisRound) Map("seen" -> (seenDir, SnapshotStore.dirsOf(manifest, "seen")))
-          else Map.empty
-        val carryDeltas =
-          (if (compact || newsThisRound) Map.empty
-           else Map("frontier_adds" -> SnapshotStore.dirsOf(manifest, "frontier_adds"))) ++
-          (if (newsThisRound) Map.empty
-           else Map("seen" -> SnapshotStore.dirsOf(manifest, "seen")))
-        if (compact) rmSize = 0L
-        val foldedDirsAfter =
-          if (doFold) seenDirs.length + (if (newsThisRound) 1 else 0)
-          else foldedDirs
-        val pendingAfter = if (doFold) 0L else newPending
-        val delayRowsAfter = delayTable.map(_._2).getOrElse(delayRows)
-        if (r.nNewHosts > 0)
-          maxDelay = math.max(maxDelay, r.robotsDelta
-            .agg(coalesce(max($"crawl_delay_ms"), lit(0L))).as[Long].head())
+        // The commit names only what this round writes; every other table
+        // (filters between folds, host_next_ok without a delay delta, robots
+        // without new hosts, ...) is carried from the previous manifest.
+        // `compact` rewrites the whole next frontier as one adds dir with an
+        // empty tombstone table; otherwise the round appends its tombstones
+        // and adds. Zero-row deltas are SKIPPED, not written: a round that
+        // discovered nothing new carries the previous adds/seen dirs — an
+        // empty parquet write is still a full Spark job + commit protocol,
+        // and a drained-to-exhaustion crawl pays it every round otherwise.
+        // `outputs` is per-round, so it is never carried.
+        val tables = folded.map(f => "filters" -> f.toDF()).toMap ++
+          delayTable.map(t => "host_next_ok" -> t._1) ++
+          (if (collectOutputs) Map("outputs" -> r.outputs.drop("links", "link_hosts").toDF()) else Map.empty) ++
+          (if (compact) Map("frontier_adds" -> nextFrontier.toDF(),
+             "frontier_rm" -> r.drainedKeys.limit(0)) else Map.empty)
+        val deltas =
+          (if (compact) Map.empty[String, DataFrame] else Map("frontier_rm" -> r.drainedKeys)) ++
+          (if (!compact && newsThisRound) Map("frontier_adds" -> r.adds.toDF()) else Map.empty) ++
+          (if (r.nNewHosts > 0) Map("robots" -> r.robotsDelta.toDF()) else Map.empty) ++
+          Map("lineage" -> lineage.toDF())
         // ASYNC commit: the manifest object is known up front (every data
         // dir path is deterministic), so the writes + atomic rename proceed
         // in the background while the NEXT round's jobs run — the next round
@@ -1359,26 +1354,14 @@ object CrawlEngine {
         // in memory; the seen delta was written synchronously above).
         // Awaited right after the next round's jobs complete.
         val (m2, commitDone) = timed("commit")(SnapshotStore.commitAsync(
-          stateDir, roundNo + 1, tables,
-          Map("round" -> roundNo.toLong, "fetched" -> fetchedTotal,
-            "extracted" -> extractedTotal, "seen" -> seenTotal,
-            "frontier_size" -> frontierSize, "frontier_rm_size" -> rmSize,
-            "filters_folded_dirs" -> foldedDirsAfter.toLong,
-            "pending_keys" -> pendingAfter,
-            "delay_rows" -> delayRowsAfter,
-            "filter_blob_bytes" -> foldedBytes,
-            "max_delay_ms" -> maxDelay),
-          deltas = frontierDeltas ++ robotsDeltas ++
-            Map("lineage" -> (lineage.toDF(), SnapshotStore.dirsOf(manifest, "lineage"))),
-          carry = carry ++ carryDeltas,
-          partitionCols = Map("seen" -> Seq("bucket")),
-          preWritten = seenPre))
+          stateDir, roundNo + 1, tables, next.toMap,
+          prev = Some(manifest.copy(dataDirs = manifest.dataDirs - "outputs")),
+          deltas = deltas,
+          preWritten = if (newsThisRound) Set("seen") else Set.empty,
+          partitionCols = Map("seen" -> Seq("bucket"))))
         manifest = m2
         pendingCommit = Some(commitDone)
-        foldedDirs = foldedDirsAfter
-        pendingKeys = pendingAfter
-        delayRows = delayRowsAfter
-        filterBytes = foldedBytes
+        ctr = next
         // the committed blobs changed — next round re-collects them
         if (doFold) dropFiltersBc()
         // the next round's state, carried in memory. Every changed table is
@@ -1415,6 +1398,6 @@ object CrawlEngine {
     dropSeenCache()
     // counter-tracked (the exact table is the union of committed deltas; the
     // counter avoids an extra count job per run)
-    CrawlStats(roundNo, fetchedTotal, extractedTotal, seenTotal)
+    CrawlStats(roundNo, ctr.fetched, ctr.extracted, ctr.seen)
   }
 }

@@ -1,6 +1,7 @@
 package graft.tables
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Iceberg-style snapshot layer (SURVEY.md §7.3) — no Iceberg runtime jar on
@@ -35,17 +36,12 @@ object SnapshotStore {
     if (best < 0) None else Some(best)
   }
 
-  // hand-rolled minimal json (flat string/long maps only) — no json lib needed
-  private def esc(s: String) = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
-
   def writeManifest(tableDir: String, m: Manifest): Unit = {
+    import graft.util.Json.str
     val dir = snapshotsDir(tableDir)
     Files.createDirectories(dir)
-    val data = m.dataDirs.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString(",")
-    val ctrs = m.counters.map { case (k, v) => s""""${esc(k)}":$v""" }.mkString(",")
+    val data = m.dataDirs.map { case (k, v) => s"${str(k)}:${str(v)}" }.mkString(",")
+    val ctrs = m.counters.map { case (k, v) => s"${str(k)}:$v" }.mkString(",")
     val json = s"""{"version":${m.version},"dataDirs":{$data},"counters":{$ctrs}}"""
     val tmp = dir.resolve(s".v${m.version}.json.tmp")
     Files.writeString(tmp, json)
@@ -54,60 +50,55 @@ object SnapshotStore {
       StandardCopyOption.ATOMIC_MOVE)
   }
 
+  private val mapper = new ObjectMapper
+
+  /** The exact inverse of [[writeManifest]], by a real JSON parser. */
   def readManifest(tableDir: String, version: Int): Manifest = {
-    val json = Files.readString(snapshotsDir(tableDir).resolve(s"v$version.json"))
-    // minimal parser for the flat shape we write
-    def section(name: String): Map[String, String] = {
-      val i = json.indexOf(s""""$name":{""")
-      if (i < 0) return Map.empty
-      val start = json.indexOf('{', i) + 1
-      val end = json.indexOf('}', start)
-      val body = json.substring(start, end).trim
-      if (body.isEmpty) Map.empty
-      else body.split(",").iterator.map { kv =>
-        val c = kv.indexOf(':')
-        val k = kv.take(c).trim.stripPrefix("\"").stripSuffix("\"")
-        val v = kv.drop(c + 1).trim.stripPrefix("\"").stripSuffix("\"")
-        k -> v
-      }.toMap
-    }
-    val ver = {
-      val i = json.indexOf("\"version\":") + 10
-      json.substring(i, json.indexWhere(c => !c.isDigit, i)).toInt
-    }
-    Manifest(ver, section("dataDirs"), section("counters").map { case (k, v) => k -> v.toLong })
+    import scala.jdk.CollectionConverters._
+    val doc = mapper.readTree(snapshotsDir(tableDir).resolve(s"v$version.json").toFile)
+    def section[T](name: String)(value: JsonNode => T): Map[String, T] =
+      Option(doc.get(name)).toSeq.flatMap(_.properties().asScala)
+        .map(e => e.getKey -> value(e.getValue)).toMap
+    Manifest(doc.get("version").asInt, section("dataDirs")(_.textValue),
+      section("counters")(_.longValue))
   }
 
   def latestManifest(tableDir: String): Option[Manifest] =
     latestVersion(tableDir).map(readManifest(tableDir, _))
 
-  /** Write the dataframes for one snapshot and commit the manifest
-    * atomically. Each logical table gets `data/v{N}/{name}`. The per-table
-    * writes are independent jobs — launched concurrently so the Spark
-    * scheduler overlaps them (matters for per-round wall time).
+  /** Commit snapshot `version` relative to `prev`, Iceberg-style: the
+    * commit names only what it writes, and every other table of `prev` is
+    * carried into the new manifest with its dirs unchanged.
     *
-    * `tables` are full rewrites. `deltas` are append-only tables: only the
-    * new rows are written; the manifest records previousDirs + deltaDir
-    * (';'-joined), so a snapshot never rewrites the accumulated history —
-    * at 10^10-url scale the seen set and lineage MUST be append-only.
-    */
-  /** `partitionCols`: tables/deltas written with a hive-style partition
+    *   - `tables` are full rewrites: the table's dirs become its new dir.
+    *   - `deltas` are append-only tables: only the new rows are written, and
+    *     the new dir is appended to `prev`'s dirs (';'-joined), so a snapshot
+    *     never rewrites the accumulated history — at 10^10-url scale the
+    *     seen set and lineage MUST be append-only.
+    *   - `preWritten` names deltas the caller already wrote at
+    *     [[deltaDirFor]] (e.g. the crawl's seen delta, whose write job
+    *     doubles as the round's count barrier): recorded like a delta, with
+    *     no second write.
+    *
+    * A table's new dir is `data/v{N}/{name}` under `tableDir`. The per-table
+    * writes are independent jobs, launched concurrently so the Spark
+    * scheduler overlaps them (matters for per-round wall time).
+    * `partitionCols`: tables/deltas written with a hive-style partition
     * layout (e.g. the seen table partitioned by `bucket`, so a cuckoo
-    * rebuild's `bucket IN (...)` predicate prunes at file listing and reads
-    * only the overfull buckets' files — round-3 verdict #2). The write
-    * repartitions by the partition columns first so each delta lands as one
+    * rebuild's `bucket IN (...)` predicate prunes at file listing); the
+    * write repartitions by those columns first so each one lands as one
     * file per partition value instead of nTasks x nValues fragments.
     */
   def commit(tableDir: String, version: Int, tables: Map[String, DataFrame],
       counters: Map[String, Long],
-      deltas: Map[String, (DataFrame, Seq[String])] = Map.empty,
-      carry: Map[String, Seq[String]] = Map.empty,
-      partitionCols: Map[String, Seq[String]] = Map.empty,
-      preWritten: Map[String, (String, Seq[String])] = Map.empty): Manifest = {
+      prev: Option[Manifest] = None,
+      deltas: Map[String, DataFrame] = Map.empty,
+      preWritten: Set[String] = Set.empty,
+      partitionCols: Map[String, Seq[String]] = Map.empty): Manifest = {
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    val (m, done) = commitAsync(tableDir, version, tables, counters, deltas,
-      carry, partitionCols, preWritten)
+    val (m, done) = commitAsync(tableDir, version, tables, counters, prev,
+      deltas, preWritten, partitionCols)
     Await.result(done, Duration.Inf)
     m
   }
@@ -117,46 +108,43 @@ object SnapshotStore {
     * the caller can carry on planning the next round against it, while the
     * parquet writes and the final atomic manifest rename complete on the
     * returned Future. Crash semantics are unchanged — the manifest file only
-    * appears after every write it references has finished, so a crash
-    * mid-flight resumes from the previous version. The caller MUST await the
-    * Future before (a) issuing the next version's commit (manifest ordering),
-    * (b) reading any table file this commit writes, or (c) returning to
-    * user code.
+    * appears after every write it references has finished, so a failed or
+    * interrupted write leaves the previous version as the latest. The caller
+    * MUST await the Future before (a) issuing the next version's commit
+    * (manifest ordering), (b) reading any table file this commit writes, or
+    * (c) returning to user code.
     */
   def commitAsync(tableDir: String, version: Int, tables: Map[String, DataFrame],
       counters: Map[String, Long],
-      deltas: Map[String, (DataFrame, Seq[String])] = Map.empty,
-      carry: Map[String, Seq[String]] = Map.empty,
-      partitionCols: Map[String, Seq[String]] = Map.empty,
-      preWritten: Map[String, (String, Seq[String])] = Map.empty)
+      prev: Option[Manifest] = None,
+      deltas: Map[String, DataFrame] = Map.empty,
+      preWritten: Set[String] = Set.empty,
+      partitionCols: Map[String, Seq[String]] = Map.empty)
       : (Manifest, scala.concurrent.Future[Unit]) = {
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
     import org.apache.spark.sql.functions.col
-    def dirFor(name: String): String =
-      Paths.get(tableDir, "data", s"v$version", name).toString
-    def write(name: String, df: DataFrame, dir: String): Unit =
+    def dirFor(name: String): String = {
+      val dir = deltaDirFor(tableDir, version, name)
+      require(!dir.contains(';'), s"data dir $dir contains ';', the dir-list separator")
+      dir
+    }
+    def write(name: String, df: DataFrame): Unit =
       partitionCols.get(name) match {
         case Some(cols) =>
           df.repartition(cols.map(col): _*).write.mode("overwrite")
-            .partitionBy(cols: _*).parquet(dir)
-        case None => df.write.mode("overwrite").parquet(dir)
+            .partitionBy(cols: _*).parquet(dirFor(name))
+        case None => df.write.mode("overwrite").parquet(dirFor(name))
       }
-    // `carry`: tables untouched this commit — record their existing dirs in
-    // the new manifest without writing anything. `preWritten`: delta dirs the
-    // caller already wrote for this version (e.g. the seen delta, whose write
-    // job doubles as the round's probe-chain materialization + new-url count)
-    // — recorded like a delta, no second write.
-    val dataDirs =
-      tables.keys.map(name => name -> dirFor(name)).toMap ++
-      deltas.map { case (name, (_, prevDirs)) =>
-        name -> (prevDirs :+ dirFor(name)).mkString(";") } ++
-      carry.map { case (name, dirs) => name -> dirs.mkString(";") } ++
-      preWritten.map { case (name, (dir, prevDirs)) =>
-        name -> (prevDirs :+ dir).mkString(";") }
+    val carried = prev.map(_.dataDirs).getOrElse(Map.empty)
+    def appended(name: String): String =
+      (carried.get(name).toSeq :+ dirFor(name)).mkString(";")
+    val dataDirs = carried ++
+      tables.keys.map(name => name -> dirFor(name)) ++
+      (deltas.keys ++ preWritten).map(name => name -> appended(name))
     val m = Manifest(version, dataDirs, counters)
-    val writes = (tables.toSeq ++ deltas.toSeq.map { case (n, (df, _)) => n -> df })
-      .map { case (name, df) => Future { write(name, df, dirFor(name)) } }
+    val writes = (tables.toSeq ++ deltas.toSeq)
+      .map { case (name, df) => Future(write(name, df)) }
     val done = Future.sequence(writes).map { _ => writeManifest(tableDir, m) }
     (m, done)
   }
@@ -164,8 +152,8 @@ object SnapshotStore {
   def dirsOf(m: Manifest, name: String): Seq[String] =
     m.dataDirs(name).split(";").toSeq
 
-  /** The delta dir `commit(version)` would write for `name` — for callers
-    * that pre-write a delta (see `preWritten`).
+  /** The dir `commit(version)` writes `name` to — for callers that
+    * pre-write a delta (see `preWritten`).
     */
   def deltaDirFor(tableDir: String, version: Int, name: String): String =
     Paths.get(tableDir, "data", s"v$version", name).toString

@@ -117,8 +117,7 @@ object FrontierScale {
     val seenDf = spark.range(0, nKeys, 1, 32)
       .select((col("id") % 32).cast("int").as("bucket"),
         xxhash64(col("id")).as("url_hash"))
-    SnapshotStore.commit(seenDir, 0, Map.empty, Map.empty,
-      deltas = Map("seen" -> (seenDf, Seq.empty)),
+    SnapshotStore.commit(seenDir, 0, Map("seen" -> seenDf), Map.empty,
       partitionCols = Map("seen" -> Seq("bucket")))
     val m3 = SnapshotStore.latestManifest(seenDir).get
     val seenAll = CrawlEngine.readSeenDirs(spark, SnapshotStore.dirsOf(m3, "seen"))

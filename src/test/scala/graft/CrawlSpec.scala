@@ -186,6 +186,27 @@ class CrawlSpec extends AnyFunSuite {
       }
       assert(stats.fetched == simFetchedPerRound.map(_.size).sum)
       assert(stats.rounds == simDrains.size)
+      // every commit is relative to the previous manifest: v0's tables plus
+      // the round's outputs; a delta table's dirs are the previous list plus
+      // at most this version's dir, and a compaction (no tombstones left)
+      // rewrites both frontier tables to this version's dir alone
+      val v0 = SnapshotStore.readManifest(stateDir, 0)
+      (1 to m.version).foldLeft(v0) { (prev, v) =>
+        val mv = SnapshotStore.readManifest(stateDir, v)
+        assert(mv.dataDirs.keySet == v0.dataDirs.keySet + "outputs",
+          s"[$label] v$v tables: ${mv.dataDirs.keySet}")
+        val compacted = mv.counters("frontier_rm_size") == 0L
+        for (t <- Seq("seen", "robots", "lineage", "frontier_adds", "frontier_rm")) {
+          val was = SnapshotStore.dirsOf(prev, t)
+          val now = SnapshotStore.dirsOf(mv, t)
+          val own = SnapshotStore.deltaDirFor(stateDir, v, t)
+          if (compacted && t.startsWith("frontier_"))
+            assert(now == Seq(own), s"[$label] v$v compacted $t: $now")
+          else
+            assert(now == was || now == was :+ own, s"[$label] v$v $t: $was -> $now")
+        }
+        mv
+      }
       val global = globalLineage(stateDir)
       assert(global.map(_.getAs[Int]("round")) == (0 until stats.rounds),
         s"[$label] want one bucket -1 lineage row per round")
@@ -325,27 +346,27 @@ class CrawlSpec extends AnyFunSuite {
     df.write.parquet(s"$stateDir/data/v0/frontier")
     SnapshotStore.writeManifest(stateDir, SnapshotStore.Manifest(0,
       Map("frontier" -> s"$stateDir/data/v0/frontier"), Map("round" -> -1L)))
-    // r4-layout manifests: the delta tables and the max_delay_ms counter,
-    // but no exact filter_blob_bytes counter — or, older still, no
-    // filters_folded_dirs fold bookkeeping
-    val r4Counters = Map("round" -> 0L, "fetched" -> 0L, "extracted" -> 0L,
+    // delta-layout manifests each missing one of the crawl counters (r4
+    // layouts lack filter_blob_bytes, older ones filters_folded_dirs too)
+    val allCounters = Map("round" -> 0L, "fetched" -> 0L, "extracted" -> 0L,
       "seen" -> 1L, "frontier_size" -> 1L, "frontier_rm_size" -> 0L,
       "filters_folded_dirs" -> 1L, "pending_keys" -> 0L, "delay_rows" -> 0L,
       "max_delay_ms" -> 0L, "filter_blob_bytes" -> 0L)
     val deltaDirs = Seq("frontier_adds", "frontier_rm", "seen", "robots",
       "filters", "lineage")
-    val stateDirs = stateDir +: Seq("filter_blob_bytes", "filters_folded_dirs").map { missing =>
+    val cases = (stateDir -> "pre-delta tables") +: allCounters.keys.toSeq.sorted.map { missing =>
       val d = java.nio.file.Files.createTempDirectory(s"graft-legacy-no-$missing-").toString
       SnapshotStore.writeManifest(d, SnapshotStore.Manifest(0,
-        deltaDirs.map(t => t -> s"$d/data/v0/$t").toMap, r4Counters - missing))
-      d
+        deltaDirs.map(t => t -> s"$d/data/v0/$t").toMap, allCounters - missing))
+      d -> s"no $missing counter"
     }
     val pages = SyntheticWeb.pagesFast(spark, 8, nHosts, 2).toDF()
-    for (d <- stateDirs) {
+    for ((d, why) <- cases) {
       val e = intercept[IllegalStateException] {
         CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), robots, cfg, d)
       }
-      assert(e.getMessage.contains("incompatible legacy snapshot format"), d)
+      assert(e.getMessage.contains("incompatible legacy snapshot format") &&
+        e.getMessage.contains(why), e.getMessage)
     }
   }
 

@@ -9,12 +9,11 @@ import graft.tables.SyntheticWeb
   * over the synthetic Common-Crawl-style pages table, with the untimed setup
   * (input cache, JIT warm crawl, v0 bootstrap snapshot) paid once in
   * `setup()` and each timed trial resuming from a filesystem copy of the
-  * bootstrap. Used two ways: in-process by [[Bench]] (legacy fallback) and as
-  * the body of [[BenchWorker]], the per-level child JVM that the forked bench
-  * protocol pins to `cpus` physical cores (`taskset` +
+  * bootstrap. It is the body of [[BenchWorker]], the per-level child JVM
+  * that [[Bench]] pins to `cpus` physical cores (`taskset` +
   * `-XX:ActiveProcessorCount`) so a level models a real N-core executor node
   * — GC, JIT and IO threads included — instead of N Spark task slots on a
-  * 32-core machine.
+  * 32-core machine. DrainSweep runs one in-process.
   */
 final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
 
@@ -22,30 +21,21 @@ final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
   private var input: BenchLevel.Input = _
   private var bootDir: java.nio.file.Path = _
 
-  /** `aqe = false` for the crawl sessions: at bounded round sizes every
-    * join the round runs is explicitly broadcast (drain keys, fetch keys,
-    * robots) or statically planned, and AQE's per-exchange stage
-    * materialization adds ~15 driver jobs per round — pure scheduling
-    * latency at this scale (measured: ~25% of multi-round wall). Production
-    * rounds above the engine's 2M-key drain broadcast limit want AQE back on
-    * for skew handling; the engine itself is config-neutral (specs run with
-    * AQE on).
+  /** AQE is off for the crawl sessions: at bounded round sizes every join
+    * the round runs is explicitly broadcast (drain keys, fetch keys, robots)
+    * or statically planned, and AQE's per-exchange stage materialization
+    * adds ~15 driver jobs per round — pure scheduling latency at this scale
+    * (measured: ~25% of multi-round wall). Production rounds above the
+    * engine's 2M-key drain broadcast limit want AQE back on for skew
+    * handling; the engine itself is config-neutral (specs run with AQE on).
     */
-  /** @param bootHint reuse/populate this directory for the v0 bootstrap
-    *   snapshot (the in-proc fallback caches it across interleaved passes;
-    *   a forked worker lives for the whole schedule so it passes None)
-    * @param skipWarm the JIT warm crawl is JVM-wide — later in-proc passes
-    *   in the same JVM skip it
-    */
-  def setup(bootHint: Option[java.nio.file.Path] = None,
-      skipWarm: Boolean = false): Unit = {
+  def setup(): Unit = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_AQE", "false"))
+      .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
@@ -53,29 +43,19 @@ final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
     input = BenchLevel.input(spark, cpus, nPages, nHosts)
     // JIT warmup: an untimed crawl through the same code path — 10k pages,
     // or the first timed trial pays residual compilation (observed ~7%).
-    if (!skipWarm) {
-      val warm = math.min(10000, nPages)
-      CrawlEngine.run(spark, input.pages, input.seeds(warm),
-        input.single.copy(roundSize = warm),
-        graft.util.TempDirs.create("graft-warm-").toString,
-        collectOutputs = false)
-    }
+    val warm = math.min(10000, nPages)
+    CrawlEngine.run(spark, input.pages, input.seeds(warm),
+      input.single.copy(roundSize = warm),
+      graft.util.TempDirs.create("graft-warm-").toString,
+      collectOutputs = false)
     // bootstrap the v0 frontier snapshot ONCE, OUTSIDE the timed section
     // (the metric is drain+extract of an EXISTING frontier table —
     // production resumes from a committed snapshot, not seed ingestion);
     // each trial resumes from a cheap filesystem COPY of it
-    bootDir = bootHint.getOrElse(
-      graft.util.TempDirs.create(s"graft-bench-boot-$cpus-"))
-    val empty = !java.nio.file.Files.exists(bootDir) || {
-      val s = java.nio.file.Files.list(bootDir)
-      try !s.findFirst().isPresent finally s.close()
-    }
-    if (empty) {
-      java.nio.file.Files.createDirectories(bootDir)
-      CrawlEngine.run(spark, input.pages, input.seeds(nPages),
-        input.single.copy(maxRounds = 0),
-        bootDir.toString, collectOutputs = false)
-    }
+    bootDir = graft.util.TempDirs.create(s"graft-bench-boot-$cpus-")
+    CrawlEngine.run(spark, input.pages, input.seeds(nPages),
+      input.single.copy(maxRounds = 0),
+      bootDir.toString, collectOutputs = false)
   }
 
   private def timedRun(runCfg: CrawlConfig): (Double, Long) = {
@@ -116,12 +96,11 @@ object BenchLevel {
   }
 
   /** Build the bench input for a local[`cpus`] session: `nPages` synthetic
-    * pages over `nHosts` hosts (page weight from SPARK_GRAFT_PAGE_WEIGHT,
-    * default 4), shared by the bench levels and the crawl profiling tools.
+    * pages over `nHosts` hosts (page weight 4), shared by the bench levels
+    * and the crawl profiling tools.
     */
   def input(spark: SparkSession, cpus: Int, nPages: Int, nHosts: Int): Input = {
     import spark.implicits._
-    val weight = sys.env.getOrElse("SPARK_GRAFT_PAGE_WEIGHT", "4").toInt
     // robots.txt rows live IN the pages table (the engine's default robots
     // source) — rules are crawled data, not driver config.
     // 256 slices, FIXED across parallelism levels (identical input layout at
@@ -129,7 +108,7 @@ object BenchLevel {
     // the engine's drain-range predicate prunes cached batches via min/max
     // stats — see Bench for the full rationale.
     val pages = SyntheticWeb.pagesFast(spark, nPages.toLong, nHosts, 256,
-      weight).union(SyntheticWeb.robotsPages(spark, nHosts)).toDF()
+      weight = 4).union(SyntheticWeb.robotsPages(spark, nHosts)).toDF()
       .repartitionByRange(256, col("url"))
       .sortWithinPartitions("url")
       .cache()

@@ -988,26 +988,6 @@ object CrawlEngine {
       else None)
   }
 
-  /** Legacy bridge: pre-materialized robots rules become synthetic
-    * `/robots.txt` page rows (Robots.serialize round-trips exactly), so the
-    * one engine path — robots fetched from a pages source — serves both.
-    */
-  def runWithRules(
-      spark: SparkSession,
-      pages: DataFrame,
-      seeds: Seq[String],
-      robotsRules: Seq[RobotsRule],
-      cfg: CrawlConfig,
-      stateDir: String,
-      collectOutputs: Boolean = true): CrawlStats = {
-    import spark.implicits._
-    val rp = robotsRules.map(r => (s"https://${r.host}/robots.txt",
-      Robots.serialize(r).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      .toDF("url", "html")
-    run(spark, pages, spark.createDataset(seeds), cfg, stateDir, collectOutputs,
-      robotsPages = Some(rp))
-  }
-
   /** Run the full crawl with per-round snapshot commits; resumable from the
     * latest committed snapshot in `stateDir` (C8).
     *
@@ -1016,10 +996,10 @@ object CrawlEngine {
     * never materializes on the driver (round-2 VERDICT "What's wrong" #2).
     *
     * Robots rules are CRAWLED DATA: each host's `/robots.txt` row is fetched
-    * from `robotsPages` (default: the pages table itself) the round the host
-    * first appears, parsed (Robots.rule), and persisted in the snapshot's
-    * `robots` table — never a driver-side map (round-2 VERDICT #3). Seeds are
-    * robots-gated exactly like candidates.
+    * from the pages table itself the round the host first appears, parsed
+    * (Robots.rule), and persisted in the snapshot's `robots` table — never
+    * a driver-side map (round-2 VERDICT #3). Seeds are robots-gated exactly
+    * like candidates.
     */
   def run(
       spark: SparkSession,
@@ -1027,8 +1007,7 @@ object CrawlEngine {
       seeds: Dataset[String],
       cfg: CrawlConfig,
       stateDir: String,
-      collectOutputs: Boolean = true,
-      robotsPages: Option[DataFrame] = None): CrawlStats = {
+      collectOutputs: Boolean = true): CrawlStats = {
     import spark.implicits._
 
     // resume from the latest committed snapshot, or bootstrap a v0 snapshot
@@ -1046,7 +1025,7 @@ object CrawlEngine {
     // PERSISTED for the whole run: the filtered relation is tiny (one row
     // per host) but deriving it re-scans the pages source, and the robots
     // fetch subplan runs every round — one scan per run, not per round.
-    val robotsSrc = robotsPages.getOrElse(pages)
+    val robotsSrc = pages
       .select(col("url"), col("html"))
       .filter(col("url").endsWith("/robots.txt"))
       .persist()

@@ -52,11 +52,7 @@ object DrainSweep {
     val json =
       s"""{"metric":"drain_round_size_sweep","cpus":$cpus,"pages":$nPages,"points":[${points.mkString(",")}]}"""
     println(json)
-    try {
-      val dir = java.nio.file.Paths.get("BENCH")
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.writeString(dir.resolve("DRAIN_SCALE.json"), json + "\n")
-    } catch { case _: Throwable => }
+    graft.Bench.writeEvidence("DRAIN_SCALE.json", json + "\n")
     level.close()
   }
 

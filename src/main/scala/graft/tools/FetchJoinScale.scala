@@ -1,6 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
@@ -72,10 +71,7 @@ object FetchJoinScale {
     val json =
       s"""{"rows":$nB,"bucketed":{"exchanges":$exB,"exchanges_with_html":$htmlB,"shuffled_columns":"${shuffledExchanges.mkString(";")}"},"flat":{"exchanges":$exF,"exchanges_with_html":$htmlF},"n_buckets":$nBuckets,"pages":$nPages}"""
     println(json)
-    try {
-      Files.createDirectories(Paths.get("BENCH"))
-      Files.writeString(Paths.get("BENCH", "FETCHJOIN_SCALE.json"), json + "\n")
-    } catch { case _: Throwable => }
+    graft.Bench.writeEvidence("FETCHJOIN_SCALE.json", json + "\n")
     spark.stop()
   }
 }

@@ -144,10 +144,7 @@ object FrontierScale {
     val json =
       f"""{"filter_writes_1x":{"pages":8000,"seen":$seen1,"total_filter_bytes":$b1,"new_keys":$n1,"fold_commits":$f1,"bytes_per_new_key":$bpk1%.2f,"per_commit":[${w1.map(t => s"[${t._1},${t._2}]").mkString(",")}]},"filter_writes_10x":{"pages":80000,"seen":$seen10,"total_filter_bytes":$b10,"new_keys":$n10,"fold_commits":$f10,"bytes_per_new_key":$bpk10%.2f,"per_commit":[${w10.map(t => s"[${t._1},${t._2}]").mkString(",")}]},"seed_smoke":{"seeds":$bootSeen,"bootstrap_sec":$bootSec%.1f,"driver_heap_delta_mb":${(heapAfter - heapBefore) / 1048576},"filter_table_bytes":$filterBytes10m,"filter_bytes_per_key":${f"${filterBytes10m.toDouble / math.max(1, bootSeen)}%.2f"}},"rebuild_pruning":{"seen_keys":$nKeys,"seen_bytes_total":$totalSeenBytes,"bucket0_bytes":$bucket0Bytes,"fold_bytes_read":$foldRead,"read_fraction_of_seen":$readFrac%.4f}}"""
     println(json)
-    try {
-      Files.createDirectories(Paths.get("BENCH"))
-      Files.writeString(Paths.get("BENCH", "FRONTIER_SCALE.json"), json + "\n")
-    } catch { case _: Throwable => }
+    graft.Bench.writeEvidence("FRONTIER_SCALE.json", json + "\n")
     spark.stop()
   }
 }

@@ -2,11 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The graded scaling artifact comes from the forked bench protocol
-  * ([[Bench]] → pinned child JVM → [[BenchWorker]] → [[BenchLevel]]); these
-  * specs keep that path from rotting without paying a real measurement's
-  * cost: a tiny in-process level, and one real child-JVM protocol
-  * round-trip.
+/** The graded scaling artifact comes from Bench's one protocol ([[Bench]] →
+  * pinned child JVM → [[BenchWorker]] → [[BenchLevel]]); these specs keep
+  * that path from rotting without paying a real measurement's cost: the
+  * pure pieces of the orchestrator (heap budget, result line, error field),
+  * a tiny in-process level, and one real child-JVM protocol round-trip.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -52,23 +52,75 @@ class BenchSpec extends AnyFunSuite {
       "forked-pinned").isEmpty)
   }
 
+  private def thr(single: Double, multi: Double) = Bench.Thr(single, multi, multi / 2, 100L)
+
   test("a missing scaling level yields a loud error, not a silent 0.0") {
     // orchestrator failure path (r4 verdict #6): the 4-core level died
-    assert(Bench.scalingError(wantPair = true, wantMulti = true,
-      thr4 = 0.0, thr16 = 9000.0, multi4 = 0.0, multi16 = 0.0)
+    assert(Bench.scalingError(wantPair = true, Map(4 -> thr(0.0, 0.0), 16 -> thr(9000.0, 0.0)))
       .exists(_.contains("4-core")))
-    assert(Bench.scalingError(wantPair = true, wantMulti = true,
-      thr4 = 2400.0, thr16 = 0.0, multi4 = 0.0, multi16 = 0.0)
+    assert(Bench.scalingError(wantPair = true, Map(4 -> thr(2400.0, 0.0)))
       .exists(_.contains("16-core")))
     // singles fine but a multi sample missing → still loud
-    assert(Bench.scalingError(wantPair = true, wantMulti = true,
-      thr4 = 2400.0, thr16 = 9000.0, multi4 = 0.0, multi16 = 4000.0)
-      .exists(_.contains("multi")))
+    assert(Bench.scalingError(wantPair = true,
+      Map(4 -> thr(2400.0, 0.0), 16 -> thr(9000.0, 4000.0))).exists(_.contains("multi")))
     // all present → clean; queries-only sweep (no pair) → clean
-    assert(Bench.scalingError(wantPair = true, wantMulti = true,
-      thr4 = 2400.0, thr16 = 9000.0, multi4 = 2000.0, multi16 = 5000.0).isEmpty)
-    assert(Bench.scalingError(wantPair = false, wantMulti = true,
-      thr4 = 0.0, thr16 = 0.0, multi4 = 0.0, multi16 = 0.0).isEmpty)
+    assert(Bench.scalingError(wantPair = true,
+      Map(4 -> thr(2400.0, 2000.0), 16 -> thr(9000.0, 5000.0))).isEmpty)
+    assert(Bench.scalingError(wantPair = false, Map.empty).isEmpty)
+  }
+
+  test("a level with more cores than the machine is skipped and named") {
+    val (fit, errs) = Bench.hostable(Seq(4 -> 2, 16 -> 1, 32 -> 2, 16 -> 1), machineCores = 4)
+    assert(fit == Seq(4 -> 2))
+    assert(errs == Seq("16-core level needs 16 cores; machine has 4",
+      "32-core level needs 32 cores; machine has 4"))
+    // the pair was requested, so the unmeasured 16-core level is loud too,
+    // and the line carries no efficiency from the lone 4-core level
+    val measured = Map(4 -> thr(2400.0, 2000.0))
+    val err = Bench.scalingError(wantPair = true, measured)
+    assert(err.exists(_.contains("16-core")))
+    val rec = Bench.record(measured, peak = 4, Nil, "sf", 2000, errs ++ err).toMap
+    assert(rec("scaling_efficiency") == "0.000" && rec("urls_per_sec_4") == "2400.0")
+    assert(rec("error").contains("16-core level needs 16 cores; machine has 4"))
+    // a machine that hosts every level skips none
+    assert(Bench.hostable(Seq(16 -> 2, 4 -> 1, 32 -> 2), machineCores = 32) ==
+      (Seq(16 -> 2, 4 -> 1, 32 -> 2), Nil))
+  }
+
+  test("the result line is one JSON object with the driver's key set") {
+    import scala.jdk.CollectionConverters._
+    val parentKeys = Seq("metric", "value", "unit", "queries", "sf",
+      "total_query_sec", "bench_pages", "bench_mode", "urls_per_sec_4",
+      "urls_per_sec_16", "urls_per_sec_32", "scaling_efficiency", "scaling_pair",
+      "urls_per_sec_multi_4", "urls_per_sec_multi_16", "urls_per_sec_multi_32",
+      "scaling_efficiency_multi", "multi_rounds", "urls_per_sec_multi2_4",
+      "urls_per_sec_multi2_16", "urls_per_sec_multi2_32",
+      "scaling_efficiency_multi2", "multi2_rounds", "extracted_rows")
+    val measured = Map(4 -> Bench.Thr(2000.0, 1000.0, 1500.0, 7L),
+      16 -> Bench.Thr(7000.0, 3000.0, 4800.0, 7L),
+      32 -> Bench.Thr(12345.67, 4000.0, 6000.0, 42L))
+    val queries = Seq("q1_agg" -> 0.25, "odd \"name\"\\" -> 1.0)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def parse(errors: Seq[String]) = mapper.readTree(graft.util.Json.obj(
+      Bench.record(measured, peak = 32, queries, "/data/sf0.1", 250000, errors)))
+    val clean = parse(Nil)
+    assert(clean.fieldNames.asScala.toSeq == parentKeys)
+    assert(clean.get("value").asDouble == 12345.7)
+    assert(clean.get("urls_per_sec_4").asDouble == 2000.0)
+    assert(clean.get("scaling_efficiency").asDouble == 0.875)
+    assert(clean.get("scaling_efficiency_multi").asDouble == 0.75)
+    assert(clean.get("scaling_efficiency_multi2").asDouble == 0.8)
+    assert(clean.get("bench_mode").asText == "forked-pinned")
+    assert(clean.get("extracted_rows").asLong == 42L)
+    assert(clean.get("total_query_sec").asDouble == 1.25)
+    assert(clean.get("queries").fieldNames.asScala.toSeq == queries.map(_._1))
+    val failed = parse(Seq("16-core level needs 16 cores; machine has 4", "query \"x\" failed"))
+    assert(failed.fieldNames.asScala.toSeq == parentKeys :+ "error")
+    assert(failed.get("error").asText ==
+      "16-core level needs 16 cores; machine has 4; query \"x\" failed")
+    // without a 32-core level, the peak columns report the given level
+    val noPeak = Bench.record(measured - 32, peak = 16, queries, "sf", 1, Nil).toMap
+    assert(noPeak("value") == "7000.0" && noPeak("urls_per_sec_multi_32") == "3000.0")
   }
 
   test("a throwing query is reported with its message, never timed") {
@@ -85,7 +137,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("BenchLevel measures a tiny level in-process") {
     val lvl = new BenchLevel(cpus = 4, nPages = 2000, nHosts = 4)
-    lvl.setup(skipWarm = true)
+    lvl.setup() // pays the 2,000-page JIT warm crawl too
     val (thr, rows) = lvl.runSingle()
     assert(thr > 0.0)
     assert(rows > 0L)

@@ -1,10 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
-import graft.frontier.{CrawlConfig, CrawlEngine, RobotsRule}
+import graft.frontier.{CrawlConfig, CrawlEngine, Robots, RobotsRule}
 import graft.tables.{SnapshotStore, SyntheticWeb}
 import graft.urls.UrlOps
 import graft.dom.HtmlParser
@@ -37,6 +37,16 @@ class CrawlSpec extends AnyFunSuite {
   lazy val pagesCached: org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     SyntheticWeb.pagesFast(spark, nPages, nHosts, 4).toDF().cache()
+  }
+  /** `pages` as (url, html) plus one `/robots.txt` row per rule
+    * (Robots.serialize round-trips exactly): the engine fetches robots rules
+    * from the pages table like any other page.
+    */
+  def withRules(pages: DataFrame, rules: Seq[RobotsRule]): DataFrame = {
+    import spark.implicits._
+    pages.select("url", "html").union(rules.map(r => (s"https://${r.host}/robots.txt",
+      Robots.serialize(r).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      .toDF("url", "html"))
   }
   val robots: Seq[RobotsRule] =
     SyntheticWeb.robotsRules(nHosts).map(r => RobotsRule(r._1, r._2, r._3, r._4))
@@ -164,8 +174,8 @@ class CrawlSpec extends AnyFunSuite {
     val lineageByConfig = mutable.LinkedHashMap.empty[String, Seq[org.apache.spark.sql.Row]]
     for ((label, fcfg) <- configs) {
       val stateDir = java.nio.file.Files.createTempDirectory(s"graft-crawlspec-$label-").toString
-      val stats = CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
-        robots, fcfg, stateDir)
+      val stats = CrawlEngine.run(spark, withRules(pages, robots),
+        SyntheticWeb.seedUrls(nHosts).toDS(), fcfg, stateDir)
 
       // final URL-seen set: compare via hashes (engine stores hashes)
       val m = SnapshotStore.latestManifest(stateDir).get
@@ -309,8 +319,8 @@ class CrawlSpec extends AnyFunSuite {
     import spark.implicits._
     val pages = pagesCached
     val stateDir = java.nio.file.Files.createTempDirectory("graft-delay-").toString
-    CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
-      delayedRobots, cfg, stateDir)
+    CrawlEngine.run(spark, withRules(pages, delayedRobots),
+      SyntheticWeb.seedUrls(nHosts).toDS(), cfg, stateDir)
     val m = SnapshotStore.latestManifest(stateDir).get
     // engine (roundNo, fetched-set) per committed round == delay-aware sim
     val (simSeen, simDrains) = simulate(delayedRobots)
@@ -363,7 +373,8 @@ class CrawlSpec extends AnyFunSuite {
     val pages = SyntheticWeb.pagesFast(spark, 8, nHosts, 2).toDF()
     for ((d, why) <- cases) {
       val e = intercept[IllegalStateException] {
-        CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), robots, cfg, d)
+        CrawlEngine.run(spark, withRules(pages, robots),
+          SyntheticWeb.seedUrls(nHosts).toDS(), cfg, d)
       }
       assert(e.getMessage.contains("incompatible legacy snapshot format") &&
         e.getMessage.contains(why), e.getMessage)
@@ -376,8 +387,8 @@ class CrawlSpec extends AnyFunSuite {
 
     // full run
     val fullDir = java.nio.file.Files.createTempDirectory("graft-full-").toString
-    val fullStats = CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
-      robots, cfg, fullDir)
+    val fullStats = CrawlEngine.run(spark, withRules(pages, robots),
+      SyntheticWeb.seedUrls(nHosts).toDS(), cfg, fullDir)
 
     val fullLineage = globalLineage(fullDir)
 
@@ -387,8 +398,8 @@ class CrawlSpec extends AnyFunSuite {
       .map(_.getAs[Int]("round")).max
     assert(lastNew >= 1, s"need a discovering round after round 0: $fullLineage")
     val partDir = java.nio.file.Files.createTempDirectory("graft-part-").toString
-    CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
-      robots, cfg.copy(maxRounds = lastNew + 1), partDir)
+    CrawlEngine.run(spark, withRules(pages, robots),
+      SyntheticWeb.seedUrls(nHosts).toDS(), cfg.copy(maxRounds = lastNew + 1), partDir)
     // simulate crash: a torn uncommitted write must be invisible. Dropping
     // the last manifest leaves that round's data dirs — including the seen
     // delta written before the commit — orphaned on disk, as a crash between
@@ -398,8 +409,8 @@ class CrawlSpec extends AnyFunSuite {
       s"round $lastNew must have pre-written a seen delta")
     java.nio.file.Files.delete(java.nio.file.Paths.get(partDir, "snapshots", s"v$v.json"))
     assert(SnapshotStore.latestVersion(partDir).contains(v - 1))
-    val resumedStats = CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
-      robots, cfg, partDir)
+    val resumedStats = CrawlEngine.run(spark, withRules(pages, robots),
+      SyntheticWeb.seedUrls(nHosts).toDS(), cfg, partDir)
 
     assert(resumedStats.fetched == fullStats.fetched)
     assert(resumedStats.extractedRows == fullStats.extractedRows)
@@ -427,7 +438,8 @@ class CrawlSpec extends AnyFunSuite {
     }).distinct.filter(!_.endsWith("/robots.txt"))
     val drainCfg = cfg.copy(roundSize = 8, hostBudgetPerRound = 100, maxRounds = 16)
     val stateDir = java.nio.file.Files.createTempDirectory("graft-drain-").toString
-    val stats = CrawlEngine.runWithRules(spark, pages, allUrls, robots, drainCfg, stateDir)
+    val stats = CrawlEngine.run(spark, withRules(pages, robots),
+      allUrls.toDS(), drainCfg, stateDir)
     assert(stats.fetched > 0)
     val m = SnapshotStore.latestManifest(stateDir).get
     val seenDirs = SnapshotStore.dirsOf(m, "seen")
@@ -446,13 +458,13 @@ class CrawlSpec extends AnyFunSuite {
     import spark.implicits._
     val pages = SyntheticWeb.pagesFast(spark, nPages, nHosts, 4).toDF()
     val stateDir = java.nio.file.Files.createTempDirectory("graft-testmode-").toString
-    val stats = CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
-      robots, cfg.copy(isTest = true), stateDir)
+    val stats = CrawlEngine.run(spark, withRules(pages, robots),
+      SyntheticWeb.seedUrls(nHosts).toDS(), cfg.copy(isTest = true), stateDir)
     assert(stats.fetched == 0 && stats.seenSize == 0, "all example seeds skipped")
     // non-example seeds survive test mode (and simply fetch nothing here)
     val stateDir2 = java.nio.file.Files.createTempDirectory("graft-testmode2-").toString
-    val stats2 = CrawlEngine.runWithRules(spark, pages,
-      Seq("https://real.site/page/0"), robots, cfg.copy(isTest = true), stateDir2)
+    val stats2 = CrawlEngine.run(spark, withRules(pages, robots),
+      Seq("https://real.site/page/0").toDS(), cfg.copy(isTest = true), stateDir2)
     assert(stats2.seenSize == 1)
   }
 
@@ -617,7 +629,8 @@ class CrawlSpec extends AnyFunSuite {
     import spark.implicits._
     val pages = pagesCached
     val stateDir = java.nio.file.Files.createTempDirectory("graft-robots-").toString
-    CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), robots, cfg, stateDir)
+    CrawlEngine.run(spark, withRules(pages, robots),
+      SyntheticWeb.seedUrls(nHosts).toDS(), cfg, stateDir)
     val m = SnapshotStore.latestManifest(stateDir).get
     val frontierUrls = CrawlEngine.readFrontier(spark, m)
       .select("url").as[String].collect()
@@ -667,6 +680,7 @@ class CrawlSpec extends AnyFunSuite {
   test("a crawl releases every table it persists (eager fold, crawl-delay)") {
     // uncached pages over an emptied cache: anything still cached after a
     // crawl is a table the crawl persisted and never released
+    import spark.implicits._
     spark.catalog.clearCache()
     val pages = SyntheticWeb.pagesFast(spark, nPages, nHosts, 4).toDF()
     val crawls = Seq(
@@ -674,7 +688,8 @@ class CrawlSpec extends AnyFunSuite {
       ("crawl-delay", delayedRobots, cfg))
     for ((label, rules, ccfg) <- crawls) {
       val stateDir = java.nio.file.Files.createTempDirectory(s"graft-release-$label-").toString
-      CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), rules, ccfg, stateDir)
+      CrawlEngine.run(spark, withRules(pages, rules),
+        SyntheticWeb.seedUrls(nHosts).toDS(), ccfg, stateDir)
       assert(spark.sharedState.cacheManager.isEmpty, s"[$label] crawl left tables cached")
     }
   }

@@ -23,9 +23,9 @@ import org.apache.spark.sql.SparkSession
   * silicon, which inflates its throughput and structurally depresses the
   * measured scaling efficiency, so no level is ever measured that way. A
   * level the machine cannot host, or whose worker cannot start, gets no
-  * number: it is named in the line's `error` field. Workers persist across
-  * the interleaved passes, so the untimed setup (input cache, JIT warm,
-  * bootstrap snapshot) is paid once per level.
+  * number: it is named in the line's `error` field, and Bench exits 1.
+  * Workers persist across the interleaved passes, so the untimed setup
+  * (input cache, JIT warm, bootstrap snapshot) is paid once per level.
   */
 object Bench {
 
@@ -165,17 +165,27 @@ object Bench {
       s"$c-core level needs $c cores; machine has $machineCores"))
   }
 
+  /** Names the gap when crawl levels ran but none at 32 cores: `value` and
+    * the `_32` columns then report 0.0, never another level's figure. */
+  private[graft] def peakError(requested: Seq[(Int, Int)],
+      measured: Map[Int, Thr]): Option[String] =
+    if (requested.isEmpty || measured.get(32).exists(_.single > 0)) None
+    else Some("32-core level produced no measurement; value and urls_per_sec*_32 report 0.0")
+
+  /** Nonzero whenever the line carries an `error` (a failed query, a
+    * skipped or unmeasured level); applied after the line has printed. */
+  private[graft] def exitCode(errors: Seq[String]): Int = if (errors.isEmpty) 0 else 1
+
   /** The result line's fields in order, each value already a JSON literal;
-    * BASELINE.md reads the same record. `peak` is the 32-core level if it
-    * was measured, else the schedule's last level.
+    * BASELINE.md reads the same record. A level without a measurement
+    * reports 0.0; `extracted_rows` is the same at every level.
     */
-  private[graft] def record(measured: Map[Int, Thr], peak: Int,
+  private[graft] def record(measured: Map[Int, Thr],
       queries: Seq[(String, Double)], sfDir: String, benchPages: Int,
       errors: Seq[String]): Seq[(String, String)] = {
     import graft.util.Json
     def at(c: Int): Thr = measured.getOrElse(c, unmeasured)
-    val top = measured.getOrElse(32, at(peak))
-    val columns = Seq(4 -> at(4), 16 -> at(16), 32 -> top)
+    val columns = Seq(4, 16, 32).map(c => c -> at(c))
     def eff(pick: Thr => Double): Double =
       if (pick(at(4)) > 0) (pick(at(16)) / pick(at(4))) / 4.0 else 0.0
     def levelFields(sfx: String, pick: Thr => Double): Seq[(String, String)] =
@@ -183,7 +193,7 @@ object Bench {
         (s"scaling_efficiency$sfx" -> f"${eff(pick)}%.3f")
     Seq(
       "metric" -> Json.str("frontier_drain_extract_urls_per_sec"),
-      "value" -> f"${top.single}%.1f",
+      "value" -> f"${at(32).single}%.1f",
       "unit" -> Json.str("urls/sec"),
       "queries" -> Json.obj(queries.map { case (k, v) => k -> f"$v%.3f" }),
       "sf" -> Json.str(sfDir),
@@ -194,7 +204,7 @@ object Bench {
       Seq("scaling_pair" -> Json.str("4cores->16cores")) ++
       levelFields("_multi", _.multi) ++ Seq("multi_rounds" -> "8") ++
       levelFields("_multi2", _.multi2) ++ Seq("multi2_rounds" -> "2") ++
-      Seq("extracted_rows" -> top.extracted.toString) ++
+      Seq("extracted_rows" -> measured.values.map(_.extracted).maxOption.getOrElse(0L).toString) ++
       (if (errors.isEmpty) Nil else Seq("error" -> Json.str(errors.mkString("; "))))
   }
 
@@ -244,7 +254,7 @@ object Bench {
     s"$start-${start + cpus - 1}"
   }
 
-  private final class Forked(cpus: Int, nPages: Int, nHosts: Int,
+  private[graft] final class Forked(cpus: Int, nPages: Int, nHosts: Int,
       machineCores: Int) {
     private val javaBin = System.getProperty("java.home") + "/bin/java"
     // heap from the machine's budget, NEVER from SPARK_DRIVER_MEM — see
@@ -261,8 +271,12 @@ object Bench {
     private val pin = tasksetBin.filter(_ => cpus < machineCores)
       .map(ts => Seq(ts, "-c", allocCores(cpus, machineCores)))
       .getOrElse(Seq.empty)
+    // the worker's java.io.tmpdir and Spark local dir, deleted by close(): a
+    // worker killed by SIGKILL or the OOM-killer never runs its own
+    // shutdown-hook cleanup
+    private[graft] val tmpRoot = graft.util.TempDirs.create(s"graft-worker-$cpus-")
     private val cmd: Seq[String] = pin ++ Seq(javaBin) ++ jdk17AddOpens ++ Seq(
-      s"-XX:ActiveProcessorCount=$cpus",
+      s"-XX:ActiveProcessorCount=$cpus", s"-Djava.io.tmpdir=$tmpRoot",
       s"-Xmx$mem", s"-Xms$mem", s"-XX:+$gc", "-XX:+AlwaysPreTouch",
       s"-Xmn$young", "-Dspark.ui.enabled=false",
       "-Dspark.sql.session.timeZone=UTC",
@@ -273,9 +287,12 @@ object Bench {
       s" ActiveProcessorCount=$cpus heap=$mem young=$young")
     private val proc = {
       val pb = new ProcessBuilder(cmd: _*)
+      // an inherited SPARK_LOCAL_DIRS would outrank java.io.tmpdir
+      pb.environment().put("SPARK_LOCAL_DIRS", tmpRoot.toString)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       pb.start()
     }
+    private[graft] def pid: Long = proc.pid()
     private val lines = new java.util.concurrent.LinkedBlockingQueue[String]()
     private val reader = new Thread(() => {
       val r = new java.io.BufferedReader(
@@ -337,7 +354,9 @@ object Bench {
     def close(): Unit = {
       try { stdin.println("exit"); proc.waitFor(30, java.util.concurrent.TimeUnit.SECONDS) }
       catch { case _: Throwable => () }
-      if (proc.isAlive) proc.destroyForcibly()
+      if (proc.isAlive)
+        proc.destroyForcibly().waitFor(30, java.util.concurrent.TimeUnit.SECONDS)
+      graft.util.TempDirs.deleteRecursively(tmpRoot)
     }
   }
 
@@ -454,10 +473,10 @@ object Bench {
     val requestedSet = requested.map(_._1).toSet
     val errors = unhostable ++
       scalingError(wantPair = requestedSet(4) && requestedSet(16), measured) ++
+      peakError(requested, measured) ++
       failedQueries.map { case (q, m) => s"query $q failed: $m" }
     errors.foreach(e => System.err.println(s"[bench] ERROR: $e"))
-    val rec = record(measured, levels.lastOption.fold(32)(_._1), results,
-      sfDir, benchPages, errors)
+    val rec = record(measured, results, sfDir, benchPages, errors)
     println(graft.util.Json.obj(rec))
 
     // persist the scaling evidence (BASELINE.md protocol); a queries-only
@@ -485,9 +504,9 @@ object Bench {
            |**${fig("scaling_efficiency_multi2")}**, 8-round drain **${fig("scaling_efficiency_multi")}**
            |(target ≥ 0.8 per BASELINE.json north rule). The multi-round
            |figures drain the SAME $benchPages pages in 2 and 8
-           |fetch-schedule rounds — per-round snapshot commits, fold policy
-           |and frontier compaction are all inside the timed window, the way
-           |a real crawl pays them. The 2-vs-8 pair is a ROUND-SIZE sweep at
+           |fetch-schedule rounds — per-round snapshot commits and the fold
+           |policy are inside the timed window, the way a real crawl pays
+           |them. The 2-vs-8 pair is a ROUND-SIZE sweep at
            |fixed input: per-round cost is fixed (job barriers + commit),
            |so efficiency climbs toward the single-round figure as the round
            |size grows — production rounds are millions of URLs, far past
@@ -571,6 +590,6 @@ object Bench {
         System.err.println(s"[bench] ERROR: cannot write ${path.toAbsolutePath}: $e")
       }
     }
-    if (failedQueries.nonEmpty) sys.exit(1)
+    sys.exit(exitCode(errors))
   }
 }

@@ -73,8 +73,8 @@ final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
   def runSingle(): (Double, Long) = timedRun(input.single)
 
   /** The SAME pages drained over `rounds` fetch-schedule rounds — per-round
-    * commit amortization, fold policy and frontier compaction inside the
-    * timed window, the way a real crawl pays them.
+    * commit amortization and the fold policy inside the timed window, the
+    * way a real crawl pays them.
     */
   def runMulti(rounds: Int): Double = timedRun(input.multi(rounds))._1
 

@@ -163,10 +163,11 @@ private[frontier] final class PartitionTallies
   * for Zipf hosts; the politeness rank is a two-phase bounded-heap top-k
   * (partial per-partition, then per-host final), so a Zipf-hot host never
   * funnels 30% of a 10^10-row frontier through one sort task the way a
-  * row_number window would. All frontier/seen/lineage state is committed
-  * as APPEND-ONLY deltas — a round writes O(drained + new) rows, never the
-  * 10^10-row frontier — with periodic compaction bounding read
-  * amplification.
+  * row_number window would. All crawl state is committed as APPEND-ONLY
+  * deltas — a round writes O(drained + new) rows, never the 10^10-row
+  * frontier. Enqueue-time dedup admits every url once, so the seen table IS
+  * the frontier's add history (full entries, each written once), and the
+  * committed frontier is seen minus the drained-key tombstones.
   */
 object CrawlEngine {
 
@@ -179,12 +180,6 @@ object CrawlEngine {
   // shuffles html bytes. Above it the join shuffles the keys against a
   // url-bucketed pages table (AQE skew handling).
   private val BroadcastDrainLimit = 2_000_000
-
-  // frontier commits are append-only deltas (adds + drained-key tombstones);
-  // every this many rounds — or when tombstones outnumber live rows — the
-  // commit compacts the frontier to a single rewrite, so a read of the
-  // committed frontier never degrades unboundedly
-  private val CompactEveryRounds = 8
 
   private val debugTiming = sys.env.contains("GRAFT_DEBUG_TIMING")
   private def timed[A](label: String)(f: => A): A =
@@ -250,8 +245,6 @@ object CrawlEngine {
 
   // pinned schemas for state-table reads: the engine re-opens these every
   // round, and schema inference would pay a driver-side footer read per open
-  private val feSchema = org.apache.spark.sql.Encoders.product[FrontierEntry].schema
-  private val seenSchema = org.apache.spark.sql.Encoders.product[SeenEntry].schema
   private val filterSchema = org.apache.spark.sql.Encoders.product[FilterState].schema
   private val robotsSchema = org.apache.spark.sql.Encoders.product[RobotsEntry].schema
   private val rmSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -387,7 +380,6 @@ object CrawlEngine {
       // into the next round in place of a parquet re-read, which also frees
       // the commit's robots delta write from being a read barrier
       robotsAll: Dataset[RobotsEntry],
-      seenDelta: Dataset[SeenEntry],
       robotsDelta: Dataset[RobotsEntry],
       nNewHosts: Long,
       delayDelta: Option[DataFrame], // (host, next_ok_round)
@@ -395,8 +387,8 @@ object CrawlEngine {
       stats: RoundStats,
       caches: Seq[Dataset[_]],
       // tallies inside the `adds` cache: no round() job materializes it, so
-      // they are valid only after the caller's first action over `adds` /
-      // `seenDelta` (run()'s seen-delta write or count)
+      // they are valid only after the caller's first action over `adds`
+      // (run()'s seen-delta write or count)
       newTallies: PartitionTallies,
       allowedTallies: Seq[PartitionTallies]) {
     def newUrls: Long = newTallies.totals._1
@@ -767,14 +759,7 @@ object CrawlEngine {
     val nNewHosts = robotsTallies.totals._1
     val drainedTotal = knownDrained.getOrElse(drainedTallies.totals._1)
 
-    // --- seen update: seen ∪ new (enqueue-time dedup, scrapy semantics) ---
-    // append-only delta: ONLY the newly-enqueued urls (the full seen set is
-    // the union of all committed deltas — never rewritten). The filter blobs
-    // are NOT touched here: new keys stay pending until the fold policy
-    // triggers (run() commit path), so a round writes O(new) filter bytes.
-    val seenDelta = newEntries.map(e => SeenEntry(e.bucket, e.url_hash))
-
-    RoundResult(newEntries, drained, drainedKeys, robotsAll, seenDelta, robotsDelta,
+    RoundResult(newEntries, drained, drainedKeys, robotsAll, robotsDelta,
       nNewHosts, delayDelta, outputs,
       RoundStats(drainedTotal, fetchedTotal, extractedTotal, nRawCands, nUnique),
       Seq(drained, outputs, dedupedWithDups, newEntries, robotsDelta, robotsAll),
@@ -874,43 +859,47 @@ object CrawlEngine {
     (out, blobBytes)
   }
 
-  /** Read seen-table delta dirs in canonical (bucket, url_hash) column order.
-    * The on-disk layout is hive-partitioned by `bucket` (the partition column
-    * lands LAST on read) while in-memory deltas are case-class-ordered, and
-    * Dataset union is positional — so every read normalizes the order here.
-    * A dir list with zero data files (a bootstrap that admitted no seeds
-    * writes an empty partitioned table = no parquet footers) reads as an
-    * empty Dataset instead of failing schema inference.
+  /** Read seen-table delta dirs (full [[FrontierEntry]] rows, hive-
+    * partitioned by `bucket`) as `T`'s columns in `T`'s order: the partition
+    * column lands LAST on read, and Dataset union is positional. A dir list
+    * with zero data files (a bootstrap that admitted no seeds writes an
+    * empty partitioned table = no parquet footers) reads as an empty
+    * Dataset instead of failing schema inference.
     */
-  def readSeenDirs(spark: SparkSession, dirs: Seq[String]): Dataset[SeenEntry] = {
-    import spark.implicits._
+  private def readSeen[T: org.apache.spark.sql.Encoder](spark: SparkSession,
+      dirs: Seq[String]): Dataset[T] = {
+    val schema = implicitly[org.apache.spark.sql.Encoder[T]].schema
+    val cols = schema.fieldNames.toSeq.map(n =>
+      if (n == "bucket") col(n).cast("int").as(n) else col(n))
     // one relation PER dir, then union: a zero-row delta commits a
     // root-level schema file while non-empty deltas commit bucket=N subdirs,
     // and multi-root partition discovery refuses that mix; per-dir reads
     // also keep bucket-pruning per relation (filters push through Union)
     val dfs = dirs.flatMap { d =>
       try {
-        // pinned schema: no footer inference, and an all-empty dir reads
-        // as an empty relation instead of failing inference
-        Some(spark.read.schema(seenSchema).parquet(d)
-          .select(col("bucket").cast("int").as("bucket"), col("url_hash")))
+        // pinned schema: no footer inference, only `T`'s columns scanned,
+        // and an all-empty dir reads as an empty relation
+        Some(spark.read.schema(schema).parquet(d).select(cols: _*))
       } catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.toLowerCase.contains("schema") => None
       }
     }
-    if (dfs.isEmpty) spark.emptyDataset[SeenEntry]
-    else dfs.reduce(_.union(_)).as[SeenEntry]
+    if (dfs.isEmpty) spark.emptyDataset[T]
+    else dfs.reduce(_.union(_)).as[T]
   }
 
-  /** Current frontier = union of add-deltas minus drained-key tombstones. */
+  /** The seen set's (bucket, url_hash) keys from seen-table delta dirs. */
+  def readSeenDirs(spark: SparkSession, dirs: Seq[String]): Dataset[SeenEntry] =
+    readSeen(spark, dirs)(org.apache.spark.sql.Encoders.product[SeenEntry])
+
+  /** The committed frontier: the seen table minus drained-key tombstones. */
   def readFrontier(spark: SparkSession, m: SnapshotStore.Manifest): Dataset[FrontierEntry] = {
     import spark.implicits._
-    val adds = SnapshotStore.read(spark, m, "frontier_adds", feSchema)
-    val rm = SnapshotStore.read(spark, m, "frontier_rm", rmSchema)
-    adds.join(rm, Seq("url_hash"), "left_anti")
-      .select(Seq("url", "url_hash", "host", "host_hash", "bucket",
-        "priority", "depth", "discovered_round").map(col): _*)
+    readSeen[FrontierEntry](spark, SnapshotStore.dirsOf(m, "seen"))
+      .join(SnapshotStore.read(spark, m, "frontier_rm", rmSchema), Seq("url_hash"),
+        "left_anti")
+      .select(feCols: _*)
       .as[FrontierEntry]
   }
 
@@ -926,8 +915,7 @@ object CrawlEngine {
     * field names are the manifest keys.
     *   - `round`: the last committed round (-1 after the bootstrap)
     *   - `fetched`, `extracted`, `seen`: run totals (see [[CrawlStats]])
-    *   - `frontier_size`, `frontier_rm_size`: live frontier rows, and
-    *     tombstones since the last compaction
+    *   - `frontier_size`: live frontier rows (seen minus tombstones)
     *   - `filters_folded_dirs`, `pending_keys`: fold bookkeeping — how many
     *     committed seen-delta dirs the filter blobs reflect, and how many
     *     keys are pending since the last fold
@@ -941,7 +929,7 @@ object CrawlEngine {
     *     of running an agg job
     */
   private final case class CrawlCounters(round: Long, fetched: Long,
-      extracted: Long, seen: Long, frontier_size: Long, frontier_rm_size: Long,
+      extracted: Long, seen: Long, frontier_size: Long,
       filters_folded_dirs: Long, pending_keys: Long, delay_rows: Long,
       filter_blob_bytes: Long, max_delay_ms: Long) {
     def toMap: Map[String, Long] =
@@ -951,31 +939,33 @@ object CrawlEngine {
   private object CrawlCounters {
     /** The counters of `m`, and the format guard (round-2 ADVICE): a
       * snapshot of an older layout (a full `frontier` table, no robots
-      * table, or any counter missing) would otherwise resume as an empty
-      * frontier and "succeed" with zero rounds, or fail deep in the loop.
+      * table, a `frontier_adds` table, or any counter missing) would
+      * otherwise resume as an empty frontier and "succeed" with zero rounds,
+      * or fail deep in the loop.
       */
     def of(m: SnapshotStore.Manifest, stateDir: String): CrawlCounters = {
       def legacy(what: String) = new IllegalStateException(
         s"incompatible legacy snapshot format in $stateDir ($what; expected " +
-          "the delta format: frontier_adds/frontier_rm/robots tables, the " +
-          "bucket-partitioned seen layout, and every crawl counter); " +
-          "re-bootstrap into a fresh state dir")
+          "the delta format: seen/frontier_rm/robots tables, a " +
+          "bucket-partitioned seen table of frontier entries, and every " +
+          "crawl counter); re-bootstrap into a fresh state dir")
       if (m.dataDirs.contains("frontier") || !m.dataDirs.contains("robots"))
         throw legacy("pre-delta tables")
+      if (m.dataDirs.contains("frontier_adds"))
+        throw legacy("a frontier_adds table: its seen dirs hold no frontier columns")
       def c(name: String): Long =
         m.counters.getOrElse(name, throw legacy(s"no $name counter"))
       CrawlCounters(c("round"), c("fetched"), c("extracted"), c("seen"),
-        c("frontier_size"), c("frontier_rm_size"), c("filters_folded_dirs"),
-        c("pending_keys"), c("delay_rows"), c("filter_blob_bytes"),
-        c("max_delay_ms"))
+        c("frontier_size"), c("filters_folded_dirs"), c("pending_keys"),
+        c("delay_rows"), c("filter_blob_bytes"), c("max_delay_ms"))
     }
   }
 
   /** The committed state in `m`. The frontier is persisted: the
-    * adds-minus-tombstones anti-join would otherwise recompute from parquet
+    * seen-minus-tombstones anti-join would otherwise recompute from parquet
     * in every consumer of the first round (the drain-keys collect, job 1's
-    * semi-join back, a compaction write), and the single-job drain-keys
-    * collect touches it first, so the cache populates race-free.
+    * semi-join back), and the single-job drain-keys collect touches it
+    * first, so the cache populates race-free.
     */
   private def readState(spark: SparkSession, m: SnapshotStore.Manifest): CrawlState = {
     import spark.implicits._
@@ -1012,7 +1002,7 @@ object CrawlEngine {
 
     // resume from the latest committed snapshot, or bootstrap a v0 snapshot
     // from the seeds (so every later commit is uniform: append-only delta for
-    // frontier/seen/lineage/robots; filters rewritten only on fold rounds)
+    // seen/frontier_rm/lineage/robots; filters rewritten only on fold rounds)
     // CrawlCounters.of is the format guard. It runs BEFORE anything is
     // persisted: the guard's throw would otherwise leak the cached robotsSrc
     // plan into the session, and the next run's persist of the same source
@@ -1050,13 +1040,12 @@ object CrawlEngine {
         val robots0 = fetchRobots(spark, seedHosts, robotsSrc, cfg.userAgent).persist()
         val seedFrontier = applyRobots(seedDeduped, robots0).persist()
         val nSeeds = seedFrontier.count()
-        val seedSeen = seedFrontier.map(e => SeenEntry(e.bucket, e.url_hash))
         val cap = cfg.filterCapacityPerBucket
         // size each bucket's filter for its actual seed volume (2x headroom),
         // never below the configured floor — a 10M-seed bootstrap must not
         // overflow a fixed 2^16 capacity into the exact stash
-        val filters0 = seedSeen.groupByKey(_.bucket).mapGroups { (b, ss) =>
-          val keys = ss.map(_.url_hash).toArray
+        val filters0 = seedFrontier.groupByKey(_.bucket).mapGroups { (b, es) =>
+          val keys = es.map(_.url_hash).toArray
           val f = CuckooFilter.rebuild(keys.iterator,
             math.max(cap, 2L * keys.length))
           FilterState(b, f.toBytes, f.size)
@@ -1070,14 +1059,15 @@ object CrawlEngine {
         val maxDelay0 = robots0
           .agg(coalesce(max($"crawl_delay_ms"), lit(0L))).as[Long].head()
         val c0 = CrawlCounters(round = -1, fetched = 0, extracted = 0,
-          seen = nSeeds, frontier_size = nSeeds, frontier_rm_size = 0,
-          filters_folded_dirs = 1, pending_keys = 0, delay_rows = 0,
-          filter_blob_bytes = filterBytes0, max_delay_ms = maxDelay0)
+          seen = nSeeds, frontier_size = nSeeds, filters_folded_dirs = 1,
+          pending_keys = 0, delay_rows = 0, filter_blob_bytes = filterBytes0,
+          max_delay_ms = maxDelay0)
+        // the admitted seeds are written once, as the seen table's first
+        // delta: the frontier's add history starts with them
         val m = SnapshotStore.commit(stateDir, 0,
           Map("filters" -> filters0.toDF(),
-            "frontier_adds" -> seedFrontier.toDF(),
             "frontier_rm" -> spark.emptyDataset[SeenEntry].toDF().select($"url_hash"),
-            "seen" -> seedSeen.toDF(),
+            "seen" -> seedFrontier.toDF(),
             "robots" -> robots0.toDF(),
             "lineage" -> spark.emptyDataset[LineageRow].toDF()),
           c0.toMap,
@@ -1223,9 +1213,10 @@ object CrawlEngine {
         if (blockedHosts.isDefined) roundNo += 1 else continue = false
       }
       else {
-        // The seen delta is written (or counted) HERE, synchronously: it is
-        // the first action over the round's probe chain, so it materializes
-        // the newEntries cache, and the tallies inside that cache then carry
+        // The seen delta — the round's new frontier entries, written nowhere
+        // else — is written (or counted) HERE, synchronously: it is the
+        // first action over the round's probe chain, so it materializes the
+        // newEntries cache, and the tallies inside that cache then carry
         // the new-url and robots-allowed counts — write + count in ONE job
         // barrier. The dir is the one commit() would have used; it is
         // recorded via `preWritten`, or deleted again when the round
@@ -1238,7 +1229,7 @@ object CrawlEngine {
         // actually appeared. One-round lag: a discovery burst after an idle
         // stretch pays one extra job barrier, then write-first resumes.
         val seenDir = SnapshotStore.deltaDirFor(stateDir, roundNo + 1, "seen")
-        def writeSeen(): Unit = timed("seen-write")(r.seenDelta.toDF()
+        def writeSeen(): Unit = timed("seen-write")(r.adds.toDF()
           .repartition(col("bucket"))
           .write.mode("overwrite").partitionBy("bucket").parquet(seenDir))
         if (lastRoundHadNew) writeSeen()
@@ -1254,12 +1245,6 @@ object CrawlEngine {
         val lineage = lineageRows(spark, roundNo, r, ctr.frontier_size)
         val seenAfter = ctr.seen + nNew
         val frontierAfter = ctr.frontier_size - stats.drained + nNew
-        val rmAfter = ctr.frontier_rm_size + stats.drained
-        // snapshot commit (atomic manifest rename); frontier/seen/lineage/
-        // robots are append-only deltas — a round writes O(drained + new)
-        // rows. Compact the frontier when tombstones would dominate reads.
-        val compact = rmAfter > 0 &&
-          ((roundNo + 1) % CompactEveryRounds == 0 || rmAfter >= frontierAfter.max(1L))
         // filter fold policy: rewrite the blobs only when pending keys have
         // grown proportional to the seen set (amortized O(1) write per key);
         // otherwise the commit carries the previous filters dir untouched.
@@ -1269,10 +1254,11 @@ object CrawlEngine {
         val (folded, blobBytes) =
           if (!doFold) (None, ctr.filter_blob_bytes)
           else {
+            val newKeys = r.adds.map(e => SeenEntry(e.bucket, e.url_hash))
             val pendingAll = pendingSeen
-              .map(df => df.as[SeenEntry].union(r.seenDelta)).getOrElse(r.seenDelta)
+              .map(df => df.as[SeenEntry].union(newKeys)).getOrElse(newKeys)
             val (f, fb) = timed("fold")(foldFilters(spark, filters, pendingAll,
-              seen.union(r.seenDelta), cfg.filterCapacityPerBucket))
+              seen.union(newKeys), cfg.filterCapacityPerBucket))
             (Some(f), fb)
           }
         // crawl-delay state: merge this round's closed windows into the
@@ -1290,7 +1276,6 @@ object CrawlEngine {
           extracted = ctr.extracted + stats.extracted,
           seen = seenAfter,
           frontier_size = frontierAfter,
-          frontier_rm_size = if (compact) 0L else rmAfter,
           filters_folded_dirs =
             if (doFold) seenDirs.length + (if (newsThisRound) 1 else 0)
             else ctr.filters_folded_dirs,
@@ -1306,26 +1291,17 @@ object CrawlEngine {
         val nextFrontier = frontier.join(r.drainedKeys, Seq("url_hash"), "left_anti")
           .select(feCols: _*).as[FrontierEntry]
           .union(r.adds)
-        // The commit names only what this round writes; every other table
-        // (filters between folds, host_next_ok without a delay delta, robots
-        // without new hosts, ...) is carried from the previous manifest.
-        // `compact` rewrites the whole next frontier as one adds dir with an
-        // empty tombstone table; otherwise the round appends its tombstones
-        // and adds. Zero-row deltas are SKIPPED, not written: a round that
-        // discovered nothing new carries the previous adds/seen dirs — an
-        // empty parquet write is still a full Spark job + commit protocol,
-        // and a drained-to-exhaustion crawl pays it every round otherwise.
-        // `outputs` is per-round, so it is never carried.
+        // The commit names only what this round writes: its tombstones and
+        // lineage, its adds as the seen delta written above. Every other
+        // table (filters between folds, host_next_ok without a delay delta,
+        // robots without new hosts, seen after a round that found nothing,
+        // ...) is carried from the previous manifest; `outputs` is
+        // per-round, so it is never carried.
         val tables = folded.map(f => "filters" -> f.toDF()).toMap ++
           delayTable.map(t => "host_next_ok" -> t._1) ++
-          (if (collectOutputs) Map("outputs" -> r.outputs.drop("links", "link_hosts").toDF()) else Map.empty) ++
-          (if (compact) Map("frontier_adds" -> nextFrontier.toDF(),
-             "frontier_rm" -> r.drainedKeys.limit(0)) else Map.empty)
-        val deltas =
-          (if (compact) Map.empty[String, DataFrame] else Map("frontier_rm" -> r.drainedKeys)) ++
-          (if (!compact && newsThisRound) Map("frontier_adds" -> r.adds.toDF()) else Map.empty) ++
-          (if (r.nNewHosts > 0) Map("robots" -> r.robotsDelta.toDF()) else Map.empty) ++
-          Map("lineage" -> lineage.toDF())
+          (if (collectOutputs) Map("outputs" -> r.outputs.drop("links", "link_hosts").toDF()) else Map.empty)
+        val deltas = Map("frontier_rm" -> r.drainedKeys, "lineage" -> lineage.toDF()) ++
+          (if (r.nNewHosts > 0) Map("robots" -> r.robotsDelta.toDF()) else Map.empty)
         // ASYNC commit: the manifest object is known up front (every data
         // dir path is deterministic), so the writes + atomic rename proceed
         // in the background while the NEXT round's jobs run — the next round
@@ -1336,8 +1312,7 @@ object CrawlEngine {
           stateDir, roundNo + 1, tables, next.toMap,
           prev = Some(manifest.copy(dataDirs = manifest.dataDirs - "outputs")),
           deltas = deltas,
-          preWritten = if (newsThisRound) Set("seen") else Set.empty,
-          partitionCols = Map("seen" -> Seq("bucket"))))
+          preWritten = if (newsThisRound) Set("seen") else Set.empty))
         manifest = m2
         pendingCommit = Some(commitDone)
         ctr = next

@@ -76,9 +76,10 @@ object SnapshotStore {
     *     never rewrites the accumulated history — at 10^10-url scale the
     *     seen set and lineage MUST be append-only.
     *   - `preWritten` names deltas the caller already wrote at
-    *     [[deltaDirFor]] (e.g. the crawl's seen delta, whose write job
-    *     doubles as the round's count barrier): recorded like a delta, with
-    *     no second write.
+    *     [[deltaDirFor]] (e.g. the crawl's seen delta, which holds the
+    *     round's frontier add rows and whose write job doubles as the
+    *     round's count barrier): recorded like a delta, with no second
+    *     write.
     *
     * A table's new dir is `data/v{N}/{name}` under `tableDir`. The per-table
     * writes are independent jobs, launched concurrently so the Spark

@@ -79,7 +79,7 @@ class BenchSpec extends AnyFunSuite {
     val measured = Map(4 -> thr(2400.0, 2000.0))
     val err = Bench.scalingError(wantPair = true, measured)
     assert(err.exists(_.contains("16-core")))
-    val rec = Bench.record(measured, peak = 4, Nil, "sf", 2000, errs ++ err).toMap
+    val rec = Bench.record(measured, Nil, "sf", 2000, errs ++ err).toMap
     assert(rec("scaling_efficiency") == "0.000" && rec("urls_per_sec_4") == "2400.0")
     assert(rec("error").contains("16-core level needs 16 cores; machine has 4"))
     // a machine that hosts every level skips none
@@ -102,7 +102,7 @@ class BenchSpec extends AnyFunSuite {
     val queries = Seq("q1_agg" -> 0.25, "odd \"name\"\\" -> 1.0)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def parse(errors: Seq[String]) = mapper.readTree(graft.util.Json.obj(
-      Bench.record(measured, peak = 32, queries, "/data/sf0.1", 250000, errors)))
+      Bench.record(measured, queries, "/data/sf0.1", 250000, errors)))
     val clean = parse(Nil)
     assert(clean.fieldNames.asScala.toSeq == parentKeys)
     assert(clean.get("value").asDouble == 12345.7)
@@ -118,9 +118,60 @@ class BenchSpec extends AnyFunSuite {
     assert(failed.fieldNames.asScala.toSeq == parentKeys :+ "error")
     assert(failed.get("error").asText ==
       "16-core level needs 16 cores; machine has 4; query \"x\" failed")
-    // without a 32-core level, the peak columns report the given level
-    val noPeak = Bench.record(measured - 32, peak = 16, queries, "sf", 1, Nil).toMap
-    assert(noPeak("value") == "7000.0" && noPeak("urls_per_sec_multi_32") == "3000.0")
+  }
+
+  test("a 4:…,16:… schedule reports 0.0 for the 32-core columns and names the gap") {
+    val schedule = Seq(4 -> 2, 16 -> 1)
+    val measured = Map(4 -> Bench.Thr(2000.0, 1000.0, 1500.0, 7L),
+      16 -> Bench.Thr(7000.0, 3000.0, 4800.0, 7L))
+    val errs = Bench.peakError(schedule, measured).toSeq
+    assert(errs == Seq(
+      "32-core level produced no measurement; value and urls_per_sec*_32 report 0.0"))
+    val rec = Bench.record(measured, Nil, "sf", 2000, errs)
+    // same keys, same order, plus the error naming the gap
+    assert(rec.map(_._1) == Bench.record(measured + (32 -> measured(16)), Nil, "sf",
+      2000, Nil).map(_._1) :+ "error")
+    val fig = rec.toMap
+    assert(Seq("value", "urls_per_sec_32", "urls_per_sec_multi_32",
+      "urls_per_sec_multi2_32").forall(fig(_) == "0.0"), fig)
+    // the measured levels keep their own figures; extracted rows are the
+    // same at every level
+    assert(fig("urls_per_sec_4") == "2000.0" && fig("urls_per_sec_16") == "7000.0")
+    assert(fig("scaling_efficiency") == "0.875" && fig("extracted_rows") == "7")
+    // a measured 32-core level, or a queries-only sweep, has no gap
+    assert(Bench.peakError(schedule :+ (32 -> 2),
+      measured + (32 -> Bench.Thr(9000.0, 0.0, 0.0, 7L))).isEmpty)
+    assert(Bench.peakError(Nil, Map.empty).isEmpty)
+    // an unmeasured level makes Bench exit nonzero; a clean line exits 0
+    assert(Bench.exitCode(errs) == 1 && Bench.exitCode(Nil) == 0)
+  }
+
+  test("a SIGKILLed worker's state dirs are gone once the parent closes it") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    def names(root: java.nio.file.Path): Seq[String] =
+      if (!Files.isDirectory(root)) Nil
+      else {
+        val s = Files.list(root)
+        try s.iterator().asScala.map(_.getFileName.toString).toList
+        finally s.close()
+      }
+    def benchDirs(root: java.nio.file.Path) = names(root).filter(_.startsWith("graft-bench-"))
+    val w = new Bench.Forked(cpus = 2, nPages = 2000, nHosts = 4,
+      machineCores = Runtime.getRuntime.availableProcessors())
+    try {
+      w.awaitReady()
+      // the worker's bootstrap snapshot and Spark's block-manager dir live
+      // under its own temp root
+      assert(benchDirs(w.tmpRoot).exists(_.startsWith("graft-bench-boot-2-")) &&
+        names(w.tmpRoot).exists(_.startsWith("blockmgr-")), names(w.tmpRoot))
+      // SIGKILL: the worker's own shutdown-hook cleanup never runs
+      val h = java.lang.ProcessHandle.of(w.pid).get
+      h.destroyForcibly()
+      h.onExit().get(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(benchDirs(w.tmpRoot).nonEmpty, "the kill itself cleaned up nothing")
+    } finally w.close()
+    assert(names(w.tmpRoot).isEmpty && !Files.exists(w.tmpRoot))
   }
 
   test("a throwing query is reported with its message, never timed") {
@@ -133,6 +184,7 @@ class BenchSpec extends AnyFunSuite {
     assert(timed.map(_._1) == Seq("ok"))
     assert(failed.map(_._1) == Seq("boom", "warm-only", "timed-only"))
     assert(failed.head._2 == "java.lang.IllegalStateException: broken plan")
+    assert(Bench.exitCode(failed.map { case (q, m) => s"query $q failed: $m" }) == 1)
   }
 
   test("BenchLevel measures a tiny level in-process") {

@@ -197,24 +197,35 @@ class CrawlSpec extends AnyFunSuite {
       assert(stats.fetched == simFetchedPerRound.map(_.size).sum)
       assert(stats.rounds == simDrains.size)
       // every commit is relative to the previous manifest: v0's tables plus
-      // the round's outputs; a delta table's dirs are the previous list plus
-      // at most this version's dir, and a compaction (no tombstones left)
-      // rewrites both frontier tables to this version's dir alone
+      // the round's outputs, and a delta table's dirs are the previous list
+      // plus at most this version's dir. The seen table is the frontier's
+      // add history, so no manifest names a separate frontier_adds table,
+      // and the committed frontier (seen minus tombstones) is exactly the
+      // carried one: frontier_size distinct entries, none of them drained
       val v0 = SnapshotStore.readManifest(stateDir, 0)
-      (1 to m.version).foldLeft(v0) { (prev, v) =>
+      (0 to m.version).foldLeft(v0) { (prev, v) =>
         val mv = SnapshotStore.readManifest(stateDir, v)
-        assert(mv.dataDirs.keySet == v0.dataDirs.keySet + "outputs",
-          s"[$label] v$v tables: ${mv.dataDirs.keySet}")
-        val compacted = mv.counters("frontier_rm_size") == 0L
-        for (t <- Seq("seen", "robots", "lineage", "frontier_adds", "frontier_rm")) {
-          val was = SnapshotStore.dirsOf(prev, t)
-          val now = SnapshotStore.dirsOf(mv, t)
-          val own = SnapshotStore.deltaDirFor(stateDir, v, t)
-          if (compacted && t.startsWith("frontier_"))
-            assert(now == Seq(own), s"[$label] v$v compacted $t: $now")
-          else
+        assert(!mv.dataDirs.contains("frontier_adds"), s"[$label] v$v names frontier_adds")
+        if (v > 0) {
+          assert(mv.dataDirs.keySet == v0.dataDirs.keySet + "outputs",
+            s"[$label] v$v tables: ${mv.dataDirs.keySet}")
+          for (t <- Seq("seen", "robots", "lineage", "frontier_rm")) {
+            val was = SnapshotStore.dirsOf(prev, t)
+            val now = SnapshotStore.dirsOf(mv, t)
+            val own = SnapshotStore.deltaDirFor(stateDir, v, t)
             assert(now == was || now == was :+ own, s"[$label] v$v $t: $was -> $now")
+          }
         }
+        val frontierHashes = CrawlEngine.readFrontier(spark, mv)
+          .select("url_hash").as[Long].collect()
+        assert(frontierHashes.length == mv.counters("frontier_size") &&
+            frontierHashes.distinct.length == frontierHashes.length,
+          s"[$label] v$v frontier has ${frontierHashes.length} rows " +
+            s"(${frontierHashes.distinct.length} distinct), counter " +
+            s"${mv.counters("frontier_size")}")
+        val drained = SnapshotStore.read(spark, mv, "frontier_rm")
+          .select("url_hash").as[Long].collect().toSet
+        assert(!frontierHashes.exists(drained), s"[$label] v$v frontier holds a drained url")
         mv
       }
       val global = globalLineage(stateDir)
@@ -229,14 +240,6 @@ class CrawlSpec extends AnyFunSuite {
       assert(perBucket == global.map(r => (r.getAs[Int]("round"),
           r.getAs[Long]("drained"), r.getAs[Long]("new_urls"))),
         s"[$label] per-bucket lineage disagrees with the global rows")
-      // the crawl carries its state across a compaction: a commit after
-      // round 0 compacted the frontier (no tombstones left), and a later
-      // round drained from the carried state
-      val compacted = global.map(_.getAs[Int]("round")).filter(r => r >= 1 &&
-        SnapshotStore.readManifest(stateDir, r + 1).counters("frontier_rm_size") == 0L)
-      assert(compacted.exists(c => global.exists(g =>
-          g.getAs[Int]("round") > c && g.getAs[Long]("drained") > 0)),
-        s"[$label] want a compaction after round 0 followed by a draining round")
 
       // filter-table health invariants per config
       import graft.frontier.{CuckooFilter, FilterState}
@@ -359,17 +362,23 @@ class CrawlSpec extends AnyFunSuite {
     // delta-layout manifests each missing one of the crawl counters (r4
     // layouts lack filter_blob_bytes, older ones filters_folded_dirs too)
     val allCounters = Map("round" -> 0L, "fetched" -> 0L, "extracted" -> 0L,
-      "seen" -> 1L, "frontier_size" -> 1L, "frontier_rm_size" -> 0L,
-      "filters_folded_dirs" -> 1L, "pending_keys" -> 0L, "delay_rows" -> 0L,
-      "max_delay_ms" -> 0L, "filter_blob_bytes" -> 0L)
-    val deltaDirs = Seq("frontier_adds", "frontier_rm", "seen", "robots",
-      "filters", "lineage")
-    val cases = (stateDir -> "pre-delta tables") +: allCounters.keys.toSeq.sorted.map { missing =>
-      val d = java.nio.file.Files.createTempDirectory(s"graft-legacy-no-$missing-").toString
+      "seen" -> 1L, "frontier_size" -> 1L, "filters_folded_dirs" -> 1L,
+      "pending_keys" -> 0L, "delay_rows" -> 0L, "max_delay_ms" -> 0L,
+      "filter_blob_bytes" -> 0L)
+    val deltaDirs = Seq("frontier_rm", "seen", "robots", "filters", "lineage")
+    def manifest(name: String, tables: Seq[String], counters: Map[String, Long]) = {
+      val d = java.nio.file.Files.createTempDirectory(s"graft-legacy-$name-").toString
       SnapshotStore.writeManifest(d, SnapshotStore.Manifest(0,
-        deltaDirs.map(t => t -> s"$d/data/v0/$t").toMap, allCounters - missing))
-      d -> s"no $missing counter"
+        tables.map(t => t -> s"$d/data/v0/$t").toMap, counters))
+      d
     }
+    // the layout that kept the frontier's adds apart from a key-only seen
+    // table: every counter present, one frontier_adds table too many
+    val cases = (stateDir -> "pre-delta tables") +:
+      (manifest("adds", deltaDirs :+ "frontier_adds", allCounters) -> "frontier_adds") +:
+      allCounters.keys.toSeq.sorted.map { missing =>
+        manifest(s"no-$missing", deltaDirs, allCounters - missing) -> s"no $missing counter"
+      }
     val pages = SyntheticWeb.pagesFast(spark, 8, nHosts, 2).toDF()
     for ((d, why) <- cases) {
       val e = intercept[IllegalStateException] {

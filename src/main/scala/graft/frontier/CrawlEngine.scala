@@ -2,7 +2,7 @@ package graft.frontier
 
 import scala.collection.mutable
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.urls.UrlOps
@@ -102,19 +102,19 @@ final case class RoundStats(drained: Long, fetched: Long, extracted: Long,
 
 /** Exactly-once per-partition tallies for counters that ride an existing
   * job instead of costing their own. Each fully-consumed partition registers
-  * its (rowCount, weightSum) keyed by partition id, and merge OVERWRITES on
-  * key collision — a partition's tally is a deterministic function of its
-  * input, so task retries, speculative duplicates, or cache-eviction
-  * recomputes land the same value on the same key and can never
-  * double-count. (Plain sc.longAccumulator lacks this: transformation-side
-  * updates are at-least-once. Dataset.observe can't serve here either — a
-  * CollectMetrics node inside a persisted plan never reports, because the
-  * cache materialization is not the observing query.)
+  * one (rowCount, weightSum) per group, keyed by (partition id, group), and
+  * merge OVERWRITES on key collision — a partition's tally is a
+  * deterministic function of its input, so task retries, speculative
+  * duplicates, or cache-eviction recomputes land the same value on the same
+  * key and can never double-count. (Plain sc.longAccumulator lacks this:
+  * transformation-side updates are at-least-once. Dataset.observe can't serve
+  * here either — a CollectMetrics node inside a persisted plan never reports,
+  * because the cache materialization is not the observing query.)
   */
 private[frontier] final class PartitionTallies
     extends org.apache.spark.util.AccumulatorV2[
-      (Int, (Long, Long)), Map[Int, (Long, Long)]] {
-  private val m = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
+      ((Int, Int), (Long, Long)), Map[(Int, Int), (Long, Long)]] {
+  private val m = new java.util.concurrent.ConcurrentHashMap[(Int, Int), (Long, Long)]()
   // The executor heartbeater reads task accumulators from a separate thread
   // and can observe this instance MID-DESERIALIZATION: Java serialization
   // publishes the object reference into its handle table before restoring
@@ -127,11 +127,11 @@ private[frontier] final class PartitionTallies
     val c = new PartitionTallies; c.m.putAll(m); c
   }
   override def reset(): Unit = m.clear()
-  override def add(v: (Int, (Long, Long))): Unit = m.put(v._1, v._2)
+  override def add(v: ((Int, Int), (Long, Long))): Unit = m.put(v._1, v._2)
   override def merge(other: org.apache.spark.util.AccumulatorV2[
-      (Int, (Long, Long)), Map[Int, (Long, Long)]]): Unit =
+      ((Int, Int), (Long, Long)), Map[(Int, Int), (Long, Long)]]): Unit =
     other.value.foreach { case (k, v) => m.put(k, v) }
-  override def value: Map[Int, (Long, Long)] = {
+  override def value: Map[(Int, Int), (Long, Long)] = {
     val mm = m
     if (mm eq null) Map.empty
     else {
@@ -139,9 +139,12 @@ private[frontier] final class PartitionTallies
       mm.asScala.toMap
     }
   }
-  /** (Σ rowCount, Σ weightSum) across partitions. */
+  /** (Σ rowCount, Σ weightSum) across partitions and groups. */
   def totals: (Long, Long) =
     value.values.foldLeft((0L, 0L)) { case ((a, b), (n, w)) => (a + n, b + w) }
+  /** Σ rowCount per group, across partitions. */
+  def rowsByGroup: Map[Int, Long] =
+    value.toSeq.groupMapReduce(_._1._2)(_._2._1)(_ + _)
 }
 
 /** Spark-native URL frontier + fetch scheduler (north rule; SURVEY.md §2.9,
@@ -182,39 +185,66 @@ object CrawlEngine {
   private val BroadcastDrainLimit = 2_000_000
 
   private val debugTiming = sys.env.contains("GRAFT_DEBUG_TIMING")
-  private def timed[A](label: String)(f: => A): A =
-    if (!debugTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[timing] $label%-24s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-      r
+  /** Run `f` as the phase `label`: its jobs carry the label as their job
+    * description (so a listener or the UI can attribute them), and with
+    * GRAFT_DEBUG_TIMING set its wall time goes to stderr.
+    */
+  private def timed[A](spark: SparkSession, label: String)(f: => A): A = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    val t0 = System.nanoTime()
+    try f
+    finally {
+      sc.setJobDescription(outer)
+      if (debugTiming)
+        System.err.println(f"[timing] $label%-24s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
     }
+  }
+
+  // case-class encoders, derived once each, on first use: `spark.implicits`
+  // re-derives a product encoder by reflection on every `.as`/`map` that
+  // needs one, which cost ~0.1 s of driver CPU per round. These members take
+  // precedence over the generic `spark.implicits` derivation wherever both
+  // are in scope.
+  private implicit lazy val frontierEnc: Encoder[FrontierEntry] = Encoders.product
+  private implicit lazy val seenEnc: Encoder[SeenEntry] = Encoders.product
+  private implicit lazy val filterEnc: Encoder[FilterState] = Encoders.product
+  private implicit lazy val robotsEnc: Encoder[RobotsEntry] = Encoders.product
+  private implicit lazy val lineageEnc: Encoder[LineageRow] = Encoders.product
+  private implicit lazy val outputEnc: Encoder[PageOutput] = Encoders.product
+  private implicit lazy val drainKeyEnc: Encoder[(Long, Int, String)] = Encoders.product
+  private implicit lazy val fetchedEnc: Encoder[(String, Int, Array[Byte])] = Encoders.product
+  private implicit lazy val bodyEnc: Encoder[(String, Array[Byte])] = Encoders.product
 
   /** Wrap `ds` so that each FULLY consumed partition registers
-    * (rowCount, Σ weight(row)) into `acc` exactly once (keyed by partition
-    * id — see PartitionTallies). The tally node is part of `ds`'s plan, so
-    * when the result is persisted the tallies are computed during cache
-    * materialization and never again on cache hits. Chained after typed
-    * operators it stays in the object domain (no extra ser/deser).
+    * (rowCount, Σ weight(row)) per `group(row)` into `acc` exactly once
+    * (keyed by partition id and group — see PartitionTallies). The tally
+    * node is part of `ds`'s plan, so when the result is persisted the
+    * tallies are computed during cache materialization and never again on
+    * cache hits. Chained after typed operators it stays in the object domain
+    * (no extra ser/deser).
     */
-  private def tallied[T: org.apache.spark.sql.Encoder](
-      ds: Dataset[T], acc: PartitionTallies)(weight: T => Long): Dataset[T] =
+  private def tallied[T: Encoder](ds: Dataset[T], acc: PartitionTallies)(
+      weight: T => Long, group: T => Int = (_: T) => 0): Dataset[T] =
     ds.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
-      var n = 0L
-      var w = 0L
+      val byGroup = mutable.LongMap.empty[Array[Long]] // group -> (n, w)
       var registered = false
       new Iterator[T] {
         override def hasNext: Boolean = {
           val h = it.hasNext
-          if (!h && !registered) { acc.add((pid, (n, w))); registered = true }
+          if (!h && !registered) {
+            byGroup.foreach { case (g, nw) => acc.add(((pid, g.toInt), (nw(0), nw(1)))) }
+            registered = true
+          }
           h
         }
         override def next(): T = {
           val t = it.next()
-          n += 1
-          w += weight(t)
+          val nw = byGroup.getOrElseUpdate(group(t), new Array[Long](2))
+          nw(0) += 1
+          nw(1) += weight(t)
           t
         }
       }
@@ -245,8 +275,8 @@ object CrawlEngine {
 
   // pinned schemas for state-table reads: the engine re-opens these every
   // round, and schema inference would pay a driver-side footer read per open
-  private val filterSchema = org.apache.spark.sql.Encoders.product[FilterState].schema
-  private val robotsSchema = org.apache.spark.sql.Encoders.product[RobotsEntry].schema
+  private val filterSchema = filterEnc.schema
+  private val robotsSchema = robotsEnc.schema
   private val rmSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("url_hash",
       org.apache.spark.sql.types.LongType)))
@@ -256,33 +286,34 @@ object CrawlEngine {
     org.apache.spark.sql.types.StructField("next_ok_round",
       org.apache.spark.sql.types.LongType)))
 
-  /** Fetch + parse robots.txt for the given hosts FROM THE PAGES TABLE
-    * itself (C4 as crawled data — the reference fetches robots live per
-    * domain via scrapy's ROBOTSTXT_OBEY middleware, settings.py:19; here a
-    * fetch is a join against the pages source, like every other fetch).
-    * `hosts`: one row per host. The join key is the HOST derived from the
+  /** The robots source aggregated to one row per host: (host, html), the
+    * host's `/robots.txt` body. The key is the HOST derived from the
     * robots-row url (not a reconstructed `scheme://host/robots.txt` string),
     * so a host discovered via http whose robots row is stored under https —
     * or under any non-canonical robots url — still matches instead of
     * becoming a permanent allow-all negative-cache entry; when both schemes
-    * carry a robots row the lexicographic max prefers https. Missing
-    * robots.txt → allow-all row (404 negative cache). The left side is tiny
-    * and `robotsSrc` is pre-filtered to `*`/robots.txt` rows (pushed to the
-    * scan), so AQE broadcasts the fetched bodies.
+    * carry a robots row the lexicographic max prefers https. run()
+    * aggregates and persists this ONCE per run; each round joins only its
+    * new hosts against it.
     */
-  def fetchRobots(spark: SparkSession, hosts: DataFrame,
-      robotsSrc: DataFrame, userAgent: String): Dataset[RobotsEntry] = {
-    import spark.implicits._
-    val byHost = robotsSrc
-      .select(graft.functions.GraftFunctions.url_host($"url").as("host"),
-        $"url", $"html")
-      .groupBy($"host")
-      .agg(max(struct($"url", $"html")).as("r"))
-      .select($"host", $"r.html".as("html"))
+  private[frontier] def robotsBodies(robotsSrc: DataFrame): DataFrame =
+    robotsSrc
+      .select(graft.functions.GraftFunctions.url_host(col("url")).as("host"),
+        col("url"), col("html"))
+      .groupBy(col("host"))
+      .agg(max(struct(col("url"), col("html"))).as("r"))
+      .select(col("host"), col("r.html").as("html"))
+
+  /** Parse the rules of `hosts` (one row per host) from `bodies`
+    * ([[robotsBodies]]). A host without a body gets the allow-all row (404
+    * negative cache).
+    */
+  private def parseRobots(hosts: DataFrame, bodies: DataFrame,
+      userAgent: String): Dataset[RobotsEntry] =
     hosts
-      .select($"host")
-      .join(byHost, Seq("host"), "left")
-      .select($"host", $"html")
+      .select(col("host"))
+      .join(bodies, Seq("host"), "left")
+      .select(col("host"), col("html"))
       .as[(String, Array[Byte])]
       .map { case (host, html) =>
         if (html == null) RobotsEntry(host, Seq.empty, Seq.empty, 0L)
@@ -292,7 +323,17 @@ object CrawlEngine {
           RobotsEntry(host, r.allow_prefixes, r.disallow_prefixes, r.crawl_delay_ms)
         }
       }
-  }
+
+  /** Fetch + parse robots.txt for the given hosts FROM THE PAGES TABLE
+    * itself (C4 as crawled data — the reference fetches robots live per
+    * domain via scrapy's ROBOTSTXT_OBEY middleware, settings.py:19; here a
+    * fetch is a join against the pages source, like every other fetch).
+    * `hosts`: one row per host; `robotsSrc`: the (url, html) rows of
+    * robots.txt urls. Joins by host as [[robotsBodies]] describes.
+    */
+  def fetchRobots(spark: SparkSession, hosts: DataFrame,
+      robotsSrc: DataFrame, userAgent: String): Dataset[RobotsEntry] =
+    parseRobots(hosts, robotsBodies(robotsSrc), userAgent)
 
   /** Candidate robots predicate: allowed when the host is absent from the
     * robots table (left-join miss → null `disallow`) or the RFC 9309
@@ -314,10 +355,9 @@ object CrawlEngine {
     */
   def applyRobots(cands: Dataset[FrontierEntry],
       robots: Dataset[RobotsEntry]): Dataset[FrontierEntry] = {
-    val spark = cands.sparkSession
-    import spark.implicits._
     cands.toDF()
-      .join(robots.toDF().select($"host", $"allow", $"disallow"), Seq("host"), "left")
+      .join(robots.toDF().select(col("host"), col("allow"), col("disallow")),
+        Seq("host"), "left")
       .filter(robotsAllowCol(col("url"), col("allow"), col("disallow")))
       .select(feCols: _*)
       .as[FrontierEntry]
@@ -335,8 +375,6 @@ object CrawlEngine {
     * Exactly equivalent to rank-by-(priority desc, depth, url) <= k.
     */
   def topKPerHost(fr: Dataset[FrontierEntry], k: Int): Dataset[FrontierEntry] = {
-    val spark = fr.sparkSession
-    import spark.implicits._
     implicit val ord: Ordering[FrontierEntry] = drainOrd
     def bounded(it: Iterator[FrontierEntry]): Iterator[FrontierEntry] = {
       // max-heap: head = worst kept entry; evict when a better one arrives
@@ -349,7 +387,7 @@ object CrawlEngine {
       heaps.valuesIterator.flatMap(_.iterator)
     }
     fr.mapPartitions(bounded _)
-      .groupByKey(_.host)
+      .groupByKey(_.host)(Encoders.STRING)
       .flatMapGroups((_: String, es: Iterator[FrontierEntry]) => bounded(es))
   }
 
@@ -374,24 +412,127 @@ object CrawlEngine {
   /** Everything one round hands back to the commit path. */
   final case class RoundResult(
       adds: Dataset[FrontierEntry],
-      drained: Dataset[FrontierEntry],
+      // the frontier minus this round's drain: with `adds`, the next round's
+      // frontier
+      undrained: Dataset[FrontierEntry],
       drainedKeys: DataFrame,
-      // this round's full robots table (prev ∪ delta, persisted) — carried
-      // into the next round in place of a parquet re-read, which also frees
-      // the commit's robots delta write from being a read barrier
+      // this round's full robots table: the previous one when no host was
+      // new, else prev ∪ delta — carried into the next round in place of a
+      // parquet re-read, which also frees the commit's robots delta write
+      // from being a read barrier
       robotsAll: Dataset[RobotsEntry],
       robotsDelta: Dataset[RobotsEntry],
       nNewHosts: Long,
       delayDelta: Option[DataFrame], // (host, next_ok_round)
       outputs: Dataset[PageOutput],
       stats: RoundStats,
+      drainedByBucket: Map[Int, Long],
       caches: Seq[Dataset[_]],
+      // read by `undrained`'s plan: destroy only once the carried frontier
+      // has materialized
+      broadcasts: Seq[Broadcast[_]],
       // tallies inside the `adds` cache: no round() job materializes it, so
       // they are valid only after the caller's first action over `adds`
       // (run()'s seen-delta write or count)
       newTallies: PartitionTallies,
       allowedTallies: Seq[PartitionTallies]) {
     def newUrls: Long = newTallies.totals._1
+  }
+
+  /** One round's drain.
+    *   - `rows`: the drained entries
+    *   - `undrained`: the rest of the frontier
+    *   - `keys`: the drained url_hash rows (the frontier_rm delta)
+    *   - `fetchPages`: the pages source, pruned to the drained url range
+    *   - `byBucket`: drained counts per bucket, valid once job 1 has run
+    *   - `keySet`, `cache`: what the drain holds until the round is carried
+    */
+  private final case class Drain(rows: Dataset[FrontierEntry],
+      undrained: Dataset[FrontierEntry], keys: DataFrame, fetchPages: DataFrame,
+      byBucket: () => Map[Int, Long], keySet: Option[Broadcast[Array[Long]]],
+      cache: Option[Dataset[FrontierEntry]])
+
+  /** The drain up to [[BroadcastDrainLimit]] keys: an exact top-k via ONE
+    * narrow TakeOrdered job collected to the driver. Only narrow sort keys
+    * travel — k x (hash, bucket, url) — and the array then serves as:
+    *   - the drained set, shipped as one broadcast sorted key array: a
+    *     narrow membership predicate selects the drained rows and, negated,
+    *     the undrained rest, with no semi-/anti-join exchange. url_hash is
+    *     unique in the frontier (enqueue-time dedup admits each url once), so
+    *     the drained rows are exactly the frontier rows whose key drained;
+    *     politeness's shuffle is not re-run for them
+    *   - the url min/max for fetch-scan pruning
+    *   - the drained count, per bucket
+    *   - the frontier_rm delta rows
+    */
+  private def drainByKeys(spark: SparkSession, frontier: Dataset[FrontierEntry],
+      eligible: Dataset[FrontierEntry], pages: DataFrame, roundSize: Int): Drain = {
+    val keyRows = timed(spark, "drain-keys")(eligible
+      .select(col("url_hash"), col("bucket"), col("priority"), col("depth"), col("url"))
+      .orderBy(desc("priority"), asc("depth"), asc("url"))
+      .limit(roundSize)
+      .select(col("url_hash"), col("bucket"), col("url"))
+      .as[(Long, Int, String)].collect())
+    val hashes = keyRows.map(_._1)
+    val sorted = hashes.clone()
+    java.util.Arrays.sort(sorted)
+    val keySet = spark.sparkContext.broadcast(sorted)
+    val inDrain = graft.functions.KeySetFunctions.key_in(keySet, col("url_hash"))
+    val fetchPages =
+      if (keyRows.isEmpty) pages
+      else pages.filter(col("url") >= keyRows.iterator.map(_._3).min &&
+        col("url") <= keyRows.iterator.map(_._3).max)
+    // explicit slice count: the default (defaultParallelism) would write one
+    // near-empty parquet file per core for the frontier_rm delta — one slice
+    // per 250k keys keeps the delta at one file per round and the read path
+    // at O(rounds) files, not O(rounds*cores)
+    import spark.implicits._
+    val keysDf = spark.sparkContext.parallelize(
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(hashes),
+      math.max(1, hashes.length / 250000)).toDF("url_hash")
+    val byBucket = keyRows.groupMapReduce(_._2)(_ => 1L)(_ + _)
+    Drain(frontier.filter(inDrain), frontier.filter(!inDrain), keysDf, fetchPages,
+      () => byBucket, Some(keySet), None)
+  }
+
+  /** The drain above [[BroadcastDrainLimit]] keys: they stay distributed.
+    * TakeOrdered over NARROW sort keys, then semi-join back — the join
+    * shuffle restores parallelism and only ~k keys pass through one task.
+    * The drained rows are persisted; tallies inside that cache count them
+    * per bucket.
+    */
+  private def drainDistributed(spark: SparkSession, roundNo: Int,
+      frontier: Dataset[FrontierEntry], eligible: Dataset[FrontierEntry],
+      frontierSize: Long, pages: DataFrame, roundSize: Int): Drain = {
+    import spark.implicits._
+    val tallies = new PartitionTallies
+    spark.sparkContext.register(tallies, s"r$roundNo-drained-tallies")
+    val rows =
+      // |eligible| <= frontierSize <= roundSize: the global top-k is the
+      // identity — everything politeness admitted drains this round
+      if (frontierSize <= roundSize) eligible
+      else eligible.join(eligible
+          .select($"url_hash", $"priority", $"depth", $"url")
+          .orderBy(desc("priority"), asc("depth"), asc("url"))
+          .limit(roundSize)
+          .select($"url_hash"), Seq("url_hash"), "left_semi")
+        .as[FrontierEntry]
+    val drained = tallied(rows, tallies)(_ => 0L, _.bucket).persist()
+    // bounds from one agg over the drained cache, which also materializes it
+    val fetchPages =
+      if (frontierSize <= roundSize) pages
+      else {
+        val (lo, hi, n) = timed(spark, "drain-bounds")(drained
+          .agg(min($"url"), max($"url"), count(lit(1)))
+          .as[(String, String, Long)].head())
+        if (n == 0L) pages.limit(0)
+        else pages.filter($"url" >= lo && $"url" <= hi)
+      }
+    Drain(drained,
+      frontier.join(drained.select($"url_hash"), Seq("url_hash"), "left_anti")
+        .select(feCols: _*).as[FrontierEntry],
+      drained.select($"url_hash"), fetchPages, () => tallies.rowsByGroup, None,
+      Some(drained))
   }
 
   /** One fetch-schedule round.
@@ -406,8 +547,8 @@ object CrawlEngine {
     * (crawl-delay politeness) — excluded from the drain entirely.
     *
     * `robots`: the robots table so far; rules for hosts first seen this
-    * round are fetched from `robotsSrc` inside the round and returned as
-    * `robotsDelta`.
+    * round are parsed from `robotsBodies` (the run's one-row-per-host robots
+    * table, [[robotsBodies]]) inside the round and returned as `robotsDelta`.
     */
   def round(
       spark: SparkSession,
@@ -421,7 +562,7 @@ object CrawlEngine {
       delayBlockedHosts: Option[DataFrame],
       computeDelay: Boolean,
       pages: DataFrame, // url, html (+ any other cols)
-      robotsSrc: DataFrame, // url, html — pre-filtered to */robots.txt
+      robotsBodies: DataFrame, // host, html — one row per host
       cfg: CrawlConfig,
       retainOutputs: Boolean = true,
       filtersBc: Option[Broadcast[Array[CuckooFilter]]] = None): RoundResult = {
@@ -438,125 +579,33 @@ object CrawlEngine {
     // Politeness is provably a no-op when budget >= roundSize: an entry with
     // per-host rank > roundSize has >= roundSize better entries within its
     // own host under the SAME ordering, so it can never make the global
-    // top-roundSize — skip the operator entirely. Likewise the global top-k
-    // needs no ordering work when the whole frontier fits the round.
-    val wholeFrontier = frontierSize <= cfg.roundSize &&
-      cfg.hostBudgetPerRound >= frontierSize && delayBlockedHosts.isEmpty
-    // The drained count is known driver-side on most paths — frontierSize
-    // (whole-frontier), the collected key array's length (broadcast top-k),
-    // the drain-bounds agg (over-limit). On the politeness-limited path it is
-    // a tally on the drained cache, which job 1 materializes. Counters are
-    // tallies, NOT Dataset.observe: this plan references its shared subtrees
-    // (outputs, the dedup exchange, robots) from several branches, and
-    // Catalyst's checkCollectedMetrics re-compares every duplicated
-    // CollectMetrics instance against its canonicalized subtree — analysis
-    // time explodes combinatorially (measured: minutes for one round's plan).
-    val drainedTallies = new PartitionTallies
-    spark.sparkContext.register(drainedTallies, s"r$roundNo-drained-tallies")
-    var knownDrained: Option[Long] = None
-    var drainBounds: Option[(String, String)] = None
-    var collectedKeys: Option[DataFrame] = None
-    val drained: Dataset[FrontierEntry] =
-      if (wholeFrontier) {
-        knownDrained = Some(frontierSize)
-        // `drained` IS the caller's frontier, which the round loop already
-        // persisted — re-persisting the same plan only emits CacheManager's
-        // "already cached" WARN and does nothing, so guard on the current
-        // storage level (double-unpersist later is a no-op)
-        if (frontierEligible.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          frontierEligible.persist()
-        else frontierEligible
-      }
-      else {
-        val eligible =
-          if (cfg.hostBudgetPerRound >= cfg.roundSize) frontierEligible
-          else topKPerHost(frontierEligible, cfg.hostBudgetPerRound)
-        if (frontierSize <= cfg.roundSize)
-          // |eligible| <= frontierSize <= roundSize: the global top-k is the
-          // identity — everything politeness admitted drains this round
-          tallied(eligible, drainedTallies)(_ => 0L).persist()
-        else if (cfg.roundSize <= BroadcastDrainLimit) {
-          // Exact top-k via ONE narrow TakeOrdered job collected to the
-          // driver — Spark would collect these keys for the semi-join
-          // broadcast anyway, so the explicit collect is free, and the
-          // array doubles as (a) the broadcast build side, (b) the url
-          // min/max for fetch-scan pruning, (c) the drained count, and
-          // (d) the frontier_rm delta rows — information that used to cost
-          // a separate bounds/count job per round. Only narrow sort keys
-          // travel: k x (hash, url).
-          val keyRows = timed("drain-keys")(eligible
-            .select($"url_hash", $"priority", $"depth", $"url")
-            .orderBy(desc("priority"), asc("depth"), asc("url"))
-            .limit(cfg.roundSize)
-            .select($"url_hash", $"url")
-            .as[(Long, String)].collect())
-          knownDrained = Some(keyRows.length.toLong)
-          if (keyRows.nonEmpty) {
-            var lo = keyRows(0)._2; var hi = lo
-            var i = 1
-            while (i < keyRows.length) {
-              val u = keyRows(i)._2
-              if (u < lo) lo = u
-              if (u > hi) hi = u
-              i += 1
-            }
-            drainBounds = Some((lo, hi))
-          }
-          // explicit slice count: the default (defaultParallelism) would
-          // write one near-empty parquet file per core for the frontier_rm
-          // delta AND schedule a task per core in every job that touches the
-          // keys — one slice per 250k keys keeps the delta at one file per
-          // round and the read path at O(rounds) files, not O(rounds*cores)
-          val keysDs = spark.sparkContext.parallelize(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(
-              keyRows.map(_._1)),
-            math.max(1, keyRows.length / 250000)).toDF("url_hash")
-          collectedKeys = Some(keysDs)
-          eligible.join(broadcast(keysDs), Seq("url_hash"), "left_semi")
-            .as[FrontierEntry]
-            .persist()
-        }
-        else {
-          // above the broadcast limit the keys stay distributed: TakeOrdered
-          // over NARROW sort keys, then semi-join back — the join shuffle
-          // restores parallelism and only ~k keys pass through one task
-          val drainKeys = eligible
-            .select($"url_hash", $"priority", $"depth", $"url")
-            .orderBy(desc("priority"), asc("depth"), asc("url"))
-            .limit(cfg.roundSize)
-            .select($"url_hash")
-          eligible.join(drainKeys, Seq("url_hash"), "left_semi")
-            .as[FrontierEntry]
-            .persist()
-        }
-      }
-    val drainedKeys = collectedKeys.getOrElse(drained.select($"url_hash"))
+    // top-roundSize — skip the operator entirely.
+    // Counters are driver-side or tallies, NOT Dataset.observe: this plan
+    // references its shared subtrees (outputs, the dedup exchange, robots)
+    // from several branches, and Catalyst's checkCollectedMetrics
+    // re-compares every duplicated CollectMetrics instance against its
+    // canonicalized subtree — analysis time explodes combinatorially
+    // (measured: minutes for one round's plan).
+    val eligible =
+      if (cfg.hostBudgetPerRound >= cfg.roundSize) frontierEligible
+      else topKPerHost(frontierEligible, cfg.hostBudgetPerRound)
+    val drain =
+      if (cfg.roundSize <= BroadcastDrainLimit)
+        drainByKeys(spark, frontier, eligible, pages, cfg.roundSize)
+      else drainDistributed(spark, roundNo, frontier, eligible, frontierSize,
+        pages, cfg.roundSize)
 
     // --- "fetch" (J4): drained ⨝ pages on url ---
     // Scan pruning from drain bounds (the Iceberg sort-key min/max analog):
     // a PARTIAL drain covers a bounded url range under the deterministic
     // drain order, and no page outside [min, max] can match the fetch join
-    // — so push the range as a predicate. With a url-clustered pages layout
-    // (sorted parquet row groups, or cached batches with column stats) the
-    // scan skips non-matching groups BEFORE html bytes are touched; a
-    // multi-round drain then reads each page's html ~once across the whole
-    // crawl instead of scanning the full table every round. Bounds come from
-    // the collected drain keys (broadcast path) or one agg over the drained
-    // cache (over-limit path, which also yields the drained count); skipped
-    // when the round drains the whole frontier anyway.
-    val fetchPages =
-      if (frontierSize <= cfg.roundSize || knownDrained.contains(0L)) pages
-      else drainBounds match {
-        case Some((lo, hi)) => pages.filter($"url" >= lo && $"url" <= hi)
-        case None =>
-          val (lo, hi, n) = timed("drain-bounds")(drained
-            .agg(min($"url"), max($"url"), count(lit(1)))
-            .as[(String, String, Long)].head())
-          knownDrained = Some(n)
-          if (n == 0L) pages.limit(0)
-          else pages.filter($"url" >= lo && $"url" <= hi)
-      }
-    val fetched = fetchJoin(drained.select($"url", $"depth"), fetchPages,
+    // — so push the range as a predicate (`drain.fetchPages`). With a
+    // url-clustered pages layout (sorted parquet row groups, or cached
+    // batches with column stats) the scan skips non-matching groups BEFORE
+    // html bytes are touched; a multi-round drain then reads each page's
+    // html ~once across the whole crawl instead of scanning the full table
+    // every round.
+    val fetched = fetchJoin(drain.rows.select($"url", $"depth"), drain.fetchPages,
       broadcastKeys = cfg.roundSize <= BroadcastDrainLimit)
       .as[(String, Int, Array[Byte])]
 
@@ -639,38 +688,45 @@ object CrawlEngine {
       .persist()
     val dedupedCands = dedupedWithDups.drop("dups").as[FrontierEntry]
 
-    // --- robots (C4): fetch rules for hosts FIRST SEEN this round from the
-    // pages source, then gate candidates via the (broadcastable) host join ---
-    // Host discovery aggregates the DEDUPED set: its url_hash dedup exchange
-    // is byte-identical to the probe branch's, so ReuseExchange materializes
-    // the shuffle once for both — the discovery branch costs one small host
-    // agg, not a second pass over the raw link volume. (The robots fetch
-    // joins by host, so no scheme needs reconstructing here.)
+    // --- robots (C4): parse rules for hosts FIRST SEEN this round from the
+    // run's one-row-per-host robots bodies, then gate candidates via the
+    // (broadcastable) host join ---
+    // Host discovery aggregates the DEDUPED set, which job 1 caches for the
+    // probe chain too, so the discovery branch costs one small host agg,
+    // not a second pass over the raw link volume. (The robots bodies are
+    // keyed by host, so no scheme needs reconstructing here.)
     val candHosts = dedupedCands.select($"host").distinct()
     val newHosts = candHosts.join(robots.select($"host"), Seq("host"), "left_anti")
-    // NO job barrier here: the robots fetch is a SUBPLAN of the probe-chain
-    // job (its result is persisted as a side effect of that job); the
-    // new-host count — needed only for the commit's delta-vs-carry decision —
-    // reads the cache afterwards
-    val robotsTallies = new PartitionTallies
-    spark.sparkContext.register(robotsTallies, s"r$roundNo-robots-tallies")
-    val robotsDelta: Dataset[RobotsEntry] =
-      tallied(fetchRobots(spark, newHosts, robotsSrc, cfg.userAgent),
-        robotsTallies)(_ => 0L)
-        // new-host count as a job-1 tally (same contract as the outputs
-        // tallies: computed at cache materialization, once)
-        .persist()
-    // persisted: every job this round that references the rules (probe
-    // chain, delay bookkeeping) plans against the tiny
-    // in-memory relation instead of re-planning the union+fetch subtree
-    val robotsAll = robots.union(robotsDelta).persist()
+    val robotsDelta = parseRobots(newHosts, robotsBodies, cfg.userAgent).persist()
+
+    // --- the round's ONE pre-commit job barrier. Any cached dataset
+    // first-touched by two concurrent branches of one job is silently
+    // COMPUTED TWICE (Spark's block store races, it does not block). Job 1
+    // materializes the scan-heavy prefix as ONE single-reference chain —
+    // drained (via the broadcast build) → fetch join → fused detect map →
+    // candidate dedup → new-host discovery → robots parse — by counting the
+    // END of the chain: building robotsDelta builds every persisted link
+    // upstream of it exactly once (each cache is referenced once within this
+    // plan), and its row count is the new-host count. The probe chain
+    // (newEntries) is left to run()'s seen-delta write, which materializes
+    // it and writes the delta in one job.
+    val nNewHosts = timed(spark, "detect-robots")(robotsDelta.count())
+    // job 1 has completed, so every partition of the drained / outputs /
+    // dedup caches has been fully consumed and its tally merged —
+    // accumulator updates land with the task-completion events the action
+    // waited on.
+    val (fetchedTotal, extractedTotal) = outputTallies.totals
+    val (nUnique, nRawCands) = dedupTallies.totals
+    val drainedByBucket = drain.byBucket()
+    // the round's full robots table: only a round that met new hosts changes it
+    val robotsAll = if (nNewHosts == 0) robots else robots.union(robotsDelta)
     val allowedCands = applyRobots(dedupedCands, robotsAll)
 
     // --- crawl-delay bookkeeping: hosts drained this round whose robots
     // Crawl-delay exceeds one round close their politeness window ---
     val delayDelta: Option[DataFrame] =
       if (!computeDelay) None
-      else Some(drained.select($"host").distinct()
+      else Some(drain.rows.select($"host").distinct()
         .join(robotsAll.filter($"crawl_delay_ms" > cfg.roundTimeMs).toDF()
           .select($"host", $"crawl_delay_ms"), Seq("host"))
         .select($"host", (lit(roundNo.toLong) +
@@ -728,69 +784,44 @@ object CrawlEngine {
       .join(seen, Seq("url_hash"), "left_anti")
       .select(feCols: _*)
       .as[FrontierEntry]
-    // new-url count rides the cache materialization as a partition tally:
-    // the caller's first action over newEntries (run()'s seen-delta write,
-    // or a bare count after a zero-new round) materializes the probe chain
+    // new-url counts per bucket ride the cache materialization as partition
+    // tallies: the caller's first action over newEntries (run()'s seen-delta
+    // write, or a bare count after a zero-new round) materializes the probe
+    // chain
     val newTallies = new PartitionTallies
     spark.sparkContext.register(newTallies, s"r$roundNo-new-tallies")
-    val newEntries = tallied(definiteNew.union(fpNew), newTallies)(_ => 0L)
+    val newEntries = tallied(definiteNew.union(fpNew), newTallies)(_ => 0L, _.bucket)
       .persist()
-
-    // --- the round's ONE pre-commit job barrier. Any cached dataset
-    // first-touched by two concurrent branches of one job is silently
-    // COMPUTED TWICE (Spark's block store races, it does not block). Job 1
-    // materializes the scan-heavy prefix as ONE single-reference chain —
-    // drained (via the broadcast build) → fetch join → fused detect map →
-    // candidate dedup → new-host discovery → robots fetch → robotsAll —
-    // by counting the END of the chain: building robotsAll builds every
-    // persisted link upstream of it exactly once (each cache is referenced
-    // once within this plan; fetchRobots left-joins its host set a single
-    // time). The probe chain (newEntries) is left to run()'s seen-delta
-    // write, which materializes it and writes the delta in one job.
-    timed("detect-robots")(robotsAll.count())
     if (debugTiming && sys.env.contains("GRAFT_DEBUG_PLAN") && roundNo <= 1)
       System.err.println(newEntries.queryExecution.executedPlan.toString)
-    // job 1 has completed, so every partition of the drained / outputs /
-    // dedup / robotsDelta caches has been fully consumed and its tally
-    // merged — accumulator updates land with the task-completion events the
-    // action waited on.
-    val (fetchedTotal, extractedTotal) = outputTallies.totals
-    val (nUnique, nRawCands) = dedupTallies.totals
-    val nNewHosts = robotsTallies.totals._1
-    val drainedTotal = knownDrained.getOrElse(drainedTallies.totals._1)
 
-    RoundResult(newEntries, drained, drainedKeys, robotsAll, robotsDelta,
+    RoundResult(newEntries, drain.undrained, drain.keys, robotsAll, robotsDelta,
       nNewHosts, delayDelta, outputs,
-      RoundStats(drainedTotal, fetchedTotal, extractedTotal, nRawCands, nUnique),
-      Seq(drained, outputs, dedupedWithDups, newEntries, robotsDelta, robotsAll),
-      newTallies, allowedTallies)
+      RoundStats(drainedByBucket.values.sum, fetchedTotal, extractedTotal,
+        nRawCands, nUnique),
+      drainedByBucket,
+      Seq(outputs, dedupedWithDups, newEntries, robotsDelta) ++ drain.cache,
+      drain.keySet.toSeq, newTallies, allowedTallies)
   }
 
   /** The round's lineage rows (A-9): the global counters (bucket -1) and one
-    * row of drained / new-url counts per bucket. Valid once `r.adds` has
-    * materialized — the new-url and robots-allowed counts are tallies inside
-    * that cache. The per-bucket rows aggregate the round's caches and are
-    * computed by the commit that writes them. `frontierSize` is the
-    * frontier the round drained from.
+    * row of drained / new-url counts per bucket, all from driver-side counts
+    * and tallies. Valid once `r.adds` has materialized — the new-url and
+    * robots-allowed counts are tallies inside that cache. `frontierSize` is
+    * the frontier the round drained from.
     */
-  private def lineageRows(spark: SparkSession, roundNo: Int, r: RoundResult,
-      frontierSize: Long): Dataset[LineageRow] = {
-    import spark.implicits._
+  private def lineageRows(roundNo: Int, r: RoundResult,
+      frontierSize: Long): Seq[LineageRow] = {
     val st = r.stats
     val allowed = r.allowedTallies.map(_.totals._1).sum
-    val global = Seq(LineageRow(roundNo, -1, st.drained, st.fetched, st.extracted,
+    val newByBucket = r.newTallies.rowsByGroup
+    // a bucket present on either side gets a row, zero on the other
+    (r.drainedByBucket.keySet ++ newByBucket.keySet).toSeq.sorted.map { b =>
+      LineageRow(roundNo, b, r.drainedByBucket.getOrElse(b, 0L), 0L, 0L, 0L, 0L, 0L,
+        newByBucket.getOrElse(b, 0L), 0L)
+    } :+ LineageRow(roundNo, -1, st.drained, st.fetched, st.extracted,
       st.candidates, st.unique - allowed, st.candidates - st.unique, r.newUrls,
-      frontierSize - st.drained)).toDS()
-    // one aggregation over both caches: a bucket present in either side
-    // gets a row, zero on the other
-    r.drained.select($"bucket", lit(1L).as("d"), lit(0L).as("n"))
-      .union(r.adds.select($"bucket", lit(0L).as("d"), lit(1L).as("n")))
-      .groupBy($"bucket").agg(sum($"d"), sum($"n"))
-      .as[(Int, Long, Long)]
-      .map { case (b, dr, nu) =>
-        LineageRow(roundNo, b, dr, 0L, 0L, 0L, 0L, 0L, nu, 0L)
-      }
-      .union(global)
+      frontierSize - st.drained)
   }
 
   /** Fold pending seen keys into the per-bucket cuckoo filters, growing any
@@ -859,44 +890,44 @@ object CrawlEngine {
     (out, blobBytes)
   }
 
-  /** Read seen-table delta dirs (full [[FrontierEntry]] rows, hive-
-    * partitioned by `bucket`) as `T`'s columns in `T`'s order: the partition
-    * column lands LAST on read, and Dataset union is positional. A dir list
-    * with zero data files (a bootstrap that admitted no seeds writes an
-    * empty partitioned table = no parquet footers) reads as an empty
-    * Dataset instead of failing schema inference.
+  /** One seen-table delta dir (full [[FrontierEntry]] rows, hive-
+    * partitioned by `bucket`) with a pinned schema: no footer inference, and
+    * an all-empty dir reads as an empty relation. A dir with zero data files
+    * (a bootstrap that admitted no seeds writes an empty partitioned table =
+    * no parquet footers) is None instead of failing schema inference.
     */
-  private def readSeen[T: org.apache.spark.sql.Encoder](spark: SparkSession,
-      dirs: Seq[String]): Dataset[T] = {
-    val schema = implicitly[org.apache.spark.sql.Encoder[T]].schema
-    val cols = schema.fieldNames.toSeq.map(n =>
+  private def seenDir(spark: SparkSession)(d: String): Option[DataFrame] =
+    try Some(spark.read.schema(frontierEnc.schema).parquet(d))
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getMessage.toLowerCase.contains("schema") => None
+    }
+
+  /** Read seen-table delta dirs, each opened by `open`, as `T`'s columns in
+    * `T`'s order: the partition column lands LAST on read, and Dataset union
+    * is positional. Only `T`'s columns are scanned.
+    */
+  private def readSeen[T: Encoder](spark: SparkSession, dirs: Seq[String],
+      open: String => Option[DataFrame]): Dataset[T] = {
+    val cols = implicitly[Encoder[T]].schema.fieldNames.toSeq.map(n =>
       if (n == "bucket") col(n).cast("int").as(n) else col(n))
     // one relation PER dir, then union: a zero-row delta commits a
     // root-level schema file while non-empty deltas commit bucket=N subdirs,
     // and multi-root partition discovery refuses that mix; per-dir reads
     // also keep bucket-pruning per relation (filters push through Union)
-    val dfs = dirs.flatMap { d =>
-      try {
-        // pinned schema: no footer inference, only `T`'s columns scanned,
-        // and an all-empty dir reads as an empty relation
-        Some(spark.read.schema(schema).parquet(d).select(cols: _*))
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.toLowerCase.contains("schema") => None
-      }
-    }
+    val dfs = dirs.flatMap(open).map(_.select(cols: _*))
     if (dfs.isEmpty) spark.emptyDataset[T]
     else dfs.reduce(_.union(_)).as[T]
   }
 
   /** The seen set's (bucket, url_hash) keys from seen-table delta dirs. */
   def readSeenDirs(spark: SparkSession, dirs: Seq[String]): Dataset[SeenEntry] =
-    readSeen(spark, dirs)(org.apache.spark.sql.Encoders.product[SeenEntry])
+    readSeen[SeenEntry](spark, dirs, seenDir(spark))
 
   /** The committed frontier: the seen table minus drained-key tombstones. */
   def readFrontier(spark: SparkSession, m: SnapshotStore.Manifest): Dataset[FrontierEntry] = {
     import spark.implicits._
-    readSeen[FrontierEntry](spark, SnapshotStore.dirsOf(m, "seen"))
+    readSeen[FrontierEntry](spark, SnapshotStore.dirsOf(m, "seen"), seenDir(spark))
       .join(SnapshotStore.read(spark, m, "frontier_rm", rmSchema), Seq("url_hash"),
         "left_anti")
       .select(feCols: _*)
@@ -1004,20 +1035,22 @@ object CrawlEngine {
     // from the seeds (so every later commit is uniform: append-only delta for
     // seen/frontier_rm/lineage/robots; filters rewritten only on fold rounds)
     // CrawlCounters.of is the format guard. It runs BEFORE anything is
-    // persisted: the guard's throw would otherwise leak the cached robotsSrc
-    // plan into the session, and the next run's persist of the same source
-    // then hits CacheManager's "already cached" WARN.
+    // persisted: the guard's throw would otherwise leak the cached robots
+    // bodies plan into the session, and the next run's persist of the same
+    // plan then hits CacheManager's "already cached" WARN.
     val existing = SnapshotStore.latestManifest(stateDir)
       .map(m => (m, CrawlCounters.of(m, stateDir)))
 
-    // robots source: only `*/robots.txt` rows can match the fetch join — the
-    // filter pushes to the scan, so a robots fetch never reads page html.
-    // PERSISTED for the whole run: the filtered relation is tiny (one row
-    // per host) but deriving it re-scans the pages source, and the robots
-    // fetch subplan runs every round — one scan per run, not per round.
-    val robotsSrc = pages
+    // robots source: only `*/robots.txt` rows can match a robots fetch —
+    // the filter pushes to the scan, so it never reads page html. Aggregated
+    // to one body per host and PERSISTED for the whole run: the table is
+    // tiny (one row per host) but deriving it re-scans the pages source and
+    // shuffles every body, so that happens once per run; the bootstrap and
+    // every round join only their new hosts against it and parse only their
+    // bodies.
+    val bodies = robotsBodies(pages
       .select(col("url"), col("html"))
-      .filter(col("url").endsWith("/robots.txt"))
+      .filter(col("url").endsWith("/robots.txt")))
       .persist()
     var (manifest, ctr) = existing
       .getOrElse {
@@ -1037,7 +1070,7 @@ object CrawlEngine {
         // robots for the seed hosts, fetched from the pages source; seeds are
         // gated like any candidate (scrapy filters start_urls at fetch time)
         val seedHosts = seedDeduped.select($"host").distinct()
-        val robots0 = fetchRobots(spark, seedHosts, robotsSrc, cfg.userAgent).persist()
+        val robots0 = parseRobots(seedHosts, bodies, cfg.userAgent).persist()
         val seedFrontier = applyRobots(seedDeduped, robots0).persist()
         val nSeeds = seedFrontier.count()
         val cap = cfg.filterCapacityPerBucket
@@ -1084,27 +1117,36 @@ object CrawlEngine {
     // fold. A 10^10-url frontier (~4 B/key of blobs) stays on the
     // co-partitioned cogroup path.
     var filtersBc: Option[Broadcast[Array[CuckooFilter]]] = None
-    // a dropped broadcast is RETIRED, not destroyed on the spot: the carried
-    // frontier's lazy plan (see `state` below) still references the probe
-    // expression built over it until the next round's first job
-    // materializes the carry — destroying eagerly fails that job with
-    // "Attempted to use Broadcast after it was destroyed"
-    var retiredFiltersBc: Seq[Broadcast[Array[CuckooFilter]]] = Nil
+    // a dropped broadcast (a folded-away filter set, a round's drained-key
+    // set) is RETIRED, not destroyed on the spot: the carried frontier's
+    // lazy plan (see `state` below) still references the expressions built
+    // over it until the next round's first job materializes the carry —
+    // destroying eagerly fails that job with "Attempted to use Broadcast
+    // after it was destroyed"
+    var retired: Seq[Broadcast[_]] = Nil
     def dropFiltersBc(): Unit = {
-      filtersBc.foreach(b => retiredFiltersBc :+= b)
+      filtersBc.foreach(b => retired :+= b)
       filtersBc = None
     }
     // zero-new steady-state detector for the count-first seen-delta path;
     // discovery-optimistic at start (and on resume) so the first round keeps
     // the one-barrier write-first shape
     var lastRoundHadNew = true
+    // committed seen dirs are immutable, so each is opened (listed) once
+    // per run, not once per round that reads it
+    val openedSeenDirs = mutable.HashMap.empty[String, Option[DataFrame]]
+    def readSeenKeys(dirs: Seq[String]): Dataset[SeenEntry] = readSeen[SeenEntry](spark,
+      dirs, d => openedSeenDirs.getOrElseUpdate(d, seenDir(spark)(d)))
     // seen-table round cache: when the committed seen dirs are UNCHANGED
     // from the previous round (zero-new steady state — a frontier draining
     // to exhaustion), the exact-backstop anti-join reads a persisted dataset
     // instead of re-reading the parquet dirs every round. Keyed by the
     // committed dir list, so any commit that adds a seen delta invalidates
-    // it; size-gated off (SeenCacheBudgetBytes, ~16 B/key) for frontiers
-    // whose seen set could not sit in block storage
+    // it, and built only the SECOND round a list is read: a discovering
+    // round's list is read by one job (its seen write), so caching it would
+    // cost a cache build no second job reads. Size-gated off
+    // (SeenCacheBudgetBytes, ~16 B/key) for frontiers whose seen set could
+    // not sit in block storage
     var seenCacheKey: Seq[String] = null
     var seenCacheDs: Dataset[SeenEntry] = null
     def dropSeenCache(): Unit = {
@@ -1114,11 +1156,9 @@ object CrawlEngine {
     def cachedSeen(dirs: Seq[String],
         fresh: => Dataset[SeenEntry]): Dataset[SeenEntry] = {
       if (ctr.seen * 16L > SeenCacheBudgetBytes) { dropSeenCache(); fresh }
-      else if (seenCacheKey == dirs && seenCacheDs != null) seenCacheDs
+      else if (seenCacheKey != dirs) { dropSeenCache(); seenCacheKey = dirs; fresh }
       else {
-        dropSeenCache()
-        seenCacheDs = fresh.persist()
-        seenCacheKey = dirs
+        if (seenCacheDs == null) seenCacheDs = fresh.persist()
         seenCacheDs
       }
     }
@@ -1149,8 +1189,8 @@ object CrawlEngine {
     def flushUnpersist(): Unit = {
       pendingUnpersist.foreach(_.unpersist())
       pendingUnpersist = Nil
-      retiredFiltersBc.foreach(_.destroy())
-      retiredFiltersBc = Nil
+      retired.foreach(_.destroy())
+      retired = Nil
     }
     // In-flight snapshot commit: the manifest OBJECT is known synchronously
     // (commitAsync), the parquet writes + atomic manifest rename complete in
@@ -1161,21 +1201,21 @@ object CrawlEngine {
     // ordering) and before run() returns.
     var pendingCommit: Option[scala.concurrent.Future[Unit]] = None
     def awaitCommit(): Unit = pendingCommit.foreach { f =>
-      timed("commit-await")(
+      timed(spark, "commit-await")(
         scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
       pendingCommit = None
     }
     var continue = true
     while (continue && roundNo < cfg.maxRounds && ctr.frontier_size > 0) {
       val (seen, pendingSeen, blockedHosts, delayActive, seenDirs) =
-        timed("read-state") {
+        timed(spark, "read-state") {
           if (state == null) state = readState(spark, manifest)
           val seenDirs = SnapshotStore.dirsOf(manifest, "seen")
-          val seen = cachedSeen(seenDirs, readSeenDirs(spark, seenDirs))
+          val seen = cachedSeen(seenDirs, readSeenKeys(seenDirs))
           val pendingDirs = seenDirs.drop(ctr.filters_folded_dirs.toInt)
           val pendingSeen =
             if (pendingDirs.isEmpty) None
-            else Some(readSeenDirs(spark, pendingDirs).toDF())
+            else Some(readSeenKeys(pendingDirs).toDF())
           val delayActive = ctr.max_delay_ms > cfg.roundTimeMs
           val blockedHosts: Option[DataFrame] =
             if (delayActive && ctr.delay_rows > 0)
@@ -1186,16 +1226,16 @@ object CrawlEngine {
       val CrawlState(frontier, robots, filters, delay) = state
       if (filtersBc.isEmpty && cfg.broadcastFilterLimitBytes > 0 &&
           ctr.filter_blob_bytes <= cfg.broadcastFilterLimitBytes)
-        timed("filters-bc") {
+        timed(spark, "filters-bc") {
           val rows = filters.collect()
           val n = rows.iterator.map(_.bucket + 1).foldLeft(cfg.numBuckets)(math.max)
           val arr = new Array[CuckooFilter](n)
           rows.foreach(fs => arr(fs.bucket) = CuckooFilter.fromBytes(fs.cuckoo_bytes))
           filtersBc = Some(spark.sparkContext.broadcast(arr))
         }
-      val r = timed("round-build")(round(spark, roundNo, frontier, ctr.frontier_size,
+      val r = timed(spark, "round-build")(round(spark, roundNo, frontier, ctr.frontier_size,
         seen, filters, pendingSeen, robots, blockedHosts, delayActive, pages,
-        robotsSrc, cfg, retainOutputs = collectOutputs, filtersBc = filtersBc))
+        bodies, cfg, retainOutputs = collectOutputs, filtersBc = filtersBc))
       val stats = r.stats
       // the previous round's commit ran CONCURRENTLY with this round's jobs
       // (its files are invisible to them — state is carried in memory);
@@ -1209,7 +1249,8 @@ object CrawlEngine {
         // everything left inside a crawl-delay window this is an idle round:
         // the logical clock ticks (no commit; deterministic on resume)
         // rather than the crawl ending with a non-empty frontier
-        r.caches.filterNot(_ eq frontier).foreach(_.unpersist())
+        r.caches.foreach(_.unpersist())
+        retired ++= r.broadcasts
         if (blockedHosts.isDefined) roundNo += 1 else continue = false
       }
       else {
@@ -1229,12 +1270,12 @@ object CrawlEngine {
         // actually appeared. One-round lag: a discovery burst after an idle
         // stretch pays one extra job barrier, then write-first resumes.
         val seenDir = SnapshotStore.deltaDirFor(stateDir, roundNo + 1, "seen")
-        def writeSeen(): Unit = timed("seen-write")(r.adds.toDF()
+        def writeSeen(): Unit = timed(spark, "seen-write")(r.adds.toDF()
           .repartition(col("bucket"))
           .write.mode("overwrite").partitionBy("bucket").parquet(seenDir))
         if (lastRoundHadNew) writeSeen()
         else {
-          timed("seen-count")(r.adds.count())
+          timed(spark, "seen-count")(r.adds.count())
           if (r.newUrls > 0) writeSeen()
         }
         val nNew = r.newUrls
@@ -1242,7 +1283,9 @@ object CrawlEngine {
         if (!newsThisRound)
           graft.util.TempDirs.deleteRecursively(java.nio.file.Paths.get(seenDir))
         lastRoundHadNew = newsThisRound
-        val lineage = lineageRows(spark, roundNo, r, ctr.frontier_size)
+        // a local relation of <= numBuckets + 1 rows: one partition, one file
+        val lineage = timed(spark, "lineage")(
+          spark.createDataset(lineageRows(roundNo, r, ctr.frontier_size)).toDF().coalesce(1))
         val seenAfter = ctr.seen + nNew
         val frontierAfter = ctr.frontier_size - stats.drained + nNew
         // filter fold policy: rewrite the blobs only when pending keys have
@@ -1257,7 +1300,7 @@ object CrawlEngine {
             val newKeys = r.adds.map(e => SeenEntry(e.bucket, e.url_hash))
             val pendingAll = pendingSeen
               .map(df => df.as[SeenEntry].union(newKeys)).getOrElse(newKeys)
-            val (f, fb) = timed("fold")(foldFilters(spark, filters, pendingAll,
+            val (f, fb) = timed(spark, "fold")(foldFilters(spark, filters, pendingAll,
               seen.union(newKeys), cfg.filterCapacityPerBucket))
             (Some(f), fb)
           }
@@ -1286,11 +1329,6 @@ object CrawlEngine {
             if (r.nNewHosts == 0) ctr.max_delay_ms
             else math.max(ctr.max_delay_ms, r.robotsDelta
               .agg(coalesce(max($"crawl_delay_ms"), lit(0L))).as[Long].head()))
-        // the next round's frontier: prev − drained ∪ adds — exactly what a
-        // read of the manifest committed below returns
-        val nextFrontier = frontier.join(r.drainedKeys, Seq("url_hash"), "left_anti")
-          .select(feCols: _*).as[FrontierEntry]
-          .union(r.adds)
         // The commit names only what this round writes: its tombstones and
         // lineage, its adds as the seen delta written above. Every other
         // table (filters between folds, host_next_ok without a delay delta,
@@ -1300,7 +1338,7 @@ object CrawlEngine {
         val tables = folded.map(f => "filters" -> f.toDF()).toMap ++
           delayTable.map(t => "host_next_ok" -> t._1) ++
           (if (collectOutputs) Map("outputs" -> r.outputs.drop("links", "link_hosts").toDF()) else Map.empty)
-        val deltas = Map("frontier_rm" -> r.drainedKeys, "lineage" -> lineage.toDF()) ++
+        val deltas = Map("frontier_rm" -> r.drainedKeys, "lineage" -> lineage) ++
           (if (r.nNewHosts > 0) Map("robots" -> r.robotsDelta.toDF()) else Map.empty)
         // ASYNC commit: the manifest object is known up front (every data
         // dir path is deterministic), so the writes + atomic rename proceed
@@ -1308,7 +1346,7 @@ object CrawlEngine {
         // reads none of these files (frontier/robots/filters/delay carried
         // in memory; the seen delta was written synchronously above).
         // Awaited right after the next round's jobs complete.
-        val (m2, commitDone) = timed("commit")(SnapshotStore.commitAsync(
+        val (m2, commitDone) = timed(spark, "commit")(SnapshotStore.commitAsync(
           stateDir, roundNo + 1, tables, next.toMap,
           prev = Some(manifest.copy(dataDirs = manifest.dataDirs - "outputs")),
           deltas = deltas,
@@ -1318,23 +1356,33 @@ object CrawlEngine {
         ctr = next
         // the committed blobs changed — next round re-collects them
         if (doFold) dropFiltersBc()
-        // the next round's state, carried in memory. Every changed table is
-        // cut with localCheckpoint(lazy), NOT persist: the frontier's adds
-        // leg embeds the whole round pipeline and its anti-join leg the
-        // previous carried plan, and robots is referenced TWICE per round
-        // (prev ∪ delta AND the new-host anti-join), so a carried raw plan
-        // doubles every round — analysis cost explodes by round ~4 (persist
-        // caches rows, it never truncates plans). The lazy checkpoint cuts
-        // the plan to a LogicalRDD at no extra job: the next round's first
-        // action materializes it, same as a cache would.
-        state = CrawlState(
-          nextFrontier.localCheckpoint(false),
-          r.robotsAll.localCheckpoint(false),
+        // the next round's state, carried in memory. The frontier is
+        // prev − drained ∪ adds, exactly what a read of the manifest
+        // committed above returns. Every changed table is cut with
+        // localCheckpoint(lazy), NOT persist: the frontier's adds leg embeds
+        // the whole round pipeline and its undrained leg the previous carried
+        // plan, and robots is referenced TWICE per round (prev ∪ delta AND
+        // the new-host anti-join), so a carried raw plan doubles every round
+        // — analysis cost explodes by round ~4 (persist caches rows, it never
+        // truncates plans; carrying one round's adds as an uncut union
+        // measured ~0.8 s of planning before one action in round 2, ~2.0 s in
+        // round 3). The cut runs no job: every leg is narrow over caches the
+        // round materialized, so the next round's first action materializes
+        // it, same as a cache would. A union keeps every partition of both
+        // legs, so the carried frontier and robots are coalesced (narrow) to
+        // one partition per core — their partition counts, and the tasks of
+        // every job that scans them, stay flat in the round number.
+        val carried = spark.sparkContext.defaultParallelism
+        state = timed(spark, "carry-cut")(CrawlState(
+          r.undrained.union(r.adds).coalesce(carried).localCheckpoint(false),
+          if (r.nNewHosts == 0) robots
+          else r.robotsAll.coalesce(carried).localCheckpoint(false),
           folded.map(_.localCheckpoint(false)).getOrElse(filters),
-          delayTable.map(_._1.localCheckpoint(false)).orElse(delay))
+          delayTable.map(_._1.localCheckpoint(false)).orElse(delay)))
         // deferred: the carried plans read these caches until their own
         // caches materialize (next round's first jobs)
-        pendingUnpersist = frontier +: r.caches.filterNot(_ eq frontier)
+        pendingUnpersist = frontier +: r.caches
+        retired ++= r.broadcasts
         folded.foreach { f => pendingUnpersist ++= filtersSrc; filtersSrc = Some(f) }
         delayTable.foreach { t => pendingUnpersist ++= delaySrc; delaySrc = Some(t._1) }
         roundNo += 1
@@ -1346,7 +1394,7 @@ object CrawlEngine {
       (Seq(s.frontier, s.robots, s.filters) ++ s.delay).foreach(_.unpersist())
     }
     (filtersSrc ++ delaySrc).foreach(_.unpersist())
-    robotsSrc.unpersist()
+    bodies.unpersist()
     dropFiltersBc()
     flushUnpersist() // destroy the just-retired broadcast: nothing references it now
     dropSeenCache()

@@ -144,8 +144,15 @@ object SnapshotStore {
       tables.keys.map(name => name -> dirFor(name)) ++
       (deltas.keys ++ preWritten).map(name => name -> appended(name))
     val m = Manifest(version, dataDirs, counters)
-    val writes = (tables.toSeq ++ deltas.toSeq)
-      .map { case (name, df) => Future(write(name, df)) }
+    // each write's jobs are labelled with the table they commit (the job
+    // description), also clearing any label the pool thread inherited
+    val writes = (tables.toSeq ++ deltas.toSeq).map { case (name, df) =>
+      Future {
+        val sc = df.sparkSession.sparkContext
+        sc.setJobDescription(s"commit $name")
+        try write(name, df) finally sc.setJobDescription(null)
+      }
+    }
     val done = Future.sequence(writes).map { _ => writeManifest(tableDir, m) }
     (m, done)
   }

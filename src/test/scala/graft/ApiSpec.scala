@@ -30,7 +30,7 @@ class ApiSpec extends AnyFunSuite {
 
   test("request store: submit, newest-first paging, get by id") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-req-").toString
+    val dir = graft.util.TempDirs.create("graft-req-").toString
     val t1 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     val t2 = java.sql.Timestamp.valueOf("2026-01-02 00:00:00")
     RequestStore.submit(spark, dir, Seq(page(0, 0), page(0, 1)).toDS(), t1)
@@ -50,7 +50,7 @@ class ApiSpec extends AnyFunSuite {
 
   test("PUT update-by-id: last-writer-wins round-trip (request.py:90-97)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-req-put-").toString
+    val dir = graft.util.TempDirs.create("graft-req-put-").toString
     val t1 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     RequestStore.submit(spark, dir, Seq(page(0, 0), page(0, 1)).toDS(), t1)
     val id = RequestStore.list(spark, dir, 0, 1).collect().head.getAs[String]("id")
@@ -77,7 +77,7 @@ class ApiSpec extends AnyFunSuite {
 
   test("request doc carries the full reference field set (request.py:26-40)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-req-parity-").toString
+    val dir = graft.util.TempDirs.create("graft-req-parity-").toString
     val t = java.sql.Timestamp.valueOf("2026-01-03 00:00:00")
     RequestStore.submit(spark, dir, Seq(page(0, 0)).toDS(), t)
     val d = RequestStore.list(spark, dir, 0, 1)
@@ -103,7 +103,7 @@ class ApiSpec extends AnyFunSuite {
 
   test("node annotations: by selector and by id (node.py:12-17)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-req-nodes-").toString
+    val dir = graft.util.TempDirs.create("graft-req-nodes-").toString
     val t = java.sql.Timestamp.valueOf("2026-01-04 00:00:00")
     RequestStore.submit(spark, dir, Seq(page(0, 0)).toDS(), t)
     val reqId = RequestStore.list(spark, dir, 0, 1).collect().head.getAs[String]("id")
@@ -123,7 +123,7 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("S4: binaryFile html source feeds the detect pipeline") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-htmlfiles-")
+    val dir = graft.util.TempDirs.create("graft-htmlfiles-")
     for (k <- 0 until 3)
       java.nio.file.Files.writeString(dir.resolve(s"p$k.html"),
         SyntheticWeb.pageHtml(0, k, 10, 4))
@@ -195,7 +195,7 @@ class ApiSpec extends AnyFunSuite {
   test("streaming: watermarked hourly aggregation matches the batch query") {
     val dir = "/root/testdata/sf0.001"
     // file-source streaming needs a directory; the testdata table is a file
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-events-")
+    val streamDir = graft.util.TempDirs.create("graft-events-")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val stream = EventStream.readEvents(spark, streamDir.toString)
@@ -211,7 +211,7 @@ class ApiSpec extends AnyFunSuite {
 
   test("streaming: detect map over a page firehose equals the batch path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pagestream-").toString
+    val dir = graft.util.TempDirs.create("graft-pagestream-").toString
     SyntheticWeb.pagesFast(spark, 12, 4, 4).toDF()
       .write.parquet(s"$dir/pages")
     val streamed = EventStream.runToMemory(
@@ -237,7 +237,7 @@ class ApiSpec extends AnyFunSuite {
       // > 30 min gap -> new session
       EventStream.Event(3, java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 1, "a", 3.0),
       EventStream.Event(4, java.sql.Timestamp.valueOf("2024-01-01 00:05:00"), 2, "b", 4.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-").toString
+    val dir = graft.util.TempDirs.create("graft-stream-").toString
     events.toDS().coalesce(1).write.parquet(s"$dir/events")
     val stream = spark.readStream
       .schema(events.toDS().schema).parquet(s"$dir/events").as[EventStream.Event]

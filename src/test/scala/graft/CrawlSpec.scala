@@ -173,7 +173,7 @@ class CrawlSpec extends AnyFunSuite {
     // on the broadcast and cogroup paths
     val lineageByConfig = mutable.LinkedHashMap.empty[String, Seq[org.apache.spark.sql.Row]]
     for ((label, fcfg) <- configs) {
-      val stateDir = java.nio.file.Files.createTempDirectory(s"graft-crawlspec-$label-").toString
+      val stateDir = graft.util.TempDirs.create(s"graft-crawlspec-$label-").toString
       val stats = CrawlEngine.run(spark, withRules(pages, robots),
         SyntheticWeb.seedUrls(nHosts).toDS(), fcfg, stateDir)
 
@@ -285,7 +285,7 @@ class CrawlSpec extends AnyFunSuite {
     import spark.implicits._
     val pages = SyntheticWeb.pagesFast(spark, nPages, nHosts, 4)
       .union(SyntheticWeb.robotsPages(spark, nHosts)).toDF().cache()
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-robotspages-").toString
+    val stateDir = graft.util.TempDirs.create("graft-robotspages-").toString
     // NEW api: no rules parameter anywhere — the engine fetches
     // https://host/robots.txt rows from the pages table itself
     val stats = CrawlEngine.run(spark, pages,
@@ -310,7 +310,7 @@ class CrawlSpec extends AnyFunSuite {
     assert(!engineSeen.contains(UrlOps.fnv1a64("https://host0.example/private/area0")),
       "other hosts' /private stays blocked")
     // a host with no robots.txt row gets the allow-all negative-cache entry
-    val stateDir2 = java.nio.file.Files.createTempDirectory("graft-norobots-").toString
+    val stateDir2 = graft.util.TempDirs.create("graft-norobots-").toString
     CrawlEngine.run(spark, SyntheticWeb.pagesFast(spark, nPages, nHosts, 4).toDF(),
       spark.createDataset(SyntheticWeb.seedUrls(nHosts)), cfg.copy(maxRounds = 2), stateDir2)
     val rt2 = SnapshotStore.read(spark,
@@ -321,7 +321,7 @@ class CrawlSpec extends AnyFunSuite {
   test("C5: crawl-delay closes a host's window for ceil(D/roundTime) rounds") {
     import spark.implicits._
     val pages = pagesCached
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-delay-").toString
+    val stateDir = graft.util.TempDirs.create("graft-delay-").toString
     CrawlEngine.run(spark, withRules(pages, delayedRobots),
       SyntheticWeb.seedUrls(nHosts).toDS(), cfg, stateDir)
     val m = SnapshotStore.latestManifest(stateDir).get
@@ -352,7 +352,7 @@ class CrawlSpec extends AnyFunSuite {
 
   test("legacy (pre-delta-format) snapshots are rejected loudly, not resumed as empty") {
     import spark.implicits._
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-legacy-").toString
+    val stateDir = graft.util.TempDirs.create("graft-legacy-").toString
     // fabricate a round-1-format manifest: full `frontier` table dir, no
     // frontier_size counter
     val df = Seq(("https://host0.example/page/0", 1L)).toDF("url", "url_hash")
@@ -367,7 +367,7 @@ class CrawlSpec extends AnyFunSuite {
       "filter_blob_bytes" -> 0L)
     val deltaDirs = Seq("frontier_rm", "seen", "robots", "filters", "lineage")
     def manifest(name: String, tables: Seq[String], counters: Map[String, Long]) = {
-      val d = java.nio.file.Files.createTempDirectory(s"graft-legacy-$name-").toString
+      val d = graft.util.TempDirs.create(s"graft-legacy-$name-").toString
       SnapshotStore.writeManifest(d, SnapshotStore.Manifest(0,
         tables.map(t => t -> s"$d/data/v0/$t").toMap, counters))
       d
@@ -395,7 +395,7 @@ class CrawlSpec extends AnyFunSuite {
     val pages = pagesCached
 
     // full run
-    val fullDir = java.nio.file.Files.createTempDirectory("graft-full-").toString
+    val fullDir = graft.util.TempDirs.create("graft-full-").toString
     val fullStats = CrawlEngine.run(spark, withRules(pages, robots),
       SyntheticWeb.seedUrls(nHosts).toDS(), cfg, fullDir)
 
@@ -406,7 +406,7 @@ class CrawlSpec extends AnyFunSuite {
     val lastNew = fullLineage.filter(_.getAs[Long]("new_urls") > 0)
       .map(_.getAs[Int]("round")).max
     assert(lastNew >= 1, s"need a discovering round after round 0: $fullLineage")
-    val partDir = java.nio.file.Files.createTempDirectory("graft-part-").toString
+    val partDir = graft.util.TempDirs.create("graft-part-").toString
     CrawlEngine.run(spark, withRules(pages, robots),
       SyntheticWeb.seedUrls(nHosts).toDS(), cfg.copy(maxRounds = lastNew + 1), partDir)
     // simulate crash: a torn uncommitted write must be invisible. Dropping
@@ -446,7 +446,7 @@ class CrawlSpec extends AnyFunSuite {
         .map(UrlOps.canonicalize)
     }).distinct.filter(!_.endsWith("/robots.txt"))
     val drainCfg = cfg.copy(roundSize = 8, hostBudgetPerRound = 100, maxRounds = 16)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-drain-").toString
+    val stateDir = graft.util.TempDirs.create("graft-drain-").toString
     val stats = CrawlEngine.run(spark, withRules(pages, robots),
       allUrls.toDS(), drainCfg, stateDir)
     assert(stats.fetched > 0)
@@ -466,12 +466,12 @@ class CrawlSpec extends AnyFunSuite {
   test("P14: test-mode skips seed urls containing 'example'") {
     import spark.implicits._
     val pages = SyntheticWeb.pagesFast(spark, nPages, nHosts, 4).toDF()
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-testmode-").toString
+    val stateDir = graft.util.TempDirs.create("graft-testmode-").toString
     val stats = CrawlEngine.run(spark, withRules(pages, robots),
       SyntheticWeb.seedUrls(nHosts).toDS(), cfg.copy(isTest = true), stateDir)
     assert(stats.fetched == 0 && stats.seenSize == 0, "all example seeds skipped")
     // non-example seeds survive test mode (and simply fetch nothing here)
-    val stateDir2 = java.nio.file.Files.createTempDirectory("graft-testmode2-").toString
+    val stateDir2 = graft.util.TempDirs.create("graft-testmode2-").toString
     val stats2 = CrawlEngine.run(spark, withRules(pages, robots),
       Seq("https://real.site/page/0").toDS(), cfg.copy(isTest = true), stateDir2)
     assert(stats2.seenSize == 1)
@@ -637,7 +637,7 @@ class CrawlSpec extends AnyFunSuite {
   test("robots filter blocks disallowed prefixes") {
     import spark.implicits._
     val pages = pagesCached
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-robots-").toString
+    val stateDir = graft.util.TempDirs.create("graft-robots-").toString
     CrawlEngine.run(spark, withRules(pages, robots),
       SyntheticWeb.seedUrls(nHosts).toDS(), cfg, stateDir)
     val m = SnapshotStore.latestManifest(stateDir).get
@@ -684,6 +684,136 @@ class CrawlSpec extends AnyFunSuite {
     bc.destroy()
   }
 
+  test("KeyIn expression matches a key-set lookup, negated too") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(11)
+    val keys = Seq.fill(500)(rnd.nextLong())
+    val drawn = keys.filter(_ => rnd.nextBoolean()).toSet
+    for (set <- Seq(drawn, Set.empty[Long])) {
+      val sorted = set.toArray
+      java.util.Arrays.sort(sorted)
+      val bc = spark.sparkContext.broadcast(sorted)
+      val in = graft.functions.KeySetFunctions.key_in(bc, col("url_hash"))
+      val df = keys.toDF("url_hash")
+      assert(df.filter(in).as[Long].collect().toSet == set)
+      assert(df.filter(!in).as[Long].collect().toSet == keys.toSet -- set)
+      bc.destroy()
+    }
+  }
+
+  /** Task counts per SQL execution of each job description (the engine's
+    * phase label), in execution order: one entry per action of that phase.
+    */
+  private final class PhaseTasks extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler._
+    private val stageOf = mutable.Map.empty[Int, (String, Long)]
+    private val tasks = mutable.LinkedHashMap.empty[(String, Long), Int]
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val p = Option(e.properties)
+      val phase = p.flatMap(q => Option(q.getProperty("spark.job.description"))).getOrElse("")
+      val exec = p.flatMap(q => Option(q.getProperty("spark.sql.execution.root.id"))
+        .orElse(Option(q.getProperty("spark.sql.execution.id")))).map(_.toLong).getOrElse(-1L)
+      e.stageIds.foreach(s => stageOf(s) = (phase, exec))
+      tasks.getOrElseUpdate((phase, exec), 0)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      stageOf.get(e.stageInfo.stageId).foreach(k => tasks(k) += e.stageInfo.numTasks)
+    }
+    def of(phase: String): Seq[Int] = synchronized {
+      tasks.toSeq.collect { case ((p, _), n) if p == phase => n }
+    }
+  }
+
+  /** SQL executions whose plan computes (rather than reads from a cache
+    * built earlier) the aggregation of the robots source to one body per
+    * host. A cached plan built by an earlier execution shows as an
+    * AdaptiveSparkPlan with isFinalPlan=true in a later execution's plan.
+    */
+  private final class RobotsAggregations extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    @volatile var count = 0
+    private def computes(n: SparkPlanInfo, built: Boolean): Boolean = {
+      val b = built || (n.nodeName == "AdaptiveSparkPlan" &&
+        n.simpleString.contains("isFinalPlan=true"))
+      (!b && n.nodeName.contains("Aggregate") &&
+        n.simpleString.contains("max(struct(url")) ||
+        n.children.exists(computes(_, b))
+    }
+    override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart if computes(s.sparkPlanInfo, built = false) =>
+        count += 1
+      case _ =>
+    }
+  }
+
+  /** Run `f` with `l` registered; returns once `l` has seen every event
+    * posted before `f` returned (a marker job's start is delivered after
+    * them).
+    */
+  private def listening[A](l: org.apache.spark.scheduler.SparkListener)(f: => A): A = {
+    val sc = spark.sparkContext
+    @volatile var marked = false
+    val marker = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "listener-sync"))
+          marked = true
+    }
+    sc.addSparkListener(l)
+    sc.addSparkListener(marker)
+    try {
+      val r = f
+      sc.setJobDescription("listener-sync")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marked, "listener events not delivered")
+      r
+    } finally {
+      sc.removeSparkListener(marker)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("round cost stays flat in the round number: drain-keys and job 1 tasks") {
+    import spark.implicits._
+    // one url per host per round keeps the crawl discovering for >= 12 rounds
+    val lenCfg = cfg.copy(roundSize = 4, hostBudgetPerRound = 1, maxRounds = 14)
+    val phases = new PhaseTasks
+    val stateDir = graft.util.TempDirs.create("graft-length-").toString
+    val stats = listening(phases)(CrawlEngine.run(spark, withRules(pagesCached, robots),
+      SyntheticWeb.seedUrls(nHosts).toDS(), lenCfg, stateDir))
+    assert(stats.rounds >= 12, s"want a >= 12-round crawl, got ${stats.rounds}")
+    assert(globalLineage(stateDir).count(_.getAs[Long]("new_urls") > 0) >= 6,
+      "want a crawl that keeps discovering")
+    // the carried frontier and robots tables are bounded at the carry cut,
+    // so the jobs that scan them launch as many tasks in the last round as
+    // early on, up to a constant. Job 1 skips its candidate stages in a
+    // round whose drain fetched no page, so its baseline is the largest of
+    // rounds 0-2
+    val grown = Seq("drain-keys" -> Seq(2), "detect-robots" -> Seq(0, 1, 2)).flatMap {
+      case (phase, early) =>
+        val perRound = phases.of(phase)
+        info(s"[$phase] tasks per round: $perRound")
+        assert(perRound.length >= 12, s"[$phase] one execution per round: $perRound")
+        if (perRound.last <= early.map(perRound).max + 4) None
+        else Some(s"[$phase] tasks grow with the round number: $perRound")
+    }
+    assert(grown.isEmpty, grown.mkString("; "))
+  }
+
+  test("a multi-round crawl aggregates the robots source once per run") {
+    import spark.implicits._
+    val aggs = new RobotsAggregations
+    val stateDir = graft.util.TempDirs.create("graft-robots-once-").toString
+    val stats = listening(aggs)(CrawlEngine.run(spark, withRules(pagesCached, robots),
+      SyntheticWeb.seedUrls(nHosts).toDS(), cfg, stateDir))
+    assert(stats.rounds >= 3)
+    assert(aggs.count == 1, s"robots source aggregated ${aggs.count} times in " +
+      s"${stats.rounds} rounds and a bootstrap")
+  }
+
   // last in the suite: it clears the session's cache, the suite's cached
   // pages table included
   test("a crawl releases every table it persists (eager fold, crawl-delay)") {
@@ -696,7 +826,7 @@ class CrawlSpec extends AnyFunSuite {
       ("eager-fold", robots, cfg.copy(foldMinKeys = 1, foldFrac = 0.0)),
       ("crawl-delay", delayedRobots, cfg))
     for ((label, rules, ccfg) <- crawls) {
-      val stateDir = java.nio.file.Files.createTempDirectory(s"graft-release-$label-").toString
+      val stateDir = graft.util.TempDirs.create(s"graft-release-$label-").toString
       CrawlEngine.run(spark, withRules(pages, rules),
         SyntheticWeb.seedUrls(nHosts).toDS(), ccfg, stateDir)
       assert(spark.sharedState.cacheManager.isEmpty, s"[$label] crawl left tables cached")

@@ -24,7 +24,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
+  def tempDir(prefix: String): String = graft.util.TempDirs.create(prefix).toString
 
   def ints(m: Manifest, name: String): Seq[Int] = {
     import spark.implicits._

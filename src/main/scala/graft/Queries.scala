@@ -243,8 +243,8 @@ object Queries {
     * `element_at(ts, i+2)`, and when `ts` is the raw `split(...)` EXPRESSION
     * rather than a materialized column, codegen re-runs the regex split of
     * the whole document for every element access — a hidden per-doc
-    * quadratic measured at ~9x the entire minhash agg (tools/DedupProf:
-    * explode 8.3 s unbound vs 0.65 s bound on sf0.1).
+    * quadratic measured at ~9x the entire minhash agg (the shingle explode
+    * alone: 8.3 s unbound vs 0.65 s bound on sf0.1).
     */
   private def shinglesRel(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")

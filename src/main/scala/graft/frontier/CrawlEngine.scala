@@ -174,10 +174,6 @@ private[frontier] final class PartitionTallies
   */
 object CrawlEngine {
 
-  // budget for the seen-table round cache in run() (~16 B/key): a 10^10-key
-  // seen set never qualifies
-  private val SeenCacheBudgetBytes = 4L << 30
-
   // the drained round is always <= roundSize small rows vs a huge pages
   // table: up to this many keys it is broadcast, so the fetch join never
   // shuffles html bytes. Above it the join shuffles the keys against a
@@ -273,6 +269,28 @@ object CrawlEngine {
   private def feCols = Seq("url", "url_hash", "host", "host_hash", "bucket",
     "priority", "depth", "discovered_round").map(col)
 
+  /** The admission dedup of the bootstrap's seeds and of every round's
+    * candidates: one row per url, min depth wins (deterministic), stamped
+    * `discovered_round`, with the group's raw multiplicity in a
+    * trailing `dups` column.
+    *
+    * Every FrontierEntry field except depth is a pure function of the url
+    * (entryOf), so rows sharing a url_hash are identical up to depth — the
+    * url-derived fields can all sit in the GROUP KEY and the aggregation
+    * buffer stays numeric-only (min(depth), count). That keeps the dedup a
+    * codegen'd HashAggregate with map-side partial combine; an equivalent
+    * min over a struct of (depth, url, ...) carries strings in the agg
+    * buffer and Spark demotes it to SortAggregate — two extra full sorts of
+    * the raw link volume per round (measured in the bench stage profile).
+    */
+  private def dedup(entries: Dataset[FrontierEntry], discoveredRound: Int): DataFrame =
+    entries.toDF()
+      .groupBy(col("url_hash"), col("url"), col("host"), col("host_hash"), col("bucket"))
+      .agg(min(col("depth")).as("depth"), count(lit(1)).as("dups"))
+      .select(col("url"), col("url_hash"), col("host"), col("host_hash"), col("bucket"),
+        (-col("depth")).as("priority"), col("depth"),
+        lit(discoveredRound).as("discovered_round"), col("dups"))
+
   // pinned schemas for state-table reads: the engine re-opens these every
   // round, and schema inference would pay a driver-side footer read per open
   private val filterSchema = filterEnc.schema
@@ -323,6 +341,11 @@ object CrawlEngine {
           RobotsEntry(host, r.allow_prefixes, r.disallow_prefixes, r.crawl_delay_ms)
         }
       }
+
+  /** The largest crawl-delay among `robots` rows (0 for none). */
+  private def maxDelayMs(robots: Dataset[RobotsEntry]): Long =
+    robots.agg(coalesce(max(col("crawl_delay_ms")), lit(0L)))
+      .as(Encoders.scalaLong).head()
 
   /** Fetch + parse robots.txt for the given hosts FROM THE PAGES TABLE
     * itself (C4 as crawled data — the reference fetches robots live per
@@ -433,7 +456,7 @@ object CrawlEngine {
       broadcasts: Seq[Broadcast[_]],
       // tallies inside the `adds` cache: no round() job materializes it, so
       // they are valid only after the caller's first action over `adds`
-      // (run()'s seen-delta write or count)
+      // (run()'s seen-delta write)
       newTallies: PartitionTallies,
       allowedTallies: Seq[PartitionTallies]) {
     def newUrls: Long = newTallies.totals._1
@@ -660,28 +683,14 @@ object CrawlEngine {
         .map { case (c, h) => entryOf(c, h, d, rn1, nb) }
     }.filter(e => allowedHosts.isEmpty || allowedHosts.contains(e.host))
 
-    // --- in-round dedup (min depth wins — deterministic) ---
-    // Every FrontierEntry field except depth is a pure function of the url
-    // (entryOf), so rows sharing a url_hash are identical up to depth — the
-    // url-derived fields can all sit in the GROUP KEY and the aggregation
-    // buffer stays numeric-only (min(depth), count). That keeps the dedup a
-    // codegen'd HashAggregate with map-side partial combine; an equivalent
-    // min(struct(depth, url, ...)) carries strings in the agg buffer and
-    // Spark demotes it to SortAggregate — two extra full sorts of the raw
-    // link volume per round (measured in the bench stage profile).
+    // --- in-round dedup ([[dedup]]) ---
     // Dedup runs BEFORE the robots gate so the robots host-join sees the
-    // smaller unique-url set.
-    // `dups` carries each group's raw multiplicity; a tally inside the
-    // cache reads (unique, raw) candidate counts off the deduped set during
-    // job 1, without a second pass.
+    // smaller unique-url set. A tally inside the cache reads (unique, raw)
+    // candidate counts off the deduped set during job 1, without a second
+    // pass.
     val dedupTallies = new PartitionTallies
     spark.sparkContext.register(dedupTallies, s"r$roundNo-dedup-tallies")
-    val dedupedDf = rawCands.toDF()
-      .groupBy($"url_hash", $"url", $"host", $"host_hash", $"bucket")
-      .agg(min($"depth").as("depth"), count(lit(1)).as("dups"))
-      .select($"url", $"url_hash", $"host", $"host_hash", $"bucket",
-        (-$"depth").as("priority"), $"depth",
-        lit(rn1).as("discovered_round"), $"dups")
+    val dedupedDf = dedup(rawCands, rn1)
     val dupsIdx = dedupedDf.schema.fieldIndex("dups")
     val dedupedWithDups = tallied(dedupedDf, dedupTallies)(_.getLong(dupsIdx))(
       org.apache.spark.sql.Encoders.row(dedupedDf.schema))
@@ -786,14 +795,11 @@ object CrawlEngine {
       .as[FrontierEntry]
     // new-url counts per bucket ride the cache materialization as partition
     // tallies: the caller's first action over newEntries (run()'s seen-delta
-    // write, or a bare count after a zero-new round) materializes the probe
-    // chain
+    // write) materializes the probe chain
     val newTallies = new PartitionTallies
     spark.sparkContext.register(newTallies, s"r$roundNo-new-tallies")
     val newEntries = tallied(definiteNew.union(fpNew), newTallies)(_ => 0L, _.bucket)
       .persist()
-    if (debugTiming && sys.env.contains("GRAFT_DEBUG_PLAN") && roundNo <= 1)
-      System.err.println(newEntries.queryExecution.executedPlan.toString)
 
     RoundResult(newEntries, drain.undrained, drain.keys, robotsAll, robotsDelta,
       nNewHosts, delayDelta, outputs,
@@ -827,7 +833,10 @@ object CrawlEngine {
   /** Fold pending seen keys into the per-bucket cuckoo filters, growing any
     * bucket that would exceed the load limit by REBUILDING it at 2x capacity
     * from the exact seen table (CuckooFilter.rebuild — keys are re-derivable,
-    * so the filter never degrades into its exact stash). Returns the full
+    * so the filter never degrades into its exact stash). A bucket with no
+    * filter yet is created at max(initialCapacity, 2 x its keys), so the
+    * bootstrap — a fold over an empty filters table — sizes each filter for
+    * its seed volume and never takes the rebuild pass. Returns the full
     * rewritten filters table; amortized write cost is O(1) per key because
     * folds trigger proportionally to the seen size and rebuilds double.
     *
@@ -850,7 +859,7 @@ object CrawlEngine {
       .cogroup(filters.groupByKey(_.bucket)) { (b, ns, fs) =>
         val keys = ns.map(_.url_hash).toArray
         val filt = fs.nextOption().map(f => CuckooFilter.fromBytes(f.cuckoo_bytes))
-          .getOrElse(CuckooFilter.create(cap))
+          .getOrElse(CuckooFilter.create(math.max(cap, 2L * keys.length)))
         if (keys.isEmpty && filt.size == 0) Iterator.empty
         else if (filt.hasRoomFor(keys.length)) {
           keys.foreach(filt.add)
@@ -867,9 +876,9 @@ object CrawlEngine {
       else {
         val sizesBc = spark.sparkContext.broadcast(rebuildSizes)
         // COLUMN predicate, not a closure: the seen table is laid out
-        // partitioned by bucket (SnapshotStore partitionCols), so the IN
-        // list prunes at file listing — a rebuild reads only the overfull
-        // buckets' files, O(bucket) not O(seen) (round-3 verdict #2)
+        // partitioned by bucket ([[writeSeen]]), so the IN list prunes at
+        // file listing — a rebuild reads only the overfull buckets' files,
+        // O(bucket) not O(seen) (round-3 verdict #2)
         val rebuilt = seenAll
           .where(col("bucket").isin(rebuildSizes.keySet.toSeq: _*))
           .groupByKey(_.bucket)
@@ -890,44 +899,49 @@ object CrawlEngine {
     (out, blobBytes)
   }
 
-  /** One seen-table delta dir (full [[FrontierEntry]] rows, hive-
-    * partitioned by `bucket`) with a pinned schema: no footer inference, and
-    * an all-empty dir reads as an empty relation. A dir with zero data files
-    * (a bootstrap that admitted no seeds writes an empty partitioned table =
-    * no parquet footers) is None instead of failing schema inference.
+  /** Write one seen-table delta to `dir`: the bootstrap's admitted seeds,
+    * a round's new frontier entries (FrontierScale writes its synthetic
+    * table the same way). The layout is hive-partitioned by `bucket`, so a
+    * cuckoo rebuild's `bucket IN (...)` predicate prunes at file listing;
+    * the repartition lands each bucket as one file instead of
+    * nTasks x nBuckets fragments. A zero-row delta writes no data file.
     */
-  private def seenDir(spark: SparkSession)(d: String): Option[DataFrame] =
-    try Some(spark.read.schema(frontierEnc.schema).parquet(d))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.toLowerCase.contains("schema") => None
-    }
+  private[graft] def writeSeen(delta: DataFrame, dir: String): Unit =
+    delta.repartition(col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+
+  /** One seen-table delta dir with a pinned schema: no footer inference, and
+    * a dir with no data file (a bootstrap that admitted no seed) reads as an
+    * empty relation.
+    */
+  private def openSeen(spark: SparkSession)(d: String): DataFrame =
+    spark.read.schema(frontierEnc.schema).parquet(d)
 
   /** Read seen-table delta dirs, each opened by `open`, as `T`'s columns in
     * `T`'s order: the partition column lands LAST on read, and Dataset union
     * is positional. Only `T`'s columns are scanned.
     */
   private def readSeen[T: Encoder](spark: SparkSession, dirs: Seq[String],
-      open: String => Option[DataFrame]): Dataset[T] = {
+      open: String => DataFrame): Dataset[T] = {
     val cols = implicitly[Encoder[T]].schema.fieldNames.toSeq.map(n =>
       if (n == "bucket") col(n).cast("int").as(n) else col(n))
-    // one relation PER dir, then union: a zero-row delta commits a
-    // root-level schema file while non-empty deltas commit bucket=N subdirs,
-    // and multi-root partition discovery refuses that mix; per-dir reads
-    // also keep bucket-pruning per relation (filters push through Union)
-    val dfs = dirs.flatMap(open).map(_.select(cols: _*))
+    // one relation PER dir, then union: Spark refuses one read over two
+    // bucket-partitioned roots (CONFLICTING_DIRECTORY_STRUCTURES); per-dir
+    // reads also keep bucket-pruning per relation (filters push through
+    // Union)
+    val dfs = dirs.map(open).map(_.select(cols: _*))
     if (dfs.isEmpty) spark.emptyDataset[T]
     else dfs.reduce(_.union(_)).as[T]
   }
 
   /** The seen set's (bucket, url_hash) keys from seen-table delta dirs. */
   def readSeenDirs(spark: SparkSession, dirs: Seq[String]): Dataset[SeenEntry] =
-    readSeen[SeenEntry](spark, dirs, seenDir(spark))
+    readSeen[SeenEntry](spark, dirs, openSeen(spark))
 
   /** The committed frontier: the seen table minus drained-key tombstones. */
   def readFrontier(spark: SparkSession, m: SnapshotStore.Manifest): Dataset[FrontierEntry] = {
     import spark.implicits._
-    readSeen[FrontierEntry](spark, SnapshotStore.dirsOf(m, "seen"), seenDir(spark))
+    readSeen[FrontierEntry](spark, SnapshotStore.dirsOf(m, "seen"), openSeen(spark))
       .join(SnapshotStore.read(spark, m, "frontier_rm", rmSchema), Seq("url_hash"),
         "left_anti")
       .select(feCols: _*)
@@ -1058,55 +1072,37 @@ object CrawlEngine {
         val nb = cfg.numBuckets
         val effSeeds =
           if (cfg.isTest) seeds.filter(u => !u.contains("example")) else seeds
-        // distributed dedup: same min-(depth,url) hash-agg as in-round dedup
-        val seedDeduped = effSeeds.map(u => entry(u, 0, 0, nb)).toDF()
-          .groupBy($"url_hash")
-          .agg(min(struct($"depth", $"url", $"host", $"host_hash", $"bucket",
-            $"priority", $"discovered_round")).as("e"))
-          .select($"e.url", $"url_hash", $"e.host", $"e.host_hash", $"e.bucket",
-            $"e.priority", $"e.depth", $"e.discovered_round")
-          .as[FrontierEntry]
-          .persist()
-        // robots for the seed hosts, fetched from the pages source; seeds are
-        // gated like any candidate (scrapy filters start_urls at fetch time)
-        val seedHosts = seedDeduped.select($"host").distinct()
-        val robots0 = parseRobots(seedHosts, bodies, cfg.userAgent).persist()
-        val seedFrontier = applyRobots(seedDeduped, robots0).persist()
-        val nSeeds = seedFrontier.count()
-        val cap = cfg.filterCapacityPerBucket
-        // size each bucket's filter for its actual seed volume (2x headroom),
-        // never below the configured floor — a 10M-seed bootstrap must not
-        // overflow a fixed 2^16 capacity into the exact stash
-        val filters0 = seedFrontier.groupByKey(_.bucket).mapGroups { (b, es) =>
-          val keys = es.map(_.url_hash).toArray
-          val f = CuckooFilter.rebuild(keys.iterator,
-            math.max(cap, 2L * keys.length))
-          FilterState(b, f.toBytes, f.size)
-        }.persist()
-        // exact serialized size of the blobs (one tiny agg, bootstrap-only):
-        // seeds the filter_blob_bytes counter so the broadcast-probe gate
-        // works from actual bytes even on the never-folding lazy path
-        val filterBytes0 = filters0.toDF()
-          .agg(coalesce(sum(length(col("cuckoo_bytes"))), lit(0L)))
-          .as[Long].head()
-        val maxDelay0 = robots0
-          .agg(coalesce(max($"crawl_delay_ms"), lit(0L))).as[Long].head()
+        // the seeds are admitted like a round's candidates: the round's
+        // dedup, robots-gated (scrapy filters start_urls at fetch time), the
+        // round's seen writer, the round's filter fold
+        val seedDeduped = dedup(effSeeds.map(u => entry(u, 0, 0, nb)), 0)
+          .drop("dups").as[FrontierEntry].persist()
+        val robots0 = parseRobots(seedDeduped.select($"host").distinct(), bodies,
+          cfg.userAgent).persist()
+        val seedTallies = new PartitionTallies
+        spark.sparkContext.register(seedTallies, "seed-tallies")
+        val seedFrontier =
+          tallied(applyRobots(seedDeduped, robots0), seedTallies)(_ => 0L).persist()
+        // the admitted seeds are the seen table's first delta (the frontier's
+        // add history starts with them); the write materializes the caches
+        // and its tally counts them
+        timed(spark, "seen-write")(
+          writeSeen(seedFrontier.toDF(), SnapshotStore.deltaDirFor(stateDir, 0, "seen")))
+        val nSeeds = seedTallies.totals._1
+        val seedKeys = seedFrontier.map(e => SeenEntry(e.bucket, e.url_hash))
+        val (filters0, filterBytes0) = timed(spark, "fold")(foldFilters(spark,
+          spark.emptyDataset[FilterState], seedKeys, seedKeys, cfg.filterCapacityPerBucket))
         val c0 = CrawlCounters(round = -1, fetched = 0, extracted = 0,
           seen = nSeeds, frontier_size = nSeeds, filters_folded_dirs = 1,
           pending_keys = 0, delay_rows = 0, filter_blob_bytes = filterBytes0,
-          max_delay_ms = maxDelay0)
-        // the admitted seeds are written once, as the seen table's first
-        // delta: the frontier's add history starts with them
+          max_delay_ms = maxDelayMs(robots0))
         val m = SnapshotStore.commit(stateDir, 0,
           Map("filters" -> filters0.toDF(),
             "frontier_rm" -> spark.emptyDataset[SeenEntry].toDF().select($"url_hash"),
-            "seen" -> seedFrontier.toDF(),
             "robots" -> robots0.toDF(),
             "lineage" -> spark.emptyDataset[LineageRow].toDF()),
-          c0.toMap,
-          partitionCols = Map("seen" -> Seq("bucket")))
-        seedDeduped.unpersist(); seedFrontier.unpersist(); robots0.unpersist()
-        filters0.unpersist()
+          c0.toMap, preWritten = Set("seen"))
+        Seq(seedDeduped, seedFrontier, robots0, filters0).foreach(_.unpersist())
         (m, c0)
       }
     var roundNo = ctr.round.toInt + 1
@@ -1128,40 +1124,11 @@ object CrawlEngine {
       filtersBc.foreach(b => retired :+= b)
       filtersBc = None
     }
-    // zero-new steady-state detector for the count-first seen-delta path;
-    // discovery-optimistic at start (and on resume) so the first round keeps
-    // the one-barrier write-first shape
-    var lastRoundHadNew = true
     // committed seen dirs are immutable, so each is opened (listed) once
     // per run, not once per round that reads it
-    val openedSeenDirs = mutable.HashMap.empty[String, Option[DataFrame]]
+    val openedSeenDirs = mutable.HashMap.empty[String, DataFrame]
     def readSeenKeys(dirs: Seq[String]): Dataset[SeenEntry] = readSeen[SeenEntry](spark,
-      dirs, d => openedSeenDirs.getOrElseUpdate(d, seenDir(spark)(d)))
-    // seen-table round cache: when the committed seen dirs are UNCHANGED
-    // from the previous round (zero-new steady state — a frontier draining
-    // to exhaustion), the exact-backstop anti-join reads a persisted dataset
-    // instead of re-reading the parquet dirs every round. Keyed by the
-    // committed dir list, so any commit that adds a seen delta invalidates
-    // it, and built only the SECOND round a list is read: a discovering
-    // round's list is read by one job (its seen write), so caching it would
-    // cost a cache build no second job reads. Size-gated off
-    // (SeenCacheBudgetBytes, ~16 B/key) for frontiers whose seen set could
-    // not sit in block storage
-    var seenCacheKey: Seq[String] = null
-    var seenCacheDs: Dataset[SeenEntry] = null
-    def dropSeenCache(): Unit = {
-      if (seenCacheDs != null) seenCacheDs.unpersist()
-      seenCacheDs = null; seenCacheKey = null
-    }
-    def cachedSeen(dirs: Seq[String],
-        fresh: => Dataset[SeenEntry]): Dataset[SeenEntry] = {
-      if (ctr.seen * 16L > SeenCacheBudgetBytes) { dropSeenCache(); fresh }
-      else if (seenCacheKey != dirs) { dropSeenCache(); seenCacheKey = dirs; fresh }
-      else {
-        if (seenCacheDs == null) seenCacheDs = fresh.persist()
-        seenCacheDs
-      }
-    }
+      dirs, d => openedSeenDirs.getOrElseUpdate(d, openSeen(spark)(d)))
     // One state path: the first round that runs (fresh or resumed) reads
     // frontier, robots, filters and host_next_ok from the manifest; every
     // later round takes them from the round before, in memory — frontier
@@ -1173,7 +1140,7 @@ object CrawlEngine {
     // CONCURRENTLY with it (see commitAsync). Read lazily: a run that runs
     // no round (a maxRounds = 0 bootstrap) lists no state files. The seen
     // table is the exception — a 10^10-key seen set cannot be carried, so
-    // it is read from parquet every round (cachedSeen above).
+    // it is read from parquet every round.
     var state: CrawlState = null
     // persisted tables the carried filters / host_next_ok checkpoints are
     // cut from. A checkpoint may first materialize rounds later (the
@@ -1211,7 +1178,7 @@ object CrawlEngine {
         timed(spark, "read-state") {
           if (state == null) state = readState(spark, manifest)
           val seenDirs = SnapshotStore.dirsOf(manifest, "seen")
-          val seen = cachedSeen(seenDirs, readSeenKeys(seenDirs))
+          val seen = readSeenKeys(seenDirs)
           val pendingDirs = seenDirs.drop(ctr.filters_folded_dirs.toInt)
           val pendingSeen =
             if (pendingDirs.isEmpty) None
@@ -1255,34 +1222,19 @@ object CrawlEngine {
       }
       else {
         // The seen delta — the round's new frontier entries, written nowhere
-        // else — is written (or counted) HERE, synchronously: it is the
-        // first action over the round's probe chain, so it materializes the
-        // newEntries cache, and the tallies inside that cache then carry
-        // the new-url and robots-allowed counts — write + count in ONE job
-        // barrier. The dir is the one commit() would have used; it is
-        // recorded via `preWritten`, or deleted again when the round
+        // else — is written HERE, synchronously, as the round's count
+        // barrier: it is the first action over the round's probe chain, so it
+        // materializes the newEntries cache, and the tallies inside that
+        // cache then carry the new-url and robots-allowed counts — write +
+        // count in ONE job. The dir is the one commit() would have used; it
+        // is recorded via `preWritten`, or deleted again when the round
         // discovered nothing (zero-row deltas are carried, not written).
-        // EXCEPT in the zero-new steady state (the previous round found
-        // nothing): a frontier draining to exhaustion would pay a full
-        // dynamic-partition parquet commit EVERY round just to learn the
-        // count is zero — there, materialize the cache with a bare count and
-        // write the delta (from the now-cached rows, cheap) only when keys
-        // actually appeared. One-round lag: a discovery burst after an idle
-        // stretch pays one extra job barrier, then write-first resumes.
-        val seenDir = SnapshotStore.deltaDirFor(stateDir, roundNo + 1, "seen")
-        def writeSeen(): Unit = timed(spark, "seen-write")(r.adds.toDF()
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(seenDir))
-        if (lastRoundHadNew) writeSeen()
-        else {
-          timed(spark, "seen-count")(r.adds.count())
-          if (r.newUrls > 0) writeSeen()
-        }
+        val seenDelta = SnapshotStore.deltaDirFor(stateDir, roundNo + 1, "seen")
+        timed(spark, "seen-write")(writeSeen(r.adds.toDF(), seenDelta))
         val nNew = r.newUrls
         val newsThisRound = nNew > 0
         if (!newsThisRound)
-          graft.util.TempDirs.deleteRecursively(java.nio.file.Paths.get(seenDir))
-        lastRoundHadNew = newsThisRound
+          graft.util.TempDirs.deleteRecursively(java.nio.file.Paths.get(seenDelta))
         // a local relation of <= numBuckets + 1 rows: one partition, one file
         val lineage = timed(spark, "lineage")(
           spark.createDataset(lineageRows(roundNo, r, ctr.frontier_size)).toDF().coalesce(1))
@@ -1327,8 +1279,7 @@ object CrawlEngine {
           filter_blob_bytes = blobBytes,
           max_delay_ms =
             if (r.nNewHosts == 0) ctr.max_delay_ms
-            else math.max(ctr.max_delay_ms, r.robotsDelta
-              .agg(coalesce(max($"crawl_delay_ms"), lit(0L))).as[Long].head()))
+            else math.max(ctr.max_delay_ms, maxDelayMs(r.robotsDelta)))
         // The commit names only what this round writes: its tombstones and
         // lineage, its adds as the seen delta written above. Every other
         // table (filters between folds, host_next_ok without a delay delta,
@@ -1397,7 +1348,6 @@ object CrawlEngine {
     bodies.unpersist()
     dropFiltersBc()
     flushUnpersist() // destroy the just-retired broadcast: nothing references it now
-    dropSeenCache()
     // counter-tracked (the exact table is the union of committed deltas; the
     // counter avoids an extra count job per run)
     CrawlStats(roundNo, ctr.fetched, ctr.extracted, ctr.seen)

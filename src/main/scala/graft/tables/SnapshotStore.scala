@@ -84,22 +84,16 @@ object SnapshotStore {
     * A table's new dir is `data/v{N}/{name}` under `tableDir`. The per-table
     * writes are independent jobs, launched concurrently so the Spark
     * scheduler overlaps them (matters for per-round wall time).
-    * `partitionCols`: tables/deltas written with a hive-style partition
-    * layout (e.g. the seen table partitioned by `bucket`, so a cuckoo
-    * rebuild's `bucket IN (...)` predicate prunes at file listing); the
-    * write repartitions by those columns first so each one lands as one
-    * file per partition value instead of nTasks x nValues fragments.
     */
   def commit(tableDir: String, version: Int, tables: Map[String, DataFrame],
       counters: Map[String, Long],
       prev: Option[Manifest] = None,
       deltas: Map[String, DataFrame] = Map.empty,
-      preWritten: Set[String] = Set.empty,
-      partitionCols: Map[String, Seq[String]] = Map.empty): Manifest = {
+      preWritten: Set[String] = Set.empty): Manifest = {
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     val (m, done) = commitAsync(tableDir, version, tables, counters, prev,
-      deltas, preWritten, partitionCols)
+      deltas, preWritten)
     Await.result(done, Duration.Inf)
     m
   }
@@ -119,24 +113,15 @@ object SnapshotStore {
       counters: Map[String, Long],
       prev: Option[Manifest] = None,
       deltas: Map[String, DataFrame] = Map.empty,
-      preWritten: Set[String] = Set.empty,
-      partitionCols: Map[String, Seq[String]] = Map.empty)
+      preWritten: Set[String] = Set.empty)
       : (Manifest, scala.concurrent.Future[Unit]) = {
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    import org.apache.spark.sql.functions.col
     def dirFor(name: String): String = {
       val dir = deltaDirFor(tableDir, version, name)
       require(!dir.contains(';'), s"data dir $dir contains ';', the dir-list separator")
       dir
     }
-    def write(name: String, df: DataFrame): Unit =
-      partitionCols.get(name) match {
-        case Some(cols) =>
-          df.repartition(cols.map(col): _*).write.mode("overwrite")
-            .partitionBy(cols: _*).parquet(dirFor(name))
-        case None => df.write.mode("overwrite").parquet(dirFor(name))
-      }
     val carried = prev.map(_.dataDirs).getOrElse(Map.empty)
     def appended(name: String): String =
       (carried.get(name).toSeq :+ dirFor(name)).mkString(";")
@@ -150,7 +135,8 @@ object SnapshotStore {
       Future {
         val sc = df.sparkSession.sparkContext
         sc.setJobDescription(s"commit $name")
-        try write(name, df) finally sc.setJobDescription(null)
+        try df.write.mode("overwrite").parquet(dirFor(name))
+        finally sc.setJobDescription(null)
       }
     }
     val done = Future.sequence(writes).map { _ => writeManifest(tableDir, m) }

@@ -246,13 +246,19 @@ class CrawlSpec extends AnyFunSuite {
       val filters = SnapshotStore.read(spark, m, "filters").as[FilterState].collect()
       val restored = filters.map(f => f.bucket -> CuckooFilter.fromBytes(f.cuckoo_bytes)).toMap
       val lazyFold = label.endsWith("lazy")
-      if (!lazyFold) {
-        // all folds applied each round: every seen key must be IN the filter
-        val seenRows = CrawlEngine.readSeenDirs(spark,
-            SnapshotStore.dirsOf(m, "seen")).collect()
-        assert(seenRows.forall(s => restored(s.bucket).contains(s.url_hash)),
-          s"[$label] folded filter lost a seen key")
-      }
+      // every key of the seen dirs the filters reflect (the bootstrap's on
+      // the lazy configs; all of them on the eager ones, which fold every
+      // discovering round) is IN the committed filter, and the blob-byte
+      // counter is the committed blobs' exact size
+      val seenDirs = SnapshotStore.dirsOf(m, "seen")
+      val foldedDirs = seenDirs.take(m.counters("filters_folded_dirs").toInt)
+      if (!lazyFold) assert(foldedDirs == seenDirs, s"[$label] unfolded seen dirs")
+      val seenRows = CrawlEngine.readSeenDirs(spark, foldedDirs).collect()
+      assert(seenRows.nonEmpty &&
+          seenRows.forall(s => restored(s.bucket).contains(s.url_hash)),
+        s"[$label] filter lost a folded seen key")
+      assert(filters.map(_.cuckoo_bytes.length.toLong).sum ==
+          m.counters("filter_blob_bytes"), s"[$label] filter_blob_bytes counter")
       restored.values.foreach { f =>
         assert(f.size.toDouble / f.capacity <= CuckooFilter.LoadLimit + 1e-9,
           s"[$label] filter over load limit")
@@ -434,7 +440,7 @@ class CrawlSpec extends AnyFunSuite {
     assert(globalLineage(partDir) == fullLineage)
   }
 
-  test("drain-to-exhaustion writes no empty seen deltas (count-first steady state)") {
+  test("drain-to-exhaustion writes no empty seen deltas") {
     import spark.implicits._
     val pages = pagesCached
     // seed every page PLUS every extractable link, so each round's
@@ -470,6 +476,11 @@ class CrawlSpec extends AnyFunSuite {
     val stats = CrawlEngine.run(spark, withRules(pages, robots),
       SyntheticWeb.seedUrls(nHosts).toDS(), cfg.copy(isTest = true), stateDir)
     assert(stats.fetched == 0 && stats.seenSize == 0, "all example seeds skipped")
+    // the seen delta of a bootstrap that admitted no seed holds no data
+    // file, and reads as empty
+    val v0 = SnapshotStore.readManifest(stateDir, 0)
+    assert(CrawlEngine.readFrontier(spark, v0).count() == 0 &&
+      CrawlEngine.readSeenDirs(spark, SnapshotStore.dirsOf(v0, "seen")).count() == 0)
     // non-example seeds survive test mode (and simply fetch nothing here)
     val stateDir2 = graft.util.TempDirs.create("graft-testmode2-").toString
     val stats2 = CrawlEngine.run(spark, withRules(pages, robots),

@@ -492,6 +492,8 @@ object Bench {
            |same job, same input (synthetic Common-Crawl-style pages,
            |seed=42, $benchPages pages, $nHosts hosts, Zipf host skew), at two
            |parallelism levels — the sandbox proxy for N vs 4N executors.
+           |Every level keeps the seen set and the cuckoo filters in
+           |${graft.frontier.CrawlConfig().numBuckets} buckets (`CrawlConfig`'s default).
            |
            || parallelism | URLs/sec (one maximal round) | URLs/sec (2 rounds) | URLs/sec (8 rounds) |
            ||---|---|---|---|

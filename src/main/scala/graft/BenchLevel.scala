@@ -69,6 +69,9 @@ final class BenchLevel(cpus: Int, nPages: Int, nHosts: Int) {
     (nPages / sec, stats.extractedRows)
   }
 
+  /** The one-round config of this level's timed crawls (after `setup()`). */
+  private[graft] def single: CrawlConfig = input.single
+
   /** ONE maximal round — the drain+extract kernel. Returns (urls/sec, extracted). */
   def runSingle(): (Double, Long) = timedRun(input.single)
 
@@ -126,7 +129,8 @@ object BenchLevel {
     // enough that one round still drains the whole frontier — the metric
     // measures drain+extract, not multi-round scheduling latency
     val hostMax = (1 until (nHosts + 1)).map(h => cuts(h) - cuts(h - 1)).max.toInt
-    new Input(pages, seeds, CrawlConfig(numBuckets = cpus,
+    // the seen and filter layout is CrawlConfig's default at every level
+    new Input(pages, seeds, CrawlConfig(
       hostBudgetPerRound = hostMax, roundSize = nPages, maxRounds = 1))
   }
 }

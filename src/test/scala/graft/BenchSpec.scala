@@ -190,6 +190,8 @@ class BenchSpec extends AnyFunSuite {
   test("BenchLevel measures a tiny level in-process") {
     val lvl = new BenchLevel(cpus = 4, nPages = 2000, nHosts = 4)
     lvl.setup() // pays the 2,000-page JIT warm crawl too
+    // every level shares the default seen and filter layout
+    assert(lvl.single.numBuckets == graft.frontier.CrawlConfig().numBuckets)
     val (thr, rows) = lvl.runSingle()
     assert(thr > 0.0)
     assert(rows > 0L)

@@ -143,6 +143,32 @@ class CrawlSpec extends AnyFunSuite {
       .filter(org.apache.spark.sql.functions.col("bucket") === -1)
       .collect().toSeq.sortBy(_.getAs[Int]("round"))
 
+  /** Every seen dir of `m` is flat (no `bucket=` subdirectory), and each of
+    * its parquet files stores a `bucket` column with rows sorted by
+    * (bucket, url_hash).
+    */
+  def assertFlatSortedSeen(m: SnapshotStore.Manifest, label: String = ""): Unit = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, input_file_name, monotonically_increasing_id}
+    val dirs = SnapshotStore.dirsOf(m, "seen")
+    dirs.foreach { d =>
+      val hive = Option(new java.io.File(d).list()).toSeq.flatten.filter(_.startsWith("bucket="))
+      assert(hive.isEmpty, s"$label seen dir $d holds $hive")
+    }
+    // a file's rows are read in order, and ids grow along each read task;
+    // a file without a bucket column reads nulls, which fail the decode
+    val rows = spark.read
+      .schema(org.apache.spark.sql.Encoders.product[graft.frontier.FrontierEntry].schema)
+      .parquet(dirs: _*)
+      .select(input_file_name().as("file"), monotonically_increasing_id().as("pos"),
+        col("bucket"), col("url_hash"))
+      .as[(String, Long, Int, Long)].collect()
+    rows.groupBy(_._1).foreach { case (file, rs) =>
+      val keys = rs.sortBy(_._2).map(r => (r._3, r._4)).toSeq
+      assert(keys == keys.sorted, s"$label $file is not sorted by (bucket, url_hash)")
+    }
+  }
+
   test("spark crawl matches the simulator's URL-seen set and drain ordering" +
       " under every filter-fold config") {
     import spark.implicits._
@@ -184,6 +210,7 @@ class CrawlSpec extends AnyFunSuite {
         .select("url_hash").as[Long].collect().toSet
       assert(engineSeen == simSeenHashes,
         s"[$label] seen mismatch: engine=${engineSeen.size} sim=${simSeenHashes.size}")
+      assertFlatSortedSeen(m, s"[$label]")
 
       // per-round drain ordering: outputs snapshot per round records fetched urls
       for (r <- simFetchedPerRound.indices) {
@@ -303,6 +330,7 @@ class CrawlSpec extends AnyFunSuite {
       .select("url_hash").as[Long].collect().toSet
     assert(engineSeen == simSeen.map(UrlOps.fnv1a64))
     assert(stats.rounds == simDrains.size)
+    assertFlatSortedSeen(m)
     // the robots table persisted the PARSED rules (including host2's Allow)
     import graft.frontier.RobotsEntry
     val rt = SnapshotStore.read(spark, m, "robots").as[RobotsEntry].collect()
@@ -354,6 +382,7 @@ class CrawlSpec extends AnyFunSuite {
         SnapshotStore.dirsOf(m, "seen"))
       .select("url_hash").as[Long].collect().toSet
     assert(engineSeen == simSeen.map(UrlOps.fnv1a64))
+    assertFlatSortedSeen(m)
   }
 
   test("legacy (pre-delta-format) snapshots are rejected loudly, not resumed as empty") {
@@ -379,9 +408,14 @@ class CrawlSpec extends AnyFunSuite {
       d
     }
     // the layout that kept the frontier's adds apart from a key-only seen
-    // table: every counter present, one frontier_adds table too many
+    // table (every counter present, one frontier_adds table too many), and
+    // the layout that hive-partitioned each seen delta by bucket
+    val hive = manifest("hive", deltaDirs, allCounters)
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(hive, "data", "v0", "seen", "bucket=0"))
     val cases = (stateDir -> "pre-delta tables") +:
       (manifest("adds", deltaDirs :+ "frontier_adds", allCounters) -> "frontier_adds") +:
+      (hive -> "hive-partitioned seen dirs") +:
       allCounters.keys.toSeq.sorted.map { missing =>
         manifest(s"no-$missing", deltaDirs, allCounters - missing) -> s"no $missing counter"
       }
@@ -437,6 +471,7 @@ class CrawlSpec extends AnyFunSuite {
         SnapshotStore.latestManifest(partDir).get, "seen"))
       .select("url_hash").as[Long].collect().toSet
     assert(fullSeen == resumedSeen)
+    assertFlatSortedSeen(SnapshotStore.latestManifest(partDir).get)
     assert(globalLineage(partDir) == fullLineage)
   }
 
@@ -467,6 +502,7 @@ class CrawlSpec extends AnyFunSuite {
     val expected = allUrls.map(UrlOps.canonicalize).distinct
       .filter(ruleAllows(rules, _)).map(UrlOps.fnv1a64).toSet
     assert(seen == expected)
+    assertFlatSortedSeen(m)
   }
 
   test("P14: test-mode skips seed urls containing 'example'") {
@@ -481,6 +517,7 @@ class CrawlSpec extends AnyFunSuite {
     val v0 = SnapshotStore.readManifest(stateDir, 0)
     assert(CrawlEngine.readFrontier(spark, v0).count() == 0 &&
       CrawlEngine.readSeenDirs(spark, SnapshotStore.dirsOf(v0, "seen")).count() == 0)
+    assertFlatSortedSeen(v0)
     // non-example seeds survive test mode (and simply fetch nothing here)
     val stateDir2 = graft.util.TempDirs.create("graft-testmode2-").toString
     val stats2 = CrawlEngine.run(spark, withRules(pages, robots),
@@ -787,7 +824,7 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
-  test("round cost stays flat in the round number: drain-keys and job 1 tasks") {
+  test("round cost stays flat in the round number: drain-keys, job 1 and seen-write tasks") {
     import spark.implicits._
     // one url per host per round keeps the crawl discovering for >= 12 rounds
     val lenCfg = cfg.copy(roundSize = 4, hostBudgetPerRound = 1, maxRounds = 14)
@@ -799,11 +836,21 @@ class CrawlSpec extends AnyFunSuite {
     assert(globalLineage(stateDir).count(_.getAs[Long]("new_urls") > 0) >= 6,
       "want a crawl that keeps discovering")
     // the carried frontier and robots tables are bounded at the carry cut,
-    // so the jobs that scan them launch as many tasks in the last round as
-    // early on, up to a constant. Job 1 skips its candidate stages in a
-    // round whose drain fetched no page, so its baseline is the largest of
-    // rounds 0-2
-    val grown = Seq("drain-keys" -> Seq(2), "detect-robots" -> Seq(0, 1, 2)).flatMap {
+    // and the seen deltas read as one relation whose files pack into a
+    // bounded number of splits, so the jobs that scan them launch as many
+    // tasks in the last round as early on, up to a constant. Job 1 skips its
+    // candidate stages in a round whose drain fetched no page, so its
+    // baseline is the largest of rounds 0-2. The seen write runs the exact
+    // backstop and the pending-seen anti-join, which scan the seen deltas
+    // only in a round with candidates, and pending deltas exist only after
+    // round 0: its baseline is the larger of the first two such rounds
+    // (execution round + 1: the first is the bootstrap's)
+    val probing = globalLineage(stateDir)
+      .filter(r => r.getAs[Int]("round") >= 1 && r.getAs[Long]("candidates") > 0)
+      .map(_.getAs[Int]("round") + 1).take(2)
+    assert(probing.length == 2, "want two rounds after round 0 with candidates")
+    val grown = Seq("drain-keys" -> Seq(2), "detect-robots" -> Seq(0, 1, 2),
+        "seen-write" -> probing).flatMap {
       case (phase, early) =>
         val perRound = phases.of(phase)
         info(s"[$phase] tasks per round: $perRound")
@@ -812,6 +859,7 @@ class CrawlSpec extends AnyFunSuite {
         else Some(s"[$phase] tasks grow with the round number: $perRound")
     }
     assert(grown.isEmpty, grown.mkString("; "))
+    assertFlatSortedSeen(SnapshotStore.latestManifest(stateDir).get)
   }
 
   test("a multi-round crawl aggregates the robots source once per run") {

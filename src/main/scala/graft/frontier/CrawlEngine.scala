@@ -76,14 +76,21 @@ final case class CrawlConfig(
     // the stash stays empty at any seen-set size).
     foldMinKeys: Long = 4096,
     foldFrac: Double = 0.2,
-    // seen-probe strategy: when the committed filter blobs (the manifest's
-    // exact `filter_blob_bytes`) fit under this budget they are collected
-    // once per fold epoch and BROADCAST, and the probe becomes a codegen'd
-    // per-row lookup fused into the candidate chain — no bucket exchange, no
-    // typed cogroup sort per consumer. Above it (10^10-url frontiers: ~4
-    // B/key of blobs) the probe stays the co-partitioned cogroup where each
-    // task holds only its bucket's blob. 0 forces the cogroup path everywhere.
-    broadcastFilterLimitBytes: Long = 256L << 20,
+    // the one budget of every broadcast-or-distribute switch
+    // (CrawlEngine.fitsBroadcast), each judged on a size the engine knows:
+    //   - probe: the committed filter blobs (the manifest's exact
+    //     `filter_blob_bytes`) are collected once per fold epoch and
+    //     BROADCAST, and the probe is a codegen'd per-row lookup fused into
+    //     the candidate chain. Above it (10^10-url frontiers: ~4 B/key of
+    //     blobs) the probe is the co-partitioned cogroup, where each task
+    //     holds only its bucket's blob.
+    //   - drain and fetch join: min(roundSize, frontier_size) drained keys
+    //     at DrainKeyBytes each are collected and broadcast, and no html
+    //     crosses a shuffle. Above it the keys stay distributed, and the
+    //     fetch join is a sort-merge join that needs a url-bucketed pages
+    //     table (PagesTable.writeBucketed; run() checks the layout).
+    // 0 forces every distributed branch.
+    broadcastLimitBytes: Long = 256L << 20,
     // logical duration of one fetch-schedule round: a host with robots
     // Crawl-delay D is re-drained no sooner than ceil(D / roundTimeMs)
     // rounds after its last drain (C5 host_next_ok state; within a round,
@@ -159,12 +166,16 @@ private[frontier] final class PartitionTallies
   *
   * Scale design: every stage is expressed on Datasets/DataFrames so Catalyst
   * plans it; the seen set is bucketed by pmod(url_hash, P), its deltas flat
-  * files sorted by (bucket, url_hash) and read as one relation. While
-  * the filter blobs fit `broadcastFilterLimitBytes` (the default at any
-  * single-box scale) the probe is a codegen'd lookup against a broadcast of
-  * the blobs; above it probes are co-partitioned cogroups, so no task holds
-  * more than its bucket's blob. The fetch join relies on AQE skew handling
-  * for Zipf hosts; the politeness rank is a two-phase bounded-heap top-k
+  * files sorted by (bucket, url_hash) and read as one relation. One budget,
+  * `broadcastLimitBytes`, picks each shape from a size the engine already
+  * knows ([[fitsBroadcast]]). While the filter blobs fit it (the default at
+  * any single-box scale) the probe is a codegen'd lookup against a
+  * broadcast of the blobs; above it probes are co-partitioned cogroups, so
+  * no task holds more than its bucket's blob. While the round's drained
+  * keys fit it they are collected and broadcast; above it they stay
+  * distributed and the fetch join is a sort-merge join against a
+  * url-bucketed pages table, with AQE skew handling for Zipf hosts. The
+  * politeness rank is a two-phase bounded-heap top-k
   * (partial per-partition, then per-host final), so a Zipf-hot host never
   * funnels 30% of a 10^10-row frontier through one sort task the way a
   * row_number window would. All crawl state is committed as APPEND-ONLY
@@ -175,11 +186,42 @@ private[frontier] final class PartitionTallies
   */
 object CrawlEngine {
 
-  // the drained round is always <= roundSize small rows vs a huge pages
-  // table: up to this many keys it is broadcast, so the fetch join never
-  // shuffles html bytes. Above it the join shuffles the keys against a
-  // url-bucketed pages table (AQE skew handling).
-  private val BroadcastDrainLimit = 2_000_000
+  /** Bytes of one drained key as the driver collects it: the
+    * (url_hash, bucket, url) row.
+    */
+  private val DrainKeyBytes = 128L
+
+  /** Whether a broadcast of `bytes` fits the budget `broadcastLimitBytes`;
+    * a budget of 0 forces every distributed branch.
+    */
+  private def fitsBroadcast(cfg: CrawlConfig, bytes: Long): Boolean =
+    cfg.broadcastLimitBytes > 0 && bytes <= cfg.broadcastLimitBytes
+
+  /** Whether a round over a frontier of `frontierSize` entries drains by
+    * broadcast keys: at most min(roundSize, frontierSize) keys drain.
+    */
+  private def drainsByKeys(cfg: CrawlConfig, frontierSize: Long): Boolean =
+    fitsBroadcast(cfg, math.min(cfg.roundSize.toLong, frontierSize) * DrainKeyBytes)
+
+  /** Fails unless `pages` scans hash-partitioned on `url`, the layout of
+    * [[graft.sources.PagesTable.writeBucketed]]: the distributed fetch join
+    * then shuffles only the drained keys, never html. A flat file table, a
+    * cached DataFrame or a union report no such partitioning. Only plans
+    * the scan: it runs no job.
+    */
+  private[graft] def requireUrlBucketedPages(pages: DataFrame, cfg: CrawlConfig): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    pages.select(col("url"), col("html")).queryExecution.sparkPlan.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) if a.name == "url" =>
+      case p => throw new IllegalArgumentException(
+        s"a drain of min(roundSize = ${cfg.roundSize}, frontier) keys exceeds the broadcast " +
+          s"budget (broadcastLimitBytes = ${cfg.broadcastLimitBytes}), so the fetch join " +
+          "shuffles the drained keys against the pages table, which must then be " +
+          "bucketed on url as PagesTable.writeBucketed writes it; this pages relation " +
+          s"scans as $p, and its html would cross a shuffle")
+    }
+  }
 
   /** Run `f` as the phase `label`: its jobs carry the label as their job
     * description, so a listener, an event log or the UI can attribute them.
@@ -409,19 +451,20 @@ object CrawlEngine {
 
   /** The J4 fetch join: drained keys (url, depth) vs `pages(url, html)`.
     * html bytes dominate the row size, so html must NEVER cross a shuffle:
-    * below the broadcast limit the (small) drained keys broadcast and the
-    * pages scan streams; above it (`broadcastKeys = false`, production
-    * rounds >2M urls) the caller must supply a `url`-BUCKETED pages table
-    * ([[graft.sources.PagesTable]]) — its scan reports HashPartitioning on
-    * url, so the sort-merge join shuffles only the drained keys into the
-    * matching bucket partitions (AQE skew handling still applies to that
-    * side). Plan evidence: `graft.tools.FetchJoinScale`.
+    * while the drained keys fit the broadcast budget they broadcast and the
+    * pages scan streams; above it (`broadcastKeys = false`) the join is a
+    * sort-merge join, whatever Spark's own broadcast threshold says, and the
+    * caller must supply a `url`-BUCKETED pages table
+    * ([[graft.sources.PagesTable]]; [[requireUrlBucketedPages]]) — its scan
+    * reports HashPartitioning on url, so the join shuffles only the drained
+    * keys into the matching bucket partitions (AQE skew handling still
+    * applies to that side). PagesTableSpec pins both plans.
     */
   def fetchJoin(drainedSide: DataFrame, pages: DataFrame,
       broadcastKeys: Boolean): DataFrame = {
     val pagesSide = pages.select(col("url"), col("html"))
     (if (broadcastKeys) pagesSide.join(broadcast(drainedSide), Seq("url"))
-     else drainedSide.join(pagesSide, Seq("url")))
+     else drainedSide.join(pagesSide.hint("shuffle_merge"), Seq("url")))
       .select(col("url"), col("depth"), col("html"))
   }
 
@@ -468,7 +511,7 @@ object CrawlEngine {
       byBucket: () => Map[Int, Long], keySet: Option[Broadcast[Array[Long]]],
       cache: Option[Dataset[FrontierEntry]])
 
-  /** The drain up to [[BroadcastDrainLimit]] keys: an exact top-k via ONE
+  /** The drain whose keys fit the broadcast budget: an exact top-k via ONE
     * narrow TakeOrdered job collected to the driver. Only narrow sort keys
     * travel — k x (hash, bucket, url) — and the array then serves as:
     *   - the drained set, shipped as one broadcast sorted key array: a
@@ -511,7 +554,7 @@ object CrawlEngine {
       () => byBucket, Some(keySet), None)
   }
 
-  /** The drain above [[BroadcastDrainLimit]] keys: they stay distributed.
+  /** The drain whose keys exceed the broadcast budget: they stay distributed.
     * TakeOrdered over NARROW sort keys, then semi-join back — the join
     * shuffle restores parallelism and only ~k keys pass through one task.
     * The drained rows are persisted; tallies inside that cache count them
@@ -605,9 +648,9 @@ object CrawlEngine {
     val eligible =
       if (cfg.hostBudgetPerRound >= cfg.roundSize) frontierEligible
       else topKPerHost(frontierEligible, cfg.hostBudgetPerRound)
+    val byKeys = drainsByKeys(cfg, frontierSize)
     val drain =
-      if (cfg.roundSize <= BroadcastDrainLimit)
-        drainByKeys(spark, frontier, eligible, pages, cfg.roundSize)
+      if (byKeys) drainByKeys(spark, frontier, eligible, pages, cfg.roundSize)
       else drainDistributed(spark, roundNo, frontier, eligible, frontierSize,
         pages, cfg.roundSize)
 
@@ -622,7 +665,7 @@ object CrawlEngine {
     // html ~once across the whole crawl instead of scanning the full table
     // every round.
     val fetched = fetchJoin(drain.rows.select($"url", $"depth"), drain.fetchPages,
-      broadcastKeys = cfg.roundSize <= BroadcastDrainLimit)
+      broadcastKeys = byKeys)
       .as[(String, Int, Array[Byte])]
 
     // --- fused detect/extract map (3.1): ONE narrow map, no shuffle ---
@@ -743,7 +786,7 @@ object CrawlEngine {
     // barrier to build race-free.
     val (cuckooMiss, cuckooHit) = filtersBc match {
       case Some(bc) =>
-        // broadcast fast path (CrawlConfig.broadcastFilterLimitBytes): the
+        // broadcast fast path (CrawlConfig.broadcastLimitBytes): the
         // blobs fit in executor memory, so the probe is a codegen'd per-row
         // lookup ([[graft.functions.CuckooSeen]]) fused into the candidate
         // chain — no bucket exchange and no typed-cogroup sort. The two legs
@@ -995,9 +1038,9 @@ object CrawlEngine {
 
   /** The committed state in `m`. The frontier is persisted: the
     * seen-minus-tombstones anti-join would otherwise recompute from parquet
-    * in every consumer of the first round (the drain-keys collect, job 1's
-    * semi-join back), and the single-job drain-keys collect touches it
-    * first, so the cache populates race-free.
+    * in every consumer of the first round (the drain's key collect or
+    * bounds agg, and job 1), and the drain's first job touches it first,
+    * so the cache populates race-free.
     */
   private def readState(spark: SparkSession, m: SnapshotStore.Manifest): CrawlState = {
     import spark.implicits._
@@ -1096,7 +1139,7 @@ object CrawlEngine {
 
     // seen-probe broadcast (one per FOLD EPOCH — the blobs only change when
     // a fold commits): built lazily from the filters table when
-    // `filter_blob_bytes` fits cfg.broadcastFilterLimitBytes, dropped on
+    // `filter_blob_bytes` fits the broadcast budget, dropped on
     // fold. A 10^10-url frontier (~4 B/key of blobs) stays on the
     // co-partitioned cogroup path.
     var filtersBc: Option[Broadcast[Array[CuckooFilter]]] = None
@@ -1154,8 +1197,28 @@ object CrawlEngine {
         scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
       pendingCommit = None
     }
+    // everything the run holds, released once its last commit is durable
+    def release(): Unit = {
+      awaitCommit()
+      flushUnpersist()
+      Option(state).foreach { s =>
+        (Seq(s.frontier, s.robots, s.filters) ++ s.delay).foreach(_.unpersist())
+      }
+      (filtersSrc ++ delaySrc).foreach(_.unpersist())
+      bodies.unpersist()
+      dropFiltersBc()
+      flushUnpersist() // destroy the just-retired broadcast: nothing references it now
+    }
+    var pagesChecked = false
     var continue = true
     while (continue && roundNo < cfg.maxRounds && ctr.frontier_size > 0) {
+      // the first round that drains distributed fails loudly unless its
+      // sort-merge fetch join keeps html out of the shuffle
+      if (!pagesChecked && !drainsByKeys(cfg, ctr.frontier_size)) {
+        try requireUrlBucketedPages(pages, cfg)
+        catch { case e: IllegalArgumentException => release(); throw e }
+        pagesChecked = true
+      }
       val (seen, pendingSeen, blockedHosts, delayActive, seenDirs) =
         phase(spark, "read-state") {
           if (state == null) state = readState(spark, manifest)
@@ -1173,8 +1236,7 @@ object CrawlEngine {
           (seen, pendingSeen, blockedHosts, delayActive, seenDirs)
         }
       val CrawlState(frontier, robots, filters, delay) = state
-      if (filtersBc.isEmpty && cfg.broadcastFilterLimitBytes > 0 &&
-          ctr.filter_blob_bytes <= cfg.broadcastFilterLimitBytes)
+      if (filtersBc.isEmpty && fitsBroadcast(cfg, ctr.filter_blob_bytes))
         phase(spark, "filters-bc") {
           val rows = filters.collect()
           val n = rows.iterator.map(_.bucket + 1).foldLeft(cfg.numBuckets)(math.max)
@@ -1321,15 +1383,7 @@ object CrawlEngine {
         roundNo += 1
       }
     }
-    awaitCommit() // the final round's writes must be durable before we return
-    flushUnpersist()
-    Option(state).foreach { s =>
-      (Seq(s.frontier, s.robots, s.filters) ++ s.delay).foreach(_.unpersist())
-    }
-    (filtersSrc ++ delaySrc).foreach(_.unpersist())
-    bodies.unpersist()
-    dropFiltersBc()
-    flushUnpersist() // destroy the just-retired broadcast: nothing references it now
+    release() // the final round's writes must be durable before we return
     // counter-tracked (the exact table is the union of committed deltas; the
     // counter avoids an extra count job per run)
     CrawlStats(roundNo, ctr.fetched, ctr.extracted, ctr.seen)

@@ -11,13 +11,14 @@ import graft.frontier.CuckooFilter
 /** `cuckoo_seen(bucket, url_hash)` over a BROADCAST array of per-bucket
   * cuckoo filters — the small-state fast path of the seen-set probe (C3).
   *
-  * When the filter blobs fit in executor memory (run()'s estimate gate,
-  * `CrawlConfig.broadcastFilterLimitBytes`), probing per row via a codegen'd
+  * When the filter blobs fit in executor memory (run() compares the exact
+  * `filter_blob_bytes` counter to `CrawlConfig.broadcastLimitBytes`),
+  * probing per row via a codegen'd
   * lookup keeps the whole candidate chain inside one WholeStageCodegen span:
   * no bucket exchange, no typed cogroup, no object serde — the alternative
   * cogroup path pays a full sort of the candidate volume PER CONSUMER (the
   * definite-new and backstop branches), which profiling showed as the
-  * dominant GC source of the per-round seen-delta job. Above the limit
+  * dominant GC source of the per-round seen-delta job. Above the budget
   * (10^10-url frontiers, GBs of blobs) the engine keeps the co-partitioned
   * cogroup where each task holds only its own bucket's blob.
   *

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
 import graft.frontier.{CrawlConfig, CrawlEngine, Robots, RobotsRule}
+import graft.sources.PagesTable
 import graft.tables.{SnapshotStore, SyntheticWeb}
 import graft.urls.UrlOps
 import graft.dom.HtmlParser
@@ -50,6 +51,14 @@ class CrawlSpec extends AnyFunSuite {
   }
   val robots: Seq[RobotsRule] =
     SyntheticWeb.robotsRules(nHosts).map(r => RobotsRule(r._1, r._2, r._3, r._4))
+  // `withRules(pagesCached, robots)` as a table bucketed on url, the pages
+  // layout a drain over the broadcast budget needs (budget 0 forces one).
+  // Written once for the suite; the last test drops it
+  val bucketedName = "crawlspec_pages_bucketed"
+  lazy val bucketedPages: DataFrame = {
+    PagesTable.writeBucketed(spark, withRules(pagesCached, robots), bucketedName, 4)
+    PagesTable.read(spark, bucketedName)
+  }
   // host0 serves Crawl-delay: 2.5s against the 1s logical round
   val delayedRobots: Seq[RobotsRule] = robots.map(r =>
     if (r.host == "host0.example") r.copy(crawl_delay_ms = 2500L) else r)
@@ -184,24 +193,44 @@ class CrawlSpec extends AnyFunSuite {
       "lazy" -> cfg,
       "eager" -> cfg.copy(foldMinKeys = 1, foldFrac = 0.0),
       "grow" -> cfg.copy(foldMinKeys = 1, foldFrac = 0.0, filterCapacityPerBucket = 16),
-      // broadcastFilterLimitBytes = 0 forces the co-partitioned cogroup
-      // probe (the 10^10-scale path); the other configs take the broadcast
-      // probe — both must land on the simulator's exact seen set
-      "cogroup" -> cfg.copy(foldMinKeys = 1, foldFrac = 0.0,
-        broadcastFilterLimitBytes = 0L),
-      // cogroup probe + DEFAULT (lazy) fold policy: filters never refold at
-      // this scale, so every round's cuckoo misses run the pending-seen
-      // anti-join with NON-EMPTY deltas — the combination the eager cogroup
-      // config (empty pending by construction) cannot reach
-      "cogroup-lazy" -> cfg.copy(broadcastFilterLimitBytes = 0L))
+      // broadcastLimitBytes = 0 forces the whole distributed round (the
+      // 10^10-scale shapes): the distributed drain, the sort-merge fetch join
+      // over url-bucketed pages and the co-partitioned cogroup probe; the
+      // other configs take the broadcast shapes — all must land on the
+      // simulator's exact seen set
+      "cogroup" -> cfg.copy(foldMinKeys = 1, foldFrac = 0.0, broadcastLimitBytes = 0L),
+      // the distributed round + DEFAULT (lazy) fold policy: filters never
+      // refold at this scale, so every round's cuckoo misses run the
+      // pending-seen anti-join with NON-EMPTY deltas — the combination the
+      // eager cogroup config (empty pending by construction) cannot reach
+      "cogroup-lazy" -> cfg.copy(broadcastLimitBytes = 0L))
     // each config's global lineage rows (bucket -1), checked identical
     // across configs: the robots-blocked tallies ride different probe legs
     // on the broadcast and cogroup paths
     val lineageByConfig = mutable.LinkedHashMap.empty[String, Seq[org.apache.spark.sql.Row]]
+    // written here, outside the html-shuffle watch: the write itself
+    // repartitions the pages by url
+    val distributedPages = bucketedPages
     for ((label, fcfg) <- configs) {
       val stateDir = graft.util.TempDirs.create(s"graft-crawlspec-$label-").toString
-      val stats = CrawlEngine.run(spark, withRules(pages, robots),
-        SyntheticWeb.seedUrls(nHosts).toDS(), fcfg, stateDir)
+      val distributed = fcfg.broadcastLimitBytes == 0L
+      val phases = new PhaseTasks
+      val plans = new HtmlPlans
+      spark.listenerManager.register(plans)
+      val stats = try listening(phases)(CrawlEngine.run(spark,
+          if (distributed) distributedPages else withRules(pages, robots),
+          SyntheticWeb.seedUrls(nHosts).toDS(), fcfg, stateDir))
+        finally spark.listenerManager.unregister(plans)
+      // each config runs the drain and fetch-join shapes its budget picks,
+      // and only those; neither shape shuffles html
+      val (ran, skipped) =
+        if (distributed) ("drain-bounds", "drain-keys") else ("drain-keys", "drain-bounds")
+      assert(phases.of(ran).nonEmpty && phases.of(skipped).isEmpty,
+        s"[$label] want $ran jobs and no $skipped job: $ran ${phases.of(ran)}, " +
+          s"$skipped ${phases.of(skipped)}")
+      assert((plans.sortMergeJoins > 0) == distributed,
+        s"[$label] ${plans.sortMergeJoins} sort-merge joins output html")
+      assert(plans.htmlShuffles.isEmpty, s"[$label] html shuffled: ${plans.htmlShuffles}")
 
       // final URL-seen set: compare via hashes (engine stores hashes)
       val m = SnapshotStore.latestManifest(stateDir).get
@@ -432,47 +461,84 @@ class CrawlSpec extends AnyFunSuite {
 
   test("crawl is resumable from the latest snapshot with identical final state") {
     import spark.implicits._
-    val pages = pagesCached
+    // the broadcast round, and the distributed round (budget 0) over
+    // url-bucketed pages
+    val inputs = Seq(
+      ("broadcast", withRules(pagesCached, robots), cfg),
+      ("distributed", bucketedPages, cfg.copy(broadcastLimitBytes = 0L)))
+    for ((label, pages, rcfg) <- inputs) {
+      // full run
+      val fullDir = graft.util.TempDirs.create(s"graft-full-$label-").toString
+      val fullStats = CrawlEngine.run(spark, pages,
+        SyntheticWeb.seedUrls(nHosts).toDS(), rcfg, fullDir)
 
-    // full run
-    val fullDir = graft.util.TempDirs.create("graft-full-").toString
-    val fullStats = CrawlEngine.run(spark, withRules(pages, robots),
-      SyntheticWeb.seedUrls(nHosts).toDS(), cfg, fullDir)
+      val fullLineage = globalLineage(fullDir)
 
-    val fullLineage = globalLineage(fullDir)
+      // interrupted run: stops after the last round that discovered new urls
+      // (so that round pre-wrote a seen delta), then resumes with full budget
+      val lastNew = fullLineage.filter(_.getAs[Long]("new_urls") > 0)
+        .map(_.getAs[Int]("round")).max
+      assert(lastNew >= 1, s"[$label] need a discovering round after round 0: $fullLineage")
+      val partDir = graft.util.TempDirs.create(s"graft-part-$label-").toString
+      CrawlEngine.run(spark, pages,
+        SyntheticWeb.seedUrls(nHosts).toDS(), rcfg.copy(maxRounds = lastNew + 1), partDir)
+      // simulate crash: a torn uncommitted write must be invisible. Dropping
+      // the last manifest leaves that round's data dirs — including the seen
+      // delta written before the commit — orphaned on disk, as a crash between
+      // the writes and the manifest rename would
+      val v = lastNew + 1
+      assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(partDir, "data", s"v$v", "seen")),
+        s"[$label] round $lastNew must have pre-written a seen delta")
+      java.nio.file.Files.delete(java.nio.file.Paths.get(partDir, "snapshots", s"v$v.json"))
+      assert(SnapshotStore.latestVersion(partDir).contains(v - 1))
+      val resumedStats = CrawlEngine.run(spark, pages,
+        SyntheticWeb.seedUrls(nHosts).toDS(), rcfg, partDir)
 
-    // interrupted run: stops after the last round that discovered new urls
-    // (so that round pre-wrote a seen delta), then resumes with full budget
-    val lastNew = fullLineage.filter(_.getAs[Long]("new_urls") > 0)
-      .map(_.getAs[Int]("round")).max
-    assert(lastNew >= 1, s"need a discovering round after round 0: $fullLineage")
-    val partDir = graft.util.TempDirs.create("graft-part-").toString
-    CrawlEngine.run(spark, withRules(pages, robots),
-      SyntheticWeb.seedUrls(nHosts).toDS(), cfg.copy(maxRounds = lastNew + 1), partDir)
-    // simulate crash: a torn uncommitted write must be invisible. Dropping
-    // the last manifest leaves that round's data dirs — including the seen
-    // delta written before the commit — orphaned on disk, as a crash between
-    // the writes and the manifest rename would
-    val v = lastNew + 1
-    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(partDir, "data", s"v$v", "seen")),
-      s"round $lastNew must have pre-written a seen delta")
-    java.nio.file.Files.delete(java.nio.file.Paths.get(partDir, "snapshots", s"v$v.json"))
-    assert(SnapshotStore.latestVersion(partDir).contains(v - 1))
-    val resumedStats = CrawlEngine.run(spark, withRules(pages, robots),
-      SyntheticWeb.seedUrls(nHosts).toDS(), cfg, partDir)
+      assert(resumedStats.fetched == fullStats.fetched, s"[$label] fetched")
+      assert(resumedStats.extractedRows == fullStats.extractedRows, s"[$label] extracted")
+      assert(resumedStats.seenSize == fullStats.seenSize, s"[$label] seen size")
+      val fullSeen = CrawlEngine.readSeenDirs(spark, SnapshotStore.dirsOf(
+          SnapshotStore.latestManifest(fullDir).get, "seen"))
+        .select("url_hash").as[Long].collect().toSet
+      val resumedSeen = CrawlEngine.readSeenDirs(spark, SnapshotStore.dirsOf(
+          SnapshotStore.latestManifest(partDir).get, "seen"))
+        .select("url_hash").as[Long].collect().toSet
+      assert(fullSeen == resumedSeen, s"[$label] seen set")
+      assertFlatSortedSeen(SnapshotStore.latestManifest(partDir).get, s"[$label]")
+      assert(globalLineage(partDir) == fullLineage, s"[$label] lineage")
+    }
+  }
 
-    assert(resumedStats.fetched == fullStats.fetched)
-    assert(resumedStats.extractedRows == fullStats.extractedRows)
-    assert(resumedStats.seenSize == fullStats.seenSize)
-    val fullSeen = CrawlEngine.readSeenDirs(spark, SnapshotStore.dirsOf(
-        SnapshotStore.latestManifest(fullDir).get, "seen"))
-      .select("url_hash").as[Long].collect().toSet
-    val resumedSeen = CrawlEngine.readSeenDirs(spark, SnapshotStore.dirsOf(
-        SnapshotStore.latestManifest(partDir).get, "seen"))
-      .select("url_hash").as[Long].collect().toSet
-    assert(fullSeen == resumedSeen)
-    assertFlatSortedSeen(SnapshotStore.latestManifest(partDir).get)
-    assert(globalLineage(partDir) == fullLineage)
+  test("a drain over the broadcast budget refuses pages not bucketed on url") {
+    import spark.implicits._
+    val budget0 = cfg.copy(broadcastLimitBytes = 0L)
+    val stateDir = graft.util.TempDirs.create("graft-unbucketed-").toString
+    val e = intercept[IllegalArgumentException] {
+      CrawlEngine.run(spark, withRules(pagesCached, robots),
+        SyntheticWeb.seedUrls(nHosts).toDS(), budget0, stateDir)
+    }
+    assert(e.getMessage.contains("broadcastLimitBytes") &&
+      e.getMessage.contains("PagesTable.writeBucketed"), e.getMessage)
+    assert(SnapshotStore.latestVersion(stateDir).contains(0),
+      "the bootstrap commits v0 and no round commits after it")
+    // the layout check plans each relation and runs no job: a flat parquet
+    // table, a cached DataFrame and a union fail it, the bucketed table passes
+    val flatDir = graft.util.TempDirs.create("graft-unbucketed-flat-").toString
+    pagesCached.select("url", "html").write.mode("overwrite").parquet(flatDir)
+    // opening the flat table infers its schema, and the first use of the
+    // bucketed one writes it, each in jobs of their own
+    val refused = Seq("flat parquet" -> spark.read.parquet(flatDir),
+      "cached" -> pagesCached, "union" -> withRules(pagesCached, robots))
+    val bucketed = bucketedPages
+    val planned = new PhaseTasks
+    listening(planned) {
+      for ((what, pages) <- refused)
+        assert(scala.util.Try(CrawlEngine.requireUrlBucketedPages(pages, budget0))
+          .failed.toOption.exists(_.isInstanceOf[IllegalArgumentException]),
+          s"$what pages passed the url-bucketed layout check")
+      CrawlEngine.requireUrlBucketedPages(bucketed, budget0)
+    }
+    assert(planned.of("").isEmpty, "the layout check ran a job")
   }
 
   test("drain-to-exhaustion writes no empty seen deltas") {
@@ -773,6 +839,38 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
+  /** Joins and shuffles of html across every SQL execution, the plans of
+    * the caches they read included: how many sort-merge joins output html
+    * (the distributed fetch join), and the columns of each shuffle that
+    * carries it.
+    */
+  private final class HtmlPlans extends org.apache.spark.sql.util.QueryExecutionListener {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    @volatile var sortMergeJoins = 0
+    @volatile var htmlShuffles = Seq.empty[Seq[String]]
+    private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = synchronized {
+      nodes(qe.executedPlan).foreach { n =>
+        val cols = n.output.map(_.name)
+        n match {
+          case _: SortMergeJoinExec if cols.contains("html") => sortMergeJoins += 1
+          case _: ShuffleExchangeExec if cols.contains("html") => htmlShuffles :+= cols
+          case _ =>
+        }
+      }
+    }
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
   /** SQL executions whose plan computes (rather than reads from a cache
     * built earlier) the aggregation of the robots source to one body per
     * host. A cached plan built by an earlier execution shows as an
@@ -877,18 +975,27 @@ class CrawlSpec extends AnyFunSuite {
   // pages table included
   test("a crawl releases every table it persists (eager fold, crawl-delay)") {
     // uncached pages over an emptied cache: anything still cached after a
-    // crawl is a table the crawl persisted and never released
+    // crawl is a table the crawl persisted and never released. The bucketed
+    // table is written (from the cached fixture) before the cache is emptied
     import spark.implicits._
+    val distributedPages = bucketedPages
     spark.catalog.clearCache()
-    val pages = SyntheticWeb.pagesFast(spark, nPages, nHosts, 4).toDF()
-    val crawls = Seq(
-      ("eager-fold", robots, cfg.copy(foldMinKeys = 1, foldFrac = 0.0)),
-      ("crawl-delay", delayedRobots, cfg))
-    for ((label, rules, ccfg) <- crawls) {
-      val stateDir = graft.util.TempDirs.create(s"graft-release-$label-").toString
-      CrawlEngine.run(spark, withRules(pages, rules),
-        SyntheticWeb.seedUrls(nHosts).toDS(), ccfg, stateDir)
-      assert(spark.sharedState.cacheManager.isEmpty, s"[$label] crawl left tables cached")
-    }
+    try {
+      val pages = SyntheticWeb.pagesFast(spark, nPages, nHosts, 4).toDF()
+      // the distributed drain persists its drained rows each round
+      val crawls = Seq(
+        ("eager-fold", withRules(pages, robots), cfg.copy(foldMinKeys = 1, foldFrac = 0.0)),
+        ("crawl-delay", withRules(pages, delayedRobots), cfg),
+        ("distributed", distributedPages, cfg.copy(broadcastLimitBytes = 0L)))
+      for ((label, cpages, ccfg) <- crawls) {
+        val stateDir = graft.util.TempDirs.create(s"graft-release-$label-").toString
+        val phases = new PhaseTasks
+        listening(phases)(CrawlEngine.run(spark, cpages,
+          SyntheticWeb.seedUrls(nHosts).toDS(), ccfg, stateDir))
+        assert(label != "distributed" || phases.of("drain-bounds").nonEmpty,
+          "the distributed crawl ran no distributed drain")
+        assert(spark.sharedState.cacheManager.isEmpty, s"[$label] crawl left tables cached")
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS `$bucketedName`")
   }
 }

@@ -11,8 +11,7 @@ import graft.sources.PagesTable
 /** The over-broadcast-limit fetch join (J4 fallback) must never ship html
   * across an exchange when the pages table uses the bucketed-by-url layout —
   * only the drained keys shuffle into the bucketed scan's partitioning.
-  * Pinned here (beyond the FetchJoinScale evidence run) so a planner or
-  * layout regression fails the suite.
+  * Pinned here so a planner or layout regression fails the suite.
   */
 class PagesTableSpec extends AnyFunSuite {
 

@@ -513,17 +513,7 @@ object Bench {
            |so efficiency climbs toward the single-round figure as the round
            |size grows — production rounds are millions of URLs, far past
            |the ${benchPages / 2}-URL point measured here. BENCH/
-           |DRAIN_SCALE.json sweeps the same axis at 32 cores, and
-           |BENCH/ROUNDPROF_16c_8r.txt decomposes the per-round cost
-           |(tools/RoundProf, 8-round drain at 16 cores): each round's
-           |scan-heavy stage runs at ~94% parallel efficiency (2.7 s wall
-           |vs 2.5 s ideal for ~40 s of task time), while the residual is
-           |~35 driver-scheduled jobs per round — broadcast-exchange
-           |builds and 256-task mini-stages over small caches (the
-           |protocol fixes 256 input slices at every level for
-           |comparability) — whose wall cost is core-count-independent
-           |and shrinks only with round size, which is exactly the
-           |amortization the sweep measures.
+           |DRAIN_SCALE.json sweeps the same axis at 32 cores.
            |
            |Each level runs in its OWN child JVM pinned to exactly that many
            |physical cores (`taskset -c` + `-XX:ActiveProcessorCount`), the

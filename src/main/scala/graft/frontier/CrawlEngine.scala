@@ -9,6 +9,7 @@ import graft.urls.UrlOps
 import graft.dom.HtmlParser
 import graft.detect.Detector
 import graft.tables.SnapshotStore
+import graft.functions.TallyFunctions.tally
 
 /** Frontier row (FIXTURES.md §5). priority = -depth gives BFS rounds (C7:
   * deterministic breadth-first ordering, matching the scrapy spider's
@@ -108,9 +109,10 @@ final case class RoundStats(drained: Long, fetched: Long, extracted: Long,
     candidates: Long, unique: Long)
 
 /** Exactly-once per-partition tallies for counters that ride an existing
-  * job instead of costing their own. Each fully-consumed partition registers
-  * one (rowCount, weightSum) per group, keyed by (partition id, group), and
-  * merge OVERWRITES on key collision — a partition's tally is a
+  * job instead of costing their own, fed by the codegen'd
+  * [[graft.functions.Tally]] filter. Each partition of the tallied relation
+  * registers one (rowCount, weightSum) per group, keyed by (partition,
+  * group), and merge OVERWRITES on key collision — a partition's tally is a
   * deterministic function of its input, so task retries, speculative
   * duplicates, or cache-eviction recomputes land the same value on the same
   * key and can never double-count. (Plain sc.longAccumulator lacks this:
@@ -118,7 +120,7 @@ final case class RoundStats(drained: Long, fetched: Long, extracted: Long,
   * here either — a CollectMetrics node inside a persisted plan never reports,
   * because the cache materialization is not the observing query.)
   */
-private[frontier] final class PartitionTallies
+private[graft] final class PartitionTallies
     extends org.apache.spark.util.AccumulatorV2[
       ((Int, Int), (Long, Long)), Map[(Int, Int), (Long, Long)]] {
   private val m = new java.util.concurrent.ConcurrentHashMap[(Int, Int), (Long, Long)]()
@@ -126,7 +128,7 @@ private[frontier] final class PartitionTallies
   // and can observe this instance MID-DESERIALIZATION: Java serialization
   // publishes the object reference into its handle table before restoring
   // fields, so a concurrent `isZero`/`value` may read `m` as null (seen once
-  // in an 8-round RoundProf run as an uncaught heartbeater NPE). A
+  // in an 8-round crawl as an uncaught heartbeater NPE). A
   // not-yet-populated tally is an empty tally; `add`/`merge`/`copy` run only
   // on the owning thread after deserialization completes.
   override def isZero: Boolean = { val mm = m; (mm eq null) || mm.isEmpty }
@@ -155,14 +157,29 @@ private[frontier] final class PartitionTallies
 }
 
 /** Spark-native URL frontier + fetch scheduler (north rule; SURVEY.md §2.9,
-  * §3.3). Each round is one batch Dataset job:
+  * §3.3). A round is a fixed sequence of Dataset jobs, each labelled with
+  * its phase ([[phase]]: drain-keys, detect-robots, seen-write, commit, ...):
   *
   *   frontier → politeness two-phase per-host top-k (W5) → priority drain
-  *   (C6) → "fetch" join vs the pages table (J4) → fused detect/extract map
+  *   (C6) → "fetch" of the drained pages (J4) → fused detect/extract map
   *   (3.1) → link explode (C2) → robots broadcast filter (C4) → in-round
   *   dedup → partitioned cuckoo-filter probe (C3) with exact anti-join
   *   backstop ONLY on the cuckoo-positive subset (J5) → delta snapshot
   *   commit (C8).
+  *
+  * Generated code is a per-round cost too. Every round plans the same
+  * relation shapes with no round-specific literal (the first round's
+  * frontier is cut like the carried one; `dedup` groups by the entries' own
+  * `discovered_round`), so each round generates the same code, and Spark
+  * compiles it once per run — while a round's generated classes fit Spark's
+  * codegen cache (`spark.sql.codegen.cache.maxEntries`, 100 by default, a
+  * static setting of the session, not the engine's). Each class takes a
+  * cache entry per classloader, driver and executor side. To keep the
+  * working set under that, counters are codegen'd tally filters
+  * ([[graft.functions.Tally]]) rather than mapPartitions wrappers that split
+  * whole-stage pipelines, and the by-keys fetch is a filter on the pages
+  * scan rather than a join. CrawlSpec's codegen guard holds every round
+  * after the second of a drain to at most 2 compiled classes.
   *
   * Scale design: every stage is expressed on Datasets/DataFrames so Catalyst
   * plans it; the seen set is bucketed by pmod(url_hash, P), its deltas flat
@@ -187,7 +204,7 @@ private[frontier] final class PartitionTallies
 object CrawlEngine {
 
   /** Bytes of one drained key as the driver collects it: the
-    * (url_hash, bucket, url) row.
+    * (url_hash, bucket, url, depth) row.
     */
   private val DrainKeyBytes = 128L
 
@@ -244,42 +261,20 @@ object CrawlEngine {
   private implicit lazy val robotsEnc: Encoder[RobotsEntry] = Encoders.product
   private implicit lazy val lineageEnc: Encoder[LineageRow] = Encoders.product
   private implicit lazy val outputEnc: Encoder[PageOutput] = Encoders.product
-  private implicit lazy val drainKeyEnc: Encoder[(Long, Int, String)] = Encoders.product
+  private implicit lazy val drainKeyEnc: Encoder[(Long, Int, String, Int)] = Encoders.product
   private implicit lazy val fetchedEnc: Encoder[(String, Int, Array[Byte])] = Encoders.product
   private implicit lazy val bodyEnc: Encoder[(String, Array[Byte])] = Encoders.product
 
-  /** Wrap `ds` so that each FULLY consumed partition registers
-    * (rowCount, Σ weight(row)) per `group(row)` into `acc` exactly once
-    * (keyed by partition id and group — see PartitionTallies). The tally
-    * node is part of `ds`'s plan, so when the result is persisted the
-    * tallies are computed during cache materialization and never again on
-    * cache hits. Chained after typed operators it stays in the object domain
-    * (no extra ser/deser).
+  /** A new [[PartitionTallies]], registered as `name`. A
+    * [[graft.functions.TallyFunctions.tally]] filter feeds it inside a
+    * persisted plan, so its counts are computed during cache
+    * materialization and never again on cache hits.
     */
-  private def tallied[T: Encoder](ds: Dataset[T], acc: PartitionTallies)(
-      weight: T => Long, group: T => Int = (_: T) => 0): Dataset[T] =
-    ds.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val byGroup = mutable.LongMap.empty[Array[Long]] // group -> (n, w)
-      var registered = false
-      new Iterator[T] {
-        override def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && !registered) {
-            byGroup.foreach { case (g, nw) => acc.add(((pid, g.toInt), (nw(0), nw(1)))) }
-            registered = true
-          }
-          h
-        }
-        override def next(): T = {
-          val t = it.next()
-          val nw = byGroup.getOrElseUpdate(group(t), new Array[Long](2))
-          nw(0) += 1
-          nw(1) += weight(t)
-          t
-        }
-      }
-    }
+  private def tallies(spark: SparkSession, name: String): PartitionTallies = {
+    val t = new PartitionTallies
+    spark.sparkContext.register(t, name)
+    t
+  }
 
   def entry(url: String, depth: Int, round: Int, numBuckets: Int): FrontierEntry = {
     val (canon, host) = UrlOps.canonicalParts(url)
@@ -305,9 +300,11 @@ object CrawlEngine {
     "priority", "depth", "discovered_round").map(col)
 
   /** The admission dedup of the bootstrap's seeds and of every round's
-    * candidates: one row per url, min depth wins (deterministic), stamped
-    * `discovered_round`, with the group's raw multiplicity in a
-    * trailing `dups` column.
+    * candidates: one row per url, min depth wins (deterministic), with the
+    * group's raw multiplicity in a trailing `dups` column. Every entry of
+    * one call carries the same `discovered_round`, so it is a group key
+    * too: a round number inlined as a literal would make each round's
+    * aggregation generate (and compile) new code.
     *
     * Every FrontierEntry field except depth is a pure function of the url
     * (entryOf), so rows sharing a url_hash are identical up to depth — the
@@ -318,13 +315,13 @@ object CrawlEngine {
     * buffer and Spark demotes it to SortAggregate — two extra full sorts of
     * the raw link volume per round (measured in the bench stage profile).
     */
-  private def dedup(entries: Dataset[FrontierEntry], discoveredRound: Int): DataFrame =
+  private def dedup(entries: Dataset[FrontierEntry]): DataFrame =
     entries.toDF()
-      .groupBy(col("url_hash"), col("url"), col("host"), col("host_hash"), col("bucket"))
+      .groupBy(col("url_hash"), col("url"), col("host"), col("host_hash"), col("bucket"),
+        col("discovered_round"))
       .agg(min(col("depth")).as("depth"), count(lit(1)).as("dups"))
       .select(col("url"), col("url_hash"), col("host"), col("host_hash"), col("bucket"),
-        (-col("depth")).as("priority"), col("depth"),
-        lit(discoveredRound).as("discovered_round"), col("dups"))
+        (-col("depth")).as("priority"), col("depth"), col("discovered_round"), col("dups"))
 
   // pinned schemas for state-table reads: the engine re-opens these every
   // round, and schema inference would pay a driver-side footer read per open
@@ -449,24 +446,20 @@ object CrawlEngine {
       .flatMapGroups((_: String, es: Iterator[FrontierEntry]) => bounded(es))
   }
 
-  /** The J4 fetch join: drained keys (url, depth) vs `pages(url, html)`.
-    * html bytes dominate the row size, so html must NEVER cross a shuffle:
-    * while the drained keys fit the broadcast budget they broadcast and the
-    * pages scan streams; above it (`broadcastKeys = false`) the join is a
-    * sort-merge join, whatever Spark's own broadcast threshold says, and the
-    * caller must supply a `url`-BUCKETED pages table
-    * ([[graft.sources.PagesTable]]; [[requireUrlBucketedPages]]) — its scan
-    * reports HashPartitioning on url, so the join shuffles only the drained
-    * keys into the matching bucket partitions (AQE skew handling still
-    * applies to that side). PagesTableSpec pins both plans.
+  /** The J4 fetch join of a drain over the broadcast budget: drained keys
+    * (url, depth) vs `pages(url, html)`. html bytes dominate the row size,
+    * so html must NEVER cross a shuffle: the join is a sort-merge join,
+    * whatever Spark's own broadcast threshold says, and the caller must
+    * supply a `url`-BUCKETED pages table ([[graft.sources.PagesTable]];
+    * [[requireUrlBucketedPages]]) — its scan reports HashPartitioning on
+    * url, so the join shuffles only the drained keys into the matching
+    * bucket partitions (AQE skew handling still applies to that side).
+    * PagesTableSpec pins the plan. A drain within the budget fetches with a
+    * filter on the pages scan instead ([[drainByKeys]]).
     */
-  def fetchJoin(drainedSide: DataFrame, pages: DataFrame,
-      broadcastKeys: Boolean): DataFrame = {
-    val pagesSide = pages.select(col("url"), col("html"))
-    (if (broadcastKeys) pagesSide.join(broadcast(drainedSide), Seq("url"))
-     else drainedSide.join(pagesSide.hint("shuffle_merge"), Seq("url")))
+  def fetchJoin(drainedSide: DataFrame, pages: DataFrame): DataFrame =
+    drainedSide.join(pages.select(col("url"), col("html")).hint("shuffle_merge"), Seq("url"))
       .select(col("url"), col("depth"), col("html"))
-  }
 
   /** Everything one round hands back to the commit path. */
   final case class RoundResult(
@@ -494,7 +487,7 @@ object CrawlEngine {
       // they are valid only after the caller's first action over `adds`
       // (run()'s seen-delta write)
       newTallies: PartitionTallies,
-      allowedTallies: Seq[PartitionTallies]) {
+      allowedTallies: PartitionTallies) {
     def newUrls: Long = newTallies.totals._1
   }
 
@@ -502,45 +495,55 @@ object CrawlEngine {
     *   - `rows`: the drained entries
     *   - `undrained`: the rest of the frontier
     *   - `keys`: the drained url_hash rows (the frontier_rm delta)
-    *   - `fetchPages`: the pages source, pruned to the drained url range
+    *   - `fetched`: the drained pages as (url, depth, html)
     *   - `byBucket`: drained counts per bucket, valid once job 1 has run
-    *   - `keySet`, `cache`: what the drain holds until the round is carried
+    *   - `broadcasts`, `cache`: what the drain holds until the round is
+    *     carried
     */
   private final case class Drain(rows: Dataset[FrontierEntry],
-      undrained: Dataset[FrontierEntry], keys: DataFrame, fetchPages: DataFrame,
-      byBucket: () => Map[Int, Long], keySet: Option[Broadcast[Array[Long]]],
+      undrained: Dataset[FrontierEntry], keys: DataFrame, fetched: DataFrame,
+      byBucket: () => Map[Int, Long], broadcasts: Seq[Broadcast[_]],
       cache: Option[Dataset[FrontierEntry]])
 
   /** The drain whose keys fit the broadcast budget: an exact top-k via ONE
     * narrow TakeOrdered job collected to the driver. Only narrow sort keys
-    * travel — k x (hash, bucket, url) — and the array then serves as:
+    * travel — k x (hash, bucket, url, depth) — and the array then serves as:
     *   - the drained set, shipped as one broadcast sorted key array: a
     *     narrow membership predicate selects the drained rows and, negated,
     *     the undrained rest, with no semi-/anti-join exchange. url_hash is
     *     unique in the frontier (enqueue-time dedup admits each url once), so
     *     the drained rows are exactly the frontier rows whose key drained;
     *     politeness's shuffle is not re-run for them
-    *   - the url min/max for fetch-scan pruning
+    *   - the fetch: a broadcast of the drained (url, depth) pairs, read by a
+    *     codegen'd exact-match filter on the pages scan
+    *     ([[graft.functions.UrlDepth]]) — no join, so no broadcast exchange
+    *     over the frontier's drained rows — behind the drained url min/max,
+    *     which prunes the scan
     *   - the drained count, per bucket
     *   - the frontier_rm delta rows
     */
   private def drainByKeys(spark: SparkSession, frontier: Dataset[FrontierEntry],
       eligible: Dataset[FrontierEntry], pages: DataFrame, roundSize: Int): Drain = {
+    import graft.functions.KeySetFunctions.{key_in, url_depth}
     val keyRows = phase(spark, "drain-keys")(eligible
       .select(col("url_hash"), col("bucket"), col("priority"), col("depth"), col("url"))
       .orderBy(desc("priority"), asc("depth"), asc("url"))
       .limit(roundSize)
-      .select(col("url_hash"), col("bucket"), col("url"))
-      .as[(Long, Int, String)].collect())
+      .select(col("url_hash"), col("bucket"), col("url"), col("depth"))
+      .as[(Long, Int, String, Int)].collect())
     val hashes = keyRows.map(_._1)
     val sorted = hashes.clone()
     java.util.Arrays.sort(sorted)
     val keySet = spark.sparkContext.broadcast(sorted)
-    val inDrain = graft.functions.KeySetFunctions.key_in(keySet, col("url_hash"))
-    val fetchPages =
-      if (keyRows.isEmpty) pages
-      else pages.filter(col("url") >= keyRows.iterator.map(_._3).min &&
-        col("url") <= keyRows.iterator.map(_._3).max)
+    val inDrain = key_in(keySet, col("url_hash"))
+    val depths = spark.sparkContext.broadcast(
+      graft.functions.UrlDepths(keyRows.toSeq.map(r => (r._3, r._4))))
+    val depth = url_depth(depths, col("url"))
+    val fetched =
+      (if (keyRows.isEmpty) pages.limit(0)
+       else pages.filter(col("url") >= keyRows.iterator.map(_._3).min &&
+         col("url") <= keyRows.iterator.map(_._3).max && depth.isNotNull))
+        .select(col("url"), depth.as("depth"), col("html"))
     // explicit slice count: the default (defaultParallelism) would write one
     // near-empty parquet file per core for the frontier_rm delta — one slice
     // per 250k keys keeps the delta at one file per round and the read path
@@ -550,8 +553,8 @@ object CrawlEngine {
       scala.collection.immutable.ArraySeq.unsafeWrapArray(hashes),
       math.max(1, hashes.length / 250000)).toDF("url_hash")
     val byBucket = keyRows.groupMapReduce(_._2)(_ => 1L)(_ + _)
-    Drain(frontier.filter(inDrain), frontier.filter(!inDrain), keysDf, fetchPages,
-      () => byBucket, Some(keySet), None)
+    Drain(frontier.filter(inDrain), frontier.filter(!inDrain), keysDf, fetched,
+      () => byBucket, Seq(keySet, depths), None)
   }
 
   /** The drain whose keys exceed the broadcast budget: they stay distributed.
@@ -564,8 +567,7 @@ object CrawlEngine {
       frontier: Dataset[FrontierEntry], eligible: Dataset[FrontierEntry],
       frontierSize: Long, pages: DataFrame, roundSize: Int): Drain = {
     import spark.implicits._
-    val tallies = new PartitionTallies
-    spark.sparkContext.register(tallies, s"r$roundNo-drained-tallies")
+    val drainedTallies = tallies(spark, s"r$roundNo-drained-tallies")
     val rows =
       // |eligible| <= frontierSize <= roundSize: the global top-k is the
       // identity — everything politeness admitted drains this round
@@ -576,7 +578,7 @@ object CrawlEngine {
           .limit(roundSize)
           .select($"url_hash"), Seq("url_hash"), "left_semi")
         .as[FrontierEntry]
-    val drained = tallied(rows, tallies)(_ => 0L, _.bucket).persist()
+    val drained = rows.filter(tally(drainedTallies, group = $"bucket")).persist()
     // bounds from one agg over the drained cache, which also materializes it
     val fetchPages =
       if (frontierSize <= roundSize) pages
@@ -590,8 +592,8 @@ object CrawlEngine {
     Drain(drained,
       frontier.join(drained.select($"url_hash"), Seq("url_hash"), "left_anti")
         .select(feCols: _*).as[FrontierEntry],
-      drained.select($"url_hash"), fetchPages, () => tallies.rowsByGroup, None,
-      Some(drained))
+      drained.select($"url_hash"), fetchJoin(drained.select($"url", $"depth"), fetchPages),
+      () => drainedTallies.rowsByGroup, Nil, Some(drained))
   }
 
   /** One fetch-schedule round.
@@ -654,19 +656,17 @@ object CrawlEngine {
       else drainDistributed(spark, roundNo, frontier, eligible, frontierSize,
         pages, cfg.roundSize)
 
-    // --- "fetch" (J4): drained ⨝ pages on url ---
+    // --- "fetch" (J4): the drained pages, from the pages table by url ---
     // Scan pruning from drain bounds (the Iceberg sort-key min/max analog):
     // a PARTIAL drain covers a bounded url range under the deterministic
-    // drain order, and no page outside [min, max] can match the fetch join
-    // — so push the range as a predicate (`drain.fetchPages`). With a
+    // drain order, and no page outside [min, max] can be fetched — so both
+    // drains push the range as a predicate on the pages scan. With a
     // url-clustered pages layout (sorted parquet row groups, or cached
     // batches with column stats) the scan skips non-matching groups BEFORE
     // html bytes are touched; a multi-round drain then reads each page's
     // html ~once across the whole crawl instead of scanning the full table
     // every round.
-    val fetched = fetchJoin(drain.rows.select($"url", $"depth"), drain.fetchPages,
-      broadcastKeys = byKeys)
-      .as[(String, Int, Array[Byte])]
+    val fetched = drain.fetched.as[(String, Int, Array[Byte])]
 
     // --- fused detect/extract map (3.1): ONE narrow map, no shuffle ---
     // links are canonicalized HERE (one parse per link, fused with the
@@ -678,9 +678,8 @@ object CrawlEngine {
     // n_rows), and retaining ~KBs of text per page across a 250k-page round
     // is pure old-gen GC pressure at high core counts.
     val retain = retainOutputs
-    val outputTallies = new PartitionTallies
-    spark.sparkContext.register(outputTallies, s"r$roundNo-output-tallies")
-    val outputs: Dataset[PageOutput] = tallied(fetched.map { case (url, depth, html) =>
+    val outputTallies = tallies(spark, s"r$roundNo-output-tallies")
+    val outputs: Dataset[PageOutput] = fetched.map { case (url, depth, html) =>
       val doc = HtmlParser.parseBytes(html)
       val det = Detector.detectDoc(url, doc)
       val rows = det.lists.headOption.map(_.data).getOrElse(Seq.empty)
@@ -699,9 +698,9 @@ object CrawlEngine {
         if (retain) det.pagination.map(_.nextUrl).orNull else null,
         scala.collection.immutable.ArraySeq.unsafeWrapArray(canon),
         scala.collection.immutable.ArraySeq.unsafeWrapArray(hosts))
-    }, outputTallies)(_.n_rows.toLong)
+    }.filter(tally(outputTallies, weight = $"n_rows"))
       // fetched/extracted counters ride job 1 as per-partition tallies: the
-      // tally node sits INSIDE the cached plan, so it is computed exactly
+      // tally filter sits INSIDE the cached plan, so it is computed exactly
       // when the cache materializes (once — the chain is single-referenced
       // in job 1) and never again on cache hits. That removes the counters
       // job's full re-read of this cache (260 task launches per round just
@@ -724,12 +723,8 @@ object CrawlEngine {
     // smaller unique-url set. A tally inside the cache reads (unique, raw)
     // candidate counts off the deduped set during job 1, without a second
     // pass.
-    val dedupTallies = new PartitionTallies
-    spark.sparkContext.register(dedupTallies, s"r$roundNo-dedup-tallies")
-    val dedupedDf = dedup(rawCands, rn1)
-    val dupsIdx = dedupedDf.schema.fieldIndex("dups")
-    val dedupedWithDups = tallied(dedupedDf, dedupTallies)(_.getLong(dupsIdx))(
-      org.apache.spark.sql.Encoders.row(dedupedDf.schema))
+    val dedupTallies = tallies(spark, s"r$roundNo-dedup-tallies")
+    val dedupedWithDups = dedup(rawCands).filter(tally(dedupTallies, weight = $"dups"))
       .persist()
     val dedupedCands = dedupedWithDups.drop("dups").as[FrontierEntry]
 
@@ -748,7 +743,7 @@ object CrawlEngine {
     // first-touched by two concurrent branches of one job is silently
     // COMPUTED TWICE (Spark's block store races, it does not block). Job 1
     // materializes the scan-heavy prefix as ONE single-reference chain —
-    // drained (via the broadcast build) → fetch join → fused detect map →
+    // fetch (the drained pages) → fused detect map →
     // candidate dedup → new-host discovery → robots parse — by counting the
     // END of the chain: building robotsDelta builds every persisted link
     // upstream of it exactly once (each cache is referenced once within this
@@ -808,15 +803,13 @@ object CrawlEngine {
           }
         (probed.filter(!_._2).map(_._1), probed.filter(_._2).map(_._1))
     }
-    // one tally per leg (partition ids are per leg): together they count the
-    // robots-allowed candidates, so robots_blocked needs no job of its own
-    val allowedTallies = Seq.fill(2)(new PartitionTallies)
-    allowedTallies.zipWithIndex.foreach { case (t, i) =>
-      spark.sparkContext.register(t, s"r$roundNo-allowed-tallies-$i")
-    }
+    // the two legs count the robots-allowed candidates, each as its own group
+    // (partition indexes are per leg), so robots_blocked needs no job of its
+    // own
+    val allowedTallies = tallies(spark, s"r$roundNo-allowed-tallies")
     // cuckoo MISS: new unless in the not-yet-folded pending seen deltas
     // (exact, small); the filter has no false negatives for FOLDED keys
-    val missLeg = tallied(cuckooMiss, allowedTallies(0))(_ => 0L)
+    val missLeg = cuckooMiss.filter(tally(allowedTallies, group = lit(0)))
     val definiteNew = pendingSeen match {
       case None => missLeg
       case Some(p) => missLeg
@@ -825,16 +818,15 @@ object CrawlEngine {
         .as[FrontierEntry]
     }
     // exactness backstop (J5): anti-join ONLY the cuckoo-positive subset
-    val fpNew = tallied(cuckooHit, allowedTallies(1))(_ => 0L)
+    val fpNew = cuckooHit.filter(tally(allowedTallies, group = lit(1)))
       .join(seen, Seq("url_hash"), "left_anti")
       .select(feCols: _*)
       .as[FrontierEntry]
     // new-url counts per bucket ride the cache materialization as partition
     // tallies: the caller's first action over newEntries (run()'s seen-delta
     // write) materializes the probe chain
-    val newTallies = new PartitionTallies
-    spark.sparkContext.register(newTallies, s"r$roundNo-new-tallies")
-    val newEntries = tallied(definiteNew.union(fpNew), newTallies)(_ => 0L, _.bucket)
+    val newTallies = tallies(spark, s"r$roundNo-new-tallies")
+    val newEntries = definiteNew.union(fpNew).filter(tally(newTallies, group = $"bucket"))
       .persist()
 
     RoundResult(newEntries, drain.undrained, drain.keys, robotsAll, robotsDelta,
@@ -843,7 +835,7 @@ object CrawlEngine {
         nRawCands, nUnique),
       drainedByBucket,
       Seq(outputs, dedupedWithDups, newEntries, robotsDelta) ++ drain.cache,
-      drain.keySet.toSeq, newTallies, allowedTallies)
+      drain.broadcasts, newTallies, allowedTallies)
   }
 
   /** The round's lineage rows (A-9): the global counters (bucket -1) and one
@@ -855,7 +847,7 @@ object CrawlEngine {
   private def lineageRows(roundNo: Int, r: RoundResult,
       frontierSize: Long): Seq[LineageRow] = {
     val st = r.stats
-    val allowed = r.allowedTallies.map(_.totals._1).sum
+    val allowed = r.allowedTallies.totals._1
     val newByBucket = r.newTallies.rowsByGroup
     // a bucket present on either side gets a row, zero on the other
     (r.drainedByBucket.keySet ++ newByBucket.keySet).toSeq.sorted.map { b =>
@@ -1036,16 +1028,17 @@ object CrawlEngine {
     }
   }
 
-  /** The committed state in `m`. The frontier is persisted: the
-    * seen-minus-tombstones anti-join would otherwise recompute from parquet
-    * in every consumer of the first round (the drain's key collect or
-    * bounds agg, and job 1), and the drain's first job touches it first,
-    * so the cache populates race-free.
+  /** The committed state in `m`. The frontier is cut like the carried one
+    * (coalesced, then `localCheckpoint`-ed; see run()): the first round then
+    * plans over the same relation shape as every later round, so it
+    * generates the same code, and the seen-minus-tombstones anti-join runs
+    * once, at the cut, not in every consumer of the first round.
     */
   private def readState(spark: SparkSession, m: SnapshotStore.Manifest): CrawlState = {
     import spark.implicits._
     CrawlState(
-      readFrontier(spark, m).persist(),
+      readFrontier(spark, m).coalesce(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(false),
       SnapshotStore.read(spark, m, "robots", robotsSchema).as[RobotsEntry],
       SnapshotStore.read(spark, m, "filters", filterSchema).as[FilterState],
       if (m.dataDirs.contains("host_next_ok"))
@@ -1105,14 +1098,13 @@ object CrawlEngine {
         // the seeds are admitted like a round's candidates: the round's
         // dedup, robots-gated (scrapy filters start_urls at fetch time), the
         // round's seen writer, the round's filter fold
-        val seedDeduped = dedup(effSeeds.map(u => entry(u, 0, 0, nb)), 0)
+        val seedDeduped = dedup(effSeeds.map(u => entry(u, 0, 0, nb)))
           .drop("dups").as[FrontierEntry].persist()
         val robots0 = parseRobots(seedDeduped.select($"host").distinct(), bodies,
           cfg.userAgent).persist()
-        val seedTallies = new PartitionTallies
-        spark.sparkContext.register(seedTallies, "seed-tallies")
+        val seedTallies = tallies(spark, "seed-tallies")
         val seedFrontier =
-          tallied(applyRobots(seedDeduped, robots0), seedTallies)(_ => 0L).persist()
+          applyRobots(seedDeduped, robots0).filter(tally(seedTallies)).persist()
         // the admitted seeds are the seen table's first delta (the frontier's
         // add history starts with them); the write materializes the caches
         // and its tally counts them

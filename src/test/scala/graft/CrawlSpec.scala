@@ -221,15 +221,17 @@ class CrawlSpec extends AnyFunSuite {
           if (distributed) distributedPages else withRules(pages, robots),
           SyntheticWeb.seedUrls(nHosts).toDS(), fcfg, stateDir))
         finally spark.listenerManager.unregister(plans)
-      // each config runs the drain and fetch-join shapes its budget picks,
-      // and only those; neither shape shuffles html
+      // each config runs the drain and fetch shapes its budget picks, and
+      // only those: a sort-merge fetch join at budget 0, a filter on the
+      // pages scan (no join) otherwise; neither shape shuffles html
       val (ran, skipped) =
         if (distributed) ("drain-bounds", "drain-keys") else ("drain-keys", "drain-bounds")
       assert(phases.of(ran).nonEmpty && phases.of(skipped).isEmpty,
         s"[$label] want $ran jobs and no $skipped job: $ran ${phases.of(ran)}, " +
           s"$skipped ${phases.of(skipped)}")
-      assert((plans.sortMergeJoins > 0) == distributed,
-        s"[$label] ${plans.sortMergeJoins} sort-merge joins output html")
+      assert(if (distributed) plans.pageJoins.nonEmpty &&
+          plans.pageJoins.forall(_ == "SortMergeJoin") else plans.pageJoins.isEmpty,
+        s"[$label] joins output pages: ${plans.pageJoins}")
       assert(plans.htmlShuffles.isEmpty, s"[$label] html shuffled: ${plans.htmlShuffles}")
 
       // final URL-seen set: compare via hashes (engine stores hashes)
@@ -816,6 +818,78 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
+  test("UrlDepth expression returns a drained url's depth, null for any other url") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val drained = Seq("https://h.example/b" -> 2, "https://h.example/a" -> 0,
+      "https://h.example/\u00e9" -> 5)
+    val bc = spark.sparkContext.broadcast(graft.functions.UrlDepths(drained))
+    val urls = drained.map(_._1) ++ Seq("https://h.example/", "https://h.example/c", "")
+    val got = (urls :+ null).toDF("url")
+      .select(col("url"), graft.functions.KeySetFunctions.url_depth(bc, col("url")))
+      .as[(String, Option[Int])].collect().toSeq
+    assert(got == (urls :+ null).map(u => (u, drained.toMap.get(u))))
+    bc.destroy()
+  }
+
+  test("Tally expression counts rows and weight per partition and group, once") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.internal.SQLConf
+    val sc = spark.sparkContext
+    // the reference: the mapPartitions tally the expression replaced, keyed
+    // by the task's partition id, over the same input and partitioning
+    def wrapperTallies(df: DataFrame): Map[(Int, Int), (Long, Long)] = {
+      val acc = new graft.frontier.PartitionTallies
+      sc.register(acc)
+      df.rdd.foreachPartition { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        val byGroup = mutable.Map.empty[Int, (Long, Long)]
+        it.foreach { r =>
+          val (n, w) = byGroup.getOrElse(r.getInt(0), (0L, 0L))
+          byGroup(r.getInt(0)) = (n + 1, w + r.getLong(1))
+        }
+        byGroup.foreach { case (g, nw) => acc.add(((pid, g), nw)) }
+      }
+      acc.value
+    }
+    val modes = Seq("whole-stage" -> Map.empty[String, String],
+      "no whole-stage" -> Map(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false"),
+      "interpreted" -> Map(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+        SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN"))
+    for ((mode, confs) <- modes) {
+      val was = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        // 7 partitions, 5 groups, one of them empty in some partitions
+        val input = spark.range(0, 1000, 1, 7)
+          .select((col("id") % 5).cast("int").as("g"), (col("id") * 3).as("w"))
+          .filter(col("g") =!= 4 || col("id") < 300)
+        val acc = new graft.frontier.PartitionTallies
+        sc.register(acc, s"tally-spec-$mode")
+        val tallied = input.filter(graft.functions.TallyFunctions.tally(acc,
+          group = col("g"), weight = col("w"))).persist()
+        val want = wrapperTallies(input)
+        assert(tallied.count() == input.count(), s"[$mode] the tally filter dropped rows")
+        assert(acc.value == want, s"[$mode] ${acc.value} != $want")
+        val byGroup = input.collect().groupMapReduce(_.getInt(0))(r => (1L, r.getLong(1))) {
+          case ((a, b), (c, d)) => (a + c, b + d)
+        }
+        assert(acc.rowsByGroup == byGroup.map { case (g, nw) => g -> nw._1 },
+          s"[$mode] rows per group")
+        // a cache hit computes nothing; a recompute of every partition
+        // overwrites each (partition, group) with the same tally
+        tallied.count()
+        assert(acc.value == want, s"[$mode] a cache hit changed the tallies")
+        tallied.unpersist(blocking = true)
+        tallied.count()
+        assert(acc.value == want, s"[$mode] a recompute changed the tallies")
+      } finally was.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   /** Task counts per SQL execution of each job description (the engine's
     * phase label), in execution order: one entry per action of that phase.
     */
@@ -840,17 +914,17 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   /** Joins and shuffles of html across every SQL execution, the plans of
-    * the caches they read included: how many sort-merge joins output html
-    * (the distributed fetch join), and the columns of each shuffle that
-    * carries it.
+    * the caches they read included: the node name of each join that
+    * outputs pages (url and html: a fetch join), and the columns of each
+    * shuffle that carries html.
     */
   private final class HtmlPlans extends org.apache.spark.sql.util.QueryExecutionListener {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    @volatile var sortMergeJoins = 0
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    @volatile var pageJoins = Seq.empty[String]
     @volatile var htmlShuffles = Seq.empty[Seq[String]]
     private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -862,7 +936,8 @@ class CrawlSpec extends AnyFunSuite {
       nodes(qe.executedPlan).foreach { n =>
         val cols = n.output.map(_.name)
         n match {
-          case _: SortMergeJoinExec if cols.contains("html") => sortMergeJoins += 1
+          case j: BaseJoinExec if cols.contains("html") && cols.contains("url") =>
+            pageJoins :+= j.nodeName
           case _: ShuffleExchangeExec if cols.contains("html") => htmlShuffles :+= cols
           case _ =>
         }
@@ -958,6 +1033,49 @@ class CrawlSpec extends AnyFunSuite {
     }
     assert(grown.isEmpty, grown.mkString("; "))
     assertFlatSortedSeen(SnapshotStore.latestManifest(stateDir).get)
+  }
+
+  /** Classes Spark's code generator compiled during each crawl round: the
+    * compile count at the first job of each `drain-keys` execution (a
+    * round's first action), differenced; `end` is the count after the
+    * crawl. Each class compiles once per classloader, so in local mode a
+    * whole-stage class counts twice, driver and executor side.
+    */
+  private final class CompilesPerRound extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    private val atRoundStart = mutable.LinkedHashMap.empty[String, Long]
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = synchronized {
+      val p = Option(e.properties)
+      if (p.exists(_.getProperty("spark.job.description") == "drain-keys"))
+        atRoundStart.getOrElseUpdate(p.get.getProperty("spark.sql.execution.id"),
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    }
+    def perRound(end: Long): Seq[Long] = synchronized {
+      (atRoundStart.values.toSeq :+ end).sliding(2).map { case Seq(a, b) => b - a }.toSeq
+    }
+  }
+
+  test("a steady round compiles no code: every round after the second compiles <= 2 classes") {
+    import spark.implicits._
+    // drain-shaped like the benchmark's drain_rounds: every page seeds the
+    // frontier and the per-host budget is the round size. A round that
+    // generates code of its own (a round-number literal, a first round
+    // planned over another relation shape) or uses more generated classes
+    // than Spark's codegen cache holds (spark.sql.codegen.cache.maxEntries,
+    // 100 by default) recompiles them every round
+    val drainCfg = cfg.copy(roundSize = 6, hostBudgetPerRound = 6, maxRounds = 16)
+    val compiles = new CompilesPerRound
+    val stateDir = graft.util.TempDirs.create("graft-codegen-").toString
+    val stats = listening(compiles)(CrawlEngine.run(spark, withRules(pagesCached, robots),
+      pageMap.keys.toSeq.sorted.toDS(), drainCfg, stateDir))
+    val perRound = compiles.perRound(
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    info(s"classes compiled per round: $perRound")
+    assert(stats.rounds >= 6 && perRound.length == stats.rounds,
+      s"want a >= 6-round drain with one drain-keys execution per round: " +
+        s"${stats.rounds} rounds, $perRound")
+    val recompiled = perRound.zipWithIndex.drop(2).filter(_._1 > 2)
+    assert(recompiled.isEmpty, s"rounds recompiling code: $recompiled of $perRound")
   }
 
   test("a multi-round crawl aggregates the robots source once per run") {

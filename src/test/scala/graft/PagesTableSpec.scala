@@ -37,8 +37,7 @@ class PagesTableSpec extends AnyFunSuite {
       .map(i => (s"https://h${i % 4}.example/p/$i", 0))
       .toDF("url", "depth")
 
-    val joined = CrawlEngine.fetchJoin(drained,
-      PagesTable.read(spark, "ptspec_pages"), broadcastKeys = false)
+    val joined = CrawlEngine.fetchJoin(drained, PagesTable.read(spark, "ptspec_pages"))
     assert(joined.count() == 128)
     val exchanges = joined.queryExecution.executedPlan.collect {
       case e: Exchange => e.output.map(_.name)
@@ -57,8 +56,7 @@ class PagesTableSpec extends AnyFunSuite {
     pages.write.mode("overwrite").parquet(dir)
     val drained = (0 until 64 by 2)
       .map(i => (s"https://h.example/p/$i", 0)).toDF("url", "depth")
-    val joined = CrawlEngine.fetchJoin(drained, spark.read.parquet(dir),
-      broadcastKeys = false)
+    val joined = CrawlEngine.fetchJoin(drained, spark.read.parquet(dir))
     assert(joined.count() == 32)
     val exchanges = joined.queryExecution.executedPlan.collect {
       case e: Exchange => e.output.map(_.name)

@@ -3,6 +3,7 @@ package graft.frontier
 import scala.collection.mutable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.urls.UrlOps
@@ -169,7 +170,7 @@ private[graft] final class PartitionTallies
   *
   * Generated code is a per-round cost too. Every round plans the same
   * relation shapes with no round-specific literal (the first round's
-  * frontier is cut like the carried one; `dedup` groups by the entries' own
+  * state is cut like the carried state; `dedup` groups by the entries' own
   * `discovered_round`), so each round generates the same code, and Spark
   * compiles it once per run — while a round's generated classes fit Spark's
   * codegen cache (`spark.sql.codegen.cache.maxEntries`, 100 by default, a
@@ -274,6 +275,34 @@ object CrawlEngine {
     val t = new PartitionTallies
     spark.sparkContext.register(t, name)
     t
+  }
+
+  /** A plan cut: `ds` coalesced (narrow) to one partition per core, so its
+    * tasks stay flat in the round number, and `localCheckpoint`-ed. A lazy
+    * cut runs no job: the first job that reads it materializes it, so it may
+    * read only parquet or inputs that the next round's `drain-keys` job reads
+    * (the carried frontier, all of it). Else it fails later with "Checkpoint
+    * block not found", once its input is released.
+    */
+  private def cut[T](ds: Dataset[T], eager: Boolean): Dataset[T] =
+    ds.coalesce(ds.sparkSession.sparkContext.defaultParallelism).localCheckpoint(eager)
+
+  /** What one crawl round holds: the tables it persists, the broadcasts it
+    * ships, and the carried cuts its carry supersedes. [[release]] frees
+    * them all one way; for a cut that means unpersisting its checkpointed
+    * RDD, which `Dataset.unpersist` leaves persisted.
+    */
+  private final class Held {
+    private val releases = mutable.ArrayBuffer.empty[() => Unit]
+    def apply[T](ds: Dataset[T]): Dataset[T] = {
+      releases += (() => ds.queryExecution.logical match {
+        case c: LogicalRDD => c.rdd.unpersist(blocking = false)
+        case _ => ds.unpersist(blocking = false)
+      })
+      ds
+    }
+    def apply[T](b: Broadcast[T]): Broadcast[T] = { releases += (() => b.destroy()); b }
+    def release(): Unit = { releases.foreach(_()); releases.clear() }
   }
 
   def entry(url: String, depth: Int, round: Int, numBuckets: Int): FrontierEntry = {
@@ -462,16 +491,14 @@ object CrawlEngine {
       .select(col("url"), col("depth"), col("html"))
 
   /** Everything one round hands back to the commit path. */
-  final case class RoundResult(
+  private final case class RoundResult(
       adds: Dataset[FrontierEntry],
       // the frontier minus this round's drain: with `adds`, the next round's
       // frontier
       undrained: Dataset[FrontierEntry],
       drainedKeys: DataFrame,
       // this round's full robots table: the previous one when no host was
-      // new, else prev ∪ delta — carried into the next round in place of a
-      // parquet re-read, which also frees the commit's robots delta write
-      // from being a read barrier
+      // new, else prev ∪ delta, which the carry cuts for the next round
       robotsAll: Dataset[RobotsEntry],
       robotsDelta: Dataset[RobotsEntry],
       nNewHosts: Long,
@@ -479,10 +506,6 @@ object CrawlEngine {
       outputs: Dataset[PageOutput],
       stats: RoundStats,
       drainedByBucket: Map[Int, Long],
-      caches: Seq[Dataset[_]],
-      // read by `undrained`'s plan: destroy only once the carried frontier
-      // has materialized
-      broadcasts: Seq[Broadcast[_]],
       // tallies inside the `adds` cache: no round() job materializes it, so
       // they are valid only after the caller's first action over `adds`
       // (run()'s seen-delta write)
@@ -497,13 +520,10 @@ object CrawlEngine {
     *   - `keys`: the drained url_hash rows (the frontier_rm delta)
     *   - `fetched`: the drained pages as (url, depth, html)
     *   - `byBucket`: drained counts per bucket, valid once job 1 has run
-    *   - `broadcasts`, `cache`: what the drain holds until the round is
-    *     carried
     */
   private final case class Drain(rows: Dataset[FrontierEntry],
       undrained: Dataset[FrontierEntry], keys: DataFrame, fetched: DataFrame,
-      byBucket: () => Map[Int, Long], broadcasts: Seq[Broadcast[_]],
-      cache: Option[Dataset[FrontierEntry]])
+      byBucket: () => Map[Int, Long])
 
   /** The drain whose keys fit the broadcast budget: an exact top-k via ONE
     * narrow TakeOrdered job collected to the driver. Only narrow sort keys
@@ -522,7 +542,7 @@ object CrawlEngine {
     *   - the drained count, per bucket
     *   - the frontier_rm delta rows
     */
-  private def drainByKeys(spark: SparkSession, frontier: Dataset[FrontierEntry],
+  private def drainByKeys(spark: SparkSession, held: Held, frontier: Dataset[FrontierEntry],
       eligible: Dataset[FrontierEntry], pages: DataFrame, roundSize: Int): Drain = {
     import graft.functions.KeySetFunctions.{key_in, url_depth}
     val keyRows = phase(spark, "drain-keys")(eligible
@@ -534,10 +554,10 @@ object CrawlEngine {
     val hashes = keyRows.map(_._1)
     val sorted = hashes.clone()
     java.util.Arrays.sort(sorted)
-    val keySet = spark.sparkContext.broadcast(sorted)
+    val keySet = held(spark.sparkContext.broadcast(sorted))
     val inDrain = key_in(keySet, col("url_hash"))
-    val depths = spark.sparkContext.broadcast(
-      graft.functions.UrlDepths(keyRows.toSeq.map(r => (r._3, r._4))))
+    val depths = held(spark.sparkContext.broadcast(
+      graft.functions.UrlDepths(keyRows.toSeq.map(r => (r._3, r._4)))))
     val depth = url_depth(depths, col("url"))
     val fetched =
       (if (keyRows.isEmpty) pages.limit(0)
@@ -554,7 +574,7 @@ object CrawlEngine {
       math.max(1, hashes.length / 250000)).toDF("url_hash")
     val byBucket = keyRows.groupMapReduce(_._2)(_ => 1L)(_ + _)
     Drain(frontier.filter(inDrain), frontier.filter(!inDrain), keysDf, fetched,
-      () => byBucket, Seq(keySet, depths), None)
+      () => byBucket)
   }
 
   /** The drain whose keys exceed the broadcast budget: they stay distributed.
@@ -563,7 +583,7 @@ object CrawlEngine {
     * The drained rows are persisted; tallies inside that cache count them
     * per bucket.
     */
-  private def drainDistributed(spark: SparkSession, roundNo: Int,
+  private def drainDistributed(spark: SparkSession, held: Held, roundNo: Int,
       frontier: Dataset[FrontierEntry], eligible: Dataset[FrontierEntry],
       frontierSize: Long, pages: DataFrame, roundSize: Int): Drain = {
     import spark.implicits._
@@ -578,7 +598,7 @@ object CrawlEngine {
           .limit(roundSize)
           .select($"url_hash"), Seq("url_hash"), "left_semi")
         .as[FrontierEntry]
-    val drained = rows.filter(tally(drainedTallies, group = $"bucket")).persist()
+    val drained = held(rows.filter(tally(drainedTallies, group = $"bucket")).persist())
     // bounds from one agg over the drained cache, which also materializes it
     val fetchPages =
       if (frontierSize <= roundSize) pages
@@ -593,7 +613,7 @@ object CrawlEngine {
       frontier.join(drained.select($"url_hash"), Seq("url_hash"), "left_anti")
         .select(feCols: _*).as[FrontierEntry],
       drained.select($"url_hash"), fetchJoin(drained.select($"url", $"depth"), fetchPages),
-      () => drainedTallies.rowsByGroup, Nil, Some(drained))
+      () => drainedTallies.rowsByGroup)
   }
 
   /** One fetch-schedule round.
@@ -610,9 +630,11 @@ object CrawlEngine {
     * `robots`: the robots table so far; rules for hosts first seen this
     * round are parsed from `robotsBodies` (the run's one-row-per-host robots
     * table, [[robotsBodies]]) inside the round and returned as `robotsDelta`.
+    * Every table it persists and broadcast it ships goes on `held`.
     */
-  def round(
+  private def round(
       spark: SparkSession,
+      held: Held,
       roundNo: Int,
       frontier: Dataset[FrontierEntry],
       frontierSize: Long,
@@ -652,8 +674,8 @@ object CrawlEngine {
       else topKPerHost(frontierEligible, cfg.hostBudgetPerRound)
     val byKeys = drainsByKeys(cfg, frontierSize)
     val drain =
-      if (byKeys) drainByKeys(spark, frontier, eligible, pages, cfg.roundSize)
-      else drainDistributed(spark, roundNo, frontier, eligible, frontierSize,
+      if (byKeys) drainByKeys(spark, held, frontier, eligible, pages, cfg.roundSize)
+      else drainDistributed(spark, held, roundNo, frontier, eligible, frontierSize,
         pages, cfg.roundSize)
 
     // --- "fetch" (J4): the drained pages, from the pages table by url ---
@@ -679,7 +701,7 @@ object CrawlEngine {
     // is pure old-gen GC pressure at high core counts.
     val retain = retainOutputs
     val outputTallies = tallies(spark, s"r$roundNo-output-tallies")
-    val outputs: Dataset[PageOutput] = fetched.map { case (url, depth, html) =>
+    val outputs: Dataset[PageOutput] = held(fetched.map { case (url, depth, html) =>
       val doc = HtmlParser.parseBytes(html)
       val det = Detector.detectDoc(url, doc)
       val rows = det.lists.headOption.map(_.data).getOrElse(Seq.empty)
@@ -705,7 +727,7 @@ object CrawlEngine {
       // in job 1) and never again on cache hits. That removes the counters
       // job's full re-read of this cache (260 task launches per round just
       // to sum n_rows — pure scheduling latency at partial-drain sizes).
-      .persist()
+      .persist())
 
     // --- candidates (C2): explode pre-canonicalized links (hash-only),
     // allow-domains filter ---
@@ -724,8 +746,8 @@ object CrawlEngine {
     // candidate counts off the deduped set during job 1, without a second
     // pass.
     val dedupTallies = tallies(spark, s"r$roundNo-dedup-tallies")
-    val dedupedWithDups = dedup(rawCands).filter(tally(dedupTallies, weight = $"dups"))
-      .persist()
+    val dedupedWithDups = held(dedup(rawCands).filter(tally(dedupTallies, weight = $"dups"))
+      .persist())
     val dedupedCands = dedupedWithDups.drop("dups").as[FrontierEntry]
 
     // --- robots (C4): parse rules for hosts FIRST SEEN this round from the
@@ -737,7 +759,7 @@ object CrawlEngine {
     // keyed by host, so no scheme needs reconstructing here.)
     val candHosts = dedupedCands.select($"host").distinct()
     val newHosts = candHosts.join(robots.select($"host"), Seq("host"), "left_anti")
-    val robotsDelta = parseRobots(newHosts, robotsBodies, cfg.userAgent).persist()
+    val robotsDelta = held(parseRobots(newHosts, robotsBodies, cfg.userAgent).persist())
 
     // --- the round's ONE pre-commit job barrier. Any cached dataset
     // first-touched by two concurrent branches of one job is silently
@@ -826,16 +848,14 @@ object CrawlEngine {
     // tallies: the caller's first action over newEntries (run()'s seen-delta
     // write) materializes the probe chain
     val newTallies = tallies(spark, s"r$roundNo-new-tallies")
-    val newEntries = definiteNew.union(fpNew).filter(tally(newTallies, group = $"bucket"))
-      .persist()
+    val newEntries = held(definiteNew.union(fpNew).filter(tally(newTallies, group = $"bucket"))
+      .persist())
 
     RoundResult(newEntries, drain.undrained, drain.keys, robotsAll, robotsDelta,
       nNewHosts, delayDelta, outputs,
       RoundStats(drainedByBucket.values.sum, fetchedTotal, extractedTotal,
         nRawCands, nUnique),
-      drainedByBucket,
-      Seq(outputs, dedupedWithDups, newEntries, robotsDelta) ++ drain.cache,
-      drain.broadcasts, newTallies, allowedTallies)
+      drainedByBucket, newTallies, allowedTallies)
   }
 
   /** The round's lineage rows (A-9): the global counters (bucket -1) and one
@@ -868,11 +888,12 @@ object CrawlEngine {
     * rewritten filters table; amortized write cost is O(1) per key because
     * folds trigger proportionally to the seen size and rebuilds double.
     *
-    * @return (folded filters table, total serialized blob bytes) — the byte
-    *   figure rides the materialization agg and feeds the manifest's
-    *   `filter_blob_bytes` counter, so the broadcast-probe gate compares the
-    *   ACTUAL broadcast payload against its budget instead of a uniform
-    *   capacity model (which undercounts skewed or stash-carrying filters).
+    * @return (folded filters table as an eager [[cut]], total serialized
+    *   blob bytes) — the byte figure is a tally inside the cut's job and
+    *   feeds the manifest's `filter_blob_bytes` counter, so the
+    *   broadcast-probe gate compares the ACTUAL broadcast payload against its
+    *   budget instead of a uniform capacity model (which undercounts skewed
+    *   or stash-carrying filters). The cut is the caller's to release.
     */
   def foldFilters(
       spark: SparkSession,
@@ -882,8 +903,10 @@ object CrawlEngine {
       initialCapacity: Long): (Dataset[FilterState], Long) = {
     import spark.implicits._
     val cap = initialCapacity
+    // the pass-1 table and the rebuild sizes: read only by the cut below
+    val pass = new Held
     // pass 1: insert where room; mark overfull buckets for rebuild
-    val folded = pendingKeys.groupByKey(_.bucket)
+    val folded = pass(pendingKeys.groupByKey(_.bucket)
       .cogroup(filters.groupByKey(_.bucket)) { (b, ns, fs) =>
         val keys = ns.map(_.url_hash).toArray
         val filt = fs.nextOption().map(f => CuckooFilter.fromBytes(f.cuckoo_bytes))
@@ -896,13 +919,13 @@ object CrawlEngine {
           // target size for the rebuild: everything it must hold, doubled
           Iterator.single((FilterState(b, Array.emptyByteArray,
             filt.size + keys.length), true))
-      }.persist()
+      }.persist())
     val rebuildSizes = folded.filter(_._2).map(t => (t._1.bucket, t._1.n_keys))
       .collect().toMap // one small int->long pair per overfull bucket
     val result =
       if (rebuildSizes.isEmpty) folded.map(_._1)
       else {
-        val sizesBc = spark.sparkContext.broadcast(rebuildSizes)
+        val sizesBc = pass(spark.sparkContext.broadcast(rebuildSizes))
         // COLUMN predicate, not a closure: the seen files are sorted by
         // (bucket, url_hash) ([[writeSeen]]), so the IN list pushes down to
         // the parquet scan, which skips other buckets' row groups and pages
@@ -918,14 +941,11 @@ object CrawlEngine {
           }
         folded.filter(!_._2).map(_._1).union(rebuilt)
       }
-    // materialize before unpersisting the 2-pass intermediate; the
-    // materializing action doubles as the exact blob-byte tally
-    val out = result.persist()
-    val blobBytes = out.toDF()
-      .agg(coalesce(sum(length(col("cuckoo_bytes"))), lit(0L)))
-      .as[Long].head()
-    folded.unpersist()
-    (out, blobBytes)
+    val blobTallies = tallies(spark, "filter-blob-tallies")
+    val out = cut(result.filter(tally(blobTallies, weight = length(col("cuckoo_bytes")))),
+      eager = true)
+    pass.release()
+    (out, blobTallies.totals._2)
   }
 
   /** Write one seen-table delta to `dir`: the bootstrap's admitted seeds,
@@ -966,11 +986,13 @@ object CrawlEngine {
 
   /** The tables a round reads besides the seen set, and hands on to the
     * next round: frontier, robots, filters and host_next_ok (host,
-    * next_ok_round).
+    * next_ok_round). Each is a [[cut]].
     */
   private final case class CrawlState(frontier: Dataset[FrontierEntry],
       robots: Dataset[RobotsEntry], filters: Dataset[FilterState],
-      delay: Option[DataFrame])
+      delay: Option[DataFrame]) {
+    def tables: Seq[Dataset[_]] = Seq(frontier, robots, filters) ++ delay
+  }
 
   /** The crawl's manifest counters, committed with every snapshot; the
     * field names are the manifest keys.
@@ -1028,21 +1050,20 @@ object CrawlEngine {
     }
   }
 
-  /** The committed state in `m`. The frontier is cut like the carried one
-    * (coalesced, then `localCheckpoint`-ed; see run()): the first round then
-    * plans over the same relation shape as every later round, so it
-    * generates the same code, and the seen-minus-tombstones anti-join runs
-    * once, at the cut, not in every consumer of the first round.
+  /** The committed state in `m`, every table a lazy [[cut]] over parquet,
+    * like the carried ones: the first round then plans over the same
+    * relation shapes as every later round, so it generates the same code,
+    * and the seen-minus-tombstones anti-join runs once, at the frontier's
+    * cut, not in every consumer of the first round.
     */
   private def readState(spark: SparkSession, m: SnapshotStore.Manifest): CrawlState = {
     import spark.implicits._
     CrawlState(
-      readFrontier(spark, m).coalesce(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(false),
-      SnapshotStore.read(spark, m, "robots", robotsSchema).as[RobotsEntry],
-      SnapshotStore.read(spark, m, "filters", filterSchema).as[FilterState],
+      cut(readFrontier(spark, m), eager = false),
+      cut(SnapshotStore.read(spark, m, "robots", robotsSchema).as[RobotsEntry], eager = false),
+      cut(SnapshotStore.read(spark, m, "filters", filterSchema).as[FilterState], eager = false),
       if (m.dataDirs.contains("host_next_ok"))
-        Some(SnapshotStore.read(spark, m, "host_next_ok", delaySchema))
+        Some(cut(SnapshotStore.read(spark, m, "host_next_ok", delaySchema), eager = false))
       else None)
   }
 
@@ -1089,6 +1110,12 @@ object CrawlEngine {
       .select(col("url"), col("html"))
       .filter(col("url").endsWith("/robots.txt")))
       .persist()
+    // What the running round holds, and what the round before it holds
+    // ([[Held]]). The carried frontier is a lazy cut over the round before's
+    // tables and broadcasts, so those go once this round's round() has
+    // returned: its drain-keys job has read every partition of that cut
+    var held = new Held
+    var before = new Held
     var (manifest, ctr) = existing
       .getOrElse {
         // P14: test-mode seed skip (web_spider.py:68-69)
@@ -1098,13 +1125,13 @@ object CrawlEngine {
         // the seeds are admitted like a round's candidates: the round's
         // dedup, robots-gated (scrapy filters start_urls at fetch time), the
         // round's seen writer, the round's filter fold
-        val seedDeduped = dedup(effSeeds.map(u => entry(u, 0, 0, nb)))
-          .drop("dups").as[FrontierEntry].persist()
-        val robots0 = parseRobots(seedDeduped.select($"host").distinct(), bodies,
-          cfg.userAgent).persist()
+        val seedDeduped = held(dedup(effSeeds.map(u => entry(u, 0, 0, nb)))
+          .drop("dups").as[FrontierEntry].persist())
+        val robots0 = held(parseRobots(seedDeduped.select($"host").distinct(), bodies,
+          cfg.userAgent).persist())
         val seedTallies = tallies(spark, "seed-tallies")
         val seedFrontier =
-          applyRobots(seedDeduped, robots0).filter(tally(seedTallies)).persist()
+          held(applyRobots(seedDeduped, robots0).filter(tally(seedTallies)).persist())
         // the admitted seeds are the seen table's first delta (the frontier's
         // add history starts with them); the write materializes the caches
         // and its tally counts them
@@ -1114,6 +1141,7 @@ object CrawlEngine {
         val seedKeys = seedFrontier.map(e => SeenEntry(e.bucket, e.url_hash))
         val (filters0, filterBytes0) = phase(spark, "fold")(foldFilters(spark,
           spark.emptyDataset[FilterState], seedKeys, seedKeys, cfg.filterCapacityPerBucket))
+        held(filters0)
         val c0 = CrawlCounters(round = -1, fetched = 0, extracted = 0,
           seen = nSeeds, frontier_size = nSeeds, filters_folded_dirs = 1,
           pending_keys = 0, delay_rows = 0, filter_blob_bytes = filterBytes0,
@@ -1124,82 +1152,52 @@ object CrawlEngine {
             "robots" -> robots0.toDF(),
             "lineage" -> spark.emptyDataset[LineageRow].toDF()),
           c0.toMap, preWritten = Set("seen"))
-        Seq(seedDeduped, seedFrontier, robots0, filters0).foreach(_.unpersist())
+        held.release() // the first round reads the bootstrap's commit, not its tables
         (m, c0)
       }
     var roundNo = ctr.round.toInt + 1
 
     // seen-probe broadcast (one per FOLD EPOCH — the blobs only change when
     // a fold commits): built lazily from the filters table when
-    // `filter_blob_bytes` fits the broadcast budget, dropped on
-    // fold. A 10^10-url frontier (~4 B/key of blobs) stays on the
-    // co-partitioned cogroup path.
+    // `filter_blob_bytes` fits the broadcast budget; a fold supersedes it.
+    // A 10^10-url frontier (~4 B/key of blobs) stays on the co-partitioned
+    // cogroup path.
     var filtersBc: Option[Broadcast[Array[CuckooFilter]]] = None
-    // a dropped broadcast (a folded-away filter set, a round's drained-key
-    // set) is RETIRED, not destroyed on the spot: the carried frontier's
-    // lazy plan (see `state` below) still references the expressions built
-    // over it until the next round's first job materializes the carry —
-    // destroying eagerly fails that job with "Attempted to use Broadcast
-    // after it was destroyed"
-    var retired: Seq[Broadcast[_]] = Nil
-    def dropFiltersBc(): Unit = {
-      filtersBc.foreach(b => retired :+= b)
-      filtersBc = None
-    }
     // One state path: the first round that runs (fresh or resumed) reads
     // frontier, robots, filters and host_next_ok from the manifest; every
     // later round takes them from the round before, in memory — frontier
     // prev − drained ∪ adds, robots prev ∪ delta, filters the folded table,
     // host_next_ok the merged delay table. A round's frontier update is
     // then an anti-join against one round's drained keys (usually a
-    // broadcast), not against every committed tombstone dir, and the next
-    // round reads none of the files the commit writes, so the commit runs
-    // CONCURRENTLY with it (see commitAsync). Read lazily: a run that runs
-    // no round (a maxRounds = 0 bootstrap) lists no state files. The seen
-    // table is the exception — a 10^10-key seen set cannot be carried, so
-    // it is read from parquet every round.
+    // broadcast), not against every committed tombstone dir, and the commit
+    // runs CONCURRENTLY with the next round (see `pendingCommit`). Read
+    // lazily: a run that runs no round (a maxRounds = 0 bootstrap) lists no
+    // state files. The seen table is the exception — a 10^10-key seen set
+    // cannot be carried, so it is read from parquet every round.
     var state: CrawlState = null
-    // persisted tables the carried filters / host_next_ok checkpoints are
-    // cut from. A checkpoint may first materialize rounds later (the
-    // cogroup probe reads the filters only in the seen write; an empty delay
-    // table is never read), so its source is released only once a fold or
-    // merge has read the checkpoint and replaced it, or when run() ends.
-    var filtersSrc: Option[Dataset[_]] = None
-    var delaySrc: Option[Dataset[_]] = None
-    // the carried plans reference the PREVIOUS round's caches (frontier,
-    // drained, newEntries, robotsAll), so those are unpersisted only after
-    // the next round's first job has materialized the carried caches
-    var pendingUnpersist: Seq[Dataset[_]] = Nil
-    def flushUnpersist(): Unit = {
-      pendingUnpersist.foreach(_.unpersist())
-      pendingUnpersist = Nil
-      retired.foreach(_.destroy())
-      retired = Nil
-    }
     // In-flight snapshot commit: the manifest OBJECT is known synchronously
     // (commitAsync), the parquet writes + atomic manifest rename complete in
     // the background while the next round's jobs run — the next round reads
     // none of the files being written (frontier/robots/filters/delay are
     // carried in memory; the seen delta was written synchronously as the
     // round's count barrier). Awaited before the next commit (version
-    // ordering) and before run() returns.
+    // ordering), before anything it reads is released, and before run()
+    // returns.
     var pendingCommit: Option[scala.concurrent.Future[Unit]] = None
     def awaitCommit(): Unit = pendingCommit.foreach { f =>
       phase(spark, "commit-await")(
         scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
       pendingCommit = None
     }
-    // everything the run holds, released once its last commit is durable
+    // everything the run holds, released once its last commit is durable:
+    // the rounds' lists and what no carry superseded
     def release(): Unit = {
       awaitCommit()
-      flushUnpersist()
-      Option(state).foreach { s =>
-        (Seq(s.frontier, s.robots, s.filters) ++ s.delay).foreach(_.unpersist())
-      }
-      (filtersSrc ++ delaySrc).foreach(_.unpersist())
-      bodies.unpersist()
-      dropFiltersBc()
-      flushUnpersist() // destroy the just-retired broadcast: nothing references it now
+      Option(state).foreach(_.tables.foreach(held(_)))
+      filtersBc.foreach(held(_))
+      held(bodies)
+      before.release()
+      held.release()
     }
     var pagesChecked = false
     var continue = true
@@ -1236,24 +1234,24 @@ object CrawlEngine {
           rows.foreach(fs => arr(fs.bucket) = CuckooFilter.fromBytes(fs.cuckoo_bytes))
           filtersBc = Some(spark.sparkContext.broadcast(arr))
         }
-      val r = phase(spark, "round-build")(round(spark, roundNo, frontier, ctr.frontier_size,
-        seen, filters, pendingSeen, robots, blockedHosts, delayActive, pages,
-        bodies, cfg, retainOutputs = collectOutputs, filtersBc = filtersBc))
+      val r = phase(spark, "round-build")(round(spark, held, roundNo, frontier,
+        ctr.frontier_size, seen, filters, pendingSeen, robots, blockedHosts, delayActive,
+        pages, bodies, cfg, retainOutputs = collectOutputs, filtersBc = filtersBc))
       val stats = r.stats
       // the previous round's commit ran CONCURRENTLY with this round's jobs
       // (its files are invisible to them — state is carried in memory);
-      // await it before touching anything it references
+      // await it before releasing anything it reads
       awaitCommit()
-      // this round's jobs have materialized the carried frontier cache, so
-      // the previous round's datasets it was built from can go now
-      flushUnpersist()
+      // this round's jobs have materialized the carried frontier, so what
+      // the round before held can go now
+      before.release()
       if (stats.drained == 0) {
-        // nothing drained, so the state is unchanged and stays carried. With
+        // nothing drained, so the state is unchanged and stays carried, and
+        // nothing carried reads what this round holds: it goes at once. With
         // everything left inside a crawl-delay window this is an idle round:
         // the logical clock ticks (no commit; deterministic on resume)
         // rather than the crawl ending with a non-empty frontier
-        r.caches.foreach(_.unpersist())
-        retired ++= r.broadcasts
+        held.release()
         if (blockedHosts.isDefined) roundNo += 1 else continue = false
       }
       else {
@@ -1292,16 +1290,26 @@ object CrawlEngine {
               seen.union(newKeys), cfg.filterCapacityPerBucket))
             (Some(f), fb)
           }
-        // crawl-delay state: merge this round's closed windows into the
-        // (small: only hosts with multi-round delays) host_next_ok table,
-        // pruning expired rows at write
-        val delayTable: Option[(DataFrame, Long)] = r.delayDelta.map { dd =>
-          val merged = delay.fold(dd)(_.union(dd))
+        // The next round's state: every table this round changed is a
+        // [[cut]], NOT a persist — the frontier's adds leg embeds the whole
+        // round pipeline and its undrained leg the previous carried plan, so a
+        // carried raw plan doubles every round (persist never truncates plans;
+        // an uncut union of one round's adds measured ~0.8 s of planning before
+        // one action in round 2, ~2.0 s in round 3). The frontier, prev −
+        // drained ∪ adds as a read of this commit returns it, is a lazy cut
+        // that the next drain-keys job materializes. Robots after new hosts,
+        // the folded filters and host_next_ok merged with this round's closed
+        // crawl-delay windows (expired rows pruned, rows tallied) are eager.
+        lazy val delayRows = tallies(spark, s"r$roundNo-delay-tallies")
+        val mergedDelay = r.delayDelta.map(dd => phase(spark, "carry-cut")(
+          cut(delay.fold(dd)(_.union(dd))
             .groupBy($"host").agg(max($"next_ok_round").as("next_ok_round"))
             .filter($"next_ok_round" > roundNo)
-            .persist()
-          (merged, merged.count())
-        }
+            .filter(tally(delayRows)), eager = true)))
+        val carried = phase(spark, "carry-cut")(CrawlState(
+          cut(r.undrained.union(r.adds), eager = false),
+          if (r.nNewHosts == 0) robots else cut(r.robotsAll, eager = true),
+          folded.getOrElse(filters), mergedDelay.orElse(delay)))
         val next = ctr.copy(round = roundNo,
           fetched = ctr.fetched + stats.fetched,
           extracted = ctr.extracted + stats.extracted,
@@ -1311,7 +1319,7 @@ object CrawlEngine {
             if (doFold) seenDirs.length + (if (newsThisRound) 1 else 0)
             else ctr.filters_folded_dirs,
           pending_keys = if (doFold) 0L else newPending,
-          delay_rows = delayTable.map(_._2).getOrElse(ctr.delay_rows),
+          delay_rows = if (mergedDelay.isDefined) delayRows.totals._1 else ctr.delay_rows,
           filter_blob_bytes = blobBytes,
           max_delay_ms =
             if (r.nNewHosts == 0) ctr.max_delay_ms
@@ -1323,16 +1331,13 @@ object CrawlEngine {
         // ...) is carried from the previous manifest; `outputs` is
         // per-round, so it is never carried.
         val tables = folded.map(f => "filters" -> f.toDF()).toMap ++
-          delayTable.map(t => "host_next_ok" -> t._1) ++
+          mergedDelay.map("host_next_ok" -> _) ++
           (if (collectOutputs) Map("outputs" -> r.outputs.drop("links", "link_hosts").toDF()) else Map.empty)
         val deltas = Map("frontier_rm" -> r.drainedKeys, "lineage" -> lineage) ++
           (if (r.nNewHosts > 0) Map("robots" -> r.robotsDelta.toDF()) else Map.empty)
-        // ASYNC commit: the manifest object is known up front (every data
-        // dir path is deterministic), so the writes + atomic rename proceed
-        // in the background while the NEXT round's jobs run — the next round
-        // reads none of these files (frontier/robots/filters/delay carried
-        // in memory; the seen delta was written synchronously above).
-        // Awaited right after the next round's jobs complete.
+        // ASYNC commit (see `pendingCommit`): every data dir path is
+        // deterministic, so the manifest is known up front and the writes
+        // run while the NEXT round's jobs do.
         val (m2, commitDone) = phase(spark, "commit")(SnapshotStore.commitAsync(
           stateDir, roundNo + 1, tables, next.toMap,
           prev = Some(manifest.copy(dataDirs = manifest.dataDirs - "outputs")),
@@ -1341,37 +1346,14 @@ object CrawlEngine {
         manifest = m2
         pendingCommit = Some(commitDone)
         ctr = next
-        // the committed blobs changed — next round re-collects them
-        if (doFold) dropFiltersBc()
-        // the next round's state, carried in memory. The frontier is
-        // prev − drained ∪ adds, exactly what a read of the manifest
-        // committed above returns. Every changed table is cut with
-        // localCheckpoint(lazy), NOT persist: the frontier's adds leg embeds
-        // the whole round pipeline and its undrained leg the previous carried
-        // plan, and robots is referenced TWICE per round (prev ∪ delta AND
-        // the new-host anti-join), so a carried raw plan doubles every round
-        // — analysis cost explodes by round ~4 (persist caches rows, it never
-        // truncates plans; carrying one round's adds as an uncut union
-        // measured ~0.8 s of planning before one action in round 2, ~2.0 s in
-        // round 3). The cut runs no job: every leg is narrow over caches the
-        // round materialized, so the next round's first action materializes
-        // it, same as a cache would. A union keeps every partition of both
-        // legs, so the carried frontier and robots are coalesced (narrow) to
-        // one partition per core — their partition counts, and the tasks of
-        // every job that scans them, stay flat in the round number.
-        val carried = spark.sparkContext.defaultParallelism
-        state = phase(spark, "carry-cut")(CrawlState(
-          r.undrained.union(r.adds).coalesce(carried).localCheckpoint(false),
-          if (r.nNewHosts == 0) robots
-          else r.robotsAll.coalesce(carried).localCheckpoint(false),
-          folded.map(_.localCheckpoint(false)).getOrElse(filters),
-          delayTable.map(_._1.localCheckpoint(false)).orElse(delay)))
-        // deferred: the carried plans read these caches until their own
-        // caches materialize (next round's first jobs)
-        pendingUnpersist = frontier +: r.caches
-        retired ++= r.broadcasts
-        folded.foreach { f => pendingUnpersist ++= filtersSrc; filtersSrc = Some(f) }
-        delayTable.foreach { t => pendingUnpersist ++= delaySrc; delaySrc = Some(t._1) }
+        // what the carry superseded joins this round's list: the state
+        // tables it replaced and, after a fold, the probe broadcast (the next
+        // round re-collects the committed blobs)
+        state.tables.filterNot(t => carried.tables.exists(_ eq t)).foreach(held(_))
+        if (doFold) { filtersBc.foreach(held(_)); filtersBc = None }
+        state = carried
+        before = held
+        held = new Held
         roundNo += 1
       }
     }

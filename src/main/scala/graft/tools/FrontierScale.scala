@@ -2,9 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.frontier.{CrawlConfig, CrawlEngine, CuckooFilter, FilterState}
 import graft.tables.{SnapshotStore, SyntheticWeb}
@@ -135,23 +136,32 @@ object FrontierScale {
     // bucket with no filter yet would be created at its keys' size and never
     // take the rebuild pass
     val tiny = Seq(FilterState(0, CuckooFilter.create(16).toBytes, 0L)).toDS()
+    // the fold's result is an eager localCheckpoint: that execution's plan
+    // holds the rebuild's scan metrics
+    val cuts = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val cutPlans = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") cuts.put(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(cutPlans)
     val (folded, _) = CrawlEngine.foldFilters(spark, tiny, pending, seenAll, 4096)
+    val foldPlan = cuts.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    spark.listenerManager.unregister(cutPlans)
+    require(foldPlan != null, "the fold's localCheckpoint execution was not reported")
     val rebuiltBuckets = folded.collect().map(_.bucket).toSeq
     require(rebuiltBuckets == Seq(0), s"expected one rebuilt bucket, got $rebuiltBuckets")
-    // the fold's result is cached: its one file scan outside the pass-1
-    // cache (a leaf here, which scans the pending keys) is the rebuild's
+    // its one file scan outside the pass-1 cache (a leaf, which scans the
+    // pending keys) is the rebuild's
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case s: FileSourceScanExec => Seq(s)
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
       case q: QueryStageExec => scans(q.plan)
       case o => o.children.flatMap(scans)
     }
-    val Seq(rebuildScan) = scans(spark.sharedState.cacheManager
-      .lookupCachedData(folded.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).get
-      .cachedRepresentation.cacheBuilder.cachedPlan)
+    val Seq(rebuildScan) = scans(foldPlan)
     val rowsScanned = rebuildScan.metrics("numOutputRows").value
     val filesRead = rebuildScan.metrics("numFiles").value
-    folded.unpersist()
 
     val json =
       f"""{"filter_writes_1x":{"pages":8000,"seen":$seen1,"total_filter_bytes":$b1,"new_keys":$n1,"fold_commits":$f1,"bytes_per_new_key":$bpk1%.2f,"per_commit":[${w1.map(t => s"[${t._1},${t._2}]").mkString(",")}]},"filter_writes_10x":{"pages":80000,"seen":$seen10,"total_filter_bytes":$b10,"new_keys":$n10,"fold_commits":$f10,"bytes_per_new_key":$bpk10%.2f,"per_commit":[${w10.map(t => s"[${t._1},${t._2}]").mkString(",")}]},"seed_smoke":{"seeds":$bootSeen,"bootstrap_sec":$bootSec%.1f,"driver_heap_delta_mb":${(heapAfter - heapBefore) / 1048576},"filter_table_bytes":$filterBytes10m,"filter_bytes_per_key":${f"${filterBytes10m.toDouble / math.max(1, bootSeen)}%.2f"}},"rebuild_pruning":{"seen_keys":$nKeys,"seen_files":$seenFiles,"bucket0_keys":$bucket0Keys,"rebuild_files_read":$filesRead,"rebuild_rows_scanned":$rowsScanned,"rows_scanned_fraction_of_seen":${rowsScanned.toDouble / nKeys}%.4f}}"""

@@ -402,6 +402,13 @@ class CrawlSpec extends AnyFunSuite {
     }
     assert(engineFetched == simFetched,
       s"per-round fetch parity under crawl-delay:\n e=$engineFetched\n s=$simFetched")
+    // delay_rows, a tally inside the merged host_next_ok table's cut, counts
+    // the rows each commit wrote
+    val delayed = versions.filter(_.dataDirs.contains("host_next_ok"))
+    assert(delayed.nonEmpty)
+    delayed.foreach { mr =>
+      assert(mr.counters("delay_rows") == SnapshotStore.read(spark, mr, "host_next_ok").count())
+    }
     // host0 fetch rounds spaced >= ceil(2500/1000) = 3 apart
     val host0Rounds = engineFetched.filter(_._2.exists(_.contains("host0"))).map(_._1)
     assert(host0Rounds.size >= 2, "need at least two host0 windows to assert spacing")
@@ -1108,11 +1115,16 @@ class CrawlSpec extends AnyFunSuite {
       for ((label, cpages, ccfg) <- crawls) {
         val stateDir = graft.util.TempDirs.create(s"graft-release-$label-").toString
         val phases = new PhaseTasks
+        // a cut (localCheckpoint) is a persisted RDD the CacheManager never sees
+        val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
         listening(phases)(CrawlEngine.run(spark, cpages,
           SyntheticWeb.seedUrls(nHosts).toDS(), ccfg, stateDir))
         assert(label != "distributed" || phases.of("drain-bounds").nonEmpty,
           "the distributed crawl ran no distributed drain")
         assert(spark.sharedState.cacheManager.isEmpty, s"[$label] crawl left tables cached")
+        val after = spark.sparkContext.getPersistentRDDs
+        assert(after.keySet.toSet == rddsBefore, s"[$label] crawl left RDDs persisted: " +
+          after.filter(kv => !rddsBefore(kv._1)).values.mkString(", "))
       }
     } finally spark.sql(s"DROP TABLE IF EXISTS `$bucketedName`")
   }
